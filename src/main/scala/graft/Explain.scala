@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * loop SURVEY §8 notes come from. NOT part of the shipped library. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(8)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     for (n <- args) {

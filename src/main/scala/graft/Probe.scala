@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev-only: time individual queries and print plans. */
+/** Dev-only query timer: `runMain graft.Probe <query names...>` runs each
+  * named query three times (two noop writes, one count) and prints one
+  * `TIME <name>/<run> <secs> s jobs=<n>` line per run, plus a line per
+  * Spark job of 10 ms or more. Plans print with `graft.Explain`. */
 object Probe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -12,14 +15,9 @@ object Probe {
       .config("spark.sql.shuffle.partitions", cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // job counter (r12, VERDICT r11 #2/#6: the e08 residual is small-job
-    // fixed overhead — make the count observable so before/after is a
-    // recorded fact, not an estimate). Listener delivery is async; the
-    // short drain sleep is fine for a dev-only probe.
+    // Listener delivery is async; `time` sleeps briefly before reading
+    // the counter so the job count covers the whole timed call.
     val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    // r16: per-job wall breakdown (PROBE_JOBS=1) — the noisy-host
-    // optimization round needs to see WHICH jobs own a query's seconds,
-    // not just how many jobs ran.
     val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -31,1041 +29,24 @@ object Probe {
       override def onJobEnd(
           je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
         val st = jobStarts.remove(je.jobId)
-        if (st != null && sys.env.contains("PROBE_JOBS")) {
+        if (st != null) {
           val ms = (System.nanoTime() - st._1) / 1e6
           if (ms >= 10) println(f"    job ${je.jobId}%4d ${ms}%8.0f ms  ${st._2}")
         }
         ()
       }
     })
-    // r16 experiment toggles (dev-only): PROBE_NO_AQE=1 disables adaptive
-    // execution for the session so the AQE share of small-job fixed
-    // overhead is measurable.
-    if (sys.env.contains("PROBE_NO_AQE"))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-    def time(name: String)(f: => Unit): Double = {
+    def time(name: String)(f: => Unit): Unit = {
       val j0 = jobCount.get(); val t0 = System.nanoTime(); f
       val secs = (System.nanoTime() - t0) / 1e9
       Thread.sleep(200) // drain the listener bus before reading the counter
       println(f"TIME $name $secs%.2f s jobs=${jobCount.get() - j0}")
-      secs
     }
     val names = if (args.nonEmpty) args.toSeq else Seq("b04_cube")
     for (n <- names; fn <- SparkEntry.queries.get(n)) {
       time(s"$n/noop1") { fn(spark, dir).write.format("noop").mode("overwrite").save() }
       time(s"$n/noop2") { fn(spark, dir).write.format("noop").mode("overwrite").save() }
       time(s"$n/count") { fn(spark, dir).count() }
-    }
-    // r16: decompose the b05_approx_stats_exact aggregate job — which of
-    // scan / md5 / KMV buffers / quantile sketch owns the seconds.
-    if (sys.env.contains("PROBE_B05")) {
-      import org.apache.spark.sql.functions._
-      val li = Tables.lineitem(spark, dir).select(col("l_returnflag"),
-        col("l_orderkey"), col("l_partkey"),
-        round(col("l_extendedprice") * 100).cast("long").as("cents"),
-        col("l_quantity").cast("long").as("qn"))
-      def h(c: org.apache.spark.sql.Column) =
-        graft.functions.Md5Prefix(concat(lit("kmv:"), c.cast("string")), 12)
-      val kmv = udaf(new graft.functions.KmvEstimateAgg(1 << 14),
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[java.lang.Long]())
-      val qs = udaf(new graft.functions.QuantileSketchAgg(1 << 19,
-        Seq(1 -> 4, 1 -> 2, 3 -> 4)))
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      for (_ <- 1 to 2) {
-        time("b05/scan")(noop(li))
-        time("b05/md5")(noop(li.select(h(col("l_orderkey")).as("h1"), h(col("l_partkey")).as("h2"))))
-        time("b05/kmv1")(noop(li.groupBy(col("l_returnflag")).agg(kmv(h(col("l_orderkey"))).as("n1"))))
-        time("b05/kmv2")(noop(li.groupBy(col("l_returnflag")).agg(kmv(h(col("l_orderkey"))).as("n1"), kmv(h(col("l_partkey"))).as("n2"))))
-        time("b05/qsk")(noop(li.groupBy(col("l_returnflag")).agg(qs(col("cents")).as("q"))))
-        time("b05/sums")(noop(li.groupBy(col("l_returnflag")).agg(count(lit(1)), sum(col("qn")), sum(col("qn") * col("qn")))))
-      }
-    }
-    if (sys.env.contains("PROBE_EXPLAIN"))
-      for (n <- names; fn <- SparkEntry.queries.get(n)) fn(spark, dir).explain("formatted")
-    if (sys.env.contains("PROBE_STRESS_REL")) {
-      // Relational scaling: replicate lineitem in-memory and re-run the
-      // flagship agg — checks the q1 plan scales linearly in rows.
-      import org.apache.spark.sql.functions._
-      val reps = sys.env.getOrElse("PROBE_STRESS_REL", "8").toInt
-      val li = Tables.lineitem(spark, dir)
-      val big = li.crossJoin(spark.range(reps).toDF("rep")).drop("rep").cache()
-      println(s"  stress lineitem rows=${big.count()}")
-      big.createOrReplaceTempView("stress_lineitem")
-      time("stress_q1") {
-        spark.sql("""
-          SELECT l_returnflag, l_linestatus,
-            SUM(CAST(CAST(l_quantity AS DECIMAL(12,2)) AS DECIMAL(28,2))) AS sum_qty,
-            COUNT(*) AS n
-          FROM stress_lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-          GROUP BY l_returnflag, l_linestatus""")
-          .write.format("noop").mode("overwrite").save()
-      }
-      time("stress_q1_again") {
-        spark.sql("""
-          SELECT l_returnflag, l_linestatus,
-            SUM(CAST(CAST(l_quantity AS DECIMAL(12,2)) AS DECIMAL(28,2))) AS sum_qty,
-            COUNT(*) AS n
-          FROM stress_lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-          GROUP BY l_returnflag, l_linestatus""")
-          .write.format("noop").mode("overwrite").save()
-      }
-    }
-    if (sys.env.contains("PROBE_STRESS_GRAPH")) {
-      // Graph scaling: replicate lineitem with DISJOINT order keys per
-      // replica (so the co-purchase edge set multiplies ~k×, not the
-      // per-order fan-out) and time the triangle kernel at 1× and k×.
-      // Near-linear growth = no quadratic escape in the oriented plan.
-      import org.apache.spark.sql.functions._
-      val reps = sys.env.getOrElse("PROBE_STRESS_GRAPH", "4").toInt
-      val li = Tables.lineitem(spark, dir)
-        .select(col("l_orderkey"), col("l_partkey"))
-      def trianglesOn(frame: org.apache.spark.sql.DataFrame): Unit = {
-        val a = frame.select(col("l_orderkey").as("ok"), col("l_partkey").as("u"))
-        val b = frame.select(col("l_orderkey").as("ok"), col("l_partkey").as("v"))
-        val edges = a.join(b, Seq("ok")).where(col("u") < col("v"))
-          .select(col("u"), col("v")).distinct()
-        ops.GraphOps.trianglesOf(spark, edges, 20)
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      trianglesOn(li) // untimed: codegen/JIT warmup for the kernel's plans
-      time("stress_tri_1x") { trianglesOn(li) }
-      // shift BOTH keys per replica: disjoint orders AND disjoint vertex
-      // sets, so edges and triangles multiply exactly k× (shifting only
-      // orders would generate duplicate (u,v) pairs that collapse in the
-      // distinct — measuring edge-build cost, not kernel scaling).
-      // The offset derives from the ACTUAL max keys (r6-ADVICE): a fixed
-      // 1e8 constant only guarantees disjoint ranges up to ~sf16, beyond
-      // which replicas overlap and distinct() collapses edges, quietly
-      // invalidating the k×-growth measurement.
-      val mx = li.agg(greatest(max(col("l_orderkey")), max(col("l_partkey"))).as("m"))
-        .head().getLong(0) + 1L
-      val big = li.crossJoin(spark.range(reps).toDF("rep"))
-        .select((col("l_orderkey") + col("rep") * mx).as("l_orderkey"),
-          (col("l_partkey") + col("rep") * mx).as("l_partkey")).cache()
-      println(s"  stress graph lineitem rows=${big.count()} (${reps}x disjoint orders)")
-      time(s"stress_tri_${reps}x") { trianglesOn(big) }
-      big.unpersist()
-    }
-    if (sys.env.contains("PROBE_STRESS_TRUSS")) {
-      // Iterative-peel family scaling (r7-verdict #8): k-truss, k-core,
-      // LPA, BFS on 1× vs k× DISJOINT-vertex lineitem replicas (the
-      // PROBE_STRESS_GRAPH pattern — both keys shifted, so each replica
-      // reproduces the gate graph exactly and edge/triangle counts
-      // multiply exactly k×). Identical per-replica structure means the
-      // peel cascades run the SAME number of rounds at both scales, so
-      // the k× wall isolates per-round work growth: near-linear = every
-      // round stays its claimed linear shape (induced-degree semi joins,
-      // support counts, neighbor-label counts, frontier semi joins);
-      // super-linear = a round escaped. Offsets derive from the actual
-      // max keys (the r6-ADVICE discipline).
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.DataFrame
-      val reps = sys.env.getOrElse("PROBE_STRESS_TRUSS", "8").toInt
-      val li = Tables.lineitem(spark, dir)
-        .select(col("l_orderkey"), col("l_partkey"))
-      def copurch(frame: DataFrame): DataFrame = {
-        val ok = frame.select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        val a = ok.select(col("ok"), col("pk").as("u"))
-        val b = ok.select(col("ok"), col("pk").as("v"))
-        a.join(b, Seq("ok")).where(col("u") < col("v"))
-          .groupBy(col("u"), col("v")).agg(count(lit(1)).as("n"))
-      }
-      def runAll(tag: String, frame: DataFrame): Unit = {
-        val pairs = copurch(frame).localCheckpoint(true)
-        val edges = pairs.select(col("u"), col("v")).localCheckpoint(true)
-        val strong = pairs.filter(col("n") >= 2)
-          .select(col("u"), col("v")).localCheckpoint(true)
-        time(s"stress_ktruss_$tag") {
-          ops.GraphOps.kTruss(spark, edges, 12, 7)
-            .write.format("noop").mode("overwrite").save()
-        }
-        time(s"stress_kcore_$tag") {
-          ops.GraphOps.kCore(spark, edges, 80, 8)
-            .write.format("noop").mode("overwrite").save()
-        }
-        time(s"stress_lpa_$tag") {
-          ops.GraphOps.lpaOf(strong, 4)
-            .write.format("noop").mode("overwrite").save()
-        }
-        time(s"stress_bfs_$tag") {
-          ops.GraphOps.bfsOf(strong, 4)
-            .write.format("noop").mode("overwrite").save()
-        }
-        spark.catalog.clearCache()
-      }
-      runAll("warmup", li) // untimed label: codegen/JIT warmup pass
-      runAll("1x", li)
-      val mx = li.agg(greatest(max(col("l_orderkey")), max(col("l_partkey"))))
-        .head().getLong(0) + 1L
-      val big = li.crossJoin(spark.range(reps).toDF("rep"))
-        .select((col("l_orderkey") + col("rep") * mx).as("l_orderkey"),
-          (col("l_partkey") + col("rep") * mx).as("l_partkey")).cache()
-      println(s"  stress truss lineitem rows=${big.count()} (${reps}x disjoint)")
-      runAll(s"${reps}x", big)
-      big.unpersist()
-    }
-    if (sys.env.contains("PROBE_STRESS_ANN")) {
-      // Layered-ANN scaling (r8): hnsw build+search (INLINE path — the
-      // snapshot store would amortize the build away and hide the
-      // scaling term) on the embeddings corpus vs a k× replica with
-      // disjoint vec_ids. Same query count both times (original probe
-      // ids only — replicas offset ids off the %100 residue), so the
-      // wall isolates corpus-side growth: construction is cell-bounded
-      // (cells scale with the layer), per-query search cost is
-      // rounds·beam·R regardless of corpus size. Near-linear build +
-      // flat-ish search = the claims hold.
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.Column
-      val reps = sys.env.getOrElse("PROBE_STRESS_ANN", "8").toInt
-      val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      val mx = emb.agg(max(col("vec_id"))).head().getLong(0) + 1L
-      def hnswOn(frame: org.apache.spark.sql.DataFrame, pred: Column): Unit = {
-        // logStats prints per-layer member/pair/assignment-candidate row
-        // counts — the r8-verdict ask: assert ~linear growth of the
-        // ASSIGNMENT stage (cand_pairs) at k×, not just wall time
-        similarity.Similarity.hnswTopK(frame, pred, logStats = true)
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      // the probe set stays the ORIGINAL 1× queries at both scales
-      // (replica ids keep their residues but sit above mx)
-      val qp = col("vec_id") % 100 === 0 && col("vec_id") < mx
-      hnswOn(emb, qp) // untimed: codegen/JIT warmup
-      time("stress_hnsw_1x") { hnswOn(emb, qp) }
-      val big = emb.crossJoin(spark.range(reps).toDF("rep"))
-        .select((col("vec_id") + col("rep") * mx).as("vec_id"), col("embedding"))
-        .cache()
-      println(s"  stress ann vectors=${big.count()} (${reps}x disjoint ids)")
-      time(s"stress_hnsw_${reps}x") { hnswOn(big, qp) }
-      big.unpersist()
-    }
-    if (sys.env.contains("PROBE_STRESS_INSERT")) {
-      // Incremental ANN insert scaling (r9, the hnswInsert seam): the
-      // claim is per-batch maintenance cost is O(batch) — one descent
-      // per new vector + a touched-anchors-only re-prune — never
-      // O(corpus). Two axes, both against the INLINE-built hierarchy:
-      // (a) fixed batch into a kx corpus — wall should stay near-flat
-      // (descent cost is rounds·beam·R per vector, corpus-independent);
-      // (b) kx batch into the fixed corpus — wall should grow ~k.
-      import org.apache.spark.sql.functions._
-      val reps = sys.env.getOrElse("PROBE_STRESS_INSERT", "8").toInt
-      val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      val mx = emb.agg(max(col("vec_id"))).head().getLong(0) + 1L
-      val batch = emb.filter(col("vec_id") % 10 === 3).cache()
-      val corpus1 = emb.filter(col("vec_id") % 10 =!= 3).cache()
-      println(s"  stress insert corpus=${corpus1.count()} batch=${batch.count()}")
-      val adj1 = similarity.Similarity
-        .hnswBuild(similarity.Similarity.quantizedWithNorm(corpus1))
-        .localCheckpoint(true)
-      def insertOn(corpus: org.apache.spark.sql.DataFrame,
-          adj: org.apache.spark.sql.DataFrame,
-          b: org.apache.spark.sql.DataFrame): Unit = {
-        similarity.Similarity.hnswInsert(corpus, adj, b)
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      insertOn(corpus1, adj1, batch) // untimed warmup
-      time("stress_insert_1x_corpus") { insertOn(corpus1, adj1, batch) }
-      val bigCorpus = corpus1.crossJoin(spark.range(reps).toDF("rep"))
-        .select((col("vec_id") + col("rep") * mx).as("vec_id"), col("embedding"))
-        .cache()
-      println(s"  stress insert corpus=${bigCorpus.count()} (${reps}x disjoint ids)")
-      val adjK = similarity.Similarity
-        .hnswBuild(similarity.Similarity.quantizedWithNorm(bigCorpus))
-        .localCheckpoint(true)
-      time(s"stress_insert_${reps}x_corpus") { insertOn(bigCorpus, adjK, batch) }
-      val bigBatch = batch.crossJoin(spark.range(reps).toDF("rep"))
-        .select((col("vec_id") + col("rep") * mx * 100L).as("vec_id"), col("embedding"))
-        .cache()
-      println(s"  stress insert batch=${bigBatch.count()} (${reps}x disjoint ids)")
-      time(s"stress_insert_${reps}x_batch") { insertOn(corpus1, adj1, bigBatch) }
-      Seq(batch, corpus1, bigCorpus, bigBatch).foreach(_.unpersist())
-    }
-    if (sys.env.contains("PROBE_STRESS_E08")) {
-      // e08 composite tick scaling (r11, VERDICT r10 #6): the flagship
-      // composes three probe-certified kernels but had no composite
-      // probe. The claim: a maintenance TICK pays batch-sized probe
-      // work + O(batch) insert descents + per-query-bounded serve —
-      // its wall may grow with the (snapshot-amortized) index size it
-      // joins against, never corpus-linearly. Setup (standing shingle/
-      // band/stats tables, the standing hierarchy, the serve routes) is
-      // the materialize-once index build and is deliberately OUTSIDE
-      // the timed window — exactly as the SnapshotStore serves it in
-      // the gate; the timed window is the tick alone: arrival band
-      // gate → surviving-vector hnswInsert → base-layer serve of the
-      // FIXED query set over the extended graph. Replica ids offset by
-      // a multiple of 100, so %10/%100 residues are preserved and the
-      // arriving batch + query set stay the ORIGINAL 1× slices at
-      // every scale.
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.DataFrame
-      val reps = sys.env.getOrElse("PROBE_STRESS_E08", "8").toInt
-      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      val mxDoc = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val mxVec = emb.agg(max(col("vec_id"))).head().getLong(0)
-      // residue-preserving offset unit (multiple of 100)
-      val mx = ((math.max(mxDoc, mxVec) / 100L) + 1L) * 100L
-      val arriving = docs.filter(col("doc_id") % 10 === 3).localCheckpoint(true)
-      val batchVecs = emb.filter(col("vec_id") % 10 === 3).localCheckpoint(true)
-      val qPred = col("vec_id") % 100 === 0 && col("vec_id") < mx
-      def replicate(df: DataFrame, idCol: String, k: Int): DataFrame =
-        if (k == 1) df
-        else df.crossJoin(spark.range(k).toDF("rep"))
-          .select((col(idCol) + col("rep") * mx).as(idCol),
-            col(df.columns.filterNot(_ == idCol).head))
-      def tickAt(k: Int): Unit = {
-        val standDocs = replicate(docs.filter(col("doc_id") % 10 =!= 3), "doc_id", k)
-          .localCheckpoint(true)
-        val standVecs = replicate(emb.filter(col("vec_id") % 10 =!= 3), "vec_id", k)
-          .localCheckpoint(true)
-        // ---- index build: materialize-once, untimed (snapshot stand-in)
-        val sh = dedup.Dedup.portableShingleHashes(standDocs, 3).localCheckpoint(true)
-        val bands = dedup.Dedup.portableBandsOf(sh).localCheckpoint(true)
-        val stats = bands.groupBy(col("band_idx"), col("band_hash"))
-          .agg(count(lit(1)).as("bsz"), min(col("doc_id")).as("bmin"))
-          .localCheckpoint(true)
-        val eStand = similarity.Similarity.quantizedWithNorm(standVecs)
-          .localCheckpoint(true)
-        val adj = similarity.Similarity.hnswBuild(eStand).localCheckpoint(true)
-        val routes = similarity.Similarity.hnswUpperBeam(eStand, adj,
-          eStand.filter(qPred).toDF("query_id", "qq", "qnorm")).localCheckpoint(true)
-        println(s"  stress e08 standing docs=${standDocs.count()} vecs=${standVecs.count()} (${k}x)")
-        // ---- THE TICK, timed PER STAGE (r12, VERDICT r11 #6: the
-        // 8×→64× growth needs a named owner) — gate → insert → serve,
-        // stage boundaries materialized so each wall is attributable;
-        // the composite is their sum. The stage split mirrors the r12
-        // gate structure (one shared quantize pass per corpus side).
-        var survivors: DataFrame = null
-        val tGate = time(s"stress_e08_${k}x_gate") {
-          val dupIds = dedup.Dedup.minHashPortableAcrossWith(
-              arriving, sh, bands, statsRef = Some(stats))
-            .select(col("new_id").as("vec_id")).distinct()
-          survivors = batchVecs.join(dupIds, Seq("vec_id"), "left_anti")
-            .localCheckpoint(true)
-        }
-        var ext: DataFrame = null
-        var eNewQ: DataFrame = null
-        val tInsert = time(s"stress_e08_${k}x_insert") {
-          eNewQ = similarity.Similarity.quantizedWithNorm(survivors)
-            .localCheckpoint(true)
-          ext = similarity.Similarity.hnswInsertPre(eStand, eNewQ, adj)
-        }
-        val tServe = time(s"stress_e08_${k}x_serve") {
-          val eAll = eStand.unionByName(eNewQ)
-          similarity.Similarity.hnswBaseDescend(eAll, ext,
-              eAll.filter(qPred).toDF("query_id", "qq", "qnorm"), routes, 5)
-            .write.format("noop").mode("overwrite").save()
-        }
-        println(f"TIME stress_e08_${k}x_tick ${tGate + tInsert + tServe}%.2f s (gate+insert+serve)")
-        spark.catalog.clearCache()
-      }
-      tickAt(1) // untimed warmup pass happens inside via JIT of first run
-      tickAt(1)
-      tickAt(8)
-      if (reps > 8) tickAt(reps)
-    }
-    if (sys.env.contains("PROBE_STRESS_HARVEST")) {
-      // Streaming-harvest tick scaling (r12): ONE harvestSink trigger
-      // with a FIXED arrival batch against a store pre-grown to 1×/k×.
-      // The sink's per-trigger shape is read-MERGE-rewrite: the A13 FK
-      // join (inner) broadcasts the batch side (store scanned, not
-      // shuffled), the A11 upsert (full outer) and A15 anti-join (left
-      // anti, store on the right) are each one store-keyed shuffle, and
-      // the A21 swap REWRITES both tables — O(store) per trigger BY
-      // DESIGN here,
-      // because the reference-shaped store is one parquet dir per table
-      // (the analogue of the reference's single SQLite file, which its
-      // per-page transaction also rewrites in place). Expectation: tick
-      // wall grows with store size through those O(store) legs, well
-      // under k× (IO-bound, fixed job count). At 100 TB the store is a
-      // bucketed lakehouse table and this same pipeline lands as a
-      // partition-pruned MERGE (bucket-local upsert shuffle, rewrite
-      // touching only buckets with batch uris) — the probe names the
-      // local stand-in's cost so the at-scale claim is a recorded fact,
-      // not an assumption.
-      import org.apache.spark.sql.functions._
-      val reps = sys.env.getOrElse("PROBE_STRESS_HARVEST", "8").toInt
-      val asOf = java.sql.Timestamp.valueOf("2026-02-01 00:00:00")
-      val binds = ops.HarvestQueries.bindings(spark, dir).localCheckpoint(true)
-      // FIXED arrival batch (unsuffixed uris — disjoint from every grown
-      // store below, so the trigger does identical all-insert merge work
-      // at every scale and growth isolates the O(store) legs)
-      val batch = binds.filter(col("doc_id") % 10 === 3).drop("doc_id")
-        .localCheckpoint(true)
-      val standing = binds.filter(col("doc_id") % 10 =!= 3)
-      def tick(k: Int, timed: Boolean): Unit = {
-        val sDir = java.nio.file.Files
-          .createTempDirectory(s"graft_hvstress_${k}x_").toString
-        try {
-          // pre-grow: k disjoint uri-suffixed replicas of the standing
-          // slice, loaded in one untimed trigger (the snapshot stand-in)
-          val grown = standing.crossJoin(spark.range(k).toDF("rep")).select(
-            concat(col("concept"), lit("?rep="), col("rep")).as("concept"),
-            col("prefLabel"), col("altLabel"), col("definition"))
-          streaming.Streaming.harvestSink(sDir, asOf)(grown, 0L)
-          val termsN = spark.read.parquet(s"$sDir/terms").count()
-          val fieldsN = spark.read.parquet(s"$sDir/term_fields").count()
-          println(s"  stress harvest store terms=$termsN fields=$fieldsN (${k}x)")
-          if (timed)
-            time(s"stress_harvest_${k}x_tick") {
-              streaming.Streaming.harvestSink(sDir, asOf)(batch, 1L)
-            }
-          else streaming.Streaming.harvestSink(sDir, asOf)(batch, 1L)
-        } finally {
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(sDir))
-        }
-        spark.catalog.clearCache()
-      }
-      tick(1, timed = false) // untimed: codegen/JIT warmup of the pipeline
-      tick(1, timed = true)
-      tick(8, timed = true)
-      if (reps > 8) tick(reps, timed = true)
-    }
-    if (sys.env.contains("PROBE_STRESS_E06")) {
-      // e06 composition scaling (the PROBE_STRESS_GRAPH pattern):
-      // disjoint-key lineitem replicas multiply the strong edge set, the
-      // LPA vertex set and the revenue rows ~k×; every stage is claimed
-      // linear (edge build = per-order pair groupBy, per-round LPA
-      // neighbor join + combinable argmax, ONE revenue equi-join on the
-      // vertex-sized label table), so k× data should cost well under k×
-      // wall. Offsets derive from the actual max keys (the r6-ADVICE
-      // discipline).
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.DataFrame
-      val reps = sys.env.getOrElse("PROBE_STRESS_E06", "8").toInt
-      val li = Tables.lineitem(spark, dir)
-        .select(col("l_orderkey"), col("l_partkey"), col("l_extendedprice"))
-      def strongOn(frame: DataFrame): DataFrame = {
-        val a = frame.select(col("l_orderkey").as("ok"), col("l_partkey").as("u"))
-        val b = frame.select(col("l_orderkey").as("ok"), col("l_partkey").as("v"))
-        a.join(b, Seq("ok")).where(col("u") < col("v"))
-          .groupBy(col("u"), col("v")).agg(count(lit(1)).as("n"))
-          .filter(col("n") >= 2).select(col("u"), col("v"))
-      }
-      def mart(frame: DataFrame): Unit = {
-        ops.GraphOps.communityMartOn(strongOn(frame), frame)
-          .write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-      }
-      mart(li) // untimed: codegen/JIT warmup
-      val li1 = li.cache(); li1.count() // materialized 1x baseline
-      time("stress_e06_1x") { mart(li1) }
-      val mx = li.agg(greatest(max(col("l_orderkey")), max(col("l_partkey"))))
-        .head().getLong(0) + 1L
-      val big = li.crossJoin(spark.range(reps).toDF("rep"))
-        .select((col("l_orderkey") + col("rep") * mx).as("l_orderkey"),
-          (col("l_partkey") + col("rep") * mx).as("l_partkey"),
-          col("l_extendedprice")).cache()
-      println(s"  stress e06 lineitem rows=${big.count()} (${reps}x disjoint)")
-      time(s"stress_e06_${reps}x") { mart(big) }
-      li1.unpersist(); big.unpersist()
-    }
-    if (sys.env.contains("PROBE_STRESS_PIPE")) {
-      // E1/E2 composition scaling (r6-verdict #7): run each flagship
-      // pipeline on a 1× and a k× DISJOINT corpus replica and compare
-      // walls. Disjointness for e01 is in CONTENT space: every token
-      // gets a per-replica suffix, so cross-replica docs share no token,
-      // gram, shingle, or hash — while within-replica dup/near-dup/
-      // contamination structure and the quality/language gates (labeled
-      // lang column, token counts) are preserved replica-for-replica.
-      // The 1× baseline gets the SAME rep-0 treatment so selectivity is
-      // identical and the ratio is clean. doc_id offsets are a multiple
-      // of 50 so the %50 bench-slice classes replicate exactly. e02
-      // replicates ids only (text unchanged — the fixed BM25 query
-      // tokens must keep matching); its stages 2-3 are retrieval-sized
-      // by construction, so near-flat growth there is the expectation.
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.DataFrame
-      val reps = sys.env.getOrElse("PROBE_STRESS_PIPE", "8").toInt
-      val docs = Tables.documents(spark, dir).select(
-        col("doc_id"), col("text"), col("lang")).cache()
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val off = ((maxId / 50) + 1) * 50
-      def suffixed(r: Int): DataFrame = docs
-        .crossJoin(spark.range(r).toDF("rep"))
-        .select((col("doc_id") + col("rep") * off).as("doc_id"),
-          array_join(transform(split(col("text"), " "),
-            t => concat(t, lit("_r"), col("rep").cast("string"))), " ").as("text"),
-          col("lang"))
-        .cache()
-      def shifted(r: Int): DataFrame = docs
-        .crossJoin(spark.range(r).toDF("rep"))
-        .select((col("doc_id") + col("rep") * off).as("doc_id"), col("text"))
-        .cache()
-      def run(name: String, df: => DataFrame): Unit = {
-        time(name) { df.write.format("noop").mode("overwrite").save() }
-        spark.catalog.clearCache()
-      }
-      val s1 = suffixed(1); println(s"  e01 1x docs=${s1.count()}")
-      run("stress_e01_warm", ops.PretrainPipeline.curateDocs(s1))
-      // 1x baselines materialize before timing, like the kx count()s —
-      // otherwise the replica build lands in the 1x wall and deflates
-      // the ratio (review fix, late r7)
-      val s1b = suffixed(1); s1b.count()
-      run("stress_e01_1x", ops.PretrainPipeline.curateDocs(s1b))
-      val sk = suffixed(reps); println(s"  e01 ${reps}x docs=${sk.count()}")
-      run(s"stress_e01_${reps}x", ops.PretrainPipeline.curateDocs(sk))
-      val r1 = shifted(1)
-      run("stress_e02_warm", ops.RagPipeline.ragRetrievalDocs(r1))
-      val r1b = shifted(1); r1b.count()
-      run("stress_e02_1x", ops.RagPipeline.ragRetrievalDocs(r1b))
-      val rk = shifted(reps); println(s"  e02 ${reps}x docs=${rk.count()}")
-      run(s"stress_e02_${reps}x", ops.RagPipeline.ragRetrievalDocs(rk))
-      docs.unpersist()
-    }
-    if (sys.env.contains("PROBE_STRESS_E0304")) {
-      // E3/E4 composition scaling (the PROBE_STRESS_PIPE pattern): e04 on
-      // a 1× vs k× corpus replica (ids shifted, sources suffixed per
-      // replica so the per-source quota plan replicates structure); e03
-      // with a FIXED arrival batch against a 1× vs k× reference corpus
-      // (content-suffixed like the e01 probe so replicas share no gram) —
-      // the per-ingest cost claim is "scales with the batch, not the
-      // corpus", so the e03 ratio should stay well under k.
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.DataFrame
-      val reps = sys.env.getOrElse("PROBE_STRESS_E0304", "8").toInt
-      val docs = Tables.documents(spark, dir).select(
-        col("doc_id"), col("text"), col("source")).cache()
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val off = ((maxId / 50) + 1) * 50
-      def replicated(r: Int): DataFrame = docs
-        .crossJoin(spark.range(r).toDF("rep"))
-        .select((col("doc_id") + col("rep") * off).as("doc_id"),
-          concat(col("source"), lit("_r"), col("rep").cast("string")).as("source"),
-          col("text"))
-        .cache()
-      def suffixed(r: Int): DataFrame = docs
-        .crossJoin(spark.range(r).toDF("rep"))
-        .select((col("doc_id") + col("rep") * off).as("doc_id"),
-          array_join(transform(split(col("text"), " "),
-            t => concat(t, lit("_r"), col("rep").cast("string"))), " ").as("text"),
-          col("source"))
-        .cache()
-      def run(name: String, df: => DataFrame): Unit = {
-        time(name) { df.write.format("noop").mode("overwrite").save() }
-        spark.catalog.clearCache()
-      }
-      val e1 = replicated(1); println(s"  e04 1x docs=${e1.count()}")
-      run("stress_e04_warm", ops.TrainPipeline.trainingBatchesDocs(e1))
-      val e1b = replicated(1); e1b.count() // materialized 1x baseline (see e01)
-      run("stress_e04_1x", ops.TrainPipeline.trainingBatchesDocs(e1b))
-      val ek = replicated(reps); println(s"  e04 ${reps}x docs=${ek.count()}")
-      run(s"stress_e04_${reps}x", ops.TrainPipeline.trainingBatchesDocs(ek))
-      // e03: fixed arrival batch (rep-0 docs with id%7==3, the declared
-      // slice) against growing reference corpora
-      val arrivals = suffixed(1).filter(pmod(col("doc_id"), lit(7)) === 3)
-        .select(col("doc_id"), col("text"), col("source")).cache()
-      println(s"  e03 arrivals=${arrivals.count()}")
-      def ref(r: Int): DataFrame = suffixed(r)
-        .filter(pmod(col("doc_id"), lit(7)) =!= 3)
-        .select(col("doc_id"), col("text"), col("source")).cache()
-      val r1 = ref(1)
-      run("stress_e03_warm", ops.IngestPipeline.ingestReport(arrivals, r1))
-      val r1b = ref(1); r1b.count() // materialized 1x baseline (see e01)
-      run("stress_e03_1x", ops.IngestPipeline.ingestReport(arrivals, r1b))
-      val rk = ref(reps); println(s"  e03 ref ${reps}x docs=${rk.count()}")
-      run(s"stress_e03_${reps}x", ops.IngestPipeline.ingestReport(arrivals, rk))
-      docs.unpersist()
-    }
-    if (sys.env.contains("PROBE_STRESS_E05")) {
-      // e05 composition scaling (the E0304 pattern): the eval-suite
-      // builder on a 1× vs k× disjoint corpus replica — ids shifted,
-      // sources AND token content suffixed per replica so replicas share
-      // no gram (cross-replica contamination joins would otherwise grow
-      // the gram fan-out by k and unfairly super-linearize the probe) and
-      // the held-out-source pool replicates structure. Every e05 stage is
-      // claimed linear (scan gates, one distinct, one gram equi-join
-      // driven by the ~10% eval side, a per-lang window on the reduced
-      // pool), so the k× wall should stay well under k.
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.DataFrame
-      val reps = sys.env.getOrElse("PROBE_STRESS_E05", "8").toInt
-      val docs = Tables.documents(spark, dir).select(
-        col("doc_id"), col("text"), col("lang"), col("source")).cache()
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val off = ((maxId / 50) + 1) * 50
-      def suffixed(r: Int): DataFrame = docs
-        .crossJoin(spark.range(r).toDF("rep"))
-        .select((col("doc_id") + col("rep") * off).as("doc_id"),
-          array_join(transform(split(col("text"), " "),
-            t => concat(t, lit("_r"), col("rep").cast("string"))), " ").as("text"),
-          col("lang"),
-          concat(col("source"), lit("_r"), col("rep").cast("string")).as("source"))
-        .cache()
-      def run(name: String, df: => DataFrame): Unit = {
-        time(name) { df.write.format("noop").mode("overwrite").save() }
-        spark.catalog.clearCache()
-      }
-      val e1 = suffixed(1); println(s"  e05 1x docs=${e1.count()}")
-      run("stress_e05_warm", ops.EvalPipeline.evalSuite(e1))
-      val e1b = suffixed(1); e1b.count() // materialized 1x baseline
-      run("stress_e05_1x", ops.EvalPipeline.evalSuite(e1b))
-      val ek = suffixed(reps); println(s"  e05 ${reps}x docs=${ek.count()}")
-      run(s"stress_e05_${reps}x", ops.EvalPipeline.evalSuite(ek))
-      docs.unpersist()
-    }
-    if (sys.env.contains("PROBE_STRESS_TEXT")) {
-      // Text-family scaling (late r12 — the one §2 family without a
-      // dedicated probe): (a) bpeTrainLocal, the documented 100 TB
-      // training recipe — corpus-scale work is ONE distributed
-      // word-frequency aggregate; the merge loop runs over a
-      // vocab-CAPPED table in driver memory with zero per-merge jobs.
-      // With the cap FIXED (4096) the loop is scale-invariant by
-      // construction, so a k× corpus should grow the wall well under k×
-      // (only the aggregate's share moves). Token content is suffixed
-      // per replica so DISTINCT words multiply — the adversarial
-      // direction for both the aggregate and the cap. (b)
-      // winnowFingerprints: per-doc window scan, claimed linear — k×
-      // docs ≈ k× wall, a superlinear ratio means the window device
-      // escaped its per-doc bound.
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.DataFrame
-      val reps = sys.env.getOrElse("PROBE_STRESS_TEXT", "8").toInt
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")).cache()
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val off = maxId + 1
-      def suffixed(r: Int): DataFrame = docs
-        .crossJoin(spark.range(r).toDF("rep"))
-        .select((col("doc_id") + col("rep") * off).as("doc_id"),
-          array_join(transform(split(col("text"), " "),
-            t => concat(t, lit("_r"), col("rep").cast("string"))), " ").as("text"))
-        .cache()
-      def run(name: String, df: => DataFrame): Unit = {
-        time(name) { df.write.format("noop").mode("overwrite").save() }
-        spark.catalog.clearCache()
-      }
-      val t1 = suffixed(1); println(s"  text 1x docs=${t1.count()}")
-      run("stress_bpe_warm", text.TextAnalysis.bpeTrainLocal(t1, 50, 4096))
-      val t1b = suffixed(1); t1b.count() // materialized 1x baseline
-      run("stress_bpe_1x", text.TextAnalysis.bpeTrainLocal(t1b, 50, 4096))
-      val tk = suffixed(reps); println(s"  text ${reps}x docs=${tk.count()}")
-      run(s"stress_bpe_${reps}x", text.TextAnalysis.bpeTrainLocal(tk, 50, 4096))
-      val w1 = suffixed(1)
-      run("stress_winnow_warm", text.TextAnalysis.winnowFingerprints(w1))
-      val w1b = suffixed(1); w1b.count()
-      run("stress_winnow_1x", text.TextAnalysis.winnowFingerprints(w1b))
-      val wk = suffixed(reps)
-      run(s"stress_winnow_${reps}x", text.TextAnalysis.winnowFingerprints(wk))
-      docs.unpersist()
-    }
-    if (sys.env.contains("PROBE_STRESS_PPJOIN")) {
-      // b12_ppjoin scaling (the PROBE_STRESS_PIPE pattern): the prefix
-      // join's candidate cost is Σ df(prefix gram)² over the RAREST
-      // grams. Content-suffixed disjoint replicas keep every
-      // per-replica df unchanged, so candidates and verified pairs both
-      // grow exactly k× and the honest expectation is ~linear wall
-      // growth; a super-linear ratio would mean the prefix filter is
-      // degenerating into an all-pairs join.
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.DataFrame
-      val reps = sys.env.getOrElse("PROBE_STRESS_PPJOIN", "8").toInt
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text")).cache()
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val off = maxId + 1
-      def suffixed(r: Int): DataFrame = docs
-        .crossJoin(spark.range(r).toDF("rep"))
-        .select((col("doc_id") + col("rep") * off).as("doc_id"),
-          array_join(transform(split(col("text"), " "),
-            t => concat(t, lit("_r"), col("rep").cast("string"))), " ").as("text"))
-        .cache()
-      def run(name: String, df: => DataFrame): Unit = {
-        time(name) { df.write.format("noop").mode("overwrite").save() }
-        spark.catalog.clearCache()
-      }
-      val p1 = suffixed(1); println(s"  ppjoin 1x docs=${p1.count()}")
-      run("stress_ppjoin_warm", dedup.Dedup.ppJoin(p1))
-      // materialize the 1x input cache before timing (the kx run gets
-      // its cache from the count() below — an unmaterialized 1x baseline
-      // would fold the replica build into the timed wall and deflate the
-      // kx/1x ratio, the exact statistic this probe reports)
-      val p1b = suffixed(1); p1b.count()
-      run("stress_ppjoin_1x", dedup.Dedup.ppJoin(p1b))
-      val pk = suffixed(reps); println(s"  ppjoin ${reps}x docs=${pk.count()}")
-      run(s"stress_ppjoin_${reps}x", dedup.Dedup.ppJoin(pk))
-      docs.unpersist()
-    }
-    if (sys.env.contains("PROBE_STRESS_BUCKETED")) {
-      // Bucketed-layout probe scaling (r13, VERDICT r12 #1
-      // follow-through): BucketedLayoutSpec pins the SHAPE (zero
-      // exchange above the bucketed reference scans, one batch-side
-      // exchange, broadcast disabled); this probe records the COST the
-      // layout removes, as shuffle-exchange bytes + wall, at 1× and k×
-      // reference scale with a FIXED probing batch. Expectation: the
-      // path layout's shuffled bytes grow ~k× (the reference band/stats
-      // tables cross the exchange), the bucketed layout's stay flat at
-      // batch size — the recorded-fact form of "per-tick work scales
-      // with the batch; the corpus side is scanned, never shuffled".
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.DataFrame
-      val reps = sys.env.getOrElse("PROBE_STRESS_BUCKETED", "8").toInt
-      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val off = ((maxId / 10) + 1) * 10 // residue-preserving offset
-      val batch = dedup.Dedup.portableBandsOf(dedup.Dedup.portableShingleHashes(
-          docs.filter(col("doc_id") % 10 === 3), 3))
-        .select(col("doc_id").as("a"), col("band_idx"), col("band_hash"))
-        .localCheckpoint(true)
-      def refTables(k: Int): (DataFrame, DataFrame) = {
-        val standing = docs.filter(col("doc_id") % 10 =!= 3)
-        val grown =
-          if (k == 1) standing
-          else standing.crossJoin(spark.range(k).toDF("rep"))
-            .select((col("doc_id") + col("rep") * off).as("doc_id"),
-              // per-replica token suffix for rep > 0: disjoint shingle/
-              // band spaces, so bands multiply ~k× instead of piling k
-              // copies into the same buckets (which would cap at
-              // MaxBucket and hide growth). Rep 0 stays UNSUFFIXED so
-              // the fixed batch finds the same matches at every k — the
-              // probe's matched work is constant and growth isolates
-              // the corpus-side cost.
-              when(col("rep") === 0, col("text")).otherwise(
-                array_join(transform(split(col("text"), " "),
-                  t => concat(t, lit("_r"), col("rep").cast("string"))), " "))
-                .as("text"))
-        val sh = dedup.Dedup.portableShingleHashes(grown, 3).localCheckpoint(true)
-        val bands = dedup.Dedup.portableBandsOf(sh).localCheckpoint(true)
-        val stats = bands.groupBy(col("band_idx"), col("band_hash"))
-          .agg(count(lit(1)).as("bsz"), min(col("doc_id")).as("bmin"))
-          .localCheckpoint(true)
-        (bands, stats)
-      }
-      def shuffledBytes(df: DataFrame): Long =
-        plans.PlanAudit.shuffleExchanges(df)
-          .map(_.metrics.get("dataSize").map(_.value).getOrElse(0L)).sum
-      def probe(bRef: DataFrame, stats: DataFrame): DataFrame = batch
-        .join(stats, Seq("band_idx", "band_hash"))
-        .filter(col("bsz") <= dedup.Dedup.MaxBucket)
-        .select(col("a"), col("band_idx"), col("band_hash"))
-        .join(bRef.select(col("doc_id").as("b"), col("band_idx"), col("band_hash")),
-          Seq("band_idx", "band_hash"))
-        .select(col("a"), col("b"))
-      // getOption + unset, not get + set: the adaptive threshold is an
-      // OPTIONAL conf — reading it via get can return a non-settable
-      // sentinel on some Spark versions (the BucketedLayoutSpec /
-      // withBloomPruning discipline)
-      val prevB = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-      val prevA = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      try {
-        for (k <- Seq(1, reps)) {
-          val (bands, stats) = refTables(k)
-          println(s"  stress bucketed ${k}x: ref bands=${bands.count()}")
-          // path layout: plain parquet, no catalog bucket spec
-          val pdir = java.nio.file.Files.createTempDirectory(s"graft_bkt_path_$k").toString
-          bands.write.parquet(s"$pdir/bands"); stats.write.parquet(s"$pdir/stats")
-          val bandsP = spark.read.parquet(s"$pdir/bands")
-          val statsP = spark.read.parquet(s"$pdir/stats")
-          // bucketed layout: same content, bucket spec on the probe key
-          ops.ScaleOps.writeBucketedKeys(bands, s"$pdir/bands_b",
-            s"probe_bkt_bands_$k", Seq("band_idx", "band_hash"), 8)
-          ops.ScaleOps.writeBucketedKeys(stats, s"$pdir/stats_b",
-            s"probe_bkt_stats_$k", Seq("band_idx", "band_hash"), 8)
-          val bandsB = spark.table(s"probe_bkt_bands_$k")
-          val statsB = spark.table(s"probe_bkt_stats_$k")
-          var dfP: DataFrame = null; var dfB: DataFrame = null
-          var nP = 0L; var nB = 0L
-          // warm BOTH variants (r13 review: a path-only warmup biased the
-          // recorded bucketed wall with its cold first file touch)
-          probe(bandsP, statsP).write.format("noop").mode("overwrite").save()
-          probe(bandsB, statsB).write.format("noop").mode("overwrite").save()
-          // collect() (not a noop write) so the metrics land on the SAME
-          // QueryExecution the shuffledBytes walk reads — a write runs
-          // its own execution and leaves df.queryExecution's at zero
-          time(s"stress_bucketed_${k}x_path") {
-            dfP = probe(bandsP, statsP); nP = dfP.collect().length.toLong
-          }
-          time(s"stress_bucketed_${k}x_bucketed") {
-            dfB = probe(bandsB, statsB); nB = dfB.collect().length.toLong
-          }
-          require(nP == nB, s"layouts disagree: $nP vs $nB pairs")
-          println(s"  stress bucketed ${k}x pairs=$nP shuffled bytes: " +
-            s"path=${shuffledBytes(dfP)} bucketed=${shuffledBytes(dfB)}")
-          spark.sql(s"DROP TABLE IF EXISTS probe_bkt_bands_$k")
-          spark.sql(s"DROP TABLE IF EXISTS probe_bkt_stats_$k")
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(pdir))
-          spark.catalog.clearCache()
-        }
-      } finally {
-        prevB.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-        prevA.fold(spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold"))(
-          spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", _))
-      }
-    }
-    if (sys.env.contains("PROBE_RULES")) {
-      // Optimizer-rule scale evidence: the same queries with and without
-      // the graft rewrite rules, against real testdata. The naive plans
-      // are nested-loop products — quadratic in rows — so their advantage
-      // grows without bound as SF rises.
-      import org.apache.spark.sql.functions._
-      def withRules[T](binWidth: Long)(f: => T): T = {
-        val prev = spark.experimental.extraOptimizations
-        spark.experimental.extraOptimizations =
-          prev ++ Seq(plans.HammingJoinRewrite(spark), plans.RangeBinJoinRewrite(spark))
-        spark.conf.set("spark.graft.rangeJoin.binWidth", binWidth.toString)
-        // the A/B exists to measure the REWRITTEN plan; at probe SF the
-        // r14 self-selection gate would (correctly) decline below the
-        // crossover and the "rule" leg would silently time the naive plan
-        spark.conf.set(plans.HammingJoinRewrite.MinBytesProductKey, "0")
-        try f finally {
-          spark.conf.unset("spark.graft.rangeJoin.binWidth")
-          spark.conf.unset(plans.HammingJoinRewrite.MinBytesProductKey)
-          spark.experimental.extraOptimizations = prev
-        }
-      }
-      val ev = Tables.events(spark, dir).cache(); ev.count()
-      def intervalJoin = {
-        val c = ev.filter(col("event_type") === "click")
-          .select(col("event_id").as("cid"), col("ts").cast("timestamp").cast("long").as("cts"))
-        val p = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id").as("pid"), col("ts").cast("timestamp").cast("long").as("pts"))
-        p.join(c, col("pts") >= col("cts") && col("pts") <= col("cts") + lit(1800L))
-      }
-      var naiveN, ruleN = -1L
-      time("interval_naive") { naiveN = intervalJoin.count() }
-      time("interval_rule") { ruleN = withRules(1800L)(intervalJoin.count()) }
-      println(s"  interval pairs naive=$naiveN rule=$ruleN match=${naiveN == ruleN}")
-      val sk = dedup.Dedup.simHashSketches(Tables.documents(spark, dir))
-        .select(col("doc_id"), col("simhash")).cache(); sk.count()
-      def hammingJoin = {
-        val a = sk.toDF("a", "sa"); val b = sk.toDF("b", "sb")
-        a.join(b, bit_count(col("sa").bitwiseXOR(col("sb"))) <= lit(3) && col("a") < col("b"))
-      }
-      time("hamming_naive") { naiveN = hammingJoin.count() }
-      time("hamming_rule") { ruleN = withRules(1800L)(hammingJoin.count()) }
-      println(s"  hamming pairs naive=$naiveN rule=$ruleN match=${naiveN == ruleN}")
-      ev.unpersist(); sk.unpersist()
-    }
-    if (sys.env.contains("PROBE_DOT")) {
-      // A/B the native dot_q codegen expression vs the HOF formulation on
-      // an all-pairs-per-bucket dot workload (the ANN kernel shape).
-      import org.apache.spark.sql.functions._
-      import similarity.Similarity
-      val e = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), Similarity.quantize(col("embedding")).as("q"),
-          (col("vec_id") % 64).as("bkt")).cache()
-      e.count()
-      val pairs = e.toDF("a", "qa", "bkt").join(e.toDF("b", "qb", "bkt"), Seq("bkt"))
-        .filter(col("a") < col("b"))
-      for (round <- 1 to 3) {
-        time(s"dot_native_$round") {
-          pairs.select(sum(Similarity.dotQ(col("qa"), col("qb"))))
-            .write.format("noop").mode("overwrite").save()
-        }
-        time(s"dot_hof_$round") {
-          pairs.select(sum(Similarity.dotQHof(col("qa"), col("qb"))))
-            .write.format("noop").mode("overwrite").save()
-        }
-      }
-      e.unpersist()
-    }
-    if (sys.env.contains("PROBE_PPJOIN_SEL")) {
-      // r17 (VERDICT r16 #7): candidate-set selectivity of ppJoin's
-      // prefix join WITH vs WITHOUT the positional filter — the
-      // committed evidence that the filter prunes verify-join input.
-      // Replays the prefix pipeline inline (same constants as
-      // Dedup.ppJoin, k=3, t=0.5) and counts candidate pairs both ways;
-      // the verified-result equality is pinned by PpJoinSpec + oracle.
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("hbase"))
-      val sh = dedup.Dedup.portableShingleHashes(
-        Tables.documents(spark, dir), 3).localCheckpoint(true)
-      val dfreq = sh.groupBy(col("hbase")).agg(count(lit(1)).as("df"))
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val prefix = sh.join(dfreq, Seq("hbase"))
-        .withColumn("rn", row_number().over(w))
-        .join(sizes, Seq("doc_id"))
-        .filter(col("rn") * 2 <= col("n") + 2)
-        .select(col("doc_id"), col("hbase"), col("n"), col("rn"))
-        .localCheckpoint(true)
-      val joined = prefix.select(col("doc_id").as("a"), col("hbase"),
-          col("n").as("pna"), col("rn").as("rna"))
-        .join(prefix.select(col("doc_id").as("b"), col("hbase"),
-          col("n").as("pnb"), col("rn").as("rnb")), Seq("hbase"))
-        .filter(col("a") < col("b") &&
-          col("pnb") * 2 >= col("pna") && col("pna") * 2 >= col("pnb"))
-      val base = joined.select(col("a"), col("b")).distinct().count()
-      val pos = joined
-        .filter((lit(1L) + least(col("pna") - col("rna"),
-          col("pnb") - col("rnb"))) * 3 >= col("pna") + col("pnb"))
-        .select(col("a"), col("b")).distinct().count()
-      println(s"  ppjoin candidates: size-filter only=$base  +positional=$pos" +
-        f"  (${100.0 * (base - pos) / math.max(1, base)}%.1f%% pruned)")
-    }
-    if (sys.env.contains("PROBE_STRESS")) {
-      // Near-dup stress: replicate the corpus with per-replica suffixes so
-      // every original spawns a dup group; validates the LSH pipeline's
-      // cost shape at ~10x the bench corpus.
-      import org.apache.spark.sql.functions._
-      val reps = sys.env.getOrElse("PROBE_STRESS", "8").toInt
-      val docs = Tables.documents(spark, dir)
-      val big = docs.crossJoin(spark.range(reps).toDF("rep"))
-        .select((col("doc_id") * reps + col("rep")).as("doc_id"),
-          concat(col("text"), lit(" rep"), col("rep")).as("text"))
-      println(s"  stress docs=${big.count()}")
-      time("stress_minhash") {
-        val pairs = dedup.Dedup.minHashNearDup(big, k = 3, threshold = 0.8)
-        println(s"  stress pairs=${pairs.count()}")
-      }
-      spark.catalog.clearCache()
-      time("stress_clusters_at_scale") {
-        val cc = dedup.Dedup.dedupClustersAtScale(big, k = 3, threshold = 0.8)
-        println(s"  stress clustered_docs=${cc.count()}")
-      }
-    }
-    if (sys.env.contains("PROBE_SPANS")) {
-      // Duplicate-span stress: replicate the corpus with REP-distinct
-      // doc_ids but UNCHANGED text, so cross-doc duplicated-gram density
-      // scales with reps (every gram becomes duplicated at reps>=2 —
-      // worst-case hit density). Validates that dupSpans stays linear in
-      // corpus tokens: the per-position hit stream never multiplies by
-      // the df of its gram.
-      import org.apache.spark.sql.functions._
-      val reps = sys.env.getOrElse("PROBE_SPANS", "8").toInt
-      val docs = Tables.documents(spark, dir)
-      val big = docs.crossJoin(spark.range(reps).toDF("rep"))
-        .select((col("doc_id") * reps + col("rep")).as("doc_id"), col("text"))
-        .localCheckpoint(true)
-      println(s"  stress docs=${big.count()}")
-      time(s"stress_dup_spans_x$reps") {
-        // maxDf must admit the replica flood (df == reps per gram)
-        val spans = dedup.Dedup.dupSpans(big, k = 8, maxDf = reps * 64)
-        println(s"  stress spans=${spans.count()}")
-      }
-      spark.catalog.clearCache()
-      time(s"stress_selfrep_spans_x$reps") {
-        val spans = dedup.Dedup.selfRepSpans(big, k = 3)
-        println(s"  stress selfrep=${spans.count()}")
-      }
-    }
-    if (sys.env.contains("PROBE_MINHASH_CMP")) {
-      // Head-to-head under THIS JVM (sbt-forked = C1-capped, same as the
-      // driver bench): full near-dup pipeline with the single-buffer
-      // typed-aggregator signatures vs the 64-min-column formulation.
-      // Caches cleared between runs to mirror the fixed Bench loop.
-      import graft.dedup.Dedup
-      val docs = Tables.documents(spark, dir)
-      def runPipe(tag: String, sigFn: Option[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame]): Unit = {
-        for (rep <- 1 to 3) {
-          spark.catalog.clearCache()
-          time(s"minhash_$tag/$rep") {
-            Dedup.minHashNearDup(docs, sigFn = sigFn)
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
-      }
-      runPipe("rowexpr", None)
-      runPipe("udaf", Some(Dedup.minHashSignatures(_)))
-      runPipe("64col", Some(Dedup.minHashSignatures64Col(_)))
-      runPipe("rowexpr_again", None)
-      spark.catalog.clearCache()
-    }
-    if (sys.env.contains("PROBE_B14")) {
-      // r3-verdict item: the four b14 queries drifted 0.4-1.6 s between
-      // driver benches with untouched code. A/B under the bench JVM:
-      // steady-state repeats vs clearCache-before-every-run (the bench's
-      // storage state), 5 reps each, min+median printed.
-      val qs = Seq("b14_multimodal_meta", "b14_multimodal_frames",
-        "b14_multimodal_features", "b14_udaf_weighted_avg")
-      def rep(tag: String, name: String, clear: Boolean): Unit = {
-        val fn = SparkEntry.queries(name)
-        val times = (1 to 5).map { _ =>
-          if (clear) spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val sorted = times.sorted
-        println(f"B14 $tag $name min=${sorted.head}%.2f med=${sorted(2)}%.2f " +
-          s"all=${times.map(t => f"$t%.2f").mkString(",")}")
-      }
-      qs.foreach(n => rep("steady", n, clear = false))
-      qs.foreach(n => rep("cleared", n, clear = true))
-    }
-    if (sys.env.contains("PROBE_DRIFT")) {
-      // r4-verdict item 2 evidence: ten untouched built-in queries moved
-      // 1.4-2.7x between the r3 and r4 driver benches. Hypothesis to
-      // test: code-cache / JIT pressure once all 133 queries' generated
-      // code is compiled (the bench warms up EVERY query before timing).
-      // A/B under the bench JVM: (fresh) time the ten in a JVM that has
-      // compiled only them, then (loaded) replay the bench's full-suite
-      // sf0.001 warmup and time the ten again. Code-cache occupancy and
-      // cumulative JIT time printed at each phase boundary.
-      import scala.jdk.CollectionConverters._
-      val drifted = Seq("b08_except", "b09_math_funcs", "b09_string_funcs",
-        "b07_topk_per_group", "b08_except_all", "b06_running_sum",
-        "b10_tumbling", "b10_interval_join", "b04_grouping_sets", "b08_intersect")
-      def codeCache(): String = {
-        val pools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-          .filter(_.getName.startsWith("CodeHeap"))
-          .map(p => f"${p.getName}=${p.getUsage.getUsed / 1048576.0}%.0fMB")
-        val jit = java.lang.management.ManagementFactory.getCompilationMXBean
-        (pools :+ s"jit_ms=${jit.getTotalCompilationTime}").mkString(" ")
-      }
-      def rep(tag: String, name: String): Unit = {
-        val fn = SparkEntry.queries(name)
-        val times = (1 to 5).map { _ =>
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val s = times.sorted
-        println(f"DRIFT $tag $name min=${s.head}%.2f med=${s(2)}%.2f " +
-          s"all=${times.map(t => f"$t%.2f").mkString(",")}")
-      }
-      // fresh phase: warm ONLY the ten (sf0.001 pass mirrors the bench's
-      // per-query codegen+JIT warmup), then steady-state at the bench SF
-      val warmDir = "/root/testdata/sf0.001"
-      drifted.foreach { n =>
-        try SparkEntry.queries(n)(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-      }
-      println(s"DRIFT cache after ten-query warmup: ${codeCache()}")
-      drifted.foreach(rep("fresh", _))
-      // loaded phase: the bench's real precondition — every query warmed
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-      }
-      println(s"DRIFT cache after full-suite warmup: ${codeCache()}")
-      drifted.foreach(rep("loaded", _))
-      println(s"DRIFT cache at end: ${codeCache()}")
-    }
-    if (sys.env.contains("PROBE_FUZZY")) {
-      // r4-verdict item 1 evidence: the hot-blocking-key cap must be
-      // inert on the real part-name corpus (no block over MaxBlock), so
-      // the driver's b03_fuzzy_join hash is unchanged. Compares capped
-      // vs uncapped output row-for-row at this SF.
-      import org.apache.spark.sql.functions._
-      val names = Tables.part(spark, dir)
-        .groupBy(col("p_name").as("name")).agg(count(lit(1)).as("cnt"))
-      val capped = ops.Relational.fuzzyNameJoin(names, maxDist = 1)
-      val uncapped = ops.Relational.fuzzyNameJoin(names, maxDist = 1, maxBlock = Int.MaxValue)
-      val diff = capped.exceptAll(uncapped).count() + uncapped.exceptAll(capped).count()
-      println(s"  FUZZY capped_rows=${capped.count()} uncapped_rows=${uncapped.count()} diff=$diff")
-    }
-    if (sys.env.contains("PROBE_MINHASH")) {
-      val docs = Tables.documents(spark, dir)
-      val sh = dedup.Dedup.shingles(docs, 3).cache()
-      time("shingles")(println(s"  shingles=${sh.count()}"))
-      val sigs = dedup.Dedup.minHashSignatures(sh)
-      time("signatures")(println(s"  sigs=${sigs.count()}"))
-      val bands = dedup.Dedup.lshBands(sigs).cache()
-      time("bands")(println(s"  bands=${bands.count()}"))
-      val pairs = dedup.Dedup.candidatePairs(bands).cache()
-      time("pairs")(println(s"  pairs=${pairs.count()}"))
-      time("verify")(println(s"  verified=${dedup.Dedup.verifyJaccard(pairs, sh).count()}"))
     }
     spark.stop()
   }

@@ -77,12 +77,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Accept either pre-hashed `(doc_id, hbase)` or raw `(doc_id, shingle)`
-    * input — ONE definition shared by both signature formulations. */
-  private def hashedShingleBase(sh: DataFrame): DataFrame =
-    if (sh.columns.contains("hbase")) sh.select(col("doc_id"), col("hbase"))
-    else sh.select(col("doc_id"), xxhash64(col("shingle")).as("hbase"))
-
   /** MinHash signatures: for each of `numHashes` hash functions, the min
     * over the doc's shingles. One shuffle on doc_id. The shingle string is
     * hashed ONCE to a long; each family member then re-hashes the long
@@ -90,28 +84,17 @@ object Dedup {
     *
     * Single-buffer [[graft.functions.MinHashAgg]] typed aggregator — ONE
     * aggregate buffer per group (an Array[Long] updated with a tight
-    * loop) instead of 64 separate aggregate expressions.
-    * [[minHashSignatures64Col]] keeps the column-algebra formulation for
-    * comparison; the production query path is the per-row
-    * [[minHashSignaturesRow]]. The hash families of the three paths:
-    * row-expression == MinHashAgg (property-tested), 64Col is DISTINCT —
-    * its signatures must never mix with the others in one pipeline. */
+    * loop) instead of 64 separate aggregate expressions. The production
+    * query path is the per-row [[minHashSignaturesRow]]; both derive the
+    * same hash family (property-tested). Accepts either pre-hashed
+    * `(doc_id, hbase)` or raw `(doc_id, shingle)` input. */
   def minHashSignatures(sh: DataFrame, numHashes: Int = 64): DataFrame = {
     val mh = udaf(new graft.functions.MinHashAgg(numHashes))
-    hashedShingleBase(sh).groupBy(col("doc_id"))
+    val base =
+      if (sh.columns.contains("hbase")) sh.select(col("doc_id"), col("hbase"))
+      else sh.select(col("doc_id"), xxhash64(col("shingle")).as("hbase"))
+    base.groupBy(col("doc_id"))
       .agg(mh(col("hbase")).as("sig"))
-  }
-
-  /** Column-algebra MinHash variant: 64 codegen'd `min(xxhash64(i, h))`
-    * aggregate columns. Same shuffle shape as [[minHashSignatures]]; kept
-    * as the measurement baseline for the single-buffer aggregator. */
-  def minHashSignatures64Col(sh: DataFrame, numHashes: Int = 64): DataFrame = {
-    val aggs = (0 until numHashes).map(i =>
-      min(xxhash64(lit(i), col("hbase"))).as(s"h$i"))
-    hashedShingleBase(sh).groupBy(col("doc_id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id"),
-        array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
   }
 
   /** The per-band bucket-hash array over a signature column — ONE

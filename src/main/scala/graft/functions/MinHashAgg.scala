@@ -6,20 +6,15 @@ import org.apache.spark.sql.{Encoder, Encoders}
 /** Typed aggregator producing a full MinHash signature in ONE aggregation
   * buffer (the `Aggregator` fallback SURVEY §4.2 anticipates for B12):
   * input is the shingle's 64-bit base hash; the buffer holds the
-  * element-wise minimum of the `numHashes` derived hashes.
-  *
-  * Versus the 64-min-columns formulation in
-  * [[graft.dedup.Dedup.minHashSignatures]]: one buffer per group instead of
-  * 64 aggregate expressions — smaller codegen, same shuffle shape
-  * (map-side partial merge works on the array buffer).
+  * element-wise minimum of the `numHashes` derived hashes. One buffer per
+  * group instead of 64 aggregate expressions — smaller codegen, same
+  * shuffle shape (map-side partial merge works on the array buffer).
   */
 class MinHashAgg(numHashes: Int = 64) extends Aggregator[Long, Array[Long], Seq[Long]] {
 
   /** Splitmix-style finalizer over (seed, baseHash). Deterministic and
-    * seed-separated, but a DIFFERENT hash family than the column
-    * formulation in [[graft.dedup.Dedup.minHashSignatures64Col]] (which
-    * derives members via xxhash64(seed, h)) — signatures from the two
-    * paths are not comparable and must never be mixed in one pipeline. */
+    * seed-separated; the per-row [[MinHashSig]] expression derives the
+    * same family (property-tested in MinHashSigSpec). */
   @inline private def mix(seed: Int, h: Long): Long = {
     var x = h ^ (seed.toLong * 0x9E3779B97F4A7C15L)
     x ^= x >>> 33; x *= 0xFF51AFD7ED558CCDL

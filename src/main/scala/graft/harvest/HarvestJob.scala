@@ -104,6 +104,15 @@ object HarvestJob {
       startId = Some(nextFieldId)).localCheckpoint(true)
     val fieldsInserted = allFields.count() - existingFieldCount
 
+    // Release the cached inputs now that both eager checkpoints hold the
+    // merged tables, and before any write: while `existingTerms` /
+    // `existingFields` stay cached, a later read of the same store paths
+    // (the SQLite artifact's re-read) is served from the cached pre-run
+    // plan instead of the files this run commits. terms/allFields are
+    // checkpointed, not cached — their blocks free via the ContextCleaner.
+    valid.unpersist()
+    existingTerms.unpersist(); existingFields.unpersist()
+
     // A19/A20: fail the job (like the reference's sqlite3.Error path,
     // harvest.py:477-479) if the merged store would violate its
     // uniqueness constraints.
@@ -117,11 +126,6 @@ object HarvestJob {
     Store.writeTable(allFields, cfg.storeDir, "term_fields")
     Store.bootstrap(spark, cfg.storeDir)
     cfg.sqliteArtifact.foreach(Store.writeSqliteArtifact(spark, cfg.storeDir, _))
-
-    // terms/allFields are checkpointed, not cached — their blocks free via
-    // the ContextCleaner; only the cache()d frames need explicit release
-    valid.unpersist()
-    existingTerms.unpersist(); existingFields.unpersist()
 
     Result(bindingsRead, validRows, distinctTerms,
       termsInserted, termsUpdated, fieldsInserted, warnings)

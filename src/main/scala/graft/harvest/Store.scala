@@ -140,15 +140,6 @@ object Store {
     }
     fs.delete(old, true)
     fs.delete(new Path(target, writerMark), false)
-    // r17 dev-only census (VERDICT r16 #3, guide §6 small-files): files
-    // and bytes this write left in the table — the per-trigger I/O story
-    // of the streaming store, printed only under PROBE_STORE_CENSUS.
-    if (sys.env.contains("PROBE_STORE_CENSUS")) {
-      val sts = fs.listStatus(target).filter(_.isFile)
-        .filterNot(_.getPath.getName.startsWith("_"))
-      println(f"    census writeTable $name%-12s files=${sts.length}%3d " +
-        f"bytes=${sts.map(_.getLen).sum}%9d")
-    }
   }
 
   /** Bootstrap any missing tables as empty Parquet with the fixed schema —

@@ -908,8 +908,7 @@ object GraphOps {
   def communityMartQuery(s: SparkSession, dir: String): DataFrame =
     communityMartOn(strongEdges(s, dir), Tables.lineitem(s, dir))
 
-  /** The mart over an explicit edge set + lineitem frame — shared by the
-    * driver gate and the PROBE_STRESS_E06 scaling probe. */
+  /** The mart over an explicit edge set + lineitem frame. */
   def communityMartOn(edgeSet: DataFrame, lineitem: DataFrame): DataFrame = {
     import edgeSet.sparkSession.implicits._
     val labels = lpaOf(edgeSet, LpaRounds)

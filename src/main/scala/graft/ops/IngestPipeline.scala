@@ -56,7 +56,7 @@ object IngestPipeline {
     * tables (the materialize-once [[graft.SnapshotStore]] seam the
     * gated query uses — at 100 TB the standing corpus' near-dedup index
     * is a bucketed table written once, not re-derived per ingest); when
-    * absent (the stress probe's replicated corpora) they derive inline.
+    * absent they derive inline.
     * Content is identical either way. */
   def ingestReport(arrivalsIn: DataFrame, referenceIn: DataFrame,
       refTables: Option[(DataFrame, DataFrame, DataFrame)] = None): DataFrame = {

@@ -35,8 +35,7 @@ object RagPipeline {
   def ragRetrieval(s: SparkSession, dir: String): DataFrame =
     ragRetrievalDocs(Tables.documents(s, dir))
 
-  /** The pipeline over any `(doc_id, text)` frame — the corpus-input
-    * seam the e02 scale probe replicates through. */
+  /** The pipeline over any `(doc_id, text)` frame. */
   def ragRetrievalDocs(corpus: DataFrame): DataFrame = {
     val s = corpus.sparkSession
     import s.implicits._

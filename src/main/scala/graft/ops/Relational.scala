@@ -1680,7 +1680,7 @@ object Relational {
       .reduceOption(_ + _).getOrElse(lit(0L))
     val ndE = xs.map(j => when($"x" < j, cumTotal(j)).otherwise(lit(0L)))
       .reduceOption(_ + _).getOrElse(lit(0L))
-    // r17 (VERDICT r16 #2, decided on PROBE_JOBS structure — see
+    // r17 (VERDICT r16 #2, decided on the per-job wall table — see
     // plans/r17/b04_kendall_jobs_*.txt): the query is job-count bound
     // (21 jobs, no job over 1.3 s), so the win is FEWER cells-scale
     // aggregations, not a window rewrite. Two cuts, both exact-integer

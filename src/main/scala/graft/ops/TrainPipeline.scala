@@ -47,8 +47,7 @@ object TrainPipeline {
       numShards: Int = 4, capacity: Int = 512): DataFrame =
     trainingBatchesDocs(Tables.documents(s, dir), numShards, capacity)
 
-  /** [[trainingBatches]] over any (doc_id, source, text) frame — the
-    * corpus-input seam the PROBE_STRESS_E04 scaling probe drives. */
+  /** [[trainingBatches]] over any (doc_id, source, text) frame. */
   def trainingBatchesDocs(docs: DataFrame,
       numShards: Int = 4, capacity: Int = 512): DataFrame = {
     val s = docs.sparkSession

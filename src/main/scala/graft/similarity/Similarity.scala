@@ -623,11 +623,8 @@ object Similarity {
   /** The full hierarchy build: every layer's bounded-out-degree
     * adjacency as ONE frame (layer, src, dst) — built top-down in
     * [[HnswMaxLayers]] stages of (residency equi-join, in-cell R-NN
-    * window, parent-descent assignment), per the scaladoc above.
-    * `logStats` (the PROBE_STRESS_ANN path) prints per-stage member /
-    * pair / assignment-candidate row counts so the probe can assert
-    * ~linear growth of the assignment AND pair stages, not just wall. */
-  private[graft] def hnswBuild(e: DataFrame, logStats: Boolean = false,
+    * window, parent-descent assignment), per the scaladoc above. */
+  private[graft] def hnswBuild(e: DataFrame,
       layersOverride: Option[Int] = None): DataFrame = {
     val pre = e.select(col("vec_id"), col("q"), col("norm")).localCheckpoint(true)
     // r11 (VERDICT r10 #4): self-provision the layer budget from the
@@ -683,8 +680,6 @@ object Similarity {
       val layerAdj = pairs.withColumn("rn", row_number().over(nw)).filter(col("rn") <= HnswR)
         .select(lit(m).as("layer"), col("src"), col("dst"))
       adj = if (adj == null) layerAdj else adj.unionByName(layerAdj)
-      if (logStats)
-        println(s"  hnsw build layer=$m members=${layerM.count()} pairs=${pairs.count()}")
       if (m > 0) {
         // descend: every member's Overlap nearest layer-m vertices;
         // candidates = layer-m vertices sharing one of the member's
@@ -698,8 +693,6 @@ object Similarity {
         val candIds = memberKeys
           .join(cellAssign.select(col("cell_id"), col("vec_id").as("cand_id")), Seq("cell_id"))
           .select(col("vec_id"), col("cand_id")).distinct()
-        if (logStats)
-          println(s"  hnsw assign layer=$m cand_pairs=${candIds.count()}")
         val scored = candIds
           .join(lv.select(col("vec_id"), col("q"), col("norm")), Seq("vec_id"))
           .join(layerM.select(col("vec_id").as("cand_id"), col("q").as("cq"),
@@ -726,8 +719,7 @@ object Similarity {
     * |queries|·beam ids; every expansion is an equi-join on the bounded
     * adjacency — per-query cost independent of corpus size. Fully
     * deterministic, replayed end to end by the DuckDB oracle. */
-  def hnswTopK(embeddings: DataFrame, queryPred: Column, k: Int = 10,
-      logStats: Boolean = false): DataFrame = {
+  def hnswTopK(embeddings: DataFrame, queryPred: Column, k: Int = 10): DataFrame = {
     val e = quantizedWithNorm(embeddings).cache()
     // count once: the layer budget provisions the build AND authorizes
     // the search's entry-level cap (r12 — "searched as built" no longer
@@ -735,7 +727,7 @@ object Similarity {
     // layer); hnswBuild skips its own census when the override is given
     val layers = provisionLayers(e.count())
     val out = hnswTopKWith(e, queryPred,
-      hnswBuild(e, logStats, layersOverride = Some(layers)).localCheckpoint(true),
+      hnswBuild(e, layersOverride = Some(layers)).localCheckpoint(true),
       k, Some(layers))
     e.unpersist()
     out

@@ -274,17 +274,6 @@ private[streaming] final class BatchLedger(dirOpt: Option[String]) {
             "a newer instance owns this sink (zombie driver)")
       writes.foreach { case (name, df) =>
         df.write.mode("overwrite").parquet(dataPath(name, id, compact))
-        // r17 dev-only census (VERDICT r16 #3, guide §6 small-files):
-        // files/bytes per committed payload, under PROBE_STORE_CENSUS.
-        if (sys.env.contains("PROBE_STORE_CENSUS")) {
-          val p = new org.apache.hadoop.fs.Path(dataPath(name, id, compact))
-          val fs = p.getFileSystem(
-            df.sparkSession.sparkContext.hadoopConfiguration)
-          val sts = fs.listStatus(p).filter(_.isFile)
-            .filterNot(_.getPath.getName.startsWith("_"))
-          println(f"    census ledger $name%-10s b$id files=${sts.length}%3d " +
-            f"bytes=${sts.map(_.getLen).sum}%9d")
-        }
       }
       onBeforePublish()
       val tmp = new File(new File(r, "commits"), s".$id.e$epoch.tmp")

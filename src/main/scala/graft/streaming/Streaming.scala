@@ -971,8 +971,8 @@ object Streaming {
     * parquet lineage (localCheckpoint) BEFORE the swap deletes the old
     * files — the ledger prune discipline (BatchLedger scaladoc).
     *
-    * Scale shape (r12, measured by PROBE_STRESS_HARVEST; join forms
-    * verified empirically on Spark 4.1): per trigger, the A13 FK join
+    * Scale shape (r12; join forms verified empirically
+    * on Spark 4.1): per trigger, the A13 FK join
     * (inner) broadcasts the O(batch) side — the store is scanned, not
     * shuffled, in that leg; the A11 upsert (full outer — no broadcast
     * form exists, both sides exchange even with a 10-row side) and the

@@ -1071,8 +1071,7 @@ object TextAnalysis {
   def bm25Rank(s: SparkSession, dir: String, k: Int = 10): DataFrame =
     bm25RankDocs(Tables.documents(s, dir), k)
 
-  /** [[bm25Rank]] over any `(doc_id, text)` frame — the corpus-input
-    * seam the e02 scale probe replicates through. */
+  /** [[bm25Rank]] over any `(doc_id, text)` frame. */
   def bm25RankDocs(docs: DataFrame, k: Int = 10): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._

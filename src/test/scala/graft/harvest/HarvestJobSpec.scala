@@ -40,8 +40,10 @@ class HarvestJobSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/translations").count() === 0)
 
     val t1 = Timestamp.valueOf("2026-02-01 00:00:00")
+    val db = new java.io.File(s"$dir/translations.db")
     val r2 = HarvestJob.run(spark, HarvestJob.Config(
-      "http://vocab.nerc.ac.uk/collection/P01/current/", bindings, dir, t1))
+      "http://vocab.nerc.ac.uk/collection/P01/current/", bindings, dir, t1,
+      sqliteArtifact = Some(db.getPath)))
     assert(r2.termsInserted === 0)
     assert(r2.termsUpdated === 3) // all re-seen → updated_at bumped
     assert(r2.fieldsInserted === 0) // INSERT OR IGNORE semantics
@@ -56,6 +58,12 @@ class HarvestJobSpec extends SparkSpec {
     assert(fields.count() === 6)
     assert(Validate.uniqueViolations(fields,
       Seq("term_id", "field_uri", "original_value")).count() === 0) // A20 holds
+
+    // the artifact exports the store this run committed, not the one it read
+    val dbTerms = Sqlite.readTable(db, "terms")
+    assert(dbTerms.length === terms2.length)
+    assert(dbTerms.forall(_._2(3) == Sqlite.VText("2026-02-01 00:00:00")))
+    assert(Sqlite.readTable(db, "term_fields").length.toLong === fields.count())
   }
 
   test("invalid collection URI fails fast (A18/A25)") {
