@@ -38,10 +38,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Payload shape is the sink's choice, recorded per commit in the
   * marker's `meta` map:
-  *   - SEGMENT sinks (band index, ANN vectors, cross-dedup pairs, the
-  *     fold deltas) write O(batch) per trigger and recover by re-folding
-  *     the segments — the appending-partitions-of-a-bucketed-table shape
-  *     at 100 TB;
+  *   - SEGMENT sinks (band index, ANN vectors, and the fold deltas,
+  *     whose one owner is [[DeltaFold]]) write O(batch) per trigger and
+  *     recover by re-folding the segments — the appending-partitions-of-
+  *     a-bucketed-table shape at 100 TB;
   *   - SNAPSHOT sinks (the concurrency curve's bounded open/frozen/
   *     finished-day state) write their whole bounded state and prune all
   *     but the latest commit ([[pruneSnapshotsBelow]]) — NOTE a sink
@@ -250,13 +250,6 @@ private[streaming] final class BatchLedger(dirOpt: Option[String]) {
     new File(new File(root.getOrElse(sys.error("ledger is not durable")), "data"),
       s"$name-${if (compact) "c" else "b"}$id-e$ep").toString
 
-  /** Persist `writes` then publish the marker (payload first, marker
-    * last via atomic rename); always advances the in-JVM high-water mark
-    * for plain commits, so non-durable sinks call this too (with empty
-    * writes). Throws when a NEWER epoch has claimed the directory — the
-    * zombie-writer fence (the payload namespace is epoch-scoped, so
-    * even a racing slip-through cannot clobber the successor's files;
-    * recovery truncation covers the residue). */
   /** Newest claimed epoch by NAME only — the fence checks need no claim
     * bodies (r12 review: `claims` read every body per call and commit
     * scans twice per trigger; a many-times-restarted store paid 2·N
@@ -264,6 +257,14 @@ private[streaming] final class BatchLedger(dirOpt: Option[String]) {
   private def newestEpoch(r: File): Long =
     EpochClaims.newest(new File(r, "epochs"))
 
+  /** Persist `writes` then publish the marker (payload first, marker
+    * last via atomic rename); always advances the in-JVM high-water mark
+    * for plain commits. A non-durable ledger ignores `writes` (nothing
+    * is persisted and no write job runs), so sinks pass their payloads
+    * unconditionally. Throws when a NEWER epoch has claimed the
+    * directory — the zombie-writer fence (the payload namespace is
+    * epoch-scoped, so even a racing slip-through cannot clobber the
+    * successor's files; recovery truncation covers the residue). */
   def commit(id: Long, writes: Seq[(String, DataFrame)] = Seq.empty,
       meta: Map[String, String] = Map.empty, compact: Boolean = false): Unit = {
     root.foreach { r =>

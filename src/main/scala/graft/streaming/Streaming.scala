@@ -318,7 +318,7 @@ object Streaming {
         writes.map { case (n, _) => s"has_$n" -> "1" } ++
         next.frontier.toSeq.flatMap(f => Seq(
           "frontier_ms" -> f.getTime.toString, "frontier_ns" -> f.getNanos.toString))
-      ledger.commit(batchId, if (ledger.durable) writes else Seq.empty, meta)
+      ledger.commit(batchId, writes, meta)
       ledger.pruneSnapshotsBelow(batchId)
       st = next
     }
@@ -1173,42 +1173,15 @@ object Streaming {
     * cadence; incremental PPR maintenance (residual push à la
     * Andersen-Chung-Lang) would trade the exactness gate for per-edge
     * work and is deliberately not the declared semantics. */
-  final class PprRefresh(stateDir: Option[String] = None) {
-    private val ledger = new BatchLedger(stateDir)
-    @volatile private var acc: Option[DataFrame] = None
-    @volatile private var last: Option[DataFrame] = None
-    /** Restart recovery (r11): the durable form is one O(batch) DISTINCT
-      * edge delta per committed trigger; the accumulated graph is their
-      * re-distincted union (distinct is idempotent/associative, so the
-      * recovered set equals the continuous fold's bit for bit) and the
-      * ranks snapshot recomputes once from it. */
-    def recover(s: SparkSession): this.type = synchronized {
-      ledger.recovered.filterNot(_.compact)
-        .map(c => ledger.read(s, "edges", c))
-        .reduceOption(_ unionByName _).foreach { u =>
-          val snap = u.distinct().localCheckpoint(true)
-          acc = Some(snap)
-          last = Some(graft.ops.WorkflowQueries.personalizedPageRankEdges(snap))
-        }
-      this
-    }
-    /** foreachBatch body: merge the micro-batch of `(u, v)` edges into
-      * the accumulated graph and recompute the ranks snapshot.
-      * At-least-once safe: a re-delivered batchId is a no-op (r11). */
-    def update(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (ledger.alreadyApplied(batchId)) return
-      val delta = batch.select(col("u"), col("v")).distinct().localCheckpoint(true)
-      val merged = acc match {
-        case Some(a) => a.unionByName(delta).distinct()
-        case None    => delta
-      }
-      val snap = merged.localCheckpoint(true)
-      ledger.commit(batchId, if (ledger.durable) Seq("edges" -> delta) else Seq.empty)
-      acc = Some(snap)
-      last = Some(graft.ops.WorkflowQueries.personalizedPageRankEdges(snap))
-    }
+  final class PprRefresh(stateDir: Option[String] = None)
+      extends DeltaFold(stateDir, "edges") {
+    protected def delta(batch: DataFrame): DataFrame =
+      batch.select(col("u"), col("v")).distinct()
+    protected def combine(u: DataFrame): DataFrame = u.distinct()
+    override protected def view(edges: DataFrame): DataFrame =
+      graft.ops.WorkflowQueries.personalizedPageRankEdges(edges)
     /** Latest ranks snapshot (None before the first batch). */
-    def ranks: Option[DataFrame] = last
+    def ranks: Option[DataFrame] = snapshot
   }
 
   /** B10 streaming twin (r7): the DAU/WAU dashboard as a foreachBatch
@@ -1227,41 +1200,15 @@ object Streaming {
     * streamed == batch exactly — both pinned in StreamingSpec. At
     * 100 TB the accumulated user-day set is a bucketed table and the
     * per-trigger fold is one co-partitioned distinct. */
-  final class ActiveUsersRefresh(stateDir: Option[String] = None) {
-    private val ledger = new BatchLedger(stateDir)
-    @volatile private var acc: Option[DataFrame] = None
-    @volatile private var last: Option[DataFrame] = None
-    /** Restart recovery (r11): per-trigger O(batch) distinct (user, day)
-      * deltas re-distinct to the continuous fold's exact set (the
-      * [[PprRefresh]] recovery argument), then one snapshot recompute. */
-    def recover(s: SparkSession): this.type = synchronized {
-      ledger.recovered.filterNot(_.compact)
-        .map(c => ledger.read(s, "userdays", c))
-        .reduceOption(_ unionByName _).foreach { u =>
-          val snap = u.distinct().localCheckpoint(true)
-          acc = Some(snap)
-          last = Some(graft.ops.EventAnalytics.activeUsersOfUserDays(snap))
-        }
-      this
-    }
-    /** foreachBatch body: fold the micro-batch into the distinct
-      * (user_id, day) set and refresh the DAU/WAU snapshot.
-      * At-least-once safe: a re-delivered batchId is a no-op (r11). */
-    def update(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (ledger.alreadyApplied(batchId)) return
-      val ud = batch.select(col("user_id"), to_date(col("ts")).as("day"))
-        .distinct().localCheckpoint(true)
-      val merged = acc match {
-        case Some(a) => a.unionByName(ud).distinct()
-        case None    => ud
-      }
-      val snap = merged.localCheckpoint(true)
-      ledger.commit(batchId, if (ledger.durable) Seq("userdays" -> ud) else Seq.empty)
-      acc = Some(snap)
-      last = Some(graft.ops.EventAnalytics.activeUsersOfUserDays(snap))
-    }
+  final class ActiveUsersRefresh(stateDir: Option[String] = None)
+      extends DeltaFold(stateDir, "userdays") {
+    protected def delta(batch: DataFrame): DataFrame =
+      batch.select(col("user_id"), to_date(col("ts")).as("day")).distinct()
+    protected def combine(u: DataFrame): DataFrame = u.distinct()
+    override protected def view(userDays: DataFrame): DataFrame =
+      graft.ops.EventAnalytics.activeUsersOfUserDays(userDays)
     /** Latest DAU/WAU snapshot (None before the first batch). */
-    def counts: Option[DataFrame] = last
+    def counts: Option[DataFrame] = snapshot
   }
 
   /** B06 streaming twin (r8): the calendar-grid series triad — OLS
@@ -1278,48 +1225,25 @@ object Streaming {
     * per-batch lineage cut via eager checkpoint). At 100 TB the daily
     * table is a bucketed keyed table and the per-trigger fold is one
     * co-partitioned merge — the [[ActiveUsersRefresh]] contract. */
-  final class SeriesTrendRefresh(stateDir: Option[String] = None) {
-    private val ledger = new BatchLedger(stateDir)
-    @volatile private var acc: Option[DataFrame] = None
-    /** Restart recovery (r11): per-trigger O(batch) daily partials
-      * re-sum to the continuous fold's exact table (combinable BIGINT
-      * cents — associative, order-free). */
-    def recover(s: SparkSession): this.type = synchronized {
-      ledger.recovered.filterNot(_.compact)
-        .map(c => ledger.read(s, "daily", c))
-        .reduceOption(_ unionByName _).foreach { u =>
-          acc = Some(u.groupBy(col("event_type"), col("day"))
-            .agg(sum(col("v")).as("v")).localCheckpoint(true))
-        }
-      this
-    }
-    /** foreachBatch body: fold the micro-batch's daily partials into
-      * the accumulated (event_type, day, v) table.
-      * At-least-once safe: a re-delivered batchId is a no-op (r11). */
-    def update(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (ledger.alreadyApplied(batchId)) return
-      val d = graft.ops.EventAnalytics.dailyCents(batch).localCheckpoint(true)
-      val merged = acc match {
-        case Some(a) => a.unionByName(d)
-          .groupBy(col("event_type"), col("day")).agg(sum(col("v")).as("v"))
-        case None => d
-      }
-      ledger.commit(batchId, if (ledger.durable) Seq("daily" -> d) else Seq.empty)
-      acc = Some(merged.localCheckpoint(true))
-    }
+  final class SeriesTrendRefresh(stateDir: Option[String] = None)
+      extends DeltaFold(stateDir, "daily") {
+    protected def delta(batch: DataFrame): DataFrame =
+      graft.ops.EventAnalytics.dailyCents(batch)
+    protected def combine(u: DataFrame): DataFrame =
+      u.groupBy(col("event_type"), col("day")).agg(sum(col("v")).as("v"))
     /** Latest OLS-trend snapshot (None before the first batch). */
     def trend: Option[DataFrame] =
-      acc.map(graft.ops.EventAnalytics.trendOfDaily)
+      snapshot.map(graft.ops.EventAnalytics.trendOfDaily)
     /** Latest CUSUM-changepoint snapshot. */
     def changepoint: Option[DataFrame] =
-      acc.map(graft.ops.EventAnalytics.changepointOfDaily)
+      snapshot.map(graft.ops.EventAnalytics.changepointOfDaily)
     /** Latest lag-k autocorrelation snapshot. */
     def autocorr: Option[DataFrame] =
-      acc.map(d => graft.ops.EventAnalytics.autocorrOfDaily(d))
+      snapshot.map(d => graft.ops.EventAnalytics.autocorrOfDaily(d))
     /** Latest weekly-profile seasonal decomposition (r10) — the fourth
       * kernel over the same bounded daily state. */
     def seasonal: Option[DataFrame] =
-      acc.map(graft.ops.EventAnalytics.seasonalOfDaily)
+      snapshot.map(graft.ops.EventAnalytics.seasonalOfDaily)
   }
 
   /** r10 (VERDICT r9 #6) — INDEX-MAINTENANCE sink #1: the near-dup
@@ -1385,8 +1309,7 @@ object Streaming {
       if (ledger.alreadyApplied(batchId)) return
       val b = batch.select(col("doc_id"), col("text")).localCheckpoint(true)
       val (sh, band) = derive(b)
-      ledger.commit(batchId,
-        if (ledger.durable) Seq("sh" -> sh, "band" -> band) else Seq.empty)
+      ledger.commit(batchId, Seq("sh" -> sh, "band" -> band))
       shSegs = sh :: shSegs
       bandSegs = band :: bandSegs
     }
@@ -1706,8 +1629,7 @@ object Streaming {
             val layers = graft.similarity.Similarity.provisionLayers(merged.count())
             val adj = graft.similarity.Similarity.hnswCompact(merged, Some(layers))
               .localCheckpoint(true)
-            ledger.commit(batchId,
-              if (ledger.durable) Seq("vecs" -> b) else Seq.empty,
+            ledger.commit(batchId, Seq("vecs" -> b),
               Map("kind" -> "compact", "layers" -> layers.toString))
             vecSegs = List(merged)
             sinceCompact = 0
@@ -1741,8 +1663,7 @@ object Streaming {
           val layers = graft.similarity.Similarity.provisionLayers(b.count())
           val adj = graft.similarity.Similarity.hnswCompact(b, Some(layers))
             .localCheckpoint(true)
-          ledger.commit(batchId,
-            if (ledger.durable) Seq("vecs" -> b) else Seq.empty,
+          ledger.commit(batchId, Seq("vecs" -> b),
             Map("kind" -> "build", "layers" -> layers.toString))
           vecSegs = List(b)
           adjState = Some(adj)
@@ -1777,33 +1698,14 @@ object Streaming {
     * per trigger; the per-trigger work is then one bucket equi-join
     * sized by the micro-batch. */
   final class CrossNearDupSink(refDocs: DataFrame, k: Int = 3,
-      threshold: Double = 0.5, stateDir: Option[String] = None) {
+      threshold: Double = 0.5, stateDir: Option[String] = None)
+      extends DeltaFold(stateDir, "pairs") {
     private val ref = refDocs.localCheckpoint(true)
-    private val ledger = new BatchLedger(stateDir)
-    @volatile private var acc: Option[DataFrame] = None
-    /** Restart recovery (r11): per-trigger pair segments re-union to the
-      * continuous accumulation (the operator is stateless across
-      * triggers, so segments are independent emissions). */
-    def recover(s: SparkSession): this.type = synchronized {
-      ledger.recovered.filterNot(_.compact)
-        .map(c => ledger.read(s, "pairs", c))
-        .reduceOption(_ unionByName _)
-        .foreach(u => acc = Some(u.localCheckpoint(true)))
-      this
-    }
-    /** foreachBatch body: near-dedup the micro-batch against the
-      * reference and append the verified pairs. At-least-once safe: a
-      * re-delivered batchId is a no-op — the old id-blind append
-      * emitted every hit of the retried batch twice (r11). */
-    def update(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (ledger.alreadyApplied(batchId)) return
-      val pairs = graft.dedup.Dedup.minHashNearDupAcross(batch, ref, k, threshold)
-        .localCheckpoint(true)
-      ledger.commit(batchId, if (ledger.durable) Seq("pairs" -> pairs) else Seq.empty)
-      acc = Some(acc.map(_.unionByName(pairs).localCheckpoint(true)).getOrElse(pairs))
-    }
+    protected def delta(batch: DataFrame): DataFrame =
+      graft.dedup.Dedup.minHashNearDupAcross(batch, ref, k, threshold)
+    protected def combine(u: DataFrame): DataFrame = u
     /** All (new_id, ref_id, inter, na, nb, jaccard) hits so far. */
-    def pairs: Option[DataFrame] = acc
+    def pairs: Option[DataFrame] = snapshot
   }
 
   /** B5 streaming twin (r7): Count-Min sketch maintenance over a
@@ -1817,41 +1719,18 @@ object Streaming {
     * canonical streaming frequency summary, and the contrast with the
     * unbounded distinct-key state an exact streaming GROUP BY needs. */
   final class CountMinSink(d: Int = 4, w: Long = 512L,
-      stateDir: Option[String] = None) {
-    private val ledger = new BatchLedger(stateDir)
-    @volatile private var acc: Option[DataFrame] = None
-    /** Restart recovery (r11): per-trigger counter matrices re-sum
-      * cell-wise to the continuous fold (the sketch's linearity). */
-    def recover(s: SparkSession): this.type = synchronized {
-      ledger.recovered.filterNot(_.compact)
-        .map(c => ledger.read(s, "cms", c))
-        .reduceOption(_ unionByName _).foreach { u =>
-          acc = Some(u.groupBy(col("j"), col("col"))
-            .agg(sum(col("c")).as("c")).localCheckpoint(true))
-        }
-      this
-    }
-    /** foreachBatch body: fold the micro-batch (single string column
-      * `k`) into the accumulated counter matrix. At-least-once safe: a
-      * re-delivered batchId is a no-op — the old id-blind fold
-      * double-counted the retried batch in every cell (r11). */
-    def update(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (ledger.alreadyApplied(batchId)) return
-      val m = graft.ops.Relational.countMinMatrix(batch, d, w).localCheckpoint(true)
-      val merged = acc match {
-        case Some(a) => a.unionByName(m).groupBy(col("j"), col("col"))
-          .agg(sum(col("c")).as("c"))
-        case None => m
-      }
-      ledger.commit(batchId, if (ledger.durable) Seq("cms" -> m) else Seq.empty)
-      acc = Some(merged.localCheckpoint(true))
-    }
+      stateDir: Option[String] = None) extends DeltaFold(stateDir, "cms") {
+    /** Fold input: a single string column `k`. */
+    protected def delta(batch: DataFrame): DataFrame =
+      graft.ops.Relational.countMinMatrix(batch, d, w)
+    protected def combine(u: DataFrame): DataFrame =
+      u.groupBy(col("j"), col("col")).agg(sum(col("c")).as("c"))
     /** Latest accumulated d×w counter matrix (None before batch 1). */
-    def matrix: Option[DataFrame] = acc
+    def matrix: Option[DataFrame] = snapshot
     /** Point estimates for `probes` (single long column `key`) from the
       * accumulated matrix. */
     def estimates(probes: DataFrame): Option[DataFrame] =
-      acc.map(a => graft.ops.Relational.countMinProbe(a, probes, d, w))
+      snapshot.map(a => graft.ops.Relational.countMinProbe(a, probes, d, w))
   }
 
   /** B5 streaming twin (r7 cont.): AMS F2 maintenance over a stream —
@@ -1863,40 +1742,18 @@ object Streaming {
     * |groups|·J counter rows regardless of stream length; the estimate
     * is re-derived from the accumulated counters on demand; snapshot ==
     * batch-on-prefix pinned in StreamingSpec. */
-  final class AmsSink(stateDir: Option[String] = None) {
-    private val ledger = new BatchLedger(stateDir)
-    @volatile private var acc: Option[DataFrame] = None
-    /** Restart recovery (r11): per-trigger z-tables re-sum cell-wise to
-      * the continuous fold (AMS is a linear sketch). */
-    def recover(s: SparkSession): this.type = synchronized {
-      ledger.recovered.filterNot(_.compact)
-        .map(c => ledger.read(s, "ams", c))
-        .reduceOption(_ unionByName _).foreach { u =>
-          acc = Some(u.groupBy(col("g"), col("j"))
-            .agg(sum(col("z")).as("z")).localCheckpoint(true))
-        }
-      this
-    }
-    /** foreachBatch body: fold the micro-batch (columns `g`, `k`) into
-      * the accumulated z-counter table. At-least-once safe: a
-      * re-delivered batchId is a no-op — the old id-blind fold
-      * double-counted the retried batch's sign contributions (r11). */
-    def update(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (ledger.alreadyApplied(batchId)) return
-      val z = graft.ops.Relational.amsZTable(batch).localCheckpoint(true)
-      val merged = acc match {
-        case Some(a) => a.unionByName(z).groupBy(col("g"), col("j"))
-          .agg(sum(col("z")).as("z"))
-        case None => z
-      }
-      ledger.commit(batchId, if (ledger.durable) Seq("ams" -> z) else Seq.empty)
-      acc = Some(merged.localCheckpoint(true))
-    }
+  final class AmsSink(stateDir: Option[String] = None)
+      extends DeltaFold(stateDir, "ams") {
+    /** Fold input: columns `g`, `k`. */
+    protected def delta(batch: DataFrame): DataFrame =
+      graft.ops.Relational.amsZTable(batch)
+    protected def combine(u: DataFrame): DataFrame =
+      u.groupBy(col("g"), col("j")).agg(sum(col("z")).as("z"))
     /** Latest accumulated (g, j, z) counter table (None before batch 1). */
-    def zTable: Option[DataFrame] = acc
+    def zTable: Option[DataFrame] = snapshot
     /** F2 estimates from the accumulated counters. */
     def estimates: Option[DataFrame] =
-      acc.map(graft.ops.Relational.amsEstimate)
+      snapshot.map(graft.ops.Relational.amsEstimate)
   }
 
   /** B10 × B12 (r11, VERDICT r10 #7): the STREAMING index lifecycle

@@ -155,6 +155,42 @@ class StreamingDurabilitySpec extends SparkSpec {
     assert(cn2.pairs.get.count() === 1L) // exactly once, not twice
   }
 
+  /** A Count-Min [[DeltaFold]] whose first combine fails when the fold
+    * materializes it (the first combine runs on the second batch; the
+    * first batch's state is its own delta). The failure is lazy, so it
+    * surfaces where a real kernel fails: inside the trigger's eager cut. */
+  private final class FailingCombineFold(failFirstCombine: Boolean)
+      extends DeltaFold(None, "cms") {
+    private var armed = failFirstCombine
+    protected def delta(batch: DataFrame): DataFrame =
+      graft.ops.Relational.countMinMatrix(batch, 4, 64L)
+    protected def combine(u: DataFrame): DataFrame = {
+      val c = if (armed) raise_error(lit("injected combine failure")) else col("c")
+      armed = false
+      u.groupBy(col("j"), col("col")).agg(sum(col("c")).as("c"))
+        .select(col("j"), col("col"), c.cast("long").as("c"))
+    }
+    def matrix: Option[DataFrame] = snapshot
+  }
+
+  test("delta fold: a trigger that fails before its commit leaves the " +
+    "high-water mark alone, and the retried batchId applies in full") {
+    val keys = Seq(Seq.fill(40)("7") ++ (1 to 30).map(_.toString),
+      (20 to 60).map(_.toString), (50 to 90).map(_.toString))
+    val clean = new FailingCombineFold(false)
+    val failing = new FailingCombineFold(true)
+    clean.update(keys(0).toDF("k"), 0L); clean.update(keys(1).toDF("k"), 1L)
+    failing.update(keys(0).toDF("k"), 0L)
+    intercept[Exception] { failing.update(keys(1).toDF("k"), 1L) }
+    assert(failing.ledger.highWater === 0L, "the failed trigger advanced the mark")
+    // the re-delivered batch is applied, not skipped as already committed
+    failing.update(keys(1).toDF("k"), 1L)
+    assert(failing.ledger.highWater === 1L)
+    assert(sortedRows(failing.matrix.get) === sortedRows(clean.matrix.get))
+    clean.update(keys(2).toDF("k"), 2L); failing.update(keys(2).toDF("k"), 2L)
+    assert(sortedRows(failing.matrix.get) === sortedRows(clean.matrix.get))
+  }
+
   test("re-delivery: harvestSink skips a committed batch via the store marker") {
     val dir = tmpDir("harvest")
     val mk = (uris: Seq[String]) => uris.toDF("concept")

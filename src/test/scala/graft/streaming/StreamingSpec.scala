@@ -1008,6 +1008,28 @@ class StreamingSpec extends SparkSpec {
     assert(est(145L) >= 2L)   // present in both batches
   }
 
+  test("count-min sink: the first trigger cuts its delta once — the same " +
+    "jobs as one eager cut of the batch kernel") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val keys = (Seq.fill(50)("7") ++ (1 to 80).map(_.toString)).toDF("k")
+    val tag = java.util.UUID.randomUUID().toString
+    def inGroup(g: String)(body: => Unit): Unit = {
+      sc.setJobGroup(s"$g-$tag", g)
+      try body finally sc.clearJobGroup()
+    }
+    def jobs(g: String): Int = sc.statusTracker.getJobIdsForGroup(s"$g-$tag").length
+    inGroup("kernel") { graft.ops.Relational.countMinMatrix(keys, 4, 64L).localCheckpoint(true) }
+    inGroup("sink") { new Streaming.CountMinSink(d = 4, w = 64L).update(keys, 0L) }
+    // the status tracker is fed by the listener bus in event order: once
+    // a later job is visible, both groups' jobs are all registered
+    inGroup("sentinel") { sc.parallelize(Seq(1)).count() }
+    eventually(timeout(30.seconds), interval(50.millis)) { assert(jobs("sentinel") === 1) }
+    assert(jobs("kernel") > 0)
+    assert(jobs("sink") === jobs("kernel"))
+  }
+
   test("AMS sink: snapshot z-table == batch kernel on the stream prefix (B5, r7)") {
     val sink = new Streaming.AmsSink
     val b1 = (1 to 300).map(i => ("g1", s"k${i % 37}")) ++
