@@ -20,11 +20,6 @@ object FieldMappings {
     ("narrower", skos + "narrower", "skos:narrower"),
     ("related", skos + "related", "skos:related"))
 
-  def uriFor(variable: String): Option[String] =
-    mappings.collectFirst { case (v, u, _) if v == variable => u }
-  def termFor(variable: String): Option[String] =
-    mappings.collectFirst { case (v, _, t) if v == variable => t }
-
   /** Mapping as a (broadcastable) DataFrame for join-based melt. */
   def asDataFrame(spark: SparkSession): DataFrame = {
     import spark.implicits._

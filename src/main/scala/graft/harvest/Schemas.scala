@@ -1,6 +1,5 @@
 package graft.harvest
 
-import java.sql.Timestamp
 import org.apache.spark.sql.types._
 
 /** Typed models + StructTypes for the harvest store.
@@ -84,12 +83,4 @@ object Schemas {
   val allowedLanguages: Seq[String] = Seq("nl", "fr", "de", "es", "it", "pt")
   val allowedTranslationStatus: Seq[String] = Seq("draft", "review", "approved", "rejected", "merged")
   val allowedAppealStatus: Seq[String] = Seq("open", "closed", "resolved")
-
-  // Case classes for Dataset[T] flows where type safety helps.
-  case class Binding(concept: String, prefLabel: Option[String],
-                     altLabel: Option[String], definition: Option[String])
-  case class Term(id: Long, uri: String, created_at: Timestamp, updated_at: Timestamp)
-  case class TermField(id: Long, term_id: Long, field_uri: String, field_term: String,
-                       original_value: String, created_at: Timestamp, updated_at: Timestamp)
-  case class User(username: String, reputation: Int, joined_at: Option[Timestamp], extra: Option[String])
 }

@@ -1235,8 +1235,9 @@ object Relational {
     * are excluded BEFORE totaling — Benford's law is defined on
     * nonzero magnitudes, and keeping them would inflate the obs_ppb
     * denominator against an axis that can never emit them. One
-    * combinable digit count + a 9-row broadcast constant table; a
-    * digit with zero observations still reports (dense axis). */
+    * combinable digit count left-joined onto a 9-row constant table
+    * (the ≤9-row count side is the one broadcast); a digit with zero
+    * observations still reports (dense axis). */
   def benfordQuery(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val obs = Tables.orders(s, dir)
@@ -1248,7 +1249,7 @@ object Relational {
       .localCheckpoint(true) // ≤9 rows; the total must not re-scan orders
     val exp = BenfordPpb.toDF("digit", "exp_ppb")
     val tot = obs.agg(sum($"n").as("total"))
-    broadcast(exp).join(obs, Seq("digit"), "left")
+    exp.join(obs, Seq("digit"), "left")
       .crossJoin(broadcast(tot))
       .select($"digit", coalesce($"n", lit(0L)).as("n"),
         // DECIMAL(38) product (r9, psiDriftQuery note): n·10⁹ wraps

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.reflect.runtime.universe.TypeTag
 
 /** Event-time windowing + streaming surface (SURVEY §2 B10).
   *
@@ -359,9 +360,8 @@ object Streaming {
     * whole operator hash-gates cross-engine; the trailing frame is a ROWS
     * frame (count-based), deterministic under the (ts, event_id) total
     * order and immune to interval-arithmetic edge cases at nano
-    * resolution. Streaming twin: a per-user bounded deque in
-    * `flatMapGroupsWithState` (the [[funnelStream]] state pattern) —
-    * batch and stream share this flag definition. */
+    * resolution. Streaming twin: [[rollingAnomalyStream]], a per-user
+    * bounded deque — batch and stream share this flag definition. */
   def rollingAnomaly(events: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id")).rowsBetween(-10, -1)
@@ -604,344 +604,224 @@ object Streaming {
     }
   }
 
+  /** Per-user state of [[userFold]]: the operator's own step state plus
+    * the events still waiting for the watermark. */
+  case class Buffered[S](s: S, buf: Seq[SEvent])
+
+  /** B10: the per-user event-order fold behind the grouped-state operators
+    * below, the streaming form of their batch twins' per-user
+    * `(ts, event_id)` windows. Each user's events go through `step` in
+    * `(t, event_id)` order (`t` = `ts` in epoch millis), and every `Some`
+    * a step returns is emitted (Update mode).
+    *
+    * `disorder = None`: no watermark, no timeout, and nothing buffered.
+    * Each micro-batch's slice is sorted and folded as it arrives, so the
+    * fold is in event order exactly when arrival is: an event that
+    * arrives a batch after a later one folds after it.
+    *
+    * `disorder = Some(d)`: the watermark buffer, exact under any arrival
+    * whose disorder stays within `d`.
+    *  - Ripe means `t <= watermark`. Every later trigger drops the input
+    *    rows at or below the watermark this trigger sees, and the
+    *    watermark never falls, so nothing that sorts before a ripe event
+    *    can still arrive: folding the ripe events in order, after all
+    *    folded before them, gives the batch order (at the millisecond
+    *    resolution of `t`; rows later than `d` are dropped by that rule).
+    *  - The rest stay pending, and the group's event-time timeout is set
+    *    to the minimum pending `t`. Every pending `t` is above the
+    *    watermark, so it is a legal timeout (Spark rejects one below the
+    *    watermark). It fires once the watermark passes that `t`, when the
+    *    event is ripe, so a user who goes quiet still gets folded.
+    *  - State is the step state plus the pending events, which all lie
+    *    within `d` (and one trigger's lag) of the newest event time seen:
+    *    O(the user's event rate × `d`), not the stream length. `done(s)`
+    *    (the funnel's completed chain) drops the pending events, since no
+    *    later event can change `s`.
+    *
+    * Without `disorder` no watermark is defined and asking a group for it
+    * throws, so that mode never does. */
+  private def userFold[S: TypeTag, O <: Product : TypeTag](events: DataFrame,
+      disorder: Option[String], init: S)(step: (S, SEvent) => (S, Option[O]),
+      done: S => Boolean = (_: S) => false): Dataset[O] = {
+    import events.sparkSession.implicits._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    val evs = events.select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+      .as[SEvent]
+    val timeout =
+      if (disorder.isEmpty) GroupStateTimeout.NoTimeout else GroupStateTimeout.EventTimeTimeout
+    disorder.fold(evs)(evs.withWatermark("ts", _))
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Update, timeout) {
+        (_: Long, in: Iterator[SEvent], state: GroupState[Buffered[S]]) =>
+          val st = state.getOption.getOrElse(Buffered(init, Seq.empty))
+          val wm = disorder.map(_ => state.getCurrentWatermarkMs())
+          val (next, out, timeoutAt) = foldGroup(st, in.toSeq, wm)(step, done)
+          state.update(next)
+          timeoutAt.foreach(state.setTimeoutTimestamp)
+          out.iterator
+      }
+  }
+
+  /** One group call of [[userFold]], free of Spark: folds the ripe events
+    * of `st.buf ++ incoming` (all of them when `wm` is None) and returns
+    * the next state, the emitted rows, and the event-time timeout to set
+    * (the minimum pending `t`; None when nothing is pending). */
+  private[streaming] def foldGroup[S, O](st: Buffered[S], incoming: Seq[SEvent], wm: Option[Long])(
+      step: (S, SEvent) => (S, Option[O]), done: S => Boolean): (Buffered[S], Seq[O], Option[Long]) = {
+    val all = st.buf ++ incoming
+    val (ripe, pending) = wm.fold((all, Seq.empty[SEvent]))(w => all.partition(_.ts.getTime <= w))
+    val out = Seq.newBuilder[O]
+    val s = ripe.sortBy(e => (e.ts.getTime, e.event_id)).foldLeft(st.s) { (s, e) =>
+      val (next, o) = step(s, e)
+      out ++= o
+      next
+    }
+    val keep = if (done(s)) Seq.empty else pending
+    (Buffered(s, keep), out.result(), keep.map(_.ts.getTime).minOption)
+  }
+
   case class FunnelState(stepIdx: Int, t: Long)
   case class FunnelProgress(user_id: Long, step_idx: Int, step: String,
                             reached_at: java.sql.Timestamp)
 
-  /** B10: streaming funnel — the `mapGroupsWithState`-family twin of
-    * [[graft.ops.EventAnalytics.funnel]]. Per-user state is O(1): the
-    * number of completed steps and the timestamp of the last completed
-    * one. Each micro-batch sorts its per-user slice by event time and
-    * advances greedily: an event counts iff it is the NEXT step's type
-    * strictly after the previous step's time. Under in-event-time-order
-    * arrival the greedy advance takes the first qualifying occurrence of
-    * each step — exactly the batch twin's earliest-qualifying-chain mins
-    * (spec-pinned). With cross-batch out-of-order arrival a qualifying
-    * EARLIER event that arrives late cannot retro-advance the chain —
-    * the standard streaming-funnel approximation; re-run the exact batch
-    * twin for reconciliation. Emits one progress row per step advance
-    * (Update mode; no watermark needed — state carries no timeout). */
+  /** B10: streaming funnel, the twin of [[graft.ops.EventAnalytics.funnel]].
+    * An event advances the chain iff it is the NEXT step's type strictly
+    * after the previous step's time, so the event-order fold takes the
+    * first qualifying occurrence of each step: the batch twin's
+    * earliest-qualifying chain (spec-pinned). One progress row per
+    * advance. State per user is O(1): steps completed and the last one's
+    * time. Exact under in-order arrival only: a qualifying event that
+    * arrives late cannot retro-advance the chain ([[funnelStreamOrdered]]
+    * can). */
   def funnelStream(events: DataFrame,
-      steps: Seq[String] = Seq("signup", "view", "click", "purchase")): Dataset[FunnelProgress] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val stepArr = steps.toArray
-    events.select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[SEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (userId: Long, evs: Iterator[SEvent],
-         state: org.apache.spark.sql.streaming.GroupState[FunnelState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var st = state.getOption.getOrElse(FunnelState(0, Long.MinValue))
-          val out = Seq.newBuilder[FunnelProgress]
-          sorted.foreach { e =>
-            if (st.stepIdx < stepArr.length && e.event_type == stepArr(st.stepIdx) &&
-                (st.stepIdx == 0 || e.ts.getTime > st.t)) {
-              st = FunnelState(st.stepIdx + 1, e.ts.getTime)
-              out += FunnelProgress(userId, st.stepIdx, stepArr(st.stepIdx - 1),
-                new java.sql.Timestamp(st.t))
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
+      steps: Seq[String] = Seq("signup", "view", "click", "purchase")): Dataset[FunnelProgress] =
+    funnel(events, steps, None)
 
-  case class BufEvt(t: Long, id: Long, tpe: String)
-  case class FunnelBufState(stepIdx: Int, t: Long, buf: Seq[BufEvt])
-
-  /** B10: out-of-order-hardened streaming funnel. [[funnelStream]] is
-    * exact only under in-event-time-order arrival (a late qualifying
-    * event cannot retro-advance the chain). This variant buffers each
-    * user's events until the WATERMARK passes them, then greedy-advances
-    * in (ts, event_id) order — so the emitted chain equals the batch
-    * twin's under ANY arrival order with disorder bounded by the
-    * watermark delay. The trade: results emit one watermark horizon
-    * late, and per-user state holds the in-horizon event slice (bounded
-    * by the user's event rate × the delay, NOT the stream length —
-    * ripe events leave the buffer every batch; once the chain completes
-    * the buffer stays empty because non-qualifying ripe events are
-    * dropped on processing). An event-time timeout fires when the
-    * watermark passes the earliest buffered event, so chains finalize
-    * even if the user goes quiet. */
+  /** B10: [[funnelStream]] behind [[userFold]]'s watermark buffer: equals
+    * the batch twin under any arrival order with disorder within
+    * `disorder`, emitting one watermark horizon late. State is the O(1)
+    * chain plus the in-horizon events, and a completed chain drops its
+    * buffer for good. */
   def funnelStreamOrdered(events: DataFrame,
       steps: Seq[String] = Seq("signup", "view", "click", "purchase"),
-      disorder: String = "10 minutes"): Dataset[FunnelProgress] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+      disorder: String = "10 minutes"): Dataset[FunnelProgress] =
+    funnel(events, steps, Some(disorder))
+
+  private def funnel(events: DataFrame, steps: Seq[String],
+      disorder: Option[String]): Dataset[FunnelProgress] = {
     val stepArr = steps.toArray
-    events.select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[SEvent]
-      .withWatermark("ts", disorder)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, evs: Iterator[SEvent],
-         state: org.apache.spark.sql.streaming.GroupState[FunnelBufState]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val st = state.getOption.getOrElse(FunnelBufState(0, Long.MinValue, Seq.empty))
-          val incoming = evs.map(e => BufEvt(e.ts.getTime, e.event_id, e.event_type)).toSeq
-          // ripe = the watermark guarantees nothing earlier can still arrive
-          val (ripe, pending) = (st.buf ++ incoming).partition(_.t <= wm)
-          val out = Seq.newBuilder[FunnelProgress]
-          var idx = st.stepIdx; var t0 = st.t
-          ripe.sortBy(e => (e.t, e.id)).foreach { e =>
-            if (idx < stepArr.length && e.tpe == stepArr(idx) &&
-                (idx == 0 || e.t > t0)) {
-              idx += 1; t0 = e.t
-              out += FunnelProgress(userId, idx, stepArr(idx - 1),
-                new java.sql.Timestamp(t0))
-            }
-          }
-          // completed chains need no buffer; drop stragglers to keep state O(1)
-          val keep = if (idx >= stepArr.length) Seq.empty else pending
-          state.update(FunnelBufState(idx, t0, keep))
-          // pending events all sit above the watermark, so the min is a
-          // legal (strictly future) event-time timeout
-          if (keep.nonEmpty) state.setTimeoutTimestamp(keep.map(_.t).min)
-          out.result().iterator
-      }
+    userFold(events, disorder, FunnelState(0, Long.MinValue))(
+      funnelStep(stepArr), _.stepIdx >= stepArr.length)
   }
 
-  case class AnomalyState(cents: Seq[Long])
+  private[streaming] def funnelStep(steps: Array[String])(
+      s: FunnelState, e: SEvent): (FunnelState, Option[FunnelProgress]) = {
+    val t = e.ts.getTime
+    if (s.stepIdx < steps.length && e.event_type == steps(s.stepIdx) &&
+        (s.stepIdx == 0 || t > s.t))
+      (FunnelState(s.stepIdx + 1, t), Some(FunnelProgress(e.user_id, s.stepIdx + 1,
+        steps(s.stepIdx), new java.sql.Timestamp(t))))
+    else (s, None)
+  }
+
   case class AnomalyHit(event_id: Long, user_id: Long, ts: java.sql.Timestamp,
       value: Double, trail_n: Long, trail_sum: Double)
 
-  /** B10: streaming twin of [[rollingAnomaly]] — per-user state is the
-    * last ≤10 values as EXACT CENTS (a bounded deque, O(1) per key),
-    * mirroring the batch ROWS frame; the spike test is the identical
-    * division-free integer comparison. Values quantize with the same
-    * HALF_UP double→DECIMAL(12,2) rounding Spark's cast applies, so
-    * under in-order arrival the emitted rows equal the batch operator's
-    * (spec-pinned, the funnel/transitions equivalence treatment). */
-  def rollingAnomalyStream(events: DataFrame): Dataset[AnomalyHit] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    events.select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[SEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (userId: Long, evs: Iterator[SEvent],
-         state: org.apache.spark.sql.streaming.GroupState[AnomalyState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          var trail = state.getOption.map(_.cents).getOrElse(Seq.empty)
-          val out = Seq.newBuilder[AnomalyHit]
-          sorted.foreach { e =>
-            val c = new java.math.BigDecimal(e.value)
-              .setScale(2, java.math.RoundingMode.HALF_UP)
-              .movePointRight(2).longValueExact()
-            val n = trail.length
-            if (n >= 5 && c * n > 2 * trail.sum)
-              out += AnomalyHit(e.event_id, userId, e.ts, e.value, n, trail.sum / 100.0)
-            trail = (trail :+ c).takeRight(10)
-          }
-          state.update(AnomalyState(trail))
-          out.result().iterator
-      }
-  }
+  /** B10: streaming twin of [[rollingAnomaly]]. State per user is the
+    * last ≤10 values as EXACT CENTS (a bounded deque, O(1)), mirroring the
+    * batch ROWS frame; the spike test is the identical division-free
+    * integer comparison. Values quantize with the same HALF_UP
+    * double→DECIMAL(12,2) rounding Spark's cast applies, so under
+    * in-order arrival the emitted rows equal the batch operator's
+    * (spec-pinned). */
+  def rollingAnomalyStream(events: DataFrame): Dataset[AnomalyHit] =
+    userFold(events, None, Seq.empty[Long]) { (trail, e) =>
+      val c = new java.math.BigDecimal(e.value)
+        .setScale(2, java.math.RoundingMode.HALF_UP)
+        .movePointRight(2).longValueExact()
+      val n = trail.length
+      ((trail :+ c).takeRight(10), Option.when(n >= 5 && c * n > 2 * trail.sum)(
+        AnomalyHit(e.event_id, e.user_id, e.ts, e.value, n, trail.sum / 100.0)))
+    }
 
-  case class LastEvent(t: Long, eventId: Long, tpe: String)
   case class Transition(user_id: Long, prev_type: String, event_type: String)
 
-  /** B10: streaming transition emission — the `flatMapGroupsWithState`
-    * twin of [[graft.ops.EventAnalytics.transitions]]: per-user state is
-    * the last event seen (O(1)); each micro-batch sorts its slice by
-    * (ts, event_id) and emits one (prev_type, event_type) row per
-    * adjacency, chaining across batches through the stored last event.
-    * Under in-order arrival the emitted multiset equals the batch lag
-    * window's pairs (spec-pinned); downstream aggregation (the count
-    * matrix) composes as a streaming groupBy or a foreachBatch merge. */
-  def transitionsStream(events: DataFrame): Dataset[Transition] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    events.select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[SEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (userId: Long, evs: Iterator[SEvent],
-         state: org.apache.spark.sql.streaming.GroupState[LastEvent]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          val out = Seq.newBuilder[Transition]
-          var prev = state.getOption
-          sorted.foreach { e =>
-            prev.foreach(p => out += Transition(userId, p.tpe, e.event_type))
-            prev = Some(LastEvent(e.ts.getTime, e.event_id, e.event_type))
-          }
-          prev.foreach(state.update)
-          out.result().iterator
-      }
-  }
+  /** B10: streaming transitions, the twin of
+    * [[graft.ops.EventAnalytics.transitions]]: one (prev_type,
+    * event_type) row per adjacency, chained across batches through the
+    * stored previous event type (O(1) state). Under in-order arrival the
+    * emitted multiset equals the batch lag window's pairs (spec-pinned);
+    * downstream aggregation (the count matrix) composes as a streaming
+    * groupBy or a foreachBatch merge. */
+  def transitionsStream(events: DataFrame): Dataset[Transition] =
+    transitions(events, None)
 
-  case class TransBufState(last: Option[BufEvt], buf: Seq[BufEvt])
-
-  /** B10: out-of-order-hardened [[transitionsStream]] — the
-    * [[funnelStreamOrdered]] watermark-buffer treatment applied to
-    * adjacency emission: events buffer per user until the watermark
-    * passes them, then chain in (ts, event_id) order through the stored
-    * last event, so the emitted pair multiset equals the batch lag
-    * window's under any bounded-disorder arrival. State = one last-event
-    * marker + the in-horizon slice (same bound as the funnel). */
+  /** B10: [[transitionsStream]] behind [[userFold]]'s watermark buffer:
+    * the pair multiset equals the batch lag window's under any arrival
+    * with disorder within `disorder`. State: the previous type plus the
+    * in-horizon events. */
   def transitionsStreamOrdered(events: DataFrame,
-      disorder: String = "10 minutes"): Dataset[Transition] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    events.select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[SEvent]
-      .withWatermark("ts", disorder)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, evs: Iterator[SEvent],
-         state: org.apache.spark.sql.streaming.GroupState[TransBufState]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val st = state.getOption.getOrElse(TransBufState(None, Seq.empty))
-          val incoming = evs.map(e => BufEvt(e.ts.getTime, e.event_id, e.event_type)).toSeq
-          val (ripe, pending) = (st.buf ++ incoming).partition(_.t <= wm)
-          val out = Seq.newBuilder[Transition]
-          var prev = st.last
-          ripe.sortBy(e => (e.t, e.id)).foreach { e =>
-            prev.foreach(p => out += Transition(userId, p.tpe, e.tpe))
-            prev = Some(e)
-          }
-          state.update(TransBufState(prev, pending))
-          if (pending.nonEmpty) state.setTimeoutTimestamp(pending.map(_.t).min)
-          out.result().iterator
-      }
-  }
+      disorder: String = "10 minutes"): Dataset[Transition] =
+    transitions(events, Some(disorder))
+
+  private def transitions(events: DataFrame, disorder: Option[String]): Dataset[Transition] =
+    userFold(events, disorder, Option.empty[String]) { (prev, e) =>
+      (Some(e.event_type), prev.map(Transition(e.user_id, _, e.event_type)))
+    }
 
   case class PathHit(user_id: Long, path: String)
-  case class PathBufState(last2: Seq[BufEvt], buf: Seq[BufEvt])
 
-  /** B10: streaming 3-step path emission —
-    * [[graft.ops.EventAnalytics.topPaths]]'s `flatMapGroupsWithState`
-    * twin, with the [[transitionsStreamOrdered]] watermark-buffer
-    * treatment from the start: events buffer per user until the watermark
-    * passes them, then chain in (ts, event_id) order through a stored
-    * last-TWO marker, emitting one hit per completed 3-gram. Downstream
-    * `groupBy(path).count` equals the batch window's path counts under
-    * any bounded-disorder arrival (spec-pinned). State = two last-event
-    * markers + the in-horizon slice — O(horizon) per user, the same
-    * bound as the funnel/transitions twins. */
-  def pathsStream(events: DataFrame, disorder: String = "10 minutes"): Dataset[PathHit] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    events.select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[SEvent]
-      .withWatermark("ts", disorder)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, evs: Iterator[SEvent],
-         state: org.apache.spark.sql.streaming.GroupState[PathBufState]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val st = state.getOption.getOrElse(PathBufState(Seq.empty, Seq.empty))
-          val incoming = evs.map(e => BufEvt(e.ts.getTime, e.event_id, e.event_type)).toSeq
-          val (ripe, pending) = (st.buf ++ incoming).partition(_.t <= wm)
-          val out = Seq.newBuilder[PathHit]
-          var last2 = st.last2
-          ripe.sortBy(e => (e.t, e.id)).foreach { e =>
-            if (last2.size == 2)
-              out += PathHit(userId, s"${last2(0).tpe}>${last2(1).tpe}>${e.tpe}")
-            last2 = (last2 :+ e).takeRight(2)
-          }
-          state.update(PathBufState(last2, pending))
-          if (pending.nonEmpty) state.setTimeoutTimestamp(pending.map(_.t).min)
-          out.result().iterator
-      }
-  }
+  /** B10: streaming 3-step paths, the twin of
+    * [[graft.ops.EventAnalytics.topPaths]]'s window, behind
+    * [[userFold]]'s watermark buffer: one hit per completed 3-gram,
+    * chained through the stored last two event types, so downstream
+    * `groupBy(path).count` equals the batch path counts under any
+    * arrival with disorder within `disorder` (spec-pinned). State: two
+    * types plus the in-horizon events. */
+  def pathsStream(events: DataFrame, disorder: String = "10 minutes"): Dataset[PathHit] =
+    userFold(events, Some(disorder), Seq.empty[String]) { (last2, e) =>
+      ((last2 :+ e.event_type).takeRight(2), Option.when(last2.size == 2)(
+        PathHit(e.user_id, s"${last2(0)}>${last2(1)}>${e.event_type}")))
+    }
 
+  /** Retention step state; `cohortDay` Int.MinValue = no cohort yet. */
   case class RetentionState(cohortDay: Int, offsets: Seq[Int])
   case class RetentionHit(user_id: Long, cohort_day: java.time.LocalDate, day_offset: Int)
 
-  /** B10: streaming cohort retention — [[graft.ops.EventAnalytics.retention]]'s
-    * `flatMapGroupsWithState` twin, completing the streaming
-    * product-analytics trio (funnel, transitions, retention). Per-user
-    * state = the cohort day (first activity day ever seen) + the set of
-    * day offsets already emitted; each event emits one (user, cohort_day,
+  /** B10: streaming cohort retention, the twin of
+    * [[graft.ops.EventAnalytics.retention]]. The cohort day is the first
+    * activity day folded; each event emits one (user, cohort_day,
     * day_offset) hit the FIRST time that offset is reached, so downstream
     * `groupBy(cohort_day, day_offset).count` IS the retention triangle —
-    * the batch plan's per-user `distinct()` becomes per-key state.
-    *
-    * State is O(min(active days, maxOffsetDays)) ints per user — bounded
-    * by the dashboard horizon, not the stream length; events past the
-    * horizon are ignored (and real dashboards never render them). Under
-    * in-order arrival the emitted hit set equals the batch pipeline's
-    * distinct (user, cohort, offset) rows (spec-pinned); a late event
-    * predating a user's known cohort day would need a correction channel
-    * and is out of contract, same as the other twins. Days are UTC epoch
-    * days — identical to `to_date(ts)` under the session's pinned UTC. */
-  def retentionStream(events: DataFrame, maxOffsetDays: Int = 365): Dataset[RetentionHit] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    events.select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[SEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (userId: Long, evs: Iterator[SEvent],
-         state: org.apache.spark.sql.streaming.GroupState[RetentionState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          val out = Seq.newBuilder[RetentionHit]
-          var st = state.getOption
-          sorted.foreach { e =>
-            val day = Math.floorDiv(e.ts.getTime, 86400000L).toInt
-            st match {
-              case None =>
-                st = Some(RetentionState(day, Seq(0)))
-                out += RetentionHit(userId, java.time.LocalDate.ofEpochDay(day.toLong), 0)
-              case Some(s) =>
-                val off = day - s.cohortDay
-                if (off >= 0 && off <= maxOffsetDays && !s.offsets.contains(off)) {
-                  st = Some(s.copy(offsets = s.offsets :+ off))
-                  out += RetentionHit(userId,
-                    java.time.LocalDate.ofEpochDay(s.cohortDay.toLong), off)
-                }
-            }
-          }
-          st.foreach(state.update)
-          out.result().iterator
-      }
-  }
+    * the batch plan's per-user `distinct()` becomes per-key state. State
+    * is O(min(active days, maxOffsetDays)) ints per user; offsets past
+    * the horizon are ignored. Days are UTC epoch days, identical to
+    * `to_date(ts)` under the session's pinned UTC. Exact under in-order
+    * arrival (spec-pinned); a late first event would re-anchor the
+    * cohort, which [[retentionStreamOrdered]] handles. */
+  def retentionStream(events: DataFrame, maxOffsetDays: Int = 365): Dataset[RetentionHit] =
+    retention(events, maxOffsetDays, None)
 
-  case class RetBufState(cohortDay: Int, offsets: Seq[Int], buf: Seq[BufEvt])
-
-  /** B10: out-of-order-hardened [[retentionStream]] — the watermark-buffer
-    * treatment ([[funnelStreamOrdered]]) applied to cohort retention. The
-    * plain twin's weakness is the COHORT DAY: a user's true first event
-    * arriving late re-anchors every offset. Buffering until the watermark
-    * passes means the earliest in-horizon event is processed first, so the
-    * cohort day — and therefore the emitted (cohort_day, day_offset) hit
-    * set — equals the batch pipeline's under bounded disorder. cohortDay
-    * Int.MinValue = "no cohort yet". */
+  /** B10: [[retentionStream]] behind [[userFold]]'s watermark buffer: the
+    * earliest in-horizon event folds first, so the cohort day, and with
+    * it the emitted hit set, equals the batch pipeline's under any arrival
+    * with disorder within `disorder`. State: the retention state plus the
+    * in-horizon events. */
   def retentionStreamOrdered(events: DataFrame, maxOffsetDays: Int = 365,
-      disorder: String = "10 minutes"): Dataset[RetentionHit] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    events.select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[SEvent]
-      .withWatermark("ts", disorder)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, evs: Iterator[SEvent],
-         state: org.apache.spark.sql.streaming.GroupState[RetBufState]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val st = state.getOption.getOrElse(RetBufState(Int.MinValue, Seq.empty, Seq.empty))
-          val incoming = evs.map(e => BufEvt(e.ts.getTime, e.event_id, e.event_type)).toSeq
-          val (ripe, pending) = (st.buf ++ incoming).partition(_.t <= wm)
-          val out = Seq.newBuilder[RetentionHit]
-          var cohort = st.cohortDay
-          var offsets = st.offsets
-          ripe.sortBy(e => (e.t, e.id)).foreach { e =>
-            val day = Math.floorDiv(e.t, 86400000L).toInt
-            if (cohort == Int.MinValue) cohort = day
-            val off = day - cohort
-            if (off >= 0 && off <= maxOffsetDays && !offsets.contains(off)) {
-              offsets = offsets :+ off
-              out += RetentionHit(userId, java.time.LocalDate.ofEpochDay(cohort.toLong), off)
-            }
-          }
-          state.update(RetBufState(cohort, offsets, pending))
-          if (pending.nonEmpty) state.setTimeoutTimestamp(pending.map(_.t).min)
-          out.result().iterator
-      }
-  }
+      disorder: String = "10 minutes"): Dataset[RetentionHit] =
+    retention(events, maxOffsetDays, Some(disorder))
+
+  private def retention(events: DataFrame, maxOffsetDays: Int,
+      disorder: Option[String]): Dataset[RetentionHit] =
+    userFold(events, disorder, RetentionState(Int.MinValue, Seq.empty)) { (s, e) =>
+      val day = Math.floorDiv(e.ts.getTime, 86400000L).toInt
+      val cohort = if (s.cohortDay == Int.MinValue) day else s.cohortDay
+      val off = day - cohort
+      if (off >= 0 && off <= maxOffsetDays && !s.offsets.contains(off))
+        (RetentionState(cohort, s.offsets :+ off),
+          Some(RetentionHit(e.user_id, java.time.LocalDate.ofEpochDay(cohort.toLong), off)))
+      else (s.copy(cohortDay = cohort), None)
+    }
 
   /** B10 + A21: incremental harvest as a streaming sink — each micro-batch
     * of bindings runs the FULL per-page reference pipeline

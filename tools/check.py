@@ -3,6 +3,11 @@
 
 Usage: python3 tools/check.py [sf_dir] [verify_out_dir]
 
+With SPARK_GRAFT_ONLY set (parsed as graft.Verify parses it), compares only
+the named queries and fails any of them that has no Spark output or no
+oracle SQL; the exit status is then 0 exactly when every named query
+passes. Unset, it compares every query in oracle_sql.json.
+
 Reads <out>/oracle_sql.json, runs each SQL in DuckDB against views over the
 sf_dir parquet tables, and compares with the Spark parquet result at
 <out>/<name>/. Reports per-query: row-count match, schema (column-name)
@@ -18,11 +23,19 @@ cells compare stringified. Round 1 lesson: reading both sides through
 DuckDB hid 8 decimal-vs-float formatting mismatches and one array-column
 crash that the driver then reported as failures.
 """
-import duckdb, json, sys, glob, math
+import duckdb, json, os, sys, glob, math
 import pyarrow.parquet as pq
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+def only_names():
+    """SPARK_GRAFT_ONLY as graft.Verify reads it: comma-split, each name
+    trimmed like Java's String.trim (every char <= U+0020), blanks
+    dropped. An empty set means unset."""
+    ws = "".join(chr(c) for c in range(0x21))
+    raw = os.environ.get("SPARK_GRAFT_ONLY", "")
+    return {n.strip(ws) for n in raw.split(",") if n.strip(ws)}
 
 def canon(df):
     df = df[sorted(df.columns)]
@@ -48,8 +61,14 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
+    only = only_names()
+    names = sorted(only) if only else sorted(oracle)
     n_ok = n_bad = 0
-    for name in sorted(oracle):
+    for name in names:
+        if name not in oracle:
+            print(f"FAIL {name}: not in oracle_sql.json")
+            n_bad += 1
+            continue
         sql = oracle[name]
         files = sorted(glob.glob(f"{out}/{name}/*.parquet"))
         if not files:
@@ -96,7 +115,7 @@ def main():
         else:
             print(f"OK   {name} ({len(got)} rows)")
             n_ok += 1
-    print(f"== {n_ok} ok, {n_bad} fail, {len(oracle)} total")
+    print(f"== {n_ok} ok, {n_bad} fail, {len(names)} total")
     sys.exit(1 if n_bad else 0)
 
 if __name__ == "__main__":

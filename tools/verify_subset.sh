@@ -1,6 +1,7 @@
 #!/bin/bash
 # Dev-only: run graft.Verify on a query subset without sbt (uses compiled
-# classes directly), then the local DuckDB compare. Usage:
+# classes directly), then the local DuckDB compare of the same subset; exits
+# 0 exactly when every named query passes. Usage:
 #   tools/verify_subset.sh "name1,name2" [sf_dir] [out_dir]
 set -e
 ONLY="$1"
@@ -23,5 +24,6 @@ ADD_OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED \
  --add-opens=java.base/sun.security.action=ALL-UNNAMED \
  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 rm -rf "$OUT"
-SPARK_GRAFT_ONLY="$ONLY" java $ADD_OPENS -Xmx8g -cp "$CP" graft.Verify "$SF" "$OUT"
+export SPARK_GRAFT_ONLY="$ONLY"
+java $ADD_OPENS -Xmx8g -cp "$CP" graft.Verify "$SF" "$OUT"
 python3 tools/check.py "$SF" "$OUT"
