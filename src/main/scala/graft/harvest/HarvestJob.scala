@@ -1,7 +1,10 @@
 package graft.harvest
 
+import java.io.File
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.{Failure, Try}
 
 /** EP1 — the full harvest pipeline (/root/reference/harvest.py:383-485)
   * as one declarative DataFrame DAG:
@@ -9,7 +12,15 @@ import org.apache.spark.sql.functions._
   *   bindings → validate/filter (A9/A18) → distinct (A5)
   *     → terms upsert (A10/A11/A12/A17)
   *     → melt (A14) → FK join (A13) → insert-if-absent (A15)
-  *     → staged atomic write (A21/A22/A23) + stats (A16)
+  *     → uniqueness probe (A19/A20), one job for both constraints
+  *     → the tail, three branches at once ([[commitTail]]):
+  *         the `terms` swap, then the `term_fields` swap (A21/A22);
+  *         the bootstrap of the missing workflow tables (A23);
+  *         `translations.db` (H4) from the two checkpointed tables,
+  *         into a staging file
+  *     → the staging file renamed over `translations.db`, once the store
+  *       is committed
+  *   + stats (A16) collected along the way
   *
   * The reference's sequential page loop disappears into source
   * partitioning; its per-row SQLite probes become two shuffle joins.
@@ -43,7 +54,13 @@ object HarvestJob {
         s"$fieldsInserted new field values"
   }
 
-  def run(spark: SparkSession, cfg: Config): Result = {
+  def run(spark: SparkSession, cfg: Config): Result =
+    run(spark, cfg, Store.writeTable(_, cfg.storeDir, _))
+
+  /** `swap(table, name)` commits one merged table; tests replace it to
+    * inject a failure into the commit branch. */
+  private[harvest] def run(spark: SparkSession, cfg: Config,
+      swap: (DataFrame, String) => Unit): Result = {
     val warnings = Validate.validateCollectionUri(cfg.collectionUri).toSeq
 
     // A16 stats are collected as the data flows, not as extra jobs:
@@ -102,32 +119,81 @@ object HarvestJob {
     val nextFieldId = (if (efRow.isNullAt(1)) 0L else efRow.getLong(1)) + 1
     val allFields = Merge.insertIfAbsent(existingFields, resolved, asOf,
       startId = Some(nextFieldId)).localCheckpoint(true)
-    val fieldsInserted = allFields.count() - existingFieldCount
+    val fieldCount = allFields.count()
+    val fieldsInserted = fieldCount - existingFieldCount
 
     // Release the cached inputs now that both eager checkpoints hold the
-    // merged tables, and before any write: while `existingTerms` /
-    // `existingFields` stay cached, a later read of the same store paths
-    // (the SQLite artifact's re-read) is served from the cached pre-run
-    // plan instead of the files this run commits. terms/allFields are
-    // checkpointed, not cached — their blocks free via the ContextCleaner.
+    // merged tables, and before any write: nothing after this point reads
+    // the pre-run store, and a cached plan over the same store paths would
+    // serve the pre-run rows to any later reader of those paths in this
+    // session. terms/allFields are checkpointed, not cached — their blocks
+    // free via the ContextCleaner.
     valid.unpersist()
     existingTerms.unpersist(); existingFields.unpersist()
 
     // A19/A20: fail the job (like the reference's sqlite3.Error path,
     // harvest.py:477-479) if the merged store would violate its
     // uniqueness constraints.
-    Validate.enforce(Validate.uniqueViolations(terms, Seq("uri")), "terms.uri unique")
-    Validate.enforce(
-      Validate.uniqueViolations(allFields, Seq("term_id", "field_uri", "original_value")),
-      "term_fields(term_id, field_uri, original_value) unique")
+    Validate.enforce(Seq(
+      Validate.uniqueViolations(terms, Seq("uri")) -> "terms.uri unique",
+      Validate.uniqueViolations(allFields, Seq("term_id", "field_uri", "original_value")) ->
+        "term_fields(term_id, field_uri, original_value) unique"))
 
-    // A21/A22: staged writes, then swap; bootstrap the never-written tables.
-    Store.writeTable(terms, cfg.storeDir, "terms")
-    Store.writeTable(allFields, cfg.storeDir, "term_fields")
-    Store.bootstrap(spark, cfg.storeDir)
-    cfg.sqliteArtifact.foreach(Store.writeSqliteArtifact(spark, cfg.storeDir, _))
+    commitTail(spark, cfg, swap,
+      Seq(("terms", terms, tRow.getLong(0)), ("term_fields", allFields, fieldCount)))
 
     Result(bindingsRead, validRows, distinctTerms,
       termsInserted, termsUpdated, fieldsInserted, warnings)
+  }
+
+  /** The tail after the uniqueness probe, as three branches at once:
+    *  - the commit chain, on the calling thread: each `merged` table is
+    *    swapped in, in order;
+    *  - the bootstrap of the missing workflow tables (the four the run
+    *    never writes), on a helper thread;
+    *  - the SQLite artifact, on a helper thread, built from the `merged`
+    *    tables themselves and from the workflow tables as resolved here,
+    *    before any write — so it equals the committed store by
+    *    construction and reads no path the other branches write (the
+    *    merged tables are checkpointed: their lineage never reaches the
+    *    store files the swaps retire). It goes to a staging file beside
+    *    the artifact path.
+    *
+    * The staging file replaces the artifact only after all three branches
+    * return. If any branch throws, all three are still joined, the staging
+    * file is deleted, an existing artifact is left untouched, and the
+    * first failure is rethrown (the others attached as suppressed). */
+  private def commitTail(spark: SparkSession, cfg: Config, swap: (DataFrame, String) => Unit,
+      merged: Seq[(String, DataFrame, Long)]): Unit = {
+    val mergedNames = merged.map(_._1).toSet
+    val workflow = Schemas.allTables.filterNot { case (name, _) => mergedNames(name) }
+    val tables = merged.map { case (name, df, _) => name -> df }.toMap ++
+      workflow.map { case (name, schema) => name -> Store.readTableOr(spark, cfg.storeDir, name, schema) }
+    val db = cfg.sqliteArtifact.map(new File(_).getAbsoluteFile)
+    val staging = db.map(f => new File(f.getParentFile, s".${f.getName}.next"))
+
+    val pool = Executors.newFixedThreadPool(2)
+    def branch(body: => Unit): Future[Unit] = pool.submit(new Callable[Unit] { def call(): Unit = body })
+    val outcomes = try {
+      val bootstrap = branch(Store.bootstrap(spark, cfg.storeDir, workflow))
+      val artifact = staging.map(f => branch(Store.writeSqliteArtifact(spark,
+        (name, _) => tables(name), f.getPath,
+        knownRows = merged.map { case (name, _, n) => name -> n }.toMap)))
+      val commit = Try(merged.foreach { case (name, df, _) => swap(df, name) })
+      def join(f: Future[Unit]): Try[Unit] =
+        Try(f.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) }
+      commit +: join(bootstrap) +: artifact.map(join).toSeq
+    } finally pool.shutdown()
+
+    outcomes.collect { case Failure(e) => e } match {
+      case Seq() =>
+        for (f <- staging; target <- db)
+          try Sqlite.install(f, target)
+          catch { case t: Throwable => f.delete(); throw t }
+      case first +: rest =>
+        staging.foreach(_.delete())
+        rest.foreach(first.addSuppressed)
+        throw first
+    }
   }
 }

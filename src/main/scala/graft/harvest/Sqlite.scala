@@ -1,6 +1,8 @@
 package graft.harvest
 
-import java.io.{File, RandomAccessFile}
+import java.io.{BufferedOutputStream, File, FileOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, StandardCopyOption}
 import scala.collection.mutable.ArrayBuffer
 
 /** Minimal single-file SQLite writer (SURVEY §7 H4) — the compatibility
@@ -71,82 +73,113 @@ object Sqlite {
 
   // -------------------------------------------------------- byte utilities
 
-  private def be16(v: Int): Array[Byte] = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-  private def be32(v: Int): Array[Byte] =
-    Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
+  // Every encoder below writes into an exact-size Array[Byte]: no boxed
+  // byte buffers and no intermediate copies.
 
-  /** SQLite varint: 1–9 bytes, big-endian 7-bit groups; the 9th byte
-    * carries a full 8 bits. */
-  private[harvest] def varint(v0: Long): Array[Byte] = {
-    if (v0 >= 0 && v0 < 128) return Array(v0.toByte)
+  private def put16(buf: Array[Byte], off: Int, v: Int): Unit = {
+    buf(off) = (v >> 8).toByte; buf(off + 1) = v.toByte
+  }
+  private def put32(buf: Array[Byte], off: Int, v: Int): Unit = {
+    buf(off) = (v >>> 24).toByte; buf(off + 1) = (v >>> 16).toByte
+    buf(off + 2) = (v >>> 8).toByte; buf(off + 3) = v.toByte
+  }
+
+  /** Length of `v` as a SQLite varint: 1–9 bytes, big-endian 7-bit
+    * groups; the 9th byte carries a full 8 bits. */
+  private def varintLen(v: Long): Int =
+    if (v >= 0 && v < 128) 1
+    else if ((v >>> 56) != 0 || v < 0) 9
+    else (70 - java.lang.Long.numberOfLeadingZeros(v)) / 7 // ceil(bits / 7)
+
+  /** Write `v` as a varint at `off`; returns the offset just past it. */
+  private def putVarint(buf: Array[Byte], off: Int, v0: Long): Int = {
+    val n = varintLen(v0)
     var v = v0
-    if ((v >>> 56) != 0 || v < 0) { // needs all 9 bytes
-      val buf = new Array[Byte](9)
-      buf(8) = (v & 0xff).toByte
-      v >>>= 8
-      var i = 7
-      while (i >= 0) { buf(i) = ((v & 0x7f) | 0x80).toByte; v >>>= 7; i -= 1 }
-      return buf
-    }
-    val groups = new ArrayBuffer[Long](8)
-    while (v != 0) { groups += (v & 0x7f); v >>>= 7 }
-    val out = new ArrayBuffer[Byte](groups.length)
-    var i = groups.length - 1
-    while (i >= 1) { out += (groups(i) | 0x80).toByte; i -= 1 }
-    out += groups(0).toByte
-    out.toArray
+    var i = n - 1
+    if (n == 9) { buf(off + 8) = v.toByte; v >>>= 8; i = 7 }
+    else { buf(off + i) = (v & 0x7f).toByte; v >>>= 7; i -= 1 }
+    while (i >= 0) { buf(off + i) = ((v & 0x7f) | 0x80).toByte; v >>>= 7; i -= 1 }
+    off + n
   }
 
   // --------------------------------------------------------- record format
 
+  /** Body size of a non-0/1 integer: the smallest of 1, 2, 3, 4, 6, 8
+    * bytes that holds it. */
+  private def intLen(v: Long): Int =
+    if (v >= -128 && v < 128) 1
+    else if (v >= -32768 && v < 32768) 2
+    else if (v >= -8388608 && v < 8388608) 3
+    else if (v >= -2147483648L && v < 2147483648L) 4
+    else if (v >= -140737488355328L && v < 140737488355328L) 6
+    else 8
+
+  /** One record's values with every text value UTF-8-encoded once: the
+    * index sort compares these bytes, and the record encoder writes them. */
+  private final class Encoded(val vs: IndexedSeq[V]) {
+    val bytes: Array[Array[Byte]] = vs.iterator.map {
+      case VText(s) => s.getBytes(UTF_8)
+      case VBlob(b) => b
+      case _ => null
+    }.toArray
+  }
+
   /** Encode one row payload in the SQLite record format (header of serial
     * types, then the value bodies). */
-  private[harvest] def record(values: Seq[V]): Array[Byte] = {
-    val parts = values.map {
-      case VNull => (0L, Array.emptyByteArray)
-      case VInt(v) =>
-        if (v == 0L) (8L, Array.emptyByteArray)
-        else if (v == 1L) (9L, Array.emptyByteArray)
-        else {
-          val n =
-            if (v >= -128 && v < 128) 1
-            else if (v >= -32768 && v < 32768) 2
-            else if (v >= -8388608 && v < 8388608) 3
-            else if (v >= -2147483648L && v < 2147483648L) 4
-            else if (v >= -140737488355328L && v < 140737488355328L) 6
-            else 8
-          val serial = n match {
-            case 1 => 1L; case 2 => 2L; case 3 => 3L; case 4 => 4L; case 6 => 5L; case 8 => 6L
-          }
-          val b = new Array[Byte](n)
-          var x = v
-          var i = n - 1
-          while (i >= 0) { b(i) = (x & 0xff).toByte; x >>= 8; i -= 1 }
-          (serial, b)
-        }
-      case VReal(d) =>
-        val bits = java.lang.Double.doubleToLongBits(d)
-        val b = new Array[Byte](8)
-        var i = 0
-        while (i < 8) { b(i) = ((bits >>> (56 - 8 * i)) & 0xff).toByte; i += 1 }
-        (7L, b)
-      case VText(s) =>
-        val b = s.getBytes("UTF-8")
-        (2L * b.length + 13, b)
-      case VBlob(b) => (2L * b.length + 12, b)
+  private def record(e: Encoded): Array[Byte] = {
+    val n = e.vs.length
+    val serials = new Array[Long](n)
+    var typesLen = 0
+    var bodyLen = 0
+    var i = 0
+    while (i < n) {
+      val (serial, len) = e.vs(i) match {
+        case VNull => (0L, 0)
+        case VInt(0L) => (8L, 0)
+        case VInt(1L) => (9L, 0)
+        case VInt(v) =>
+          val k = intLen(v)
+          (if (k <= 4) k.toLong else if (k == 6) 5L else 6L, k)
+        case VReal(_) => (7L, 8)
+        case VText(_) => (2L * e.bytes(i).length + 13, e.bytes(i).length)
+        case VBlob(_) => (2L * e.bytes(i).length + 12, e.bytes(i).length)
+      }
+      serials(i) = serial
+      typesLen += varintLen(serial)
+      bodyLen += len
+      i += 1
     }
-    val typeBytes = parts.map(p => varint(p._1))
-    val typesLen = typeBytes.map(_.length).sum
     // the header-length varint includes itself; sizes here are < 2^14 so
     // one adjustment step reaches the fixpoint
     var hdrLen = typesLen + 1
-    if (varint(hdrLen.toLong).length + typesLen != hdrLen)
-      hdrLen = typesLen + varint((typesLen + 2).toLong).length
-    val out = new ArrayBuffer[Byte](hdrLen + parts.map(_._2.length).sum)
-    out ++= varint(hdrLen.toLong)
-    typeBytes.foreach(out ++= _)
-    parts.foreach(out ++= _._2)
-    out.toArray
+    if (varintLen(hdrLen.toLong) + typesLen != hdrLen)
+      hdrLen = typesLen + varintLen((typesLen + 2).toLong)
+    val out = new Array[Byte](hdrLen + bodyLen)
+    var o = putVarint(out, 0, hdrLen.toLong)
+    i = 0
+    while (i < n) { o = putVarint(out, o, serials(i)); i += 1 }
+    i = 0
+    while (i < n) {
+      e.vs(i) match {
+        case VInt(v) if v != 0L && v != 1L =>
+          var k = intLen(v) - 1
+          var x = v
+          while (k >= 0) { out(o + k) = x.toByte; x >>= 8; k -= 1 }
+          o += intLen(v)
+        case VReal(d) =>
+          val bits = java.lang.Double.doubleToLongBits(d)
+          var k = 0
+          while (k < 8) { out(o + k) = (bits >>> (56 - 8 * k)).toByte; k += 1 }
+          o += 8
+        case VText(_) | VBlob(_) =>
+          val b = e.bytes(i)
+          System.arraycopy(b, 0, out, o, b.length)
+          o += b.length
+        case _ => ()
+      }
+      i += 1
+    }
+    out
   }
 
   // ----------------------------------------------------------- file writer
@@ -164,46 +197,48 @@ object Sqlite {
     def apply(no: Int): Array[Byte] = buf(no - 1)
   }
 
-  /** Write cells into a b-tree page image. `headerOffset` is 100 on page 1. */
+  /** Write cells into a b-tree page image. `headerOffset` is 100 on page 1.
+    * `cells` must be indexed: the loop reads `cells(i)`, linear on a List. */
   private def fillPage(page: Array[Byte], headerOffset: Int, pageType: Int,
-                       cells: Seq[Array[Byte]], rightmost: Int = 0): Unit = {
+                       cells: collection.IndexedSeq[Array[Byte]], rightmost: Int = 0): Unit = {
     // interior pages (table 0x05, index 0x02) carry the rightmost-child
     // pointer in a 12-byte header; leaves (0x0D, 0x0A) use 8 bytes
     val hdrSize = if (pageType == 0x05 || pageType == 0x02) 12 else 8
+    val n = cells.length
     page(headerOffset) = pageType.toByte
-    System.arraycopy(be16(cells.length), 0, page, headerOffset + 3, 2)
-    if (hdrSize == 12) System.arraycopy(be32(rightmost), 0, page, headerOffset + 8, 4)
+    put16(page, headerOffset + 3, n)
+    if (hdrSize == 12) put32(page, headerOffset + 8, rightmost)
     var content = PageSize
     val ptrBase = headerOffset + hdrSize
     var i = 0
-    while (i < cells.length) {
-      content -= cells(i).length
-      System.arraycopy(cells(i), 0, page, content, cells(i).length)
-      System.arraycopy(be16(content), 0, page, ptrBase + 2 * i, 2)
+    while (i < n) {
+      val cell = cells(i)
+      content -= cell.length
+      System.arraycopy(cell, 0, page, content, cell.length)
+      put16(page, ptrBase + 2 * i, content)
       i += 1
     }
     // cell-content-area start; 4096 fits in 16 bits (the 0-means-65536
     // convention only applies to 64 KiB pages)
-    System.arraycopy(be16(content), 0, page, headerOffset + 5, 2)
+    put16(page, headerOffset + 5, content)
   }
 
   /** Build one table-leaf cell; payload spills to an overflow-page chain
     * (shared [[overflowChain]]) when it exceeds the leaf threshold. */
   private def leafCell(pages: Pages, rowid: Long, payload: Array[Byte]): Array[Byte] = {
     val p = payload.length
-    if (p <= MaxLeaf) {
-      val out = new ArrayBuffer[Byte](p + 18)
-      out ++= varint(p.toLong); out ++= varint(rowid); out ++= payload
-      out.toArray
-    } else {
-      val k = MinLeaf + (p - MinLeaf) % (Usable - 4)
-      val inline = if (k <= MaxLeaf) k else MinLeaf
-      val out = new ArrayBuffer[Byte](inline + 22)
-      out ++= varint(p.toLong); out ++= varint(rowid)
-      out ++= payload.take(inline)
-      out ++= be32(overflowChain(pages, payload, inline))
-      out.toArray
-    }
+    val inline =
+      if (p <= MaxLeaf) p
+      else {
+        val k = MinLeaf + (p - MinLeaf) % (Usable - 4)
+        if (k <= MaxLeaf) k else MinLeaf
+      }
+    val out = new Array[Byte](varintLen(p.toLong) + varintLen(rowid) + inline +
+      (if (inline < p) 4 else 0))
+    val o = putVarint(out, putVarint(out, 0, p.toLong), rowid)
+    System.arraycopy(payload, 0, out, o, inline)
+    if (inline < p) put32(out, o + inline, overflowChain(pages, payload, inline))
+    out
   }
 
   // -------------------------------------------------------- index b-trees
@@ -228,27 +263,37 @@ object Sqlite {
     a.length - b.length
   }
 
-  private[harvest] def compareRecords(a: Seq[V], b: Seq[V]): Int = {
-    val n = math.min(a.length, b.length)
+  /** SQLite's BINARY record collation, on records whose text was
+    * encoded once ([[Encoded]]). */
+  private val recordOrder: java.util.Comparator[Encoded] = (a: Encoded, b: Encoded) => {
+    val n = math.min(a.vs.length, b.vs.length)
     var i = 0
-    while (i < n) {
-      val (x, y) = (a(i), b(i))
-      val r = typeRank(x) - typeRank(y)
-      if (r != 0) return r
-      val c = (x, y) match {
-        case (VInt(p), VInt(q)) => java.lang.Long.compare(p, q)
-        case (VInt(p), VReal(q)) => java.lang.Double.compare(p.toDouble, q)
-        case (VReal(p), VInt(q)) => java.lang.Double.compare(p, q.toDouble)
-        case (VReal(p), VReal(q)) => java.lang.Double.compare(p, q)
-        case (VText(p), VText(q)) => compareBytes(p.getBytes("UTF-8"), q.getBytes("UTF-8"))
-        case (VBlob(p), VBlob(q)) => compareBytes(p, q)
-        case _ => 0 // both VNull
+    var c = 0
+    while (c == 0 && i < n) {
+      val x = a.vs(i)
+      val y = b.vs(i)
+      c = typeRank(x) - typeRank(y)
+      if (c == 0) c = x match {
+        case VInt(p) => y match {
+          case VInt(q) => java.lang.Long.compare(p, q)
+          case VReal(q) => java.lang.Double.compare(p.toDouble, q)
+          case _ => 0
+        }
+        case VReal(p) => y match {
+          case VInt(q) => java.lang.Double.compare(p, q.toDouble)
+          case VReal(q) => java.lang.Double.compare(p, q)
+          case _ => 0
+        }
+        case VText(_) | VBlob(_) => compareBytes(a.bytes(i), b.bytes(i))
+        case VNull => 0
       }
-      if (c != 0) return c
       i += 1
     }
-    a.length - b.length
+    if (c != 0) c else a.vs.length - b.vs.length
   }
+
+  private[harvest] def compareRecords(a: Seq[V], b: Seq[V]): Int =
+    recordOrder.compare(new Encoded(a.toIndexedSeq), new Encoded(b.toIndexedSeq))
 
   /** Inline size of an index payload (leaf and interior share the
     * threshold). */
@@ -271,7 +316,7 @@ object Sqlite {
     while (i < chain.length) {
       val page = pages(chain(i))
       val next = if (i + 1 < chain.length) chain(i + 1) else 0
-      System.arraycopy(be32(next), 0, page, 0, 4)
+      put32(page, 0, next)
       val n = math.min(Usable - 4, p - pos)
       System.arraycopy(payload, pos, page, 4, n)
       pos += n; i += 1
@@ -283,28 +328,29 @@ object Sqlite {
     * allocates overflow pages it won't use). */
   private def indexCellSize(payloadLen: Int, withChild: Boolean): Int = {
     val inline = indexInline(payloadLen)
-    (if (withChild) 4 else 0) + varint(payloadLen.toLong).length + inline +
+    (if (withChild) 4 else 0) + varintLen(payloadLen.toLong) + inline +
       (if (inline < payloadLen) 4 else 0)
   }
 
   private def indexCell(pages: Pages, payload: Array[Byte], child: Option[Int]): Array[Byte] = {
-    val inline = indexInline(payload.length)
-    val out = new ArrayBuffer[Byte](indexCellSize(payload.length, child.isDefined))
-    child.foreach(out ++= be32(_))
-    out ++= varint(payload.length.toLong)
-    out ++= payload.take(inline)
-    if (inline < payload.length) out ++= be32(overflowChain(pages, payload, inline))
-    out.toArray
+    val p = payload.length
+    val inline = indexInline(p)
+    val out = new Array[Byte](indexCellSize(p, child.isDefined))
+    child.foreach(put32(out, 0, _))
+    val o = putVarint(out, if (child.isDefined) 4 else 0, p.toLong)
+    System.arraycopy(payload, 0, out, o, inline)
+    if (inline < p) put32(out, o + inline, overflowChain(pages, payload, inline))
+    out
   }
 
   /** Build an index b-tree from SORTED key records; returns the root page.
     * True B-tree: when a leaf fills, the next entry is promoted to the
     * parent as a divider (it appears ONLY there); same recursively for
     * interior levels. */
-  private def buildIndexBtree(pages: Pages, sorted: Seq[Array[Byte]]): Int = {
+  private def buildIndexBtree(pages: Pages, sorted: Array[Array[Byte]]): Int = {
     if (sorted.isEmpty) {
       val no = pages.alloc()
-      fillPage(pages(no), 0, 0x0A, Seq.empty)
+      fillPage(pages(no), 0, 0x0A, IndexedSeq.empty)
       return no
     }
     val cap = capacity(interior = false)
@@ -320,7 +366,7 @@ object Sqlite {
     var dividers = Vector.empty[Array[Byte]] // raw payloads, encoded per-level
     var cur = new ArrayBuffer[Array[Byte]]() // payloads, not built cells
     var curBytes = 0
-    def flushLeaf(payloads: Seq[Array[Byte]]): Unit = {
+    def flushLeaf(payloads: ArrayBuffer[Array[Byte]]): Unit = {
       val cells = payloads.map(indexCell(pages, _, None))
       val no = pages.alloc()
       fillPage(pages(no), 0, 0x0A, cells)
@@ -334,7 +380,7 @@ object Sqlite {
         // means at least 3 entries fit before any overflow
         require(cur.length >= 2, "index leaf underflow: oversized cells")
         val divider = cur.remove(cur.length - 1)
-        flushLeaf(cur.toSeq)
+        flushLeaf(cur)
         dividers :+= divider
         cur = new ArrayBuffer[Array[Byte]]()
         cur += payload
@@ -344,7 +390,7 @@ object Sqlite {
         curBytes += size + 2
       }
     }
-    if (cur.nonEmpty) flushLeaf(cur.toSeq)
+    if (cur.nonEmpty) flushLeaf(cur)
 
     // ---- interior levels
     val icap = capacity(interior = true)
@@ -384,7 +430,7 @@ object Sqlite {
     * pre-allocated page with `rootHeaderOffset` (100 for page 1). */
   private def buildTableBtree(pages: Pages, rows: Iterator[(Long, Seq[V])],
                               rootAt: Option[Int] = None, rootHeaderOffset: Int = 0): Int = {
-    def placeRoot(pageType: Int, cells: Seq[Array[Byte]], rightmost: Int = 0): Int = {
+    def placeRoot(pageType: Int, cells: collection.IndexedSeq[Array[Byte]], rightmost: Int = 0): Int = {
       val no = rootAt.getOrElse(pages.alloc())
       val off = if (rootAt.isDefined) rootHeaderOffset else 0
       fillPage(pages(no), off, pageType, cells, rightmost)
@@ -404,19 +450,19 @@ object Sqlite {
     }
     while (rows.hasNext) {
       val (rowid, vs) = rows.next()
-      val cell = leafCell(pages, rowid, record(vs))
+      val cell = leafCell(pages, rowid, record(new Encoded(vs.toIndexedSeq)))
       if (cur.nonEmpty && curBytes + cell.length + 2 > capacity(interior = false))
         flushLeafGroup()
       cur += cell; curBytes += cell.length + 2; curMax = rowid
     }
     flushLeafGroup()
 
-    if (groups.isEmpty) return placeRoot(0x0D, Seq.empty) // empty table
-    if (groups.length == 1) return placeRoot(0x0D, groups.head._1.toSeq)
+    if (groups.isEmpty) return placeRoot(0x0D, IndexedSeq.empty) // empty table
+    if (groups.length == 1) return placeRoot(0x0D, groups.head._1)
 
     var level: Vector[(Int, Long)] = groups.iterator.map { case (cells, maxKey) =>
       val no = pages.alloc()
-      fillPage(pages(no), 0, 0x0D, cells.toSeq)
+      fillPage(pages(no), 0, 0x0D, cells)
       (no, maxKey)
     }.toVector
 
@@ -436,11 +482,11 @@ object Sqlite {
         idx += size; g += 1
       }
       val levelChunks = chunks.result()
-      def interiorCells(chunk: Vector[(Int, Long)]): Seq[Array[Byte]] =
+      def interiorCells(chunk: Vector[(Int, Long)]): IndexedSeq[Array[Byte]] =
         chunk.dropRight(1).map { case (childNo, childMax) =>
-          val b = new ArrayBuffer[Byte](13)
-          b ++= be32(childNo); b ++= varint(childMax)
-          b.toArray
+          val b = new Array[Byte](4 + varintLen(childMax))
+          put32(b, 0, childNo); putVarint(b, 4, childMax)
+          b
         }
       if (nGroups == 1) {
         val chunk = levelChunks.head
@@ -456,11 +502,12 @@ object Sqlite {
   }
 
   /** Write the database file: page 1 = header + `sqlite_master`, then the
-    * object b-trees (and any overflow pages). Build order: plain tables
-    * (streaming their rows also feeds the callers' index-entry collectors),
-    * then indexes and deferred tables, then the master table — while
-    * `sqlite_master` rows keep the declaration order. Atomic:
-    * staging + rename. */
+    * object b-trees (and any overflow pages). Build order: plain tables,
+    * then indexes and deferred tables (so a caller may fill index entries
+    * and deferred rows while its table rows stream), then the master
+    * table — while `sqlite_master` rows keep the declaration order.
+    * Atomic: the pages go to a staging file beside `path`, which is then
+    * renamed over it; a failed write deletes the staging file. */
   def writeFile(path: File, objects: Seq[DbObject]): Unit = {
     val pages = new Pages
     val masterRoot = pages.alloc() // page 1
@@ -472,8 +519,9 @@ object Sqlite {
     objects.foreach {
       case t: TableData if t.deferred => roots(t.name) = buildTableBtree(pages, t.rows)
       case ix: IndexData =>
-        val sorted = ix.entries().sortWith(compareRecords(_, _) < 0).map(record)
-        roots(ix.name) = buildIndexBtree(pages, sorted)
+        val keys = ix.entries().iterator.map(e => new Encoded(e.toIndexedSeq)).toArray
+        java.util.Arrays.sort(keys, recordOrder) // stable, like sortWith
+        roots(ix.name) = buildIndexBtree(pages, keys.map(record))
       case _ => ()
     }
     val masterRows: Iterator[(Long, Seq[V])] = objects.zipWithIndex.map {
@@ -488,32 +536,34 @@ object Sqlite {
 
     // the 100-byte file header at the start of page 1
     val h = pages(1)
-    val magic = "SQLite format 3".getBytes("UTF-8") :+ 0.toByte
+    val magic = "SQLite format 3".getBytes(UTF_8) :+ 0.toByte
     System.arraycopy(magic, 0, h, 0, 16)
-    System.arraycopy(be16(PageSize), 0, h, 16, 2)
+    put16(h, 16, PageSize)
     h(18) = 1; h(19) = 1 // rollback-journal read/write versions
     h(20) = 0 // reserved space per page
     h(21) = 64; h(22) = 32; h(23) = 32 // payload fractions (fixed by spec)
-    System.arraycopy(be32(1), 0, h, 24, 4) // file change counter
-    System.arraycopy(be32(pages.buf.length), 0, h, 28, 4) // size in pages
-    System.arraycopy(be32(1), 0, h, 40, 4) // schema cookie
-    System.arraycopy(be32(1), 0, h, 44, 4) // schema format 1
-    System.arraycopy(be32(1), 0, h, 56, 4) // text encoding: UTF-8
-    System.arraycopy(be32(1), 0, h, 92, 4) // version-valid-for == change counter
-    System.arraycopy(be32(3045000), 0, h, 96, 4) // written-by library version
+    put32(h, 24, 1) // file change counter
+    put32(h, 28, pages.buf.length) // size in pages
+    put32(h, 40, 1) // schema cookie
+    put32(h, 44, 1) // schema format 1
+    put32(h, 56, 1) // text encoding: UTF-8
+    put32(h, 92, 1) // version-valid-for == change counter
+    put32(h, 96, 3045000) // written-by library version
 
     val parent = Option(path.getParentFile).getOrElse(new File("."))
     val tmp = new File(parent, s".${path.getName}.staging")
-    val raf = new RandomAccessFile(tmp, "rw")
     try {
-      raf.setLength(0)
-      pages.buf.foreach(raf.write)
-    } finally raf.close()
-    if (path.exists() && !path.delete())
-      throw new java.io.IOException(s"cannot replace existing $path")
-    if (!tmp.renameTo(path))
-      throw new java.io.IOException(s"atomic rename failed for $path")
+      val out = new BufferedOutputStream(new FileOutputStream(tmp), 1 << 20)
+      try pages.buf.foreach(out.write) finally out.close()
+      install(tmp, path)
+    } catch { case t: Throwable => tmp.delete(); throw t }
   }
+
+  /** Rename a finished file over `path` in one step: a reader sees the
+    * old file or the new one, never neither. */
+  private[harvest] def install(finished: File, path: File): Unit =
+    Files.move(finished.toPath, path.toPath,
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
 
   // ----------------------------------------------------------- file reader
 

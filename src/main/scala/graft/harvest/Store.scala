@@ -2,7 +2,6 @@ package graft.harvest
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** The durable store (A21/A22/A23): one Parquet directory per table under
@@ -144,9 +143,12 @@ object Store {
 
   /** Bootstrap any missing tables as empty Parquet with the fixed schema —
     * the reference creates all six tables even though the harvest only
-    * writes two (harvest.py:215-274 have no INSERTs). */
-  def bootstrap(spark: SparkSession, storeDir: String): Unit =
-    Schemas.allTables.foreach { case (name, schema) =>
+    * writes two (harvest.py:215-274 have no INSERTs). `tables` limits the
+    * walk: the harvest job bootstraps only the four workflow tables, so
+    * the walk never touches a table its own commit is swapping. */
+  def bootstrap(spark: SparkSession, storeDir: String,
+      tables: Seq[(String, StructType)] = Schemas.allTables): Unit =
+    tables.foreach { case (name, schema) =>
       val path = new Path(tablePath(storeDir, name))
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(path))
@@ -215,11 +217,13 @@ object Store {
     ("term_fields", "idx_term_fields_term_id", Seq("term_id"),
       Some("CREATE INDEX idx_term_fields_term_id ON term_fields(term_id)")))
 
-  /** Ceiling on rows collected to the driver per table for the artifact
-    * export. The reference's deliverable is a repo-committed file of a few
-    * MB; 10M rows is far beyond any plausible artifact and well within
-    * driver memory. Beyond it, the artifact concept itself is wrong — the
-    * parquet store is the scale path. */
+  /** Ceiling on rows per table for the artifact export. The export holds
+    * every table on the driver at once — the collected rows, their SQLite
+    * values, and the whole page image (capped at 1 GiB by the writer) —
+    * so it is for reference-sized deliverables: the reference commits a
+    * file of a few MB. The guard runs before a table's rows are
+    * collected, and fails the export instead of the driver's heap; at
+    * this ceiling the parquet store is the scale path. */
   val MaxSqliteRowsPerTable = 10000000L
 
   private val tsFmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
@@ -228,136 +232,133 @@ object Store {
     * equivalent of the reference's committed `translations.db`, including
     * every derived storage structure SQLite itself would maintain
     * (UNIQUE/PK auto-indexes, the four secondary indexes,
-    * `sqlite_sequence` for AUTOINCREMENT). Driver-side and sequential by
-    * design (a single file has no parallel write path); table rows stream
-    * through `toLocalIterator`, and only index key tuples are buffered. */
+    * `sqlite_sequence` for AUTOINCREMENT). */
   def writeSqliteArtifact(spark: SparkSession, storeDir: String, dbPath: String): Unit =
     writeSqliteArtifact(spark,
       (name, schema) => readTableOr(spark, storeDir, name, schema), dbPath)
 
   /** As above, with the table contents supplied directly (by declared
     * schema) instead of read from a parquet store — lets callers export an
-    * artifact from in-flight DataFrames without a store round-trip. */
+    * artifact from in-flight DataFrames without a store round-trip.
+    *
+    * Each table is collected to the driver in one job and sorted there:
+    * by `id` where the table has one (id becomes the rowid, preserving the
+    * reference's AUTOINCREMENT numbering), else by its first column, in
+    * Spark's ascending order (nulls first, text by UTF-8 bytes) with the
+    * rowid numbered in that order. `knownRows` gives tables whose row
+    * count the caller already holds: the row-ceiling guard uses it and the
+    * table is collected whole. Any other table is collected through a
+    * limit one row past the ceiling, so the guard never needs a count job.
+    * The b-tree build in [[Sqlite.writeFile]] is driver-side and
+    * sequential by nature: a single file has no parallel write path. */
   def writeSqliteArtifact(spark: SparkSession, read: (String, StructType) => DataFrame,
-                          dbPath: String): Unit = {
-    import org.apache.spark.sql.Row
+                          dbPath: String, knownRows: Map[String, Long] = Map.empty): Unit = {
+    import scala.collection.immutable.ArraySeq
     import scala.collection.mutable
 
+    def ceiling(name: String, n: Long): Unit =
+      require(n <= MaxSqliteRowsPerTable,
+        s"SQLite artifact export: table $name has $n rows (> $MaxSqliteRowsPerTable); " +
+          "the single-file artifact is for reference-compatible deliverables — " +
+          "use the parquet store at scale")
+
+    // every row of a harvest run carries the run's one `asOf`: format each
+    // distinct timestamp once
+    val stamps = mutable.HashMap[Any, Sqlite.V]()
+    def stamp(t: Any): Sqlite.V = stamps.getOrElseUpdate(t, Sqlite.VText(t match {
+      case t: java.sql.Timestamp => t.toLocalDateTime.format(tsFmt)
+      case t: java.time.LocalDateTime => t.format(tsFmt)
+      case t: java.time.Instant =>
+        java.time.LocalDateTime.ofInstant(t, java.time.ZoneOffset.UTC).format(tsFmt)
+    }))
     def sqlValue(v: Any): Sqlite.V = v match {
       case null => Sqlite.VNull
       case l: Long => Sqlite.VInt(l)
       case i: Int => Sqlite.VInt(i.toLong)
       case s: String => Sqlite.VText(s)
-      case t: java.sql.Timestamp => Sqlite.VText(t.toLocalDateTime.format(tsFmt))
-      case t: java.time.LocalDateTime => Sqlite.VText(t.format(tsFmt))
-      case t: java.time.Instant =>
-        Sqlite.VText(java.time.LocalDateTime.ofInstant(t, java.time.ZoneOffset.UTC).format(tsFmt))
+      case t @ (_: java.sql.Timestamp | _: java.time.LocalDateTime | _: java.time.Instant) => stamp(t)
       case d: Double => Sqlite.VReal(d)
       case f: Float => Sqlite.VReal(f.toDouble)
       case b: Array[Byte] => Sqlite.VBlob(b)
       case other => Sqlite.VText(other.toString)
     }
 
-    // filled as each table's rows stream through its b-tree build
-    val indexEntries = mutable.Map[String, mutable.ArrayBuffer[Seq[Sqlite.V]]]()
-    sqliteIndexes.foreach { case (_, name, _, _) => indexEntries(name) = mutable.ArrayBuffer() }
+    val indexEntries = mutable.Map[String, Seq[Seq[Sqlite.V]]]().withDefaultValue(Seq.empty)
     val maxRowid = mutable.Map[String, Long]().withDefaultValue(0L)
 
     def tableObj(name: String): Sqlite.TableData = {
       val schema = Schemas.allTables.toMap.apply(name)
       val df = read(name, schema)
-      val hasId = schema.fieldNames.contains("id")
-      // total order: by id where present (id becomes the rowid, preserving
-      // the reference's AUTOINCREMENT numbering), else by first column
-      val sortCol = if (hasId) "id" else schema.fieldNames.head
-      // r17 (VERDICT r16 #5, guide §1.2): ONE execution of the table's
-      // derivation, not two — the old count()-then-orderBy ran the whole
-      // upstream plan once for the row-ceiling check and again for the
-      // stream. The LAZY checkpoint materializes the SORTED frame on the
-      // count itself (one job does both; range-partitioned + sorted
-      // within partitions, so partition-order iteration below is the
-      // total order); toLocalIterator then fetches materialized blocks.
-      val sorted = df.orderBy(col(sortCol)).localCheckpoint(false)
-      val n = sorted.count()
-      require(n <= MaxSqliteRowsPerTable,
-        s"SQLite artifact export: table $name has $n rows (> $MaxSqliteRowsPerTable); " +
-          "the single-file artifact is for reference-compatible deliverables — " +
-          "use the parquet store at scale")
-      val it = sorted.toLocalIterator()
-      val myIndexes = sqliteIndexes.filter(_._1 == name)
-        .map { case (_, idxName, keys, _) => (idxName, keys.map(schema.fieldIndex)) }
-      var rowSeq = 0L
-      val rows = new Iterator[(Long, Seq[Sqlite.V])] {
-        override def hasNext: Boolean = it.hasNext
-        override def next(): (Long, Seq[Sqlite.V]) = {
-          val r: Row = it.next()
-          rowSeq += 1
-          val rowid = if (hasId) r.getLong(schema.fieldIndex("id")) else rowSeq
-          val values = schema.fieldNames.toSeq.map(f => sqlValue(r.get(r.fieldIndex(f))))
-          myIndexes.foreach { case (idxName, keyIdx) =>
-            indexEntries(idxName) += (keyIdx.map(values) :+ Sqlite.VInt(rowid))
-          }
-          if (rowid > maxRowid(name)) maxRowid(name) = rowid
-          (rowid, values)
-        }
+      val rows = knownRows.get(name) match {
+        case Some(n) => ceiling(name, n); df.collect()
+        case None =>
+          val r = df.limit((MaxSqliteRowsPerTable + 1).toInt).collect()
+          ceiling(name, r.length.toLong); r
       }
-      Sqlite.TableData(name, sqliteDdl(name), rows)
+      // field positions resolved once per table, not per row
+      val at = schema.fieldNames.map(df.schema.fieldIndex)
+      val idAt = schema.fieldNames.indexOf("id") match { case -1 => -1; case i => at(i) }
+      val converted = rows.map { r =>
+        val vs = new Array[Sqlite.V](at.length)
+        var i = 0
+        while (i < at.length) { vs(i) = sqlValue(r.get(at(i))); i += 1 }
+        (if (idAt >= 0) r.getLong(idAt) else 0L, vs)
+      }
+      val keyed: Array[(Long, Array[Sqlite.V])] =
+        if (idAt >= 0) converted.sortBy(_._1)
+        else converted.map(_._2)
+          .sortWith((a, b) => Sqlite.compareRecords(Seq(a(0)), Seq(b(0))) < 0)
+          .zipWithIndex.map { case (vs, i) => (i + 1L, vs) }
+      sqliteIndexes.filter(_._1 == name).foreach { case (_, idxName, keys, _) =>
+        val keyAt = keys.map(schema.fieldIndex).toArray
+        indexEntries(idxName) = ArraySeq.unsafeWrapArray(keyed.map { case (rowid, vs) =>
+          val e = new Array[Sqlite.V](keyAt.length + 1)
+          var i = 0
+          while (i < keyAt.length) { e(i) = vs(keyAt(i)); i += 1 }
+          e(keyAt.length) = Sqlite.VInt(rowid)
+          ArraySeq.unsafeWrapArray(e)
+        })
+      }
+      if (keyed.nonEmpty) maxRowid(name) = keyed.last._1
+      Sqlite.TableData(name, sqliteDdl(name),
+        keyed.iterator.map { case (rowid, vs) => (rowid, ArraySeq.unsafeWrapArray(vs)) })
     }
 
+    // tables first: their rows fill the index entries and max rowids
+    val tables = Seq("terms", "term_fields", "translations", "appeals",
+      "appeal_messages", "users").map(n => n -> tableObj(n)).toMap
+
     // sqlite_sequence: one row per AUTOINCREMENT table that has rows, in
-    // insert order — evaluated lazily, after the six tables have streamed
+    // insert order
     val seqTables = Seq("terms", "term_fields", "translations", "appeals", "appeal_messages")
-    val sequenceRows = new Iterator[(Long, Seq[Sqlite.V])] {
-      private lazy val underlying = seqTables.filter(maxRowid(_) > 0L).zipWithIndex.map {
-        case (t, i) => (i + 1L, Seq[Sqlite.V](Sqlite.VText(t), Sqlite.VInt(maxRowid(t))))
-      }.iterator
-      override def hasNext: Boolean = underlying.hasNext
-      override def next(): (Long, Seq[Sqlite.V]) = underlying.next()
+    val sequenceRows = seqTables.filter(maxRowid(_) > 0L).zipWithIndex.map {
+      case (t, i) => (i + 1L, Seq[Sqlite.V](Sqlite.VText(t), Sqlite.VInt(maxRowid(t))))
     }
 
     def indexObj(name: String): Sqlite.IndexData = {
       val (table, _, _, sql) = sqliteIndexes.find(_._2 == name).get
-      Sqlite.IndexData(name, table, sql, () => indexEntries(name).toSeq)
+      Sqlite.IndexData(name, table, sql, () => indexEntries(name))
     }
 
-    // r17 (VERDICT r16 #5, guide §2.6 overlap independent jobs): the six
-    // tables' Spark-side derivations (sort + materialize + row-ceiling
-    // count inside tableObj) are independent of each other — run them
-    // from a small thread pool so their jobs overlap instead of paying
-    // six serialized job latencies. Everything ORDER-SENSITIVE is
-    // untouched: the b-tree build in writeFile still streams the tables
-    // sequentially in sqlite_master declaration order (index-entry and
-    // max-rowid collection happen there, single-threaded), so the
-    // emitted file is byte-identical.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    val tableFs: Map[String, java.util.concurrent.Future[Sqlite.TableData]] =
-      Seq("terms", "term_fields", "translations", "appeals",
-        "appeal_messages", "users").map { n =>
-        n -> pool.submit(new java.util.concurrent.Callable[Sqlite.TableData] {
-          override def call(): Sqlite.TableData = tableObj(n)
-        })
-      }.toMap
-    try {
-      def tbl(n: String): Sqlite.TableData = tableFs(n).get()
-      // sqlite_master row order exactly as the reference's DDL produces it
-      val objects: Seq[Sqlite.DbObject] = Seq(
-        tbl("terms"),
-        indexObj("sqlite_autoindex_terms_1"),
-        Sqlite.TableData("sqlite_sequence", sqliteDdl("sqlite_sequence"), sequenceRows, deferred = true),
-        tbl("term_fields"),
-        indexObj("sqlite_autoindex_term_fields_1"),
-        tbl("translations"),
-        indexObj("sqlite_autoindex_translations_1"),
-        tbl("appeals"),
-        indexObj("sqlite_autoindex_appeals_1"),
-        tbl("appeal_messages"),
-        tbl("users"),
-        indexObj("sqlite_autoindex_users_1"),
-        indexObj("idx_translations_status"),
-        indexObj("idx_translations_lang"),
-        indexObj("idx_appeals_status"),
-        indexObj("idx_term_fields_term_id"))
-      Sqlite.writeFile(new java.io.File(dbPath), objects)
-    } finally pool.shutdown()
+    // sqlite_master row order exactly as the reference's DDL produces it
+    val objects: Seq[Sqlite.DbObject] = Seq(
+      tables("terms"),
+      indexObj("sqlite_autoindex_terms_1"),
+      Sqlite.TableData("sqlite_sequence", sqliteDdl("sqlite_sequence"), sequenceRows.iterator,
+        deferred = true),
+      tables("term_fields"),
+      indexObj("sqlite_autoindex_term_fields_1"),
+      tables("translations"),
+      indexObj("sqlite_autoindex_translations_1"),
+      tables("appeals"),
+      indexObj("sqlite_autoindex_appeals_1"),
+      tables("appeal_messages"),
+      tables("users"),
+      indexObj("sqlite_autoindex_users_1"),
+      indexObj("idx_translations_status"),
+      indexObj("idx_translations_lang"),
+      indexObj("idx_appeals_status"),
+      indexObj("idx_term_fields_term_id"))
+    Sqlite.writeFile(new java.io.File(dbPath), objects)
   }
 }

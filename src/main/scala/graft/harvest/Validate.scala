@@ -63,11 +63,31 @@ object Validate {
       .agg(count(lit(1)).as("n_rows"))
       .filter(col("n_rows") > 1)
 
-  /** Assert no CHECK/UNIQUE violations; throws with a sample on failure. */
-  def enforce(df: DataFrame, description: String): Unit = {
-    val sample = df.take(5)
-    if (sample.nonEmpty)
-      throw new IllegalStateException(
-        s"constraint violation ($description): ${sample.mkString("; ")}")
+  /** Assert that no (violations, description) check has a row, with ONE
+    * probe job: each violation frame is tagged with its check's position
+    * and rendered to JSON, the tagged union is scanned once keeping at
+    * most five rows per check per partition, and the exception names
+    * every violated check, each with up to five sample rows of its own. */
+  def enforce(checks: Seq[(DataFrame, String)]): Unit = {
+    val perCheck = 5
+    val nChecks = checks.length
+    val tagged = checks.zipWithIndex.map { case ((df, _), i) =>
+      df.select(lit(i).as("check"),
+        to_json(struct(df.columns.toSeq.map(c => col(s"`$c`")): _*)).as("row"))
+    }.reduce(_ unionByName _)
+    val sampled = tagged.rdd.mapPartitions { rows =>
+      val seen = new Array[Int](nChecks)
+      rows.filter { r =>
+        val i = r.getInt(0)
+        seen(i) += 1
+        seen(i) <= perCheck
+      }
+    }.collect()
+    val failures = checks.zipWithIndex.flatMap { case ((_, description), i) =>
+      val sample = sampled.iterator.filter(_.getInt(0) == i).map(_.getString(1)).take(perCheck).toSeq
+      if (sample.isEmpty) None
+      else Some(s"constraint violation ($description): ${sample.mkString("; ")}")
+    }
+    if (failures.nonEmpty) throw new IllegalStateException(failures.mkString("\n"))
   }
 }

@@ -84,4 +84,130 @@ class HarvestJobSpec extends SparkSpec {
     // no hook configured: nothing runs
     assert(Main.runPostWriteHook(None).isEmpty)
   }
+
+  private val collection = "http://vocab.nerc.ac.uk/collection/P01/current/"
+
+  private def sha256(f: java.io.File): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
+
+  /** Hidden artifact files (the staging copies) left in `dir`. */
+  private def stagingLeft(dir: String): Seq[String] =
+    new java.io.File(dir).list().toSeq.filter(n => n.startsWith(".") && n.contains("translations"))
+
+  test("the run's translations.db equals an export of the store it committed: " +
+    "first run, re-run over a non-empty workflow table, and fresh runs agree (H4)") {
+    val dir = Files.createTempDirectory("graft_artifact_eq").toString
+    val bindings = s"$dir/bindings.parquet"
+    writeBindings(bindings)
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
+    val store = s"$dir/store"
+    val db = new java.io.File(s"$dir/translations.db")
+    HarvestJob.run(spark, HarvestJob.Config(collection, bindings, store, t0,
+      sqliteArtifact = Some(db.getPath)))
+    val export1 = new java.io.File(s"$dir/export1.db")
+    Store.writeSqliteArtifact(spark, store, export1.getPath)
+    assert(sha256(db) === sha256(export1), "first run")
+
+    // a fresh run of the same input and asOf gives the same bytes
+    val fresh = new java.io.File(s"$dir/fresh.db")
+    HarvestJob.run(spark, HarvestJob.Config(collection, bindings, s"$dir/store_fresh", t0,
+      sqliteArtifact = Some(fresh.getPath)))
+    assert(sha256(fresh) === sha256(db), "fresh run")
+
+    // a re-run over a store whose users table already holds a row
+    Store.writeTable(spark.createDataFrame(java.util.List.of(
+      org.apache.spark.sql.Row("ana", 3, Timestamp.valueOf("2025-12-31 08:00:00"), null)),
+      Schemas.users), store, "users")
+    val t1 = Timestamp.valueOf("2026-02-01 00:00:00")
+    HarvestJob.run(spark, HarvestJob.Config(collection, bindings, store, t1,
+      sqliteArtifact = Some(db.getPath)))
+    val export2 = new java.io.File(s"$dir/export2.db")
+    Store.writeSqliteArtifact(spark, store, export2.getPath)
+    assert(sha256(db) === sha256(export2), "re-run")
+    assert(Sqlite.readTable(db, "users").map(_._2) ===
+      Seq(Seq(Sqlite.VText("ana"), Sqlite.VInt(3L), Sqlite.VText("2025-12-31 08:00:00"), Sqlite.VNull)))
+    assert(stagingLeft(dir).isEmpty)
+  }
+
+  test("artifact path unwritable: the run throws after committing the store, " +
+    "and leaves no staging file (H4)") {
+    val dir = Files.createTempDirectory("graft_artifact_fail").toString
+    val bindings = s"$dir/bindings.parquet"
+    writeBindings(bindings)
+    // a non-empty directory where the file should go: no rename can replace it
+    val blocked = new java.io.File(s"$dir/translations.db")
+    blocked.mkdir()
+    Files.writeString(new java.io.File(blocked, "keep").toPath, "x")
+    intercept[java.io.IOException] {
+      HarvestJob.run(spark, HarvestJob.Config(collection, bindings, s"$dir/store",
+        Timestamp.valueOf("2026-01-01 00:00:00"), sqliteArtifact = Some(blocked.getPath)))
+    }
+    assert(spark.read.parquet(s"$dir/store/terms").count() === 3)
+    assert(spark.read.parquet(s"$dir/store/term_fields").count() === 6)
+    for ((name, _) <- Schemas.allTables)
+      assert(new java.io.File(s"$dir/store/$name").isDirectory, name)
+    assert(blocked.list().toSeq === Seq("keep"))
+    assert(stagingLeft(dir).isEmpty)
+  }
+
+  test("commit branch throws: an existing translations.db stays byte-unchanged, " +
+    "none appears where there was none, and no staging file is left (H4)") {
+    val dir = Files.createTempDirectory("graft_commit_fail").toString
+    val bindings = s"$dir/bindings.parquet"
+    writeBindings(bindings)
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
+    val db = new java.io.File(s"$dir/translations.db")
+    HarvestJob.run(spark, HarvestJob.Config(collection, bindings, s"$dir/store", t0,
+      sqliteArtifact = Some(db.getPath)))
+    val before = sha256(db)
+    val failing: (org.apache.spark.sql.DataFrame, String) => Unit = (df, name) =>
+      if (name == "term_fields") throw new java.io.IOException("injected swap failure")
+      else Store.writeTable(df, s"$dir/store", name)
+    val t1 = Timestamp.valueOf("2026-02-01 00:00:00")
+    val e = intercept[java.io.IOException] {
+      HarvestJob.run(spark, HarvestJob.Config(collection, bindings, s"$dir/store", t1,
+        sqliteArtifact = Some(db.getPath)), failing)
+    }
+    assert(e.getMessage === "injected swap failure")
+    assert(sha256(db) === before)
+    assert(stagingLeft(dir).isEmpty)
+
+    // into a fresh store, with no artifact yet: none appears
+    val db2 = new java.io.File(s"$dir/second.db")
+    intercept[java.io.IOException] {
+      HarvestJob.run(spark, HarvestJob.Config(collection, bindings, s"$dir/store2", t0,
+        sqliteArtifact = Some(db2.getPath)), failing)
+    }
+    assert(!db2.exists())
+    assert(new java.io.File(dir).list().toSeq.filter(_.contains("second")).isEmpty)
+  }
+
+  test("one probe enforces both uniqueness constraints; each failure names its own (A19/A20)") {
+    val terms = Seq((1L, "u1"), (2L, "u1"), (3L, "u3")).toDF("id", "uri")
+    val fields = Seq((1L, 1L, "f", "v"), (2L, 1L, "f", "v"), (3L, 2L, "f", "w"))
+      .toDF("id", "term_id", "field_uri", "original_value")
+    val e = intercept[IllegalStateException] {
+      Validate.enforce(Seq(
+        Validate.uniqueViolations(terms, Seq("uri")) -> "terms.uri unique",
+        Validate.uniqueViolations(fields, Seq("term_id", "field_uri", "original_value")) ->
+          "term_fields(term_id, field_uri, original_value) unique"))
+    }
+    val lines = e.getMessage.split("\n").toSeq
+    assert(lines.length === 2)
+    assert(lines(0).startsWith("constraint violation (terms.uri unique): "))
+    assert(lines(0).contains("\"uri\":\"u1\""))
+    assert(lines(1).startsWith(
+      "constraint violation (term_fields(term_id, field_uri, original_value) unique): "))
+    assert(lines(1).contains("\"original_value\":\"v\""))
+    // clean frames pass; one violated check of two names only itself
+    Validate.enforce(Seq(Validate.uniqueViolations(terms, Seq("id")) -> "terms.id unique"))
+    val one = intercept[IllegalStateException] {
+      Validate.enforce(Seq(
+        Validate.uniqueViolations(terms, Seq("id")) -> "terms.id unique",
+        Validate.uniqueViolations(terms, Seq("uri")) -> "terms.uri unique"))
+    }
+    assert(one.getMessage.split("\n").toSeq.map(_.takeWhile(_ != ':')) ===
+      Seq("constraint violation (terms.uri unique)"))
+  }
 }

@@ -227,4 +227,64 @@ class SqliteSpec extends SparkSpec {
       Seq(VText("terms"), VInt(terms.length.toLong)),
       Seq(VText("term_fields"), VInt(fields.length.toLong))))
   }
+
+  test("an index leaf with 300+ small cells round-trips (H4)") {
+    val db = tmpDb("wideleaf")
+    val n = 330 // ~9-byte cells: all 330 fit one leaf page
+    def key(rowid: Long): Long = (rowid * 37) % 100 + 2
+    val entries = (1L to n).map(r => Seq[V](VInt(key(r)), VInt(r)))
+    writeFile(db, Seq(
+      TableData("t", "CREATE TABLE t (id INTEGER PRIMARY KEY, k INTEGER)",
+        (1L to n).iterator.map(r => (r, Seq[V](VInt(r), VInt(key(r)))))),
+      IndexData("idx_t_k", "t", Some("CREATE INDEX idx_t_k ON t(k)"), () => entries)))
+    assert(db.length() == 3L * PageSize) // master, ONE table leaf, ONE index leaf
+    assert(readIndex(db, "idx_t_k") ==
+      entries.sortBy { case Seq(VInt(k), VInt(r)) => (k, r); case _ => (0L, 0L) })
+  }
+
+  /** A fixed multi-table input: overflow payloads in table and index
+    * cells, multi-level index b-trees, unicode text keys, reference
+    * timestamp text, and a deferred table. */
+  private def pinnedObjects(): Seq[DbObject] = {
+    val ts = Seq("2026-01-01 00:00:00", "2026-02-01 12:34:56", "2026-10-19 23:59:59")
+    val a = (1 to 3000).map { i =>
+      val label =
+        if (i % 700 == 0) s"long-$i-" + ("é€ÿ" * 3000) // ~20 KB: multi-page chain
+        else if (i % 250 == 0) s"med-$i-" + ("m" * 4200) // just past the leaf threshold
+        else s"label-${(i * 7919) % 3000}-ü-$i"
+      (i.toLong, Seq[V](VInt(i.toLong), VText(label), VText(ts(i % 3)),
+        if (i % 5 == 0) VNull else VReal(i / 7.0)))
+    }
+    val b = (1 to 2500).map { i =>
+      val key =
+        if (i % 400 == 0) s"wide-$i-" + ("k" * 1500) // index cell spills to overflow
+        else f"key-${(i * 131) % 2500}%05d-" + ("x" * 280)
+      (i * 3L, Seq[V](VInt(i * 3L), VInt((i % 97).toLong), VText(key), VText(ts(i % 2))))
+    }
+    val aIdx = () => a.map { case (r, vs) => Seq[V](vs(1), VInt(r)) }
+    val bIdx = () => b.map { case (r, vs) => Seq[V](vs(2), VInt(r)) }
+    val bMulti = () => b.map { case (r, vs) => Seq[V](vs(1), vs(3), VInt(r)) }
+    Seq(
+      TableData("a", "CREATE TABLE a (id INTEGER PRIMARY KEY, label TEXT, ts DATETIME, r REAL)",
+        a.iterator),
+      IndexData("idx_a_label", "a", Some("CREATE INDEX idx_a_label ON a(label)"), aIdx),
+      TableData("seq", "CREATE TABLE seq(name,seq)",
+        Iterator((1L, Seq[V](VText("a"), VInt(3000L))), (2L, Seq[V](VText("b"), VInt(7500L)))),
+        deferred = true),
+      TableData("b", "CREATE TABLE b (id INTEGER PRIMARY KEY, g INTEGER, k TEXT UNIQUE, ts DATETIME)",
+        b.iterator),
+      IndexData("sqlite_autoindex_b_1", "b", None, bIdx),
+      IndexData("idx_b_g_ts", "b", Some("CREATE INDEX idx_b_g_ts ON b(g, ts)"), bMulti),
+      TableData("empty", "CREATE TABLE empty (x)", Iterator.empty))
+  }
+
+  test("writeFile output on a fixed multi-table input is pinned by sha256 (H4)") {
+    val db = tmpDb("pinned")
+    writeFile(db, pinnedObjects())
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(java.nio.file.Files.readAllBytes(db.toPath)).map("%02x".format(_)).mkString
+    assert(readIndex(db, "sqlite_autoindex_b_1").length == 2500)
+    assert(readTable(db, "a").length == 3000)
+    assert(sha == "b41f73c0606fe89fe053a45deab8104d108ab866a4334ec5ad7955b30a00156c") // the boxed-buffer encoder's output
+  }
 }
