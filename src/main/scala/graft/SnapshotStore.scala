@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materialize-once keyed parquet snapshots under the JVM tmpdir — the
@@ -19,22 +20,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * must invalidate on derivation-logic changes, not only data changes —
   * review finding, late r7).
   *
-  * Publication is claim-then-rename: a bare `rename(staged, cacheDir)`
-  * is NOT a safe race arbiter on the local filesystem (Hadoop's
-  * RawLocalFileSystem falls back to copying the staged dir INSIDE an
-  * existing destination and returns true — the loser would silently
-  * nest a duplicate copy in the winner's snapshot), so the loser is
-  * decided by a create-exclusive claim file and then waits for the
-  * winner's `_SUCCESS`; a stale claim (crashed builder) is broken once
-  * after the wait times out. */
+  * Each key's directory is published through [[Versions]]: the build is
+  * written into a claimed version directory and committed with one
+  * marker, and every caller serves the highest committed version. Inside
+  * one JVM a per-key monitor lets one thread build while the others wait
+  * for its commit. Racers in different processes may each build and
+  * commit; that is safe because every builder is deterministic (the
+  * oracle hash-gates their outputs), so any committed version serves the
+  * same rows. A builder that died after its claim leaves an orphan that
+  * no reader resolves; the next caller simply builds the next version. */
 private[graft] object SnapshotStore {
   // r9: builder params join the cache key. r14: bumped for the
   // (refPred, k) fold into the ref-table keys — the prescribed
   // discipline when existing names change their key derivation, so the
   // orphaned pre-fold dirs live under the OLD versioned root and
   // sweepOldVersions ages the whole root out instead of leaking them
-  // inside a live one forever.
-  private val Version = 5
+  // inside a live one forever. 6: each key is a versioned directory.
+  private val Version = 6
 
   /** Snapshots live under a VERSIONED root (graft_scratch/v<N>/...) so
     * obsolete generations are identifiable by NAME: a version bump or a
@@ -63,178 +65,96 @@ private[graft] object SnapshotStore {
       build: => DataFrame): DataFrame =
     s.read.parquet(path(s, dir, sigTable, name, params)(build))
 
-  /** [[apply]]'s materialize-once protocol, returning the published
-    * snapshot DIRECTORY instead of a DataFrame over it — the handle a
+  /** [[apply]]'s materialize-once protocol, returning the committed
+    * version DIRECTORY instead of a DataFrame over it — the handle a
     * by-reference consumer (r14: the ANN refresher's default
     * `bootstrapByRef` seed pointers) records instead of copying the
-    * rows. The path is immutable once published (rebuilds key to a NEW
-    * path via sig/params/Version). */
+    * rows. Nothing is written inside it after its marker, and rebuilds
+    * key to a NEW directory via sig/params/Version. */
   def path(s: SparkSession, dir: String, sigTable: String, name: String,
       params: String = "")(
       build: => DataFrame): String = {
-    import org.apache.hadoop.fs.{Path => HPath}
+    val (fs, keyDir) = keyed(s, dir, sigTable, name, params)
+    servedOrBuilt(fs, keyDir)(v => build.write.parquet(v.toString)).toString
+  }
+
+  /** The key's directory: `<tmpdir>/graft_scratch/v<Version>/<name>_<key>`. */
+  private def keyed(s: SparkSession, dir: String, sigTable: String, name: String,
+      params: String): (FileSystem, Path) = {
     sweepOldVersions()
-    val conf = s.sparkContext.hadoopConfiguration
-    val sigPath = new HPath(s"$dir/$sigTable")
-    val fs = sigPath.getFileSystem(conf)
-    val st = fs.getFileStatus(sigPath)
-    val sig = s"${fs.getContentSummary(sigPath).getLength}-${st.getModificationTime}"
+    val sigPath = new Path(s"$dir/$sigTable")
+    val fs = sigPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val sig = s"${fs.getContentSummary(sigPath).getLength}-" +
+      s"${fs.getFileStatus(sigPath).getModificationTime}"
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$dir|$sigTable|$sig|v$Version|$params".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(16)
-    val cacheDir = new HPath(
-      s"${sys.props("java.io.tmpdir")}/graft_scratch/v$Version/${name}_$key")
-    val success = new HPath(cacheDir, "_SUCCESS")
-    def publish(retryOnStaleClaim: Boolean): Unit = {
-      val staged = new HPath(
-        s"$cacheDir-staged-${java.util.UUID.randomUUID().toString.take(8)}")
-      build.write.mode("overwrite").parquet(staged.toString)
-      fs.mkdirs(cacheDir.getParent)
-      val claim = new HPath(s"$cacheDir.claim")
-      val claimed =
-        try { fs.create(claim, false).close(); true }
-        catch { case _: java.io.IOException => false }
-      if (claimed) {
-        if (fs.exists(success)) fs.delete(staged, true) // published by a past JVM
-        else {
-          fs.delete(cacheDir, true) // corrupt leftover from a crash, if any
-          if (!fs.rename(staged, cacheDir)) {
-            fs.delete(staged, true)
-            sys.error(s"snapshot: cannot move staged build into $cacheDir")
-          }
-        }
-      } else {
-        // lost the claim — the winner is publishing; wait for its _SUCCESS
-        fs.delete(staged, true)
-        var tries = 0
-        while (!fs.exists(success) && tries < 300) { Thread.sleep(100); tries += 1 }
-        if (!fs.exists(success)) {
-          if (retryOnStaleClaim) { // crashed claimant: break the claim once
-            fs.delete(claim, false)
-            publish(retryOnStaleClaim = false)
-          } else sys.error(s"snapshot: cannot materialize $cacheDir " +
-            s"(stale claim at $claim survived a retry)")
-        }
-      }
-    }
-    // r10 (found by SnapshotRaceSpec under a loaded full-suite JVM):
-    // the claim file arbitrates across JVMs, but RawLocalFileSystem's
-    // create(claim, overwrite = false) is CHECK-THEN-ACT — two threads
-    // of the SAME JVM can both "win" the claim and interleave
-    // delete/rename on the cache dir. In-process contention is
-    // serialized by a per-key monitor (one lock object per cache key,
-    // never released — keys are few); the file protocol still guards
-    // cross-process races.
-    if (!fs.exists(success))
-      keyLocks.computeIfAbsent(cacheDir.toString, _ => new Object).synchronized {
-        if (!fs.exists(success)) publish(retryOnStaleClaim = true)
-      }
-    cacheDir.toString
+    (fs, new Path(s"${sys.props("java.io.tmpdir")}/graft_scratch/v$Version/${name}_$key"))
   }
+
+  /** The highest committed version of `keyDir`, built by `write` first
+    * when none is committed. The per-key monitor is held across the
+    * build (one build per key in this JVM); a build that reads another
+    * snapshot takes that key's monitor, never this one. */
+  private def servedOrBuilt(fs: FileSystem, keyDir: Path)(write: Path => Unit): Path =
+    Versions.latest(fs, keyDir).getOrElse(lockOf(keyDir).synchronized {
+      Versions.latest(fs, keyDir).getOrElse {
+        val v = Versions.publish(fs, keyDir)(write)
+        Versions.vacuum(fs, keyDir)
+        Versions.dirOf(keyDir, v)
+      }
+    })
 
   private val keyLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private def lockOf(keyDir: Path): Object =
+    keyLocks.computeIfAbsent(keyDir.toString, _ => new Object)
+
+  /** Written into a bucketed version beside its data: the table's schema
+    * as DDL, which the catalog registration needs. */
+  private val SchemaFile = "_GRAFT_SCHEMA"
 
   /** Materialize-once BUCKETED derived table (r13, VERDICT r12 #1): the
     * EXECUTED form of the "at 100 TB this is a bucketed table" claims.
-    * Same cache-key discipline as [[apply]], but the snapshot is written
-    * with `bucketBy(buckets, keys).sortBy(keys)` and registered in the
-    * session catalog, so a consumer's equi-join on the bucket keys reads
-    * `HashPartitioning(keys, buckets)` straight from the layout —
-    * EnsureRequirements shuffles ONLY the probe side
+    * Same cache-key discipline and publish as [[path]], but the snapshot
+    * is written with `bucketBy(buckets, keys).sortBy(keys)` and
+    * registered in the session catalog, so a consumer's equi-join on the
+    * bucket keys reads `HashPartitioning(keys, buckets)` straight from
+    * the layout — EnsureRequirements shuffles ONLY the probe side
     * (BucketedLayoutSpec pins the executed plan: zero ShuffleExchange
-    * above the bucketed scans, one on the batch side). Data lives under
-    * the same versioned scratch root as [[apply]]'s snapshots; the
-    * in-memory catalog does not outlive the JVM, so a fresh session
-    * re-registers the existing bucketed files via DDL (schema rides a
-    * sidecar) instead of rewriting them. Cross-process races use the
-    * stage-then-claim-then-rename protocol of [[apply]] — the build
-    * lands in a UUID staging dir under a throwaway catalog name BEFORE
-    * the claim (the claim window is metadata-milliseconds, never a
-    * Spark job, so the loser's stale-claim break cannot tear a live
-    * build), and a `.ready` marker is the publish signal (`_SUCCESS`
-    * lands before the sidecar). */
+    * above the bucketed scans, one on the batch side). The in-memory
+    * catalog does not outlive the JVM, so a fresh session re-registers
+    * the committed version's files via DDL (the schema rides a file in
+    * the version) instead of rewriting them. The table is named after
+    * the key's directory. */
   def bucketed(s: SparkSession, dir: String, sigTable: String, name: String,
       buckets: Int, bucketKeys: Seq[String], params: String = "")(
       build: => DataFrame): DataFrame = {
-    import org.apache.hadoop.fs.{Path => HPath}
     require(bucketKeys.nonEmpty)
-    sweepOldVersions()
-    val conf = s.sparkContext.hadoopConfiguration
-    val sigPath = new HPath(s"$dir/$sigTable")
-    val fs = sigPath.getFileSystem(conf)
-    val st = fs.getFileStatus(sigPath)
-    val sig = s"${fs.getContentSummary(sigPath).getLength}-${st.getModificationTime}"
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$sigTable|$sig|v$Version|bkt$buckets|${bucketKeys.mkString(",")}|$params"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val tbl = s"${name}_bkt_$key"
-    val pathStr = s"${sys.props("java.io.tmpdir")}/graft_scratch/v$Version/$tbl"
-    val ready = new HPath(s"$pathStr.ready")
-    val sidecar = new HPath(s"$pathStr.schema")
-    def register(): Unit = {
-      val in = fs.open(sidecar)
-      val ddl = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      s.sql(s"""CREATE TABLE $tbl ($ddl) USING PARQUET
-        CLUSTERED BY (${bucketKeys.mkString(", ")})
-        SORTED BY (${bucketKeys.mkString(", ")})
-        INTO $buckets BUCKETS LOCATION '$pathStr'""")
-    }
-    def publish(retryOnStaleClaim: Boolean): Unit = {
-      // STAGE FIRST, claim after — apply()'s discipline (r13 review): a
-      // claim held across the whole Spark build can outlive the loser's
-      // stale-claim timeout, and the break-then-rebuild would then tear
-      // a LIVE slow build writing the shared final path. Staging keeps
-      // the claim window at filesystem-metadata milliseconds. The build
-      // lands under a throwaway catalog name (saveAsTable is what writes
-      // the bucket-id file layout); the entry is dropped immediately —
-      // external table, files stay — and the real name registers via
-      // [[register]] like every other path into the table.
-      val uid = java.util.UUID.randomUUID().toString.take(8)
-      val stagedTbl = s"${tbl}_staged_$uid"
-      val staged = new HPath(s"$pathStr-staged-$uid")
-      val df = build
-      df.write.mode("overwrite")
-        .bucketBy(buckets, bucketKeys.head, bucketKeys.tail: _*)
-        .sortBy(bucketKeys.head, bucketKeys.tail: _*)
-        .option("path", staged.toString).format("parquet").saveAsTable(stagedTbl)
-      s.sql(s"DROP TABLE IF EXISTS $stagedTbl")
-      val claim = new HPath(s"$pathStr.claim")
-      fs.mkdirs(claim.getParent)
-      val claimed =
-        try { fs.create(claim, false).close(); true }
-        catch { case _: java.io.IOException => false }
-      if (claimed) {
-        if (fs.exists(ready)) fs.delete(staged, true) // published by a past JVM
-        else {
-          fs.delete(new HPath(pathStr), true) // corrupt leftover, if any
-          if (!fs.rename(staged, new HPath(pathStr))) {
-            fs.delete(staged, true)
-            sys.error(s"bucketed snapshot: cannot move staged build into $pathStr")
-          }
-          val out = fs.create(sidecar, true)
-          out.write(df.schema.toDDL.getBytes("UTF-8")); out.close()
-          fs.create(ready, true).close()
-        }
-      } else {
-        fs.delete(staged, true)
-        var tries = 0
-        while (!fs.exists(ready) && tries < 600) { Thread.sleep(100); tries += 1 }
-        if (!fs.exists(ready)) {
-          if (retryOnStaleClaim) { // crashed claimant: break the claim once
-            fs.delete(claim, false)
-            publish(retryOnStaleClaim = false)
-          } else sys.error(s"bucketed snapshot: cannot materialize $pathStr " +
-            s"(stale claim at $claim survived a retry)")
-        }
-      }
-    }
-    keyLocks.computeIfAbsent(tbl, _ => new Object).synchronized {
+    val keys = bucketKeys.mkString(", ")
+    val (fs, keyDir) = keyed(s, dir, sigTable, name, s"bkt$buckets|$keys|$params")
+    val tbl = keyDir.getName
+    lockOf(keyDir).synchronized {
       if (!s.catalog.tableExists(tbl)) {
-        if (!fs.exists(ready)) publish(retryOnStaleClaim = true)
-        register()
+        val vdir = servedOrBuilt(fs, keyDir) { v =>
+          // saveAsTable is what writes the bucket-id file layout; its
+          // throwaway catalog entry goes at once (an external table:
+          // the files stay) and the real name registers below
+          val df = build
+          try df.write
+            .bucketBy(buckets, bucketKeys.head, bucketKeys.tail: _*)
+            .sortBy(bucketKeys.head, bucketKeys.tail: _*)
+            .option("path", v.toString).format("parquet").saveAsTable(s"${tbl}_staged")
+          finally s.sql(s"DROP TABLE IF EXISTS ${tbl}_staged")
+          val out = fs.create(new Path(v, SchemaFile), false)
+          try out.write(df.schema.toDDL.getBytes("UTF-8")) finally out.close()
+        }
+        val in = fs.open(new Path(vdir, SchemaFile))
+        val ddl = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+          finally in.close()
+        s.sql(s"""CREATE TABLE $tbl ($ddl) USING PARQUET
+          CLUSTERED BY ($keys) SORTED BY ($keys)
+          INTO $buckets BUCKETS LOCATION '$vdir'""")
       }
     }
     s.table(tbl)

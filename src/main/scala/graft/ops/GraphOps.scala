@@ -48,9 +48,9 @@ object GraphOps {
   }
 
   /** Materialize-once parquet snapshot keyed on the lineitem table —
-    * delegation to the shared [[graft.SnapshotStore]] (r8: the claim-
-    * then-rename machinery moved there so the dedup reference tables
-    * share one implementation; semantics unchanged). */
+    * delegation to the shared [[graft.SnapshotStore]] (r8: moved there
+    * so the dedup reference tables share one implementation, which
+    * publishes through [[graft.Versions]]). */
   private def snapshot(s: SparkSession, dir: String, name: String)(
       build: => DataFrame): DataFrame =
     graft.SnapshotStore(s, dir, "lineitem.parquet", name)(build)

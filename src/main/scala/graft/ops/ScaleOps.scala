@@ -71,85 +71,41 @@ object ScaleOps {
     * ACTUAL on-disk bytes (filesystem listing, no data pass);
     * `repartition(n)` round-robins rows so output files are even.
     *
-    * r14 (VERDICT r13 #5): the commit is a MANIFEST-POINTER publish,
-    * not a live-dir rename. The old protocol (stage → rename live out
-    * → rename staged in) had a missing-path window between the two
-    * renames — and object-store "renames" are copy+delete, widening it
-    * to seconds. Now each rewrite lands immutably under
-    * `<dir>/_compact_v<N>` (underscore-prefixed: invisible to raw
-    * parquet readers) and COMMITS by creating the empty marker
-    * `_GRAFT_COMMITTED` inside it — one create-exclusive file, the
-    * [[VersionedTable]] discipline. [[readCompacted]] resolves the max
-    * committed version (falling back to the raw top-level files before
-    * the first compact), so at EVERY interleaving point a reader sees
-    * one complete dataset: before the marker the rewrite is invisible;
-    * after it the new version serves. A crash mid-protocol leaves
-    * either an uncommitted orphan (garbage-collected by the next
-    * compact, never readable) or an unpruned predecessor (re-pruned
-    * next time) — no recovery rename exists because no state ever
-    * needs putting back. Superseded data is pruned marker-first, so a
-    * half-pruned version can never be resolved.
+    * The commit is a MANIFEST-POINTER publish through [[graft.Versions]],
+    * not a live-dir rename (r14, VERDICT r13 #5: the old stage → rename
+    * live out → rename staged in had a missing-path window between the
+    * renames, and object-store "renames" are copy+delete, widening it to
+    * seconds). Each rewrite lands immutably in `<dir>/_v<N>` and commits
+    * with one marker; [[readCompacted]] resolves the highest committed
+    * version, falling back to the raw top-level files before the first
+    * compact, so at EVERY interleaving a reader sees one complete
+    * dataset. A crash leaves an uncommitted orphan (never readable,
+    * swept once its claim ages past the floor) or an unpruned
+    * predecessor (pruned next time); no recovery rename exists because
+    * no state ever needs putting back. Racing compactors claim distinct
+    * numbers and both commit; the higher serves.
     *
-    * CONCURRENT COMPACTORS (r15, ADVICE r14): a version NUMBER is
-    * claimed before any write by create-exclusive of the empty file
-    * `_compact_v<N>.claim` — two racing compactors that would have
-    * computed the same `next` now get distinct numbers (the loser of
-    * the claim race recomputes and retries), and the stage write runs
-    * in errorifexists mode, so no compactor can ever delete another's
-    * staged or committed version. Both racers commit; the higher
-    * version wins resolution, the lower is ordinary superseded data.
-    * The old mode("overwrite") stage could destroy a winner's
-    * already-committed version mid-read. Claims are transient: deleted
-    * at commit, once the version dir itself blocks number reuse. A
-    * claim left by a compactor that died before staging is swept only
-    * after max(retainMs, 10 min) of store-clock age, so a live racer's
-    * claim is never reaped mid-stage; one left by a death between
-    * stage and commit goes with its orphan dir. ATOMICITY caveat (the
-    * one every claim-file protocol carries, incl. [[Versioned]] and
-    * SnapshotStore): `create(overwrite = false)` is atomic on
-    * HDFS/local/ABFS/GCS; on raw S3 it is HEAD-then-PUT, so concurrent
-    * compactors there need a conditional-put (If-None-Match) claim or
-    * an external lock — the standard S3A committer restriction.
+    * RETENTION (r14, found by the hammering-reader race spec): a
+    * superseded version, and the raw pre-compact data, go only once
+    * their successor's marker is older than `retainMs` on the store's
+    * clock ([[graft.Versions.vacuum]]): any read that starts within the
+    * window finishes safely; size it to the longest expected scan.
+    * `retainMs = 0` restores eager pruning for callers that serialize
+    * readers themselves. Once the raw files are vacuumed, the sentinel
+    * `_GRAFT_COMPACTED` is left in the table dir so a legacy raw reader
+    * (via [[readRaw]]) fails with an actionable error instead of
+    * silently scanning nothing (VERDICT r14 #6 — underscore-prefixed
+    * names are invisible to `spark.read.parquet(dir)`).
     *
-    * RETENTION (r14, found by the hammering-reader race spec): pruning
-    * a predecessor the instant its successor commits breaks a reader
-    * that RESOLVED the predecessor and is still scanning it — the
-    * marker-first discipline protects resolution, not in-flight reads
-    * (Spark opens data files lazily per task, well after the resolve).
-    * So superseded COMMITTED versions (and the raw pre-compact files)
-    * are pruned only once their successor's marker is older than
-    * `retainMs` — the Delta/Iceberg VACUUM retention contract: any
-    * read that starts within the window finishes safely; size the
-    * window to the longest expected scan. `retainMs = 0` restores
-    * eager pruning for callers that serialize readers themselves.
-    * "Now" for the retention comparison is this run's fresh COMMIT
-    * MARKER's mtime — a file this run just created on the SAME
-    * filesystem that stamped every predecessor's marker — not the
-    * local `System.currentTimeMillis()` (r15,
-    * VERDICT r14 #3): on an object store whose clock is skewed from
-    * the client's, a local-clock "now" silently shrinks or stretches
-    * the vacuum window; drawing both timestamps from the store clock
-    * makes `retainMs` mean store-elapsed time exactly. Once the raw
-    * pre-compact files are vacuumed, the sentinel `_GRAFT_COMPACTED`
-    * is left in the table dir so a legacy raw reader (via [[readRaw]])
-    * fails with an actionable error instead of silently scanning
-    * nothing (VERDICT r14 #6 — underscore-prefixed names are invisible
-    * to `spark.read.parquet(dir)`).
-    * A never-committed dir is indistinguishable from a LIVE racer's
-    * in-flight stage (both are claim-plus-unmarked-dir), so it is
-    * swept only once its claim is gone or older than
-    * max(retainMs, 10 min) of store-clock age — the
-    * remove-orphan-files retention discipline; it was never resolvable
-    * either way. Returns the output
-    * file count. `onStep` is a test seam: called with "staged" /
-    * "committed" / "pruned" as the protocol advances. A
-    * hive-partitioned RAW layout is sized recursively and compacts
-    * with its partition columns inferred into regular columns (the
-    * rewrite is flat — callers who need partition pruning should
-    * re-partitionBy downstream, as with any row-preserving rewrite). */
+    * Returns the output file count. `onStep` is a test seam: called with
+    * "staged" / "committed" / "pruned" as the protocol advances. A
+    * hive-partitioned RAW layout is sized recursively and compacts with
+    * its partition columns inferred into regular columns (the rewrite is
+    * flat — callers who need partition pruning should re-partitionBy
+    * downstream, as with any row-preserving rewrite). */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
               targetMB: Int = 128,
-              retainMs: Long = 600000L,
+              retainMs: Long = graft.Versions.RetainMs,
               onStep: String => Unit = _ => ()): Int = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -164,129 +120,16 @@ object ScaleOps {
         else Seq(fs.getContentSummary(st.getPath).getLength)
       }.sum
     val n = math.max(1, math.ceil(bytes.toDouble / (targetMB.toLong << 20)).toInt)
-    // claim a version NUMBER exclusively before writing anything: next
-    // must clear every existing version dir (committed or orphaned — a
-    // crashed run's number is never reused) AND every outstanding claim
-    // (a racing compactor that claimed but hasn't staged yet). The
-    // create-exclusive claim file is the serialization point; a lost
-    // race recomputes and retries.
-    var next = 0L
-    var claimFile: org.apache.hadoop.fs.Path = null
-    var attempts = 0
-    // per-table monitor around the claim attempt (the SnapshotStore
-    // keyLocks discipline): RawLocalFileSystem's create(overwrite =
-    // false) is CHECK-THEN-ACT, so two threads of the SAME JVM can both
-    // "win" one number and stage into one dir — the in-process race the
-    // file protocol cannot arbitrate. Cross-process racers still go
-    // through the create-exclusive file. Staging runs OUTSIDE the lock.
-    compactClaimLocks.computeIfAbsent(path.toString, _ => new Object).synchronized {
-      while (claimFile == null) {
-        attempts += 1
-        next = ((compactVersions(fs, path).map(_._1) ++
-          claimedVersions(fs, path)) :+ 0L).max + 1
-        val candidate = new org.apache.hadoop.fs.Path(path, s"_compact_v$next.claim")
-        try { fs.create(candidate, false).close(); claimFile = candidate }
-        catch { // lost the claim race: recompute — but a real IO failure
-                // (permissions, dead store) must surface, not spin
-          case e: java.io.IOException =>
-            if (attempts >= 100) throw new java.io.IOException(
-              s"compact: could not claim a version number under $dir " +
-                s"after $attempts attempts", e)
-        }
-      }
+    graft.Versions.publish(fs, path) { vdir =>
+      spark.read.parquet(srcDir).repartition(n).write.parquet(vdir.toString)
+      onStep("staged")
     }
-    val vdir = new org.apache.hadoop.fs.Path(path, s"_compact_v$next")
-    // errorifexists (the default): with the number claimed, this dir
-    // cannot exist; if an interleaving bug ever violated that, failing
-    // loudly beats overwrite-deleting another compactor's data
-    spark.read.parquet(srcDir).repartition(n).write.parquet(vdir.toString)
-    onStep("staged")
-    // the atomic commit: one create-exclusive empty marker
-    fs.create(new org.apache.hadoop.fs.Path(vdir, CompactMarker), false).close()
-    // the claim has done its job — from here the version DIR itself
-    // blocks number reuse (compactVersions sees it committed)
-    fs.delete(claimFile, false)
     onStep("committed")
-    // prune superseded data, marker-FIRST so a partially-deleted
-    // version can never resolve — but only once the SUCCESSOR's marker
-    // has been live for `retainMs` (the vacuum-retention contract: an
-    // in-flight reader that resolved the predecessor finishes its scan
-    // inside the window). Never-committed orphans from crashed runs go
-    // immediately — they were never readable. This prune also rolls
-    // forward a predecessor's crash-between-commit-and-prune, so no
-    // recovery path exists.
-    val versions = compactVersions(fs, path)
-    def markerMtime(p: org.apache.hadoop.fs.Path): Long =
-      scala.util.Try(fs.getFileStatus(
-        new org.apache.hadoop.fs.Path(p, CompactMarker)).getModificationTime)
-        .getOrElse(Long.MaxValue)
-    // STORE-clock "now" (r15, VERDICT r14 #3): the marker this run just
-    // created was stamped by the SAME filesystem clock that stamped every
-    // predecessor's marker — its mtime is the store's own current time,
-    // so the marker ages below are skew-free by construction. The old
-    // local System.currentTimeMillis() vs a skewed object-store clock
-    // silently shrank (store behind) or stretched (store ahead) the
-    // vacuum window by the skew amount. Local-clock fallback only if
-    // the just-created marker is unreadable (markerMtime's MaxValue
-    // sentinel means "missing" — as a "now" it would age every
-    // predecessor past any window and over-prune).
-    val now = scala.util.Try(fs.getFileStatus(
-        new org.apache.hadoop.fs.Path(vdir, CompactMarker)).getModificationTime)
-      .getOrElse(System.currentTimeMillis())
-    val committedVs = versions.filter(_._3).sortBy(_._1)
-    // capture marker ages BEFORE pruning — the prune loop deletes
-    // markers, and a lazily-computed age would then read as "missing"
-    val markerAge: Map[Long, Long] =
-      committedVs.map { case (v, p, _) => v -> (now - markerMtime(p)) }.toMap
-    // age of the smallest committed version ABOVE v — how long v has
-    // been unresolvable to NEW readers
-    def supersededFor(v: Long): Long = committedVs.find(_._1 > v)
-      .map(s => markerAge(s._1)).getOrElse(Long.MinValue)
-    // a LIVE racer mid-stage looks exactly like a crashed stage: an
-    // uncommitted dir whose claim still exists (claims are deleted only
-    // at commit). Distinguish by store-clock AGE, the Delta/Iceberg
-    // remove-orphan-files discipline: an uncommitted dir is swept only
-    // once its claim is gone or older than max(retainMs, 10 min) —
-    // (r15 review: the unguarded `!committed` prune deleted a racing
-    // compactor's in-flight stage, the exact overwrite class the claim
-    // protocol exists to prevent).
-    val claimFloor = math.max(retainMs, 600000L)
-    def claimAge(v: Long): Long = scala.util.Try(
-      now - fs.getFileStatus(
-        new org.apache.hadoop.fs.Path(path, s"_compact_v$v.claim")).getModificationTime)
-      .getOrElse(Long.MaxValue) // no claim: nothing is staging it
-    versions.filter(_._1 < next).foreach { case (v, p, committed) =>
-      val prune =
-        if (committed) supersededFor(v) >= retainMs
-        else claimAge(v) >= claimFloor
-      if (prune) {
-        if (committed) fs.delete(new org.apache.hadoop.fs.Path(p, CompactMarker), false)
-        fs.delete(p, true)
-        fs.delete(new org.apache.hadoop.fs.Path(path, s"_compact_v$v.claim"), false)
-      }
-    }
-    // orphan CLAIMS with no version dir at all (a compactor that died
-    // between claim and stage): sweep only once the claim is older than
-    // max(retainMs, 10 min) by the same store clock — a live racer is
-    // never reaped mid-stage, and the floor keeps eager-mode callers
-    // (retainMs = 0) from reaping a concurrent claimer either
-    claimedVersions(fs, path).filter(v => v != next &&
-        !versions.exists(_._1 == v)).foreach { v =>
-      val cp = new org.apache.hadoop.fs.Path(path, s"_compact_v$v.claim")
-      if (scala.util.Try(now - fs.getFileStatus(cp).getModificationTime)
-            .getOrElse(Long.MinValue) >= claimFloor)
-        fs.delete(cp, false)
-    }
     // raw data (files AND hive-partition subdirs — r14 review: a
     // partitioned layout is directories, a file-only prune leaked it
-    // forever) is superseded by the OLDEST committed version; same
-    // retention window before it goes. Leave the _GRAFT_COMPACTED
-    // sentinel behind (r15, VERDICT r14 #6): from this point a raw
-    // `spark.read.parquet(dir)` sees an empty table — the sentinel lets
-    // [[readRaw]] turn that silent emptiness into an actionable error.
-    val rawSupersededFor = committedVs.headOption
-      .map(c => markerAge(c._1)).getOrElse(Long.MinValue)
-    if (rawSupersededFor >= retainMs) {
+    // forever) is superseded by the OLDEST commit, with the same window
+    val (_, rawSupersededFor) = graft.Versions.vacuum(fs, path, retainMs)
+    if (rawSupersededFor.exists(_ >= retainMs)) {
       val pruned = dataEntryStatuses(fs, path)
       pruned.foreach(st => fs.delete(st.getPath, true))
       if (pruned.nonEmpty)
@@ -296,33 +139,11 @@ object ScaleOps {
     n
   }
 
-  private val CompactMarker = "_GRAFT_COMMITTED"
   private[graft] val CompactedSentinel = "_GRAFT_COMPACTED"
-
-  /** One monitor per table dir, never released (tables are few): the
-    * in-JVM half of the claim arbitration — see the comment at the
-    * claim loop in [[compact]]. */
-  private val compactClaimLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Version numbers with an outstanding `_compact_v<N>.claim` file —
-    * counted alongside staged/committed dirs when choosing `next`, so a
-    * racing compactor that has claimed but not yet staged still blocks
-    * its number from reuse. */
-  private def claimedVersions(fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path): Seq[Long] = {
-    val re = "^_compact_v(\\d+)\\.claim$".r
-    (if (fs.exists(path)) fs.listStatus(path) else
-      Array.empty[org.apache.hadoop.fs.FileStatus])
-      .flatMap(st => st.getPath.getName match {
-        case re(v) if st.isFile => Some(v.toLong)
-        case _ => None
-      }).toSeq
-  }
 
   /** Top-level DATA entries of a dir — files and (partition) subdirs,
     * skipping `_`/`.`-prefixed names, the same visibility rule Spark's
-    * file index applies (so `_compact_v*` versions are never "data"). */
+    * file index applies (so version dirs and claims are never "data"). */
   private def dataEntryStatuses(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
     (if (fs.exists(path)) fs.listStatus(path) else
@@ -331,35 +152,13 @@ object ScaleOps {
         val nm = st.getPath.getName; !nm.startsWith("_") && !nm.startsWith(".")
       }.toSeq
 
-  /** (version, dir, committed) for every `_compact_v<N>` under `dir`. */
-  private def compactVersions(fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path, Boolean)] = {
-    val re = "^_compact_v(\\d+)$".r
-    (if (fs.exists(path)) fs.listStatus(path) else
-      Array.empty[org.apache.hadoop.fs.FileStatus])
-      .flatMap { st =>
-        st.getPath.getName match {
-          case re(v) if st.isDirectory =>
-            Some((v.toLong, st.getPath,
-              fs.exists(new org.apache.hadoop.fs.Path(st.getPath, CompactMarker))))
-          case _ => None
-        }
-      }.toSeq
-  }
-
-  private def currentCompactVersion(fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path): Option[Long] =
-    compactVersions(fs, path).filter(_._3).map(_._1).maxOption
-
   /** Resolve the live data directory of a [[compact]]-managed table:
     * the max COMMITTED version, or the raw table dir before the first
     * compact. This is the reader half of the manifest-pointer contract
     * — never a missing path, at any protocol interleaving. */
   def compactDataDir(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path): String =
-    currentCompactVersion(fs, path)
-      .map(v => new org.apache.hadoop.fs.Path(path, s"_compact_v$v").toString)
-      .getOrElse(path.toString)
+    graft.Versions.latest(fs, path).getOrElse(path).toString
 
   /** Read a [[compact]]-managed table through the version resolver. */
   def readCompacted(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
@@ -384,8 +183,8 @@ object ScaleOps {
       s"$dir has been compacted and its raw files vacuumed — a raw read " +
         "would silently return an empty table. Read it through " +
         "graft.ops.ScaleOps.readCompacted (the version resolver) instead.")
-    require(currentCompactVersion(fs, path).isEmpty,
-      s"$dir is compact-managed (a committed _compact_v<N> exists); its raw " +
+    require(graft.Versions.latest(fs, path).isEmpty,
+      s"$dir is compact-managed (a committed _v<N> exists); its raw " +
         "top-level files are stale-then-vacuumed. Read it through " +
         "graft.ops.ScaleOps.readCompacted instead.")
     spark.read.parquet(dir)
@@ -393,87 +192,30 @@ object ScaleOps {
 
   /** Minimal versioned table with snapshot isolation and time travel —
     * the manifest-pointer design every table format (Delta, Iceberg,
-    * Hudi) builds on, reduced to its load-bearing core: data for
-    * version N lives immutably under `<dir>/v<N>/`; a commit PUBLISHES
-    * by creating the empty marker file `<dir>/_commits/<N>` with
-    * create-exclusive semantics (`FileSystem.create(overwrite=false)`
-    * — an atomic claim on HDFS/local; the object-store caveat of
-    * [[compact]] applies), so a version number can never be published
-    * twice and a lost race retries with the next number. Readers list
-    * the marker directory and resolve max N (or an explicit `asOf`) —
-    * they never see a half-written snapshot because the marker appears
-    * only after the data write completed, and concurrent vacuum can
-    * only drop versions whose marker was already removed FIRST (marker
-    * delete, then data delete — a reader that resolved a version holds
-    * a directory that outlives its marker). Writers never mutate
-    * published data — an overwrite is just the next version, and
-    * time-travel reads of older versions keep working. At 100 TB this
-    * is exactly the cheap part: commits move one empty marker file
-    * regardless of data size, and readers pay one directory listing. */
+    * Hudi) builds on, reduced to its load-bearing core and run by
+    * [[graft.Versions]]: each commit is the next immutable version, so
+    * an overwrite never mutates published data and time-travel reads of
+    * older versions keep working. At 100 TB this is exactly the cheap
+    * part: commits move one empty marker file regardless of data size,
+    * and readers pay one directory listing. */
   object Versioned {
     private def fsOf(spark: org.apache.spark.sql.SparkSession, dir: String) = {
       val p = new org.apache.hadoop.fs.Path(dir)
       (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
     }
-    private def markerDir(dir: String) =
-      new org.apache.hadoop.fs.Path(dir + "/_commits")
-    private def claimDir(dir: String) =
-      new org.apache.hadoop.fs.Path(dir + "/_claims")
-
-    private def listIds(fs: org.apache.hadoop.fs.FileSystem,
-                        d: org.apache.hadoop.fs.Path): Seq[Long] =
-      if (!fs.exists(d)) Seq.empty
-      else fs.listStatus(d).map(_.getPath.getName.toLong).sorted.toSeq
 
     /** Published version numbers, ascending (empty for a fresh dir). */
     def versions(spark: org.apache.spark.sql.SparkSession, dir: String): Seq[Long] = {
-      val (fs, _) = fsOf(spark, dir)
-      listIds(fs, markerDir(dir))
+      val (fs, p) = fsOf(spark, dir)
+      graft.Versions.committed(fs, p)
     }
 
-    /** Commit `df` as the next version; returns the version published.
-      *
-      * Protocol (no writer ever touches another writer's data — the
-      * naive "write to v<N> then claim" would let a lost race delete
-      * the winner's published directory): (1) write ONCE to a
-      * writer-unique staging dir; (2) claim a version number via
-      * create-exclusive in `_claims/<N>` (N = 1 + max over claims ∪
-      * commits, so an orphaned claim is skipped, never fought over);
-      * (3) rename staging → `v<N>` — the claim guarantees the target
-      * is free; (4) publish `_commits/<N>`. Readers list `_commits`
-      * only, so a crash between any steps leaves at most an invisible
-      * orphan (skipped number), never a half-visible snapshot. A lost
-      * claim race retries with the next number; the staged data is
-      * written once regardless. */
-    def commit(df: DataFrame, dir: String, maxRetries: Int = 20): Long = {
-      val spark = df.sparkSession
-      val (fs, _) = fsOf(spark, dir)
-      fs.mkdirs(markerDir(dir)); fs.mkdirs(claimDir(dir))
-      val staging = new org.apache.hadoop.fs.Path(
-        s"$dir/_staging_${java.util.UUID.randomUUID().toString}")
-      df.write.mode("overwrite").parquet(staging.toString)
-      var attempt = 0
-      while (attempt < maxRetries) {
-        val v = (listIds(fs, claimDir(dir)) ++ listIds(fs, markerDir(dir)))
-          .foldLeft(-1L)(math.max) + 1
-        val claim = new org.apache.hadoop.fs.Path(claimDir(dir), v.toString)
-        val claimed =
-          try { fs.create(claim, false).close(); true } // atomic create-exclusive
-          catch { case _: java.io.IOException => false }
-        if (claimed) {
-          val data = new org.apache.hadoop.fs.Path(s"$dir/v$v")
-          if (!fs.rename(staging, data)) {
-            fs.delete(staging, true)
-            sys.error(s"Versioned.commit: cannot move staged data to $data")
-          }
-          fs.create(new org.apache.hadoop.fs.Path(markerDir(dir), v.toString),
-            false).close()
-          return v
-        }
-        attempt += 1 // lost the race — retry against the new head; staging intact
-      }
-      fs.delete(staging, true)
-      sys.error(s"Versioned.commit: lost the publish race $maxRetries times on $dir")
+    /** Commit `df` as the next version (the first is 0); returns the
+      * version published. A racer that claimed a number first — in this
+      * JVM or another — pushes this commit to the next one. */
+    def commit(df: DataFrame, dir: String): Long = {
+      val (fs, p) = fsOf(df.sparkSession, dir)
+      graft.Versions.publish(fs, p)(v => df.write.parquet(v.toString))
     }
 
     /** Snapshot read: latest published version, or `asOf` exactly.
@@ -490,26 +232,19 @@ object ScaleOps {
           n
         case None => vs.last
       }
-      spark.read.parquet(s"$dir/v$v")
+      spark.read.parquet(graft.Versions.dirOf(new org.apache.hadoop.fs.Path(dir), v).toString)
     }
 
-    /** Drop all but the newest `keepLast` versions. Marker first, data
-      * second — a concurrently resolving reader that already picked a
-      * version reads data that outlives its marker; a reader arriving
-      * after sees only retained versions. The claim marker goes last so
-      * a dropped number is never re-issued mid-vacuum. Returns the
-      * dropped ids. */
+    /** Drop all but the newest `keepLast` versions, marker first — a
+      * reader that already resolved a version reads data that outlives
+      * its marker; a reader arriving after sees only retained versions.
+      * Crashed commits' leftovers go once their claim is past
+      * [[graft.Versions.RetainMs]]. Returns the dropped ids. */
     def vacuum(spark: org.apache.spark.sql.SparkSession, dir: String,
                keepLast: Int): Seq[Long] = {
       require(keepLast >= 1, "Versioned.vacuum: keepLast must be >= 1")
-      val (fs, _) = fsOf(spark, dir)
-      val drop = versions(spark, dir).dropRight(keepLast)
-      drop.foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(markerDir(dir), v.toString), false)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/v$v"), true)
-        fs.delete(new org.apache.hadoop.fs.Path(claimDir(dir), v.toString), false)
-      }
-      drop
+      val (fs, p) = fsOf(spark, dir)
+      graft.Versions.vacuum(fs, p, retainMs = 0L, keep = keepLast)._1
     }
   }
 

@@ -25,10 +25,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * had built was gone. With a ledger directory, each applied batch
   * persists its parquet payload under `dir/data/<name>-b<id>-e<epoch>/`
   * and is then COMMITTED by an atomic rename of a marker file
-  * `dir/commits/<id>.e<epoch>` (payload first, marker last — the
-  * [[graft.SnapshotStore]] publish discipline, so a crash mid-write can
-  * never leave a half-applied batch looking committed; an uncommitted
-  * payload dir is simply overwritten when the batch is re-applied). A
+  * `dir/commits/<id>.e<epoch>` (payload first, marker last, so a crash
+  * mid-write can never leave a half-applied batch looking committed; an
+  * uncommitted payload dir is simply overwritten when the batch is
+  * re-applied). This is not the [[graft.Versions]] publish: the stream
+  * hands the ledger its batch ids instead of letting it claim numbers,
+  * and its commits are epoch-fenced (below). A
   * restarted sink instance on the same directory recovers the committed
   * history in id order, rebuilds its state from the payloads, and
   * resumes the high-water mark — so the batch the streaming engine
@@ -69,7 +71,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      zombie query, the correct outcome;
   *   2. payload paths are EPOCH-SCOPED, so even a write that slips the
   *      check (the claim scan is check-then-act across processes, the
-  *      SnapshotStore caveat) lands in the zombie's own namespace and
+  *      [[graft.Versions]] caveat) lands in the zombie's own namespace and
   *      can never clobber the new owner's files;
   *   3. recovery TRUNCATES superseded-epoch tails: a commit from epoch
   *      e with id beyond what any later claim adopted was never part of

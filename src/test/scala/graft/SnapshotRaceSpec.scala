@@ -52,6 +52,7 @@ class SnapshotRaceSpec extends SparkSpec {
         Option(v.listFiles()).getOrElse(Array.empty))
       .filter(d => d.getName.startsWith(key + "_") && d.isDirectory &&
         !d.getName.contains("staged"))
+      .flatMap(d => d.listFiles().filter(_.getName.matches("_v\\d+")))
     assert(cacheDirs.length === 1,
       s"expected one committed cache dir, got ${cacheDirs.map(_.getName).toSeq}")
     val inside = Option(cacheDirs.head.listFiles()).getOrElse(Array.empty)
@@ -111,6 +112,52 @@ class SnapshotRaceSpec extends SparkSpec {
     assert(buildCount.get() === before, "published bucketed snapshot was rebuilt")
   }
 
+  test("a snapshot build that died after its claim: the next SnapshotStore " +
+    "and SnapshotStore.bucketed calls build and serve at once, and the orphan " +
+    "goes only at the sweep floor") {
+    val docs = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), length(col("text")).as("len"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
+    val expect = rows(docs)
+    val calls = Seq[(String, (String, () => org.apache.spark.sql.DataFrame) =>
+        org.apache.spark.sql.DataFrame)](
+      "crash_path" -> ((key, build) =>
+        SnapshotStore(spark, sfDir, "documents.parquet", key)(build())),
+      "crash_bkt" -> ((key, build) =>
+        SnapshotStore.bucketed(spark, sfDir, "documents.parquet", key,
+          buckets = 4, bucketKeys = Seq("doc_id"))(build())))
+    calls.foreach { case (tag, call) =>
+      val key = s"${tag}_${System.nanoTime()}"
+      // the builder dies after the claim, before it wrote anything ...
+      intercept[RuntimeException](call(key, () => sys.error("builder died")))
+      val keyDir = Option(new java.io.File(sys.props("java.io.tmpdir"), "graft_scratch")
+        .listFiles()).getOrElse(Array.empty).flatMap(v => Option(v.listFiles())
+          .getOrElse(Array.empty)).filter(_.getName.startsWith(key + "_")).toSeq
+      assert(keyDir.size === 1, s"$tag: no key dir for $key")
+      val claim = new java.io.File(keyDir.head, "_v0.claim")
+      assert(claim.exists(), s"$tag: the dead build left no claim")
+      // ... or it died mid-write: an unmarked version dir with a torn file
+      val orphan = new java.io.File(keyDir.head, "_v0")
+      assert(orphan.mkdirs())
+      java.nio.file.Files.write(new java.io.File(orphan, "part-00000.parquet").toPath,
+        "torn".getBytes("UTF-8"))
+      val t0 = System.nanoTime()
+      assert(rows(call(key, () => docs)) === expect, s"$tag: wrong rows")
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(secs < 20, f"$tag: serving past a dead claim took $secs%.1f s")
+      assert(new java.io.File(keyDir.head, "_v1/_GRAFT_COMMITTED").exists())
+      assert(orphan.exists() && claim.exists(),
+        s"$tag: the orphan went before its claim reached the sweep floor")
+      claim.setLastModified(System.currentTimeMillis() - 11 * 60000L)
+      val fs = new org.apache.hadoop.fs.Path(keyDir.head.toString)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Versions.vacuum(fs, new org.apache.hadoop.fs.Path(keyDir.head.toString))
+      assert(!orphan.exists() && !claim.exists(), s"$tag: aged orphan not swept")
+      assert(rows(call(key, () => sys.error("published snapshot was rebuilt"))) === expect)
+    }
+  }
+
   test("compact manifest-pointer commit (r14, VERDICT r13 #5): a reader at " +
     "EVERY protocol step sees one complete dataset — no missing-path window, " +
     "no recovery rename; a crash between stage and commit is invisible") {
@@ -158,7 +205,7 @@ class SnapshotRaceSpec extends SparkSpec {
     assert(readNow() === expect)
     // exactly one committed version survives; the aged orphan is gone
     val vdirs = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("_compact_v"))
+      .filter(_.getName.startsWith("_v"))
     assert(vdirs.length === 1,
       s"expected one surviving version dir, got ${vdirs.map(_.getName).mkString(",")}")
     assert(new java.io.File(vdirs.head, "_GRAFT_COMMITTED").exists())
@@ -179,14 +226,14 @@ class SnapshotRaceSpec extends SparkSpec {
     // mode("overwrite") stage would delete the racer's work
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(dir, "_compact_v1.claim"), false).close()
+    fs.create(new org.apache.hadoop.fs.Path(dir, "_v1.claim"), false).close()
     ScaleOps.compact(spark, dir, targetMB = 128)
     val names = new java.io.File(dir).listFiles().map(_.getName).toSet
-    assert(names.contains("_compact_v2"),
+    assert(names.contains("_v2"),
       s"compact did not skip the outstanding claim: $names")
-    assert(!names.contains("_compact_v1"),
+    assert(!names.contains("_v1"),
       "compact staged INTO the claimed number — claim not honored")
-    assert(names.contains("_compact_v1.claim"),
+    assert(names.contains("_v1.claim"),
       "a fresh racer's claim was reaped (it is younger than the sweep floor)")
     // a genuinely concurrent pair: both must succeed with distinct
     // numbers and the reader contract must hold after both
@@ -202,7 +249,7 @@ class SnapshotRaceSpec extends SparkSpec {
     pool.shutdown()
     assert(ScaleOps.readCompacted(spark, dir).count() === expect)
     val committed = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.matches("_compact_v\\d+") &&
+      .filter(f => f.getName.matches("_v\\d+") &&
         new java.io.File(f, "_GRAFT_COMMITTED").exists())
     assert(committed.nonEmpty, "no committed version after the race")
   }
@@ -220,7 +267,7 @@ class SnapshotRaceSpec extends SparkSpec {
     assert(ScaleOps.readRaw(spark, dir).count() === expect)
     val hourMs = 3600000L
     ScaleOps.compact(spark, dir, targetMB = 128, retainMs = hourMs)
-    // raw files retained: v1's marker is seconds old, well inside 1 h
+    // raw files retained: v0's marker is seconds old, well inside 1 h
     assert(new java.io.File(dir).listFiles().exists(f =>
       f.getName.endsWith(".parquet") || (f.isDirectory && !f.getName.startsWith("_"))),
       "raw files vacuumed inside the retention window")
@@ -229,21 +276,21 @@ class SnapshotRaceSpec extends SparkSpec {
       ScaleOps.readRaw(spark, dir)
     }
     assert(early.getMessage.contains("readCompacted"))
-    // simulate 2 h of STORE time elapsing by aging v1's marker — the
+    // simulate 2 h of STORE time elapsing by aging v0's marker — the
     // retention decision must follow the marker's filesystem mtime
     // (both sides of the comparison now come from the store clock; a
     // skewed LOCAL clock no longer shrinks or stretches the window)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/_compact_v1/_GRAFT_COMMITTED")
+    val marker = new org.apache.hadoop.fs.Path(s"$dir/_v0/_GRAFT_COMMITTED")
     fs.setTimes(marker, System.currentTimeMillis() - 2 * hourMs, -1)
     ScaleOps.compact(spark, dir, targetMB = 128, retainMs = hourMs)
-    // v1 superseded the raw files 2 h (store time) ago: raw vacuumed,
-    // sentinel stamped; v1 itself is superseded only seconds ago by
-    // v2's fresh marker, so it survives the window
+    // v0 superseded the raw files 2 h (store time) ago: raw vacuumed,
+    // sentinel stamped; v0 itself is superseded only seconds ago by
+    // v1's fresh marker, so it survives the window
     val names = new java.io.File(dir).listFiles().map(_.getName).toSet
     assert(names.contains(ScaleOps.CompactedSentinel), s"no sentinel in $names")
-    assert(names.contains("_compact_v1"), "v1 pruned inside its retention window")
+    assert(names.contains("_v0"), "v0 pruned inside its retention window")
     assert(!new java.io.File(dir).listFiles().exists(f =>
       f.getName.endsWith(".parquet")), "raw files survived an expired window")
     assert(ScaleOps.readCompacted(spark, dir).count() === expect)

@@ -124,7 +124,9 @@ class BucketedLayoutSpec extends SparkSpec {
     val before = dataDir.listFiles().map(f => f.getName -> f.lastModified()).toMap
     // simulate the fresh-JVM catalog: drop the entry (files stay — the
     // table is external), then re-derive through the same seam
-    spark.sql(s"DROP TABLE IF EXISTS ${dataDir.getName}")
+    val tbl = dataDir.getParentFile.getName
+    assert(spark.catalog.tableExists(tbl), s"no catalog table $tbl")
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
     val (_, bRef2, _) = Dedup.refBucketedTables3(
       spark, sfDir, "e08_ref", col("doc_id") % 10 =!= 3)
     val after = dataDir.listFiles().map(f => f.getName -> f.lastModified()).toMap

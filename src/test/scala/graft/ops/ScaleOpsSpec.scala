@@ -164,7 +164,7 @@ class ScaleOpsSpec extends SparkSpec {
     assert(new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".parquet")) === 0)
     ScaleOps.compact(spark, dir, targetMB = 128, retainMs = 0L)
-    assert(new java.io.File(dir).listFiles().count(_.getName.startsWith("_compact_v")) === 1)
+    assert(new java.io.File(dir).listFiles().count(_.getName.startsWith("_v")) === 1)
     val back2 = ScaleOps.readCompacted(spark, dir)
     assert(back2.count() === li.count() && back2.except(li).count() === 0)
   }
@@ -226,7 +226,7 @@ class ScaleOpsSpec extends SparkSpec {
     assert(n >= 1 && ScaleOps.readCompacted(spark, dir).count() === rows)
     // one committed survivor, predecessors and raw files pruned
     assert(new java.io.File(dir).listFiles()
-      .count(_.getName.startsWith("_compact_v")) === 1)
+      .count(_.getName.startsWith("_v")) === 1)
     assert(new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".parquet")) === 0)
   }
@@ -254,9 +254,9 @@ class ScaleOpsSpec extends SparkSpec {
     ScaleOps.Versioned.commit(Seq((1L, "x")).toDF("id", "s"), dir)
     // simulate a concurrent writer that already claimed version 1: the
     // marker exists, so our commit must land at 2 (and clean its orphan)
-    val claimed = new java.io.File(dir + "/_commits/1")
+    new java.io.File(dir + "/_v1").mkdirs() // the racer's data
+    val claimed = new java.io.File(dir + "/_v1/_GRAFT_COMMITTED")
     assert(claimed.createNewFile())
-    new java.io.File(dir + "/v1").mkdirs() // the racer's data
     val v = ScaleOps.Versioned.commit(Seq((2L, "y")).toDF("id", "s"), dir)
     assert(v === 2L)
     assert(ScaleOps.Versioned.versions(spark, dir) === Seq(0L, 1L, 2L))
@@ -264,12 +264,35 @@ class ScaleOpsSpec extends SparkSpec {
     // vacuum keeps the newest two; dropped version reads fail, survivors fine
     val dropped = ScaleOps.Versioned.vacuum(spark, dir, keepLast = 2)
     assert(dropped === Seq(0L))
-    assert(!new java.io.File(dir + "/v0").exists())
+    assert(!new java.io.File(dir + "/_v0").exists())
     assert(ScaleOps.Versioned.versions(spark, dir) === Seq(1L, 2L))
     assert(ScaleOps.Versioned.read(spark, dir).collect().map(_.getLong(0)).toSeq === Seq(2L))
     assert(intercept[IllegalArgumentException] {
       ScaleOps.Versioned.read(spark, dir, Some(0L))
     }.getMessage.contains("vacuumed"))
+  }
+
+  test("versioned table: eight threads committing at once get eight distinct " +
+    "versions, and each version reads back exactly its own row") {
+    val dir = Files.createTempDirectory("graft_versioned_race").toString + "/t"
+    val frames = (0 until 8).map(i => Seq((i.toLong, s"r$i")).toDF("id", "s"))
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val racers = frames.map { df =>
+      pool.submit(new java.util.concurrent.Callable[Long] {
+        def call(): Long = { start.await(); ScaleOps.Versioned.commit(df, dir) }
+      })
+    }
+    start.countDown()
+    val got = racers.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+    pool.shutdown()
+    assert(got.distinct.size === 8, s"versions claimed twice: $got")
+    assert(ScaleOps.Versioned.versions(spark, dir) === got.sorted)
+    got.zipWithIndex.foreach { case (v, i) =>
+      assert(ScaleOps.Versioned.read(spark, dir, Some(v)).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq === Seq((i.toLong, s"r$i")),
+        s"version $v does not hold exactly row $i")
+    }
   }
 
   test("stats skipping: manifest prunes files, pruned read equals full filter (B1, r7)") {
