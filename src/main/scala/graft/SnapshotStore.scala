@@ -63,7 +63,7 @@ private[graft] object SnapshotStore {
   def apply(s: SparkSession, dir: String, sigTable: String, name: String,
       params: String = "")(
       build: => DataFrame): DataFrame =
-    s.read.parquet(path(s, dir, sigTable, name, params)(build))
+    Versions.readParquet(s, path(s, dir, sigTable, name, params)(build))
 
   /** [[apply]]'s materialize-once protocol, returning the committed
     * version DIRECTORY instead of a DataFrame over it — the handle a

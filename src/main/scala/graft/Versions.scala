@@ -3,6 +3,7 @@ package graft
 import java.io.IOException
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one versioned publish protocol — the core Delta Lake reduces a
   * table commit to, written once for every caller that publishes a whole
@@ -76,6 +77,21 @@ private[graft] object Versions {
     fs.create(markerOf(vdir), false).close()
     fs.delete(claimOf(dir, v), false)
     v
+  }
+
+  /** A parquet read of directory `dir` that stays quiet on a version
+    * directory: Spark logs "All paths were ignored" for every root path
+    * whose name starts with `_` or `.`, though it reads it all the same.
+    * Such a dir is read through its data entries (files and partition
+    * dirs) instead, in listing order, the order a read of the dir scans
+    * them in; `basePath` keeps partition discovery rooted at `dir`. */
+  def readParquet(spark: SparkSession, dir: String): DataFrame = {
+    def hidden(p: Path) = p.getName.startsWith("_") || p.getName.startsWith(".")
+    val path = new Path(dir)
+    val entries = if (!hidden(path)) Seq.empty else path.getFileSystem(spark.sparkContext
+      .hadoopConfiguration).listStatus(path).toSeq.map(_.getPath).filterNot(hidden).map(_.toString)
+    if (entries.isEmpty) spark.read.parquet(dir)
+    else spark.read.option("basePath", dir).parquet(entries: _*)
   }
 
   /** One monitor per directory, never released (directories are few). */

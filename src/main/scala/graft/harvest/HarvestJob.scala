@@ -2,14 +2,15 @@ package graft.harvest
 
 import java.io.File
 import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.util.{Failure, Try}
 
 /** EP1 — the full harvest pipeline (/root/reference/harvest.py:383-485)
   * as one declarative DataFrame DAG:
   *
-  *   bindings → validate/filter (A9/A18) → distinct (A5)
+  *   bindings → distinct (A5) → validate/filter (A9/A18)
   *     → terms upsert (A10/A11/A12/A17)
   *     → melt (A14) → FK join (A13) → insert-if-absent (A15)
   *     → uniqueness probe (A19/A20), one job for both constraints
@@ -62,74 +63,83 @@ object HarvestJob {
   private[harvest] def run(spark: SparkSession, cfg: Config,
       swap: (DataFrame, String) => Unit): Result = {
     val warnings = Validate.validateCollectionUri(cfg.collectionUri).toSeq
+    harvest(Source.readBindings(spark, cfg.bindingsPath), cfg.storeDir, cfg.asOf,
+      cfg.meltVars, cfg.sqliteArtifact, swap).copy(warnings = warnings)
+  }
 
-    // A16 stats are collected as the data flows, not as extra jobs:
-    // the raw-bindings count rides the first materialization via observe()
-    // (the source is read exactly once), and every other statistic is one
-    // multi-aggregate pass over an already-cached intermediate.
-    val bindingsObs = org.apache.spark.sql.Observation("bindings_read")
-    val bindings = Source.readBindings(spark, cfg.bindingsPath)
-      .observe(bindingsObs, count(lit(1)).as("n"))
-    val valid = Transform.filterValidBindings(Transform.distinctRows(bindings)).cache()
-    val asOf: Column = lit(cfg.asOf)
+  /** The whole harvest of one bindings frame into the store at `storeDir`:
+    * the pipeline in the header, through [[commitTail]]. The batch job,
+    * the streaming sink ([[graft.streaming.Streaming.harvestSink]], one
+    * call per trigger) and the a22 artifact gate all run this, so a
+    * streamed store equals the batch job's by construction.
+    *
+    * The funnel costs no job of its own: every count is an `observe()` on
+    * one of the three cuts the pipeline makes anyway, and is read only
+    * after the last of them (`Observation.get` blocks until the action
+    * that runs its plan finishes, so each sits inside the plan of the cut
+    * meant to fire it). The two `(count, max id)` heads stay: the first
+    * new id is needed before the merge plan is built. */
+  private[graft] def harvest(bindings: DataFrame, storeDir: String,
+      asOf: java.sql.Timestamp, meltVars: Seq[String], sqliteArtifact: Option[String],
+      swap: (DataFrame, String) => Unit): Result = {
+    val spark = bindings.sparkSession
+    val at: Column = lit(asOf)
+    val Seq(readObs, validObs, termsObs, fieldsObs) = Seq.fill(4)(Observation())
+    // AQE prunes a stage it finds empty, and an observation in it then
+    // completes with no metrics. Only single-input operators sit above
+    // each observed node up to its cut, so a pruned node had no input.
+    def observed(o: Observation, name: String = "n"): Long =
+      o.get.getOrElse(name, 0L).asInstanceOf[Long]
+    // (row count, first free id) of a store table, in one pass
+    def sizeAndNextId(table: DataFrame): (Long, Long) = {
+      val r = table.agg(count(lit(1)), max(col("id"))).head()
+      (r.getLong(0), (if (r.isNullAt(1)) 0L else r.getLong(1)) + 1)
+    }
 
-    // (validRows, distinctTerms) in one pass — also materializes the cache,
-    // which fires the bindings observation.
-    val vRow = valid.agg(count(lit(1)), countDistinct(col("concept"))).head()
-    val validRows = vRow.getLong(0)
-    val distinctTerms = vRow.getLong(1)
-    val bindingsRead = bindingsObs.get("n").asInstanceOf[Long]
+    // Hash-partitioned by concept, so the distinct needs no shuffle of its
+    // own and every row of a concept lands in one partition, where the
+    // window marks its first row: that count is the distinct-term count
+    // (an observed countDistinct is rejected). Eager, because the upsert
+    // and the melt leg both read it.
+    val firstOfConcept = row_number().over(
+      Window.partitionBy(col("concept")).orderBy(col("concept"))) === 1
+    val valid = Transform.filterValidBindings(Transform.distinctRows(
+        bindings.repartition(col("concept")).observe(readObs, count(lit(1)).as("n"))))
+      .withColumn("__first", firstOfConcept)
+      .observe(validObs, count(lit(1)).as("n"), count(when(col("__first"), 1)).as("terms"))
+      .drop("__first")
+      .localCheckpoint(true)
 
-    val existingTerms =
-      Store.readTableOr(spark, cfg.storeDir, "terms", Schemas.terms).cache()
-    // (count, max id) in one pass
-    val etRow = existingTerms.agg(count(lit(1)), max(col("id"))).head()
-    val existingCount = etRow.getLong(0)
-    val nextTermId = (if (etRow.isNullAt(1)) 0L else etRow.getLong(1)) + 1
+    val existingTerms = Store.readTableOr(spark, storeDir, "terms", Schemas.terms)
+    val (existingCount, nextTermId) = sizeAndNextId(existingTerms)
 
-    // localCheckpoint, not cache (late r12 — the streaming sink's "ledger
-    // prune discipline", applied to the batch job too): cache() keeps the
-    // lineage back to the CURRENT store's parquet, and the first
-    // writeTable swap DELETES those files before the second table is
-    // written — on a cluster, recomputing a lost cached partition of
-    // `allFields` (whose lineage runs through `terms` → the old terms
-    // parquet) would read deleted paths. The eager checkpoint cuts the
-    // lineage before any swap runs; single-JVM local mode never hit it
-    // (MEMORY_AND_DISK evicts to disk, recompute needs executor loss).
-    // Trade-off (r13 ADVICE): localCheckpoint blocks are UNRECOVERABLE
-    // on executor loss — this converts the silent wrong-path recompute
-    // into a hard job failure (fail-fast; the job re-runs idempotently).
-    // Reliable checkpointing would add fault tolerance at the cost of a
-    // distributed-FS round-trip per table.
-    val terms = Merge.upsertTerms(
-      existingTerms, valid.select(col("concept").as("uri")), asOf,
-      startId = Some(nextTermId)).localCheckpoint(true)
-    // (count, updated-count) in one pass
-    val tRow = terms.agg(count(lit(1)),
-      count(when(col("updated_at") === asOf && col("created_at") =!= asOf, 1))).head()
-    val termsInserted = tRow.getLong(0) - existingCount
-    val termsUpdated = tRow.getLong(1)
+    // localCheckpoint, not cache: cache() keeps the lineage back to the
+    // CURRENT store's parquet, and the first swap DELETES those files
+    // before the second table is written — on a cluster, recomputing a
+    // lost cached partition of `allFields` (whose lineage runs through
+    // `terms` → the old terms parquet) would read deleted paths. The
+    // eager checkpoint cuts the lineage before any swap runs. Trade-off:
+    // localCheckpoint blocks are UNRECOVERABLE on executor loss — this
+    // converts the silent wrong-path recompute into a hard job failure
+    // (fail-fast; the job re-runs idempotently). Reliable checkpointing
+    // would add fault tolerance at the cost of a distributed-FS
+    // round-trip per table.
+    val terms = Merge.upsertTerms(existingTerms, valid.select(col("concept").as("uri")), at,
+        startId = Some(nextTermId))
+      .observe(termsObs, count(lit(1)).as("n"),
+        count(when(col("updated_at") === at && col("created_at") =!= at, 1)).as("updated"))
+      .localCheckpoint(true)
 
-    val melted = Transform.meltAll(valid, cfg.meltVars)
-    val resolved = Merge.resolveFk(melted, terms)
-    val existingFields =
-      Store.readTableOr(spark, cfg.storeDir, "term_fields", Schemas.termFields).cache()
-    val efRow = existingFields.agg(count(lit(1)), max(col("id"))).head()
-    val existingFieldCount = efRow.getLong(0)
-    val nextFieldId = (if (efRow.isNullAt(1)) 0L else efRow.getLong(1)) + 1
-    val allFields = Merge.insertIfAbsent(existingFields, resolved, asOf,
-      startId = Some(nextFieldId)).localCheckpoint(true)
-    val fieldCount = allFields.count()
-    val fieldsInserted = fieldCount - existingFieldCount
+    val existingFields = Store.readTableOr(spark, storeDir, "term_fields", Schemas.termFields)
+    val (existingFieldCount, nextFieldId) = sizeAndNextId(existingFields)
+    // eager too: the uniqueness probe and the swap both read it
+    val allFields = Merge.insertIfAbsent(existingFields,
+        Merge.resolveFk(Transform.meltAll(valid, meltVars), terms), at, startId = Some(nextFieldId))
+      .observe(fieldsObs, count(lit(1)).as("n"))
+      .localCheckpoint(true)
 
-    // Release the cached inputs now that both eager checkpoints hold the
-    // merged tables, and before any write: nothing after this point reads
-    // the pre-run store, and a cached plan over the same store paths would
-    // serve the pre-run rows to any later reader of those paths in this
-    // session. terms/allFields are checkpointed, not cached — their blocks
-    // free via the ContextCleaner.
-    valid.unpersist()
-    existingTerms.unpersist(); existingFields.unpersist()
+    val termCount = observed(termsObs)
+    val fieldCount = observed(fieldsObs)
 
     // A19/A20: fail the job (like the reference's sqlite3.Error path,
     // harvest.py:477-479) if the merged store would violate its
@@ -139,11 +149,12 @@ object HarvestJob {
       Validate.uniqueViolations(allFields, Seq("term_id", "field_uri", "original_value")) ->
         "term_fields(term_id, field_uri, original_value) unique"))
 
-    commitTail(spark, cfg, swap,
-      Seq(("terms", terms, tRow.getLong(0)), ("term_fields", allFields, fieldCount)))
+    commitTail(spark, storeDir, sqliteArtifact, swap,
+      Seq(("terms", terms, termCount), ("term_fields", allFields, fieldCount)))
 
-    Result(bindingsRead, validRows, distinctTerms,
-      termsInserted, termsUpdated, fieldsInserted, warnings)
+    Result(observed(readObs), observed(validObs), observed(validObs, "terms"),
+      termCount - existingCount, observed(termsObs, "updated"),
+      fieldCount - existingFieldCount, Seq.empty)
   }
 
   /** The tail after the uniqueness probe, as three branches at once:
@@ -163,19 +174,19 @@ object HarvestJob {
     * return. If any branch throws, all three are still joined, the staging
     * file is deleted, an existing artifact is left untouched, and the
     * first failure is rethrown (the others attached as suppressed). */
-  private def commitTail(spark: SparkSession, cfg: Config, swap: (DataFrame, String) => Unit,
-      merged: Seq[(String, DataFrame, Long)]): Unit = {
+  private def commitTail(spark: SparkSession, storeDir: String, sqliteArtifact: Option[String],
+      swap: (DataFrame, String) => Unit, merged: Seq[(String, DataFrame, Long)]): Unit = {
     val mergedNames = merged.map(_._1).toSet
     val workflow = Schemas.allTables.filterNot { case (name, _) => mergedNames(name) }
     val tables = merged.map { case (name, df, _) => name -> df }.toMap ++
-      workflow.map { case (name, schema) => name -> Store.readTableOr(spark, cfg.storeDir, name, schema) }
-    val db = cfg.sqliteArtifact.map(new File(_).getAbsoluteFile)
+      workflow.map { case (name, schema) => name -> Store.readTableOr(spark, storeDir, name, schema) }
+    val db = sqliteArtifact.map(new File(_).getAbsoluteFile)
     val staging = db.map(f => new File(f.getParentFile, s".${f.getName}.next"))
 
     val pool = Executors.newFixedThreadPool(2)
     def branch(body: => Unit): Future[Unit] = pool.submit(new Callable[Unit] { def call(): Unit = body })
     val outcomes = try {
-      val bootstrap = branch(Store.bootstrap(spark, cfg.storeDir, workflow))
+      val bootstrap = branch(Store.bootstrap(spark, storeDir, workflow))
       val artifact = staging.map(f => branch(Store.writeSqliteArtifact(spark,
         (name, _) => tables(name), f.getPath,
         knownRows = merged.map { case (name, _, n) => name -> n }.toMap)))

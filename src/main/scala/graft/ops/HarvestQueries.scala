@@ -240,42 +240,24 @@ object HarvestQueries {
   }
 
   /** A22/H4: the single-file SQLite artifact under the driver's oracle —
-    * run the FULL harvest job (fixture bindings → fresh store → artifact
-    * export), then read per-table row counts back THROUGH the .db file
-    * (table b-tree walks via [[Sqlite.readTable]]). The oracle recomputes
-    * the same counts from the fixture SQL, so a writer bug that drops or
-    * duplicates rows fails the driver gate, not only ScalaTest. */
+    * run the harvest job's own core (fixture bindings → fresh store →
+    * `translations.db`), then read per-table row counts back THROUGH the
+    * .db file (table b-tree walks via [[Sqlite.readTable]]). The oracle
+    * recomputes the same counts from the fixture SQL, so a writer bug that
+    * drops or duplicates rows fails the oracle gate, not only ScalaTest. */
   def sqliteArtifact(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val work = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_a22_" + Integer.toHexString(dir.hashCode))
+    val store = new java.io.File(work, "store")
+    org.apache.commons.io.FileUtils.deleteQuietly(store)
     work.mkdirs()
     val db = new java.io.File(work, "translations.db")
     db.delete()
-    // terms + term_fields straight from the fixture (the same derivation
-    // the job performs — assignIds + resolveFk + insertIfAbsent); the
-    // artifact is exported from the in-flight DataFrames, skipping the
-    // store round-trip (the full job → store → artifact path is covered by
-    // SqliteSpec's export tests — this query gates the WRITER under the
-    // driver's oracle without re-benchmarking the whole job)
-    // r17 (VERDICT r16 #5, guide §2.4): the fixture and the terms table
-    // each feed TWO consumers (terms export + the fields FK join; valid
-    // feeds terms + melt) — materialize once instead of re-deriving per
-    // consumer inside the writer's streaming pass.
-    val v = valid(s, dir).localCheckpoint(true)
-    val asOf = lit(ts1).cast("timestamp") // LTZ like Schemas.termFields
-    val terms = Merge.assignIds(v.select($"concept".as("uri")).distinct(), Seq("uri"), 1)
-      .select($"id", $"uri", asOf.as("created_at"), asOf.as("updated_at"))
-      .localCheckpoint(true)
-    val fields = Merge.insertIfAbsent(
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        graft.harvest.Schemas.termFields),
-      Merge.resolveFk(Transform.meltAll(v), terms), asOf, startId = Some(1L))
-    val populated = Map("terms" -> terms, "term_fields" -> fields)
-    graft.harvest.Store.writeSqliteArtifact(s,
-      (name, schema) => populated.getOrElse(name,
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)),
-      db.getPath)
+    try HarvestJob.harvest(bindings(s, dir).drop("doc_id"), store.getPath,
+      java.sql.Timestamp.valueOf(ts1), Seq("prefLabel", "altLabel", "definition"),
+      Some(db.getPath), graft.harvest.Store.writeTable(_, store.getPath, _))
+    finally org.apache.commons.io.FileUtils.deleteQuietly(store)
     val rows = Schemas.allTables.map { case (name, _) =>
       val read = Sqlite.readTable(db, name)
       (name, read.size.toLong, if (read.isEmpty) 0L else read.map(_._1).max)

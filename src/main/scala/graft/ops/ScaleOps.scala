@@ -121,7 +121,7 @@ object ScaleOps {
       }.sum
     val n = math.max(1, math.ceil(bytes.toDouble / (targetMB.toLong << 20)).toInt)
     graft.Versions.publish(fs, path) { vdir =>
-      spark.read.parquet(srcDir).repartition(n).write.parquet(vdir.toString)
+      graft.Versions.readParquet(spark, srcDir).repartition(n).write.parquet(vdir.toString)
       onStep("staged")
     }
     onStep("committed")
@@ -164,7 +164,7 @@ object ScaleOps {
   def readCompacted(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(compactDataDir(fs, path))
+    graft.Versions.readParquet(spark, compactDataDir(fs, path))
   }
 
   /** The migration guard for LEGACY raw readers (r15, VERDICT r14 #6):
@@ -232,7 +232,8 @@ object ScaleOps {
           n
         case None => vs.last
       }
-      spark.read.parquet(graft.Versions.dirOf(new org.apache.hadoop.fs.Path(dir), v).toString)
+      graft.Versions.readParquet(spark,
+        graft.Versions.dirOf(new org.apache.hadoop.fs.Path(dir), v).toString)
     }
 
     /** Drop all but the newest `keepLast` versions, marker first — a

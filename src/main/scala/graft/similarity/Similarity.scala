@@ -789,7 +789,7 @@ object Similarity {
   }
 
   private[graft] def standingAdjSnapshot(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(standingAdjSnapshotPath(s, dir))
+    graft.Versions.readParquet(s, standingAdjSnapshotPath(s, dir))
 
   /** The standing vectors as a materialize-once snapshot PATH — the
     * by-ref twin of the `% 10 =!= 3` filter the streamed-ANN gate seeds

@@ -823,66 +823,39 @@ object Streaming {
       else (s.copy(cohortDay = cohort), None)
     }
 
-  /** B10 + A21: incremental harvest as a streaming sink — each micro-batch
-    * of bindings runs the FULL per-page reference pipeline
-    * (harvest.py:358-374) against the store via the same batch Merge
-    * operators the one-shot [[graft.harvest.HarvestJob]] uses:
+  /** B10 + A21: incremental harvest as a streaming sink. Each trigger
+    * runs the batch job's own core ([[graft.harvest.HarvestJob]]) on its
+    * micro-batch against the store, so it leaves the store exactly where
+    * the batch job would after harvesting the same page prefix.
     *
-    *   A11 terms upsert → A14 melt to EAV → A13 FK resolve against the
-    *   post-upsert terms → A15 insert-if-absent into `term_fields` →
-    *   A21 staged atomic swap of BOTH tables.
-    *
-    * Until r12 this sink ran only the A11 leg — a user running the
-    * incremental harvest in streaming mode silently got a terms-only
-    * store (r11 VERDICT #1). Now each trigger leaves the store exactly
-    * where the batch job would after harvesting the same page prefix;
-    * when batches arrive in URI-sorted order (the reference's paginated
-    * ORDER BY delivery, harvest.py:96) the streamed store is
+    * Ids: when batches arrive in URI-sorted order (the reference's
+    * paginated ORDER BY delivery, harvest.py:96) the streamed store is
     * BIT-IDENTICAL to `HarvestJob.run` on the concatenated bindings,
     * surrogate ids included — gated by `b10_stream_harvest` and pinned
-    * against the batch job in StreamingSpec. Out-of-order arrival keeps
-    * content parity and id density but, like the reference's
-    * AUTOINCREMENT under re-ordered pages, assigns ids in arrival order.
+    * in StreamingSpec. Out-of-order arrival keeps content parity and id
+    * density but, like the reference's AUTOINCREMENT under re-ordered
+    * pages, assigns ids in arrival order ([[renumberHarvestStore]]
+    * restores batch ids).
     *
-    * Crash windows are content-idempotent: the at-least-once marker
-    * commits AFTER both table swaps, so a re-applied batch upserts
-    * already-merged terms (no-op) and anti-joins away already-inserted
-    * fields (no-op). The merged frames are eagerly cut from the store's
-    * parquet lineage (localCheckpoint) BEFORE the swap deletes the old
-    * files — the ledger prune discipline (BatchLedger scaladoc).
+    * Re-delivery: the at-least-once marker `_last_batch` commits AFTER
+    * both table swaps, so a re-delivered committed batch skips without
+    * reading the store, and a batch re-applied after a crash in between
+    * is a content no-op (its terms are already merged, its fields
+    * already present).
     *
-    * Scale shape (r12; join forms verified empirically
-    * on Spark 4.1): per trigger, the A13 FK join
-    * (inner) broadcasts the O(batch) side — the store is scanned, not
-    * shuffled, in that leg; the A11 upsert (full outer — no broadcast
-    * form exists, both sides exchange even with a 10-row side) and the
-    * A15 anti-join (left anti with the STORE on the right — broadcast
-    * would have to ship the store, so past the AQE threshold it is
-    * SMJ) are each ONE store-keyed shuffle; and the A21 swap REWRITES
-    * both tables. The O(store) read + two key-shuffles + rewrite per
-    * trigger is BY DESIGN here: the reference-shaped store is one plain
-    * parquet dir per table, the analogue of the reference's single
-    * SQLite file (whose per-page transaction also rewrites shared
-    * b-tree pages in place). At 100 TB the store is a lakehouse table
-    * BUCKETED on the merge keys and this same per-trigger pipeline
-    * lands as a partition-pruned MERGE: the upsert's and anti-join's
-    * shuffles become bucket-local merges and the rewrite touches only
-    * buckets containing the batch's keys — the surrogate-id discipline
-    * already supports that (max-id is a footer-stats read; row_number
-    * orders only the new rows). EXECUTED, not narrated (r13, VERDICT
-    * r12 #1): BucketedLayoutSpec writes terms/term_fields bucketed on
-    * exactly these merge keys, feeds the UNMODIFIED A11/A15 operators,
-    * and pins the plans — the store side reads its HashPartitioning
-    * from the layout (zero ShuffleExchange above the bucketed scans),
-    * only the O(batch) side shuffles, results bit-equal to the
-    * path-based forms. */
-  /** Test seam (r12): fires after the merge computation, before the
-    * owner re-check that guards the table swaps — the window a
-    * successor's claim must be able to fence. Production no-op. */
-  private[streaming] var onBeforeHarvestSwap: () => Unit = () => ()
-
+    * Fencing: each trigger claims a store epoch (see below); a trigger
+    * that a newer writer has superseded throws before it mutates a
+    * shared path, and its staging dirs are tagged with its epoch. */
   def harvestSink(storeDir: String, asOf: java.sql.Timestamp,
       meltVars: Seq[String] = Seq("prefLabel", "altLabel", "definition"))(
+      batch: DataFrame, batchId: Long): Unit =
+    harvestSink(storeDir, asOf, meltVars, () => ())(batch, batchId)
+
+  /** `beforeSwap` runs ahead of each table swap's owner check, in the
+    * window after the merge where a successor's claim must still fence
+    * the trigger; tests use it to inject that claim. */
+  private[streaming] def harvestSink(storeDir: String, asOf: java.sql.Timestamp,
+      meltVars: Seq[String], beforeSwap: () => Unit)(
       batch: DataFrame, batchId: Long): Unit = {
     // at-least-once guard (r11, VERDICT r10 #1), durable in the store dir
     // itself: a re-delivery after a clean commit skips without re-reading
@@ -918,37 +891,15 @@ object Streaming {
           "a newer writer owns this store (zombie driver)")
     }
     val spark = batch.sparkSession
-    val valid = graft.harvest.Transform.filterValidBindings(batch.distinct())
-      .localCheckpoint(true) // reused by the upsert AND the melt leg
-    val existing = graft.harvest.Store.readTableOr(
-      spark, storeDir, "terms", graft.harvest.Schemas.terms)
-    // A11 — eager: the swap below deletes the old parquet this reads
-    val terms = graft.harvest.Merge.upsertTerms(
-      existing, valid.select(col("concept").as("uri")), lit(asOf))
-      .localCheckpoint(true)
-    // A14 → A13 → A15 against the post-upsert terms (harvest.py:358-372)
-    val melted = graft.harvest.Transform.meltAll(valid, meltVars)
-    val resolved = graft.harvest.Merge.resolveFk(melted, terms)
-    val existingFields = graft.harvest.Store.readTableOr(
-      spark, storeDir, "term_fields", graft.harvest.Schemas.termFields)
-    // r17 (guide §1.2): NO eager checkpoint — allFields has exactly one
-    // consumer (its own writeTable), whose STAGING write runs the
-    // derivation before any swap touches the term_fields files it reads
-    // (the terms swap above only moves the terms dir; `terms` itself is
-    // consumed from its checkpoint, not from files). The old checkpoint
-    // materialized the whole frame once just to copy it into staging —
-    // one full pass per trigger for nothing.
-    val allFields = graft.harvest.Merge.insertIfAbsent(
-      existingFields, resolved, lit(asOf))
     // A21 — staged atomic swaps, the fence re-checked (with rollback) at
     // every shared-path mutation inside writeTable, then the idempotence
     // marker last
-    onBeforeHarvestSwap()
-    requireOwner()
-    graft.harvest.Store.writeTable(terms, storeDir, "terms",
-      s".e$epoch", requireOwner _)
-    graft.harvest.Store.writeTable(allFields, storeDir, "term_fields",
-      s".e$epoch", requireOwner _)
+    graft.harvest.HarvestJob.harvest(batch, storeDir, asOf, meltVars, None,
+      (df, name) => {
+        beforeSwap()
+        requireOwner()
+        graft.harvest.Store.writeTable(df, storeDir, name, s".e$epoch", requireOwner _)
+      })
     requireOwner()
     val tmp = new java.io.File(storeDir, "._last_batch.tmp")
     java.nio.file.Files.write(tmp.toPath, batchId.toString.getBytes("UTF-8"))
@@ -1337,7 +1288,7 @@ object Streaming {
           s"(signature ${got.getOrElse("<missing>")} != committed $want) — " +
           "by-ref mode requires the immutable seed snapshot to outlive " +
           "the ledger; re-bootstrap from the current snapshot instead")
-      s.read.parquet(p)
+      graft.Versions.readParquet(s, p)
     }
     def recover(s: SparkSession): this.type = synchronized {
       val cs = ledger.recovered.filterNot(_.compact)
@@ -1464,8 +1415,8 @@ object Streaming {
         sys.error(s"bootstrapByRef: no readable seed at $vecsPath"))
       val aSig = pathSig(s, adjPath).getOrElse(
         sys.error(s"bootstrapByRef: no readable seed at $adjPath"))
-      val vecs = s.read.parquet(vecsPath).localCheckpoint(true)
-      val adj = s.read.parquet(adjPath).localCheckpoint(true)
+      val vecs = graft.Versions.readParquet(s, vecsPath).localCheckpoint(true)
+      val adj = graft.Versions.readParquet(s, adjPath).localCheckpoint(true)
       val layers = provisionedLayers.getOrElse(
         graft.similarity.Similarity.provisionLayers(vecs.count()))
       ledger.commit(-1L, Seq.empty, Map(

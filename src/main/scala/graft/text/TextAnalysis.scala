@@ -892,7 +892,6 @@ object TextAnalysis {
       .groupBy($"word").agg(count(lit(1)).as("cnt"))
       .select(split($"word", "").as("syms"), $"cnt")
       .localCheckpoint(false)
-    val retired = Seq.newBuilder[DataFrame]
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     var iter = 1
     var exhausted = false
@@ -918,16 +917,10 @@ object TextAnalysis {
                      THEN concat(slice(acc, 1, size(acc) - 1), array(${sqlStr(l + r)}))
                      ELSE concat(acc, array(x)) END)""").as("syms"), $"cnt")
           .localCheckpoint(false)
-        // released AFTER the loop: the next round's argmax reads this
-        // round's persisted blocks, so the predecessor must stay alive
-        // until its successor is materialized
-        retired += words
         words = applied
         iter += 1
       }
     }
-    retired += words
-    retired.result().foreach(_.unpersist())
     merges.result().toDF("merge_idx", "left", "right", "merged", "pair_count")
       .orderBy($"merge_idx")
   }

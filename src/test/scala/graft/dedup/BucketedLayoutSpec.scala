@@ -25,9 +25,9 @@ import org.apache.spark.sql.functions._
   *     (same SQL family as b12_cross_portable); this spec adds the
   *     in-process cross-check.
   *
-  *  2. The harvest store (`Streaming.harvestSink` scaladoc: "at 100 TB
-  *     the store is a lakehouse table BUCKETED on the merge keys and the
-  *     upsert's and anti-join's shuffles become bucket-local merges"):
+  *  2. The harvest store (at 100 TB a lakehouse table BUCKETED on the
+  *     merge keys, where the upsert's and anti-join's shuffles become
+  *     bucket-local merges):
   *     the terms/term_fields tables written bucketed on their merge keys
   *     feed the UNMODIFIED A11 full-outer upsert and A15 anti-join — the
   *     store side plans no exchange, only the O(batch) side shuffles,

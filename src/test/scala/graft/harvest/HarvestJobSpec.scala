@@ -66,6 +66,17 @@ class HarvestJobSpec extends SparkSpec {
     assert(Sqlite.readTable(db, "term_fields").length.toLong === fields.count())
   }
 
+  test("an empty bindings file harvests nothing and reports a zero funnel") {
+    val dir = Files.createTempDirectory("graft_empty").toString
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.bindings)
+      .write.parquet(s"$dir/bindings.parquet")
+    val r = HarvestJob.run(spark, HarvestJob.Config(collection, s"$dir/bindings.parquet",
+      s"$dir/store", Timestamp.valueOf("2026-01-01 00:00:00")))
+    assert(r.copy(warnings = Seq.empty) === HarvestJob.Result(0, 0, 0, 0, 0, 0, Seq.empty))
+    for ((name, _) <- Schemas.allTables)
+      assert(spark.read.parquet(s"$dir/store/$name").count() === 0, name)
+  }
+
   test("invalid collection URI fails fast (A18/A25)") {
     intercept[IllegalArgumentException] {
       HarvestJob.run(spark, HarvestJob.Config("notauri", "/nonexistent", "/tmp/x",

@@ -220,14 +220,15 @@ class StreamingDurabilitySpec extends SparkSpec {
     val before = spark.read.parquet(s"$dir/terms").collect().map(_.toSeq).toSeq
     // a successor claims the store INSIDE the zombie's compute-to-swap
     // window (after the merge, before the owner re-check)
-    Streaming.onBeforeHarvestSwap = () => {
+    val successorClaims = () => {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$dir/_epochs/99"), "9".getBytes("UTF-8"))
-      Streaming.onBeforeHarvestSwap = () => ()
+      ()
     }
-    try intercept[IllegalStateException] {
-      Streaming.harvestSink(dir, asOf)(mk(Seq("https://v.example/t/b")), 1L)
-    } finally Streaming.onBeforeHarvestSwap = () => ()
+    intercept[IllegalStateException] {
+      Streaming.harvestSink(dir, asOf, Seq("prefLabel", "altLabel", "definition"),
+        successorClaims)(mk(Seq("https://v.example/t/b")), 1L)
+    }
     // the zombie touched NOTHING: tables and marker are the successor's view
     assert(spark.read.parquet(s"$dir/terms").collect().map(_.toSeq).toSeq === before)
     assert(new String(java.nio.file.Files.readAllBytes(
@@ -240,6 +241,50 @@ class StreamingDurabilitySpec extends SparkSpec {
     assert(uris === Seq("https://v.example/t/a", "https://v.example/t/b"))
     val claims = new java.io.File(s"$dir/_epochs").listFiles().map(_.getName).toSeq
     assert(claims.forall(_.toLong >= 100L), s"superseded claims not pruned: $claims")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("harvest store uniqueness: a trigger over a store whose terms.uri is " +
+    "duplicated throws before the swap — tables and marker unmoved") {
+    val dir = tmpDir("harvest_unique")
+    val mk = (uris: Seq[String]) => uris.toDF("concept")
+      .select(col("concept"), lit("label").as("prefLabel"),
+        lit(null).cast("string").as("altLabel"), lit(null).cast("string").as("definition"))
+    val asOf = Timestamp.valueOf("2026-01-01 00:00:00")
+    Streaming.harvestSink(dir, asOf)(mk(Seq("https://v.example/t/a")), 0L)
+    val dup = spark.createDataFrame(java.util.List.of(
+      org.apache.spark.sql.Row(1L, "https://v.example/t/a", asOf, asOf),
+      org.apache.spark.sql.Row(2L, "https://v.example/t/a", asOf, asOf)),
+      graft.harvest.Schemas.terms)
+    graft.harvest.Store.writeTable(dup, dir, "terms")
+    val terms = sortedRows(spark.read.parquet(s"$dir/terms"))
+    val fields = sortedRows(spark.read.parquet(s"$dir/term_fields"))
+    assert(terms.size === 2 && fields.size === 1)
+    val e = intercept[IllegalStateException] {
+      Streaming.harvestSink(dir, asOf)(mk(Seq("https://v.example/t/b")), 1L)
+    }
+    assert(e.getMessage.contains("terms.uri unique"))
+    assert(sortedRows(spark.read.parquet(s"$dir/terms")) === terms)
+    assert(sortedRows(spark.read.parquet(s"$dir/term_fields")) === fields)
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/_last_batch")), "UTF-8").trim === "0")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("harvest sink: an empty micro-batch changes no table and commits its marker") {
+    val dir = tmpDir("harvest_empty")
+    val mk = (uris: Seq[String]) => uris.toDF("concept")
+      .select(col("concept"), lit("label").as("prefLabel"),
+        lit(null).cast("string").as("altLabel"), lit(null).cast("string").as("definition"))
+    val asOf = Timestamp.valueOf("2026-01-01 00:00:00")
+    Streaming.harvestSink(dir, asOf)(mk(Seq("https://v.example/t/a")), 0L)
+    val terms = sortedRows(spark.read.parquet(s"$dir/terms"))
+    val fields = sortedRows(spark.read.parquet(s"$dir/term_fields"))
+    Streaming.harvestSink(dir, asOf)(mk(Seq.empty), 1L)
+    assert(sortedRows(spark.read.parquet(s"$dir/terms")) === terms)
+    assert(sortedRows(spark.read.parquet(s"$dir/term_fields")) === fields)
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/_last_batch")), "UTF-8").trim === "1")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
