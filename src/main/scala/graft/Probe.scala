@@ -15,8 +15,8 @@ object Probe {
       .config("spark.sql.shuffle.partitions", cpus))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Listener delivery is async; `time` sleeps briefly before reading
-    // the counter so the job count covers the whole timed call.
+    // Listener delivery is async; `time` drains the listener bus before
+    // reading the counter so the job count covers the whole timed call.
     val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
     val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -39,7 +39,7 @@ object Probe {
     def time(name: String)(f: => Unit): Unit = {
       val j0 = jobCount.get(); val t0 = System.nanoTime(); f
       val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(200) // drain the listener bus before reading the counter
+      org.apache.spark.sql.graftbridge.bridge.drainListenerBus(spark.sparkContext)
       println(f"TIME $name $secs%.2f s jobs=${jobCount.get() - j0}")
     }
     val names = if (args.nonEmpty) args.toSeq else Seq("b04_cube")

@@ -113,45 +113,92 @@ object Dedup {
     sigs.select(col("doc_id"), posexplode(bandHashArray(col("sig"), bands, rowsPerBand)))
       .toDF("doc_id", "band_idx", "band_hash")
 
-  /** Per-bucket size cap for the LSH candidate joins. A degenerate bucket
-    * of B docs (millions of near-empty or templated documents agreeing on
-    * a whole band) would emit B² join rows — the classic production
-    * near-dedup failure. Buckets over the cap are REPRESENTATIVE-LINKED
-    * instead: docs that agree on a full band are near-certain duplicates,
-    * so connecting each to the bucket-minimum doc (B−1 star edges)
-    * preserves the connected component while keeping the candidate count
-    * linear in B. The trade is edge RECALL inside an over-full bucket
-    * only: a hash-collision interloper star-linked to a representative it
-    * doesn't resemble is dropped by exact verification, exactly as its
-    * all-pairs edges would have been. */
+  /** Per-bucket size cap of every bucket join in this file: the LSH band
+    * joins (self and cross), the SimHash chunk join and the entity-match
+    * blocking join all run through [[bucketStats]], [[selfPairs]] and
+    * [[crossProbe]], so the policy below is written once.
+    *
+    * A degenerate bucket of B rows (millions of near-empty or templated
+    * documents agreeing on a whole band) would emit B² join rows — the
+    * classic production near-dedup failure. Buckets over the cap are
+    * REPRESENTATIVE-LINKED instead: rows that agree on a full band are
+    * near-certain duplicates, so connecting each to the bucket-minimum id
+    * (B−1 star edges) preserves the connected component while keeping
+    * the candidate count linear in B. A cross-corpus probe needs less:
+    * for a reference bucket over the cap, each incoming row probes the
+    * bucket-minimum reference id only — "is this new doc a near-dup of
+    * the reference" needs ONE verified witness. The trade is edge RECALL
+    * inside an over-full bucket only: an interloper star-linked to a
+    * witness it doesn't resemble is dropped by the caller's exact
+    * verification, exactly as its all-pairs edges would have been. */
   val MaxBucket = 256
 
-  /** Candidate pairs (a < b) from shared LSH buckets — an equi-join on
-    * (band_idx, band_hash), never an all-pairs product. Buckets larger
-    * than `maxBucket` emit star edges to the bucket-minimum doc instead
-    * of all pairs (see [[MaxBucket]]) — the guard that keeps a degenerate
-    * corpus linear at 100 TB. */
-  def candidatePairs(bandsDf: DataFrame, maxBucket: Int = MaxBucket): DataFrame = {
-    // one count+min aggregate per bucket, joined back on the bucket key
-    // (co-partitioned with the candidate join's own shuffle key). The
-    // stats frame is tiny (one row per occupied bucket) but feeds THREE
-    // plan branches (two self-join sides + the star branch) — checkpoint
-    // it so the aggregate runs once, not per branch
-    val stats = bandsDf.groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("bsz"), min(col("doc_id")).as("bmin"))
-      .localCheckpoint(true)
-    val keyed = bandsDf.join(stats, Seq("band_idx", "band_hash"))
+  /** The LSH band-bucket key of [[lshBands]] and [[portableBandsOf]]. */
+  private val BandKey = Seq("band_idx", "band_hash")
+
+  /** Per-bucket stats of `rows` grouped by `key`: the size `bsz`, the
+    * min-id witness `bmin`, and for each `witness` column `c` the
+    * witness row's value as `bmin_c`. */
+  private[graft] def bucketStats(rows: DataFrame, key: Seq[String],
+      id: String = "doc_id", witness: Seq[String] = Nil): DataFrame =
+    rows.groupBy(key.map(col): _*).agg(count(lit(1)).as("bsz"),
+      min(col(id)).as("bmin") +:
+        witness.map(c => min_by(col(c), col(id)).as(s"bmin_$c")): _*)
+
+  /** The capped self-join of `rows` on `key` ([[MaxBucket]]): every pair
+    * a < b inside a bucket of at most `maxBucket` rows, plus one star edge
+    * (bmin, id) per other row of a bigger bucket. Emits `key`, `a`, `b`
+    * and each `carry` column of both sides as `c_a`, `c_b`. A row in
+    * several buckets can emit the same pair more than once; callers
+    * that care take `distinct`. */
+  private[graft] def selfPairs(rows: DataFrame, key: Seq[String],
+      id: String = "doc_id", carry: Seq[String] = Nil,
+      maxBucket: Int = MaxBucket): DataFrame = {
+    // the stats frame is tiny (one row per occupied bucket) but feeds
+    // three plan branches — checkpoint so the aggregate runs once
+    val keyed = rows.join(
+      bucketStats(rows, key, id, carry).localCheckpoint(true), key)
     val small = keyed.filter(col("bsz") <= maxBucket)
-    val allPairs = small.select(col("doc_id").as("a"), col("band_idx"), col("band_hash"))
-      .join(small.select(col("doc_id").as("b"), col("band_idx"), col("band_hash")),
-        Seq("band_idx", "band_hash"))
+    def side(s: String): DataFrame = small.select(
+      (col(id).as(s) +: carry.map(c => col(c).as(s"${c}_$s"))) ++ key.map(col): _*)
+    val out = key ++ Seq("a", "b") ++ carry.flatMap(c => Seq(s"${c}_a", s"${c}_b"))
+    val full = side("a").join(side("b"), key)
       .filter(col("a") < col("b"))
-      .select(col("a"), col("b"))
-    val starPairs = keyed
-      .filter(col("bsz") > maxBucket && col("doc_id") =!= col("bmin"))
-      .select(col("bmin").as("a"), col("doc_id").as("b")) // bmin < doc_id by construction
-    allPairs.union(starPairs).distinct()
+      .select(out.map(col): _*)
+    val star = keyed
+      .filter(col("bsz") > maxBucket && col(id) =!= col("bmin"))
+      .select(key.map(col) ++ Seq(col("bmin").as("a"), col(id).as("b")) ++ // bmin < id
+        carry.flatMap(c => Seq(col(s"bmin_$c").as(s"${c}_a"), col(c).as(s"${c}_b"))): _*)
+    full.union(star)
   }
+
+  /** The capped cross probe of incoming band rows `bNew` against the
+    * reference bands `bRef` and their [[bucketStats]] ([[MaxBucket]]):
+    * distinct (a = new id, b = ref id) pairs, a ≠ b. Batch-driven join
+    * order: the batch bands join the stats FIRST and only then the
+    * reference bands, so the small batch side is the build side of both
+    * joins and the reference tables are scanned, never shuffled (joining
+    * bRef to the stats first shuffles two corpus-sized tables per call,
+    * which a 64× stress run showed growing superlinearly). */
+  private[graft] def crossProbe(bNew: DataFrame, bRef: DataFrame, stats: DataFrame,
+      maxBucket: Int = MaxBucket): DataFrame = {
+    val newStat = bNew.select(col("doc_id").as("a") +: BandKey.map(col): _*)
+      .join(stats, BandKey)
+    val direct = newStat.filter(col("bsz") <= maxBucket)
+      .select(col("a") +: BandKey.map(col): _*)
+      .join(bRef.select(col("doc_id").as("b") +: BandKey.map(col): _*), BandKey)
+      .select(col("a"), col("b"))
+    val star = newStat.filter(col("bsz") > maxBucket)
+      .select(col("a"), col("bmin").as("b"))
+    direct.union(star).filter(col("a") =!= col("b")).distinct()
+  }
+
+  /** Candidate pairs (a < b) from shared LSH buckets — an equi-join on
+    * (band_idx, band_hash), never an all-pairs product, capped per
+    * [[MaxBucket]]. */
+  def candidatePairs(bandsDf: DataFrame, maxBucket: Int = MaxBucket): DataFrame =
+    selfPairs(bandsDf, BandKey, maxBucket = maxBucket)
+      .select(col("a"), col("b")).distinct()
 
   /** Exact Jaccard verification of candidate pairs against the shingle
     * sets. Join ORDER matters at scale: start from the (small) candidate
@@ -163,7 +210,8 @@ object Dedup {
 
   /** Two-frame variant: side `a`'s shingles from `shA`, side `b`'s from
     * `shB` — the cross-corpus shape ([[minHashNearDupAcross]]); with
-    * `shA eq shB` it is exactly the self-dedup verification.
+    * `shA eq shB` it is exactly the self-dedup verification. Both frames
+    * are (doc_id, gram hash) with long hashes.
     *
     * r16 (optimization round): ARRAY-verify — the [[ppJoin]] merge-verify
     * kernel applied to the LSH verification path. One (doc_id → sorted
@@ -193,21 +241,13 @@ object Dedup {
       .select(col("doc_id"), col("grams"), size(col("grams")).cast("long").as("n"))
     val arrsA = arrsOf(shA)
     val arrsB = if (shA eq shB) arrsA else arrsOf(shB)
-    // every declared-query caller passes 48/64-bit gram HASHES (long) —
-    // the fused two-pointer kernel; the raw-string form (spec-only)
-    // takes the built-in set intersection, same distinct-match count
-    val longGrams =
-      shA.schema.fields(1).dataType == org.apache.spark.sql.types.LongType &&
-        shB.schema.fields(1).dataType == org.apache.spark.sql.types.LongType
-    def interOf(ga: Column, gb: Column): Column =
-      if (longGrams) size(graft.functions.SortedIntersect(ga, gb))
-      else size(array_intersect(ga, gb))
     pairs
       .join(arrsA.select(col("doc_id").as("a"), col("grams").as("ga"),
         col("n").as("na")), Seq("a"))
       .join(arrsB.select(col("doc_id").as("b"), col("grams").as("gb"),
         col("n").as("nb")), Seq("b"))
-      .withColumn("inter", interOf(col("ga"), col("gb")).cast("long"))
+      .withColumn("inter",
+        size(graft.functions.SortedIntersect(col("ga"), col("gb"))).cast("long"))
       .select(col("a"), col("b"), col("inter"), col("na"), col("nb"),
         (col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
           .as("jaccard"))
@@ -229,36 +269,53 @@ object Dedup {
   /** B12: the full MinHash-LSH near-dup pipeline
     * (row-expression signatures → band → bucket-join → exact verify).
     * Everything after the scan carries longs, not token strings. */
-  def minHashNearDup(docs: DataFrame, k: Int = 3, threshold: Double = 0.5,
-                     sigFn: Option[DataFrame => DataFrame] = None): DataFrame = {
+  def minHashNearDup(docs: DataFrame, k: Int = 3, threshold: Double = 0.5): DataFrame = {
     val sh = shingleHashes(docs, k).cache()
-    // row-expression signatures by default (no signature-stage shuffle);
-    // an explicit sigFn runs against the shingle-hash set instead
-    // (measurement baselines). bands feed a self-join → materialize once
-    val sigs = sigFn.map(f => f(sh)).getOrElse(minHashSignaturesRow(docs, k))
-    val bands = lshBands(sigs).cache()
-    // materialize the (small, post-threshold) verified pair set, then
-    // RELEASE the two caches this function registered: a per-batch caller
-    // (dedupClustersAtScale, a foreachBatch sink) must not accumulate one
-    // cached frame per call — the same storage-churn failure mode the
-    // round-2 bench exposed. The deterministic output sort stays in the
-    // returned plan, after the checkpoint.
-    val verified = minHashNearDupWith(sh, bands, threshold)
+    // bands feed a self-join → materialize once
+    val bands = lshBands(minHashSignaturesRow(docs, k)).cache()
+    // the core checkpoints the (small, post-threshold) verified pair set,
+    // so RELEASE the two caches this function registered: a per-batch
+    // caller (dedupClustersAtScale, a foreachBatch sink) must not
+    // accumulate one cached frame per call — the same storage-churn
+    // failure mode the round-2 bench exposed
+    val verified = nearDupSelf(sh, bands, col("jaccard") >= threshold)
     sh.unpersist()
     bands.unpersist()
     verified
   }
 
-  /** [[minHashNearDup]] over PREBUILT shingle/band tables — the
-    * materialize-once seam of the xxhash self-dedup direction (the
-    * [[minHashPortableWith]] treatment). */
-  private def minHashNearDupWith(sh: DataFrame, bands: DataFrame,
-      threshold: Double): DataFrame = {
-    val pairs = candidatePairs(bands)
-    verifyJaccard(pairs, sh)
-      .filter(col("jaccard") >= threshold)
+  /** The one MinHash near-dup self core of both hash families: capped
+    * [[candidatePairs]] over the prebuilt band table, exact verification
+    * against the shingle table, the family's `keep` predicate over
+    * (inter, na, nb, jaccard), then a checkpoint of the small verified
+    * set under the deterministic (a, b) output sort. Both tables are
+    * caller-owned. */
+  private def nearDupSelf(sh: DataFrame, bands: DataFrame, keep: Column): DataFrame =
+    verifyJaccard(candidatePairs(bands), sh)
+      .filter(keep)
       .localCheckpoint(true)
       .orderBy(col("a"), col("b"))
+
+  /** The cross-corpus twin of [[nearDupSelf]]: [[crossProbe]] of the
+    * incoming bands against the reference bands and their bucket stats
+    * (derived here when `stats` is None), verification of each pair
+    * against the incoming and reference shingles, the family's `keep`
+    * predicate, and the checkpointed (new_id, ref_id, inter, na, nb,
+    * jaccard) rows in (new_id, ref_id) order. `shNew` is the call's own
+    * table: cached here and released once the verified rows are
+    * checkpointed; the reference tables are caller-owned. */
+  private def nearDupCross(shNew: DataFrame, bNew: DataFrame, shRef: DataFrame,
+      bRef: DataFrame, stats: Option[DataFrame], keep: Column,
+      maxBucket: Int = MaxBucket): DataFrame = {
+    val sh = shNew.cache()
+    val st = stats.getOrElse(bucketStats(bRef, BandKey).localCheckpoint(true))
+    val verified = verifyJaccardTwo(crossProbe(bNew, bRef, st, maxBucket), sh, shRef)
+      .filter(keep)
+      .select(col("a").as("new_id"), col("b").as("ref_id"),
+        col("inter"), col("na"), col("nb"), col("jaccard"))
+      .localCheckpoint(true)
+    sh.unpersist()
+    verified.orderBy(col("new_id"), col("ref_id"))
   }
 
   /** r9 (VERDICT r8 #8): incremental index maintenance for the LSH
@@ -289,7 +346,7 @@ object Dedup {
     val bands = graft.SnapshotStore(s, dir, "documents.parquet", "xx_self_bands") {
       lshBands(minHashSignaturesRow(docs, 3)).repartition(col("band_hash"))
     }
-    minHashNearDupWith(sh, bands, threshold = 0.5)
+    nearDupSelf(sh, bands, col("jaccard") >= 0.5)
   }
 
   /** B12: INCREMENTAL cross-corpus near-dedup — which docs of an incoming
@@ -298,14 +355,8 @@ object Dedup {
     * (and in production its bands/shingles are a precomputed, reusable
     * table — this operator never pairs ref docs with each other, so
     * growing the reference never costs ref×ref work), the incoming batch
-    * probes the band buckets, and only cross pairs are verified.
-    *
-    * Hot buckets cap differently than the self-join: for a bucket over
-    * `maxBucket` REF docs, each incoming doc probes the bucket-minimum
-    * ref doc only (one edge per incoming doc, not |bucket| edges) — the
-    * decision "is this new doc a near-dup of the reference" needs ONE
-    * verified witness, and an interloper's false probe dies in exact
-    * verification just like its full edge set would have. Output
+    * probes the band buckets ([[crossProbe]], hot buckets capped per
+    * [[MaxBucket]]), and only cross pairs are verified. Output
     * (new_id, ref_id, …, jaccard), rows-only under the driver gate (LSH
     * candidates are engine hashes; the Jaccard layer is the same exact
     * arithmetic as the hash-gated b12_ngram_jaccard). */
@@ -313,52 +364,25 @@ object Dedup {
       threshold: Double = 0.5, maxBucket: Int = MaxBucket): DataFrame = {
     val shRef = shingleHashes(refDocs, k).cache()
     val bRef = lshBands(minHashSignaturesRow(refDocs, k)).cache()
-    val out = minHashNearDupAcrossWith(newDocs, shRef, bRef, k, threshold, maxBucket)
+    val out = nearDupCross(shingleHashes(newDocs, k),
+      lshBands(minHashSignaturesRow(newDocs, k)), shRef, bRef, None,
+      col("jaccard") >= threshold, maxBucket)
     shRef.unpersist(); bRef.unpersist()
     out
   }
 
-  /** [[minHashNearDupAcross]] with PREBUILT reference tables — the
-    * xxhash twin of [[minHashPortableAcrossWith]]; the gated query
-    * injects the materialize-once reference index, the streaming sink
-    * keeps deriving inline per its own lifecycle. */
-  private def minHashNearDupAcrossWith(newDocs: DataFrame, shRef: DataFrame,
-      bRef: DataFrame, k: Int, threshold: Double, maxBucket: Int): DataFrame = {
-    val shNew = shingleHashes(newDocs, k).cache()
-    val bNew = lshBands(minHashSignaturesRow(newDocs, k))
-    val stats = bRef.groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("bsz"), min(col("doc_id")).as("bmin"))
-      .localCheckpoint(true)
-    val keyedRef = bRef.join(stats, Seq("band_idx", "band_hash"))
-    val direct = bNew.select(col("doc_id").as("a"), col("band_idx"), col("band_hash"))
-      .join(keyedRef.filter(col("bsz") <= maxBucket)
-        .select(col("doc_id").as("b"), col("band_idx"), col("band_hash")),
-        Seq("band_idx", "band_hash"))
-      .select(col("a"), col("b"))
-    val starProbe = bNew.select(col("doc_id").as("a"), col("band_idx"), col("band_hash"))
-      .join(stats.filter(col("bsz") > maxBucket), Seq("band_idx", "band_hash"))
-      .select(col("a"), col("bmin").as("b"))
-    val pairs = direct.union(starProbe).filter(col("a") =!= col("b")).distinct()
-    val verified = verifyJaccardTwo(pairs, shNew, shRef)
-      .filter(col("jaccard") >= threshold)
-      .select(col("a").as("new_id"), col("b").as("ref_id"),
-        col("inter"), col("na"), col("nb"), col("jaccard"))
-      .localCheckpoint(true)
-    shNew.unpersist() // the ref tables are caller-owned
-    verified.orderBy(col("new_id"), col("ref_id"))
-  }
-
   def crossNearDupQuery(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
+    val refDocs = docs.filter(col("doc_id") % 2 =!= 0)
+    val newDocs = docs.filter(col("doc_id") % 2 === 0)
     val shRef = graft.SnapshotStore(s, dir, "documents.parquet", "xx_cross_ref_sh") {
-      shingleHashes(docs.filter(col("doc_id") % 2 =!= 0), 3).repartition(col("doc_id"))
+      shingleHashes(refDocs, 3).repartition(col("doc_id"))
     }
     val bRef = graft.SnapshotStore(s, dir, "documents.parquet", "xx_cross_ref_bands") {
-      lshBands(minHashSignaturesRow(docs.filter(col("doc_id") % 2 =!= 0), 3))
-        .repartition(col("band_hash"))
+      lshBands(minHashSignaturesRow(refDocs, 3)).repartition(col("band_hash"))
     }
-    minHashNearDupAcrossWith(docs.filter(col("doc_id") % 2 === 0), shRef, bRef,
-      k = 3, threshold = 0.5, maxBucket = MaxBucket)
+    nearDupCross(shingleHashes(newDocs, 3), lshBands(minHashSignaturesRow(newDocs, 3)),
+      shRef, bRef, None, col("jaccard") >= 0.5)
   }
 
   // ---------------------------------------------------------- simhash (B12)
@@ -403,34 +427,18 @@ object Dedup {
 
   /** SimHash near-dup pairs at Hamming distance ≤ maxDist (≤3 is exact via
     * the 4-chunk pigeonhole; larger distances would need more chunks).
-    * Chunk buckets over `maxBucket` star-link to the bucket-minimum doc
-    * (same guard as [[candidatePairs]]): a flood of identical/templated
-    * docs shares all four chunks, and B² pairs per chunk bucket would be
-    * the quadratic escape. Star edges still pass the exact Hamming check,
-    * so a 16-bit collision interloper is dropped, not mislinked. */
+    * Chunk buckets are capped per [[MaxBucket]]: a flood of
+    * identical/templated docs shares all four chunks. Star edges still
+    * pass the exact Hamming check, so a 16-bit collision interloper is
+    * dropped, not mislinked. */
   def simHashNearDup(docs: DataFrame, maxDist: Int = 3,
                      maxBucket: Int = MaxBucket): DataFrame = {
     val sk = simHashSketchesRow(docs)
     val chunks = sk.select(col("doc_id"), col("simhash"), posexplode(
       array((0 until 4).map(c => col(s"chunk$c")): _*))).toDF("doc_id", "simhash", "ci", "cv")
-    val stats = chunks.groupBy(col("ci"), col("cv"))
-      .agg(count(lit(1)).as("bsz"), min(col("doc_id")).as("bmin"),
-        min_by(col("simhash"), col("doc_id")).as("bsim"))
-      .localCheckpoint(true) // tiny; feeds three plan branches — run once
-    val keyed = chunks.join(stats, Seq("ci", "cv"))
-    val small = keyed.filter(col("bsz") <= maxBucket)
-    val allPairs = small
-      .select(col("doc_id").as("a"), col("simhash").as("sim_a"), col("ci"), col("cv"))
-      .join(small.select(col("doc_id").as("b"), col("simhash").as("sim_b"), col("ci"), col("cv")),
-        Seq("ci", "cv"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"), col("sim_a"), col("sim_b"))
-    val starPairs = keyed
-      .filter(col("bsz") > maxBucket && col("doc_id") =!= col("bmin"))
-      .select(col("bmin").as("a"), col("doc_id").as("b"),
-        col("bsim").as("sim_a"), col("simhash").as("sim_b"))
-    allPairs.union(starPairs).distinct()
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
+    selfPairs(chunks, Seq("ci", "cv"), carry = Seq("simhash"), maxBucket = maxBucket)
+      .select(col("a"), col("b"), col("simhash_a"), col("simhash_b")).distinct()
+      .withColumn("hamming", bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))))
       .filter(col("hamming") <= maxDist)
       .select(col("a"), col("b"), col("hamming"))
       .orderBy(col("a"), col("b"))
@@ -702,8 +710,13 @@ object Dedup {
     out
   }
 
-  /** [[minHashPortable]] with PREBUILT shingle/band tables — the
-    * [[minHashPortableAcrossWith]] seam for the self-dedup direction. */
+  /** The portable family's keep predicate: division-free exact integer
+    * 2·inter ≥ na+nb−inter ⇔ Jaccard ≥ 0.5, which DuckDB replays. */
+  private def portableKeep: Column =
+    col("inter") * 2 >= col("na") + col("nb") - col("inter")
+
+  /** [[minHashPortable]] with PREBUILT shingle/band tables: the oracle
+    * regime guard in front of [[nearDupSelf]]. */
   private def minHashPortableWith(sh: DataFrame, bandsDf: DataFrame): DataFrame = {
     // Regime guard (r4 ADVICE): the generated oracle replays the candidate
     // join WITHOUT the MaxBucket cap, so its equality to this plan rests on
@@ -716,14 +729,7 @@ object Dedup {
       s"b12_minhash_portable oracle regime broken: hottest LSH bucket holds $hottest docs " +
         s"> MaxBucket=$MaxBucket; the DuckDB oracle replays the UNCAPPED candidate join " +
         "and would silently hash-mismatch — re-derive the oracle with the cap replayed")
-    val pairs = candidatePairs(bandsDf)
-    // per-call hygiene: checkpoint the small verified-pair output, release
-    // the gram cache (the minHashNearDup pattern)
-    val out = verifyJaccard(pairs, sh.select(col("doc_id"), col("hbase").as("shingle")))
-      .filter(col("inter") * 2 >= col("na") + col("nb") - col("inter"))
-      .select(col("a"), col("b"), col("inter"), col("na"), col("nb"), col("jaccard"))
-      .localCheckpoint(true)
-    out.orderBy(col("a"), col("b")) // sh is caller-owned
+    nearDupSelf(sh, bandsDf, portableKeep) // sh is caller-owned
   }
 
   /** B12 (r7): EXACT set-similarity self-join via prefix filtering — the
@@ -820,14 +826,12 @@ object Dedup {
     ppJoin(Tables.documents(s, dir))
 
   /** B12: the ORACLE-CHECKED twin of [[minHashNearDupAcross]] — same
-    * incremental plan shape (incoming batch probes the reference's band
-    * buckets, hot ref buckets answer one bucket-min witness, only cross
-    * pairs verified, never ref×ref work), but signatures/bands use the
-    * portable md5-prefix + affine-permutation family so DuckDB replays
-    * the ENTIRE pipeline including the [[MaxBucket]] cap (the cap is in
-    * the generated oracle SQL — no data-regime assumption at all, per the
-    * r4 ADVICE lesson). Division-free threshold: 2·inter ≥ na+nb−inter ⇔
-    * Jaccard ≥ 0.5. */
+    * incremental plan shape ([[crossProbe]], only cross pairs verified,
+    * never ref×ref work), but signatures/bands use the portable
+    * md5-prefix + affine-permutation family so DuckDB replays the ENTIRE
+    * pipeline including the [[MaxBucket]] cap (the cap is in the
+    * generated oracle SQL — no data-regime assumption at all, per the r4
+    * ADVICE lesson), and the threshold is [[portableKeep]]. */
   def minHashPortableAcross(newDocs: DataFrame, refDocs: DataFrame, k: Int = 3,
       maxBucket: Int = MaxBucket): DataFrame = {
     val shRef = portableShingleHashes(refDocs, k).cache()
@@ -845,48 +849,15 @@ object Dedup {
     * scaladoc) and every ingest batch probes them, so per-ingest work
     * scales with the batch while the corpus-side derivation is paid
     * once, not per run. Content and hashes are identical to deriving
-    * them inline. */
+    * them inline. The bucket stats are a pure function of the
+    * reference, so snapshot-fed callers pass them as `statsRef` and a
+    * per-tick probe never re-aggregates the corpus band table. */
   private[graft] def minHashPortableAcrossWith(newDocs: DataFrame,
       shRef: DataFrame, bRef: DataFrame, k: Int = 3,
       maxBucket: Int = MaxBucket, statsRef: Option[DataFrame] = None): DataFrame = {
-    val shNew = portableShingleHashes(newDocs, k).cache()
-    val bNew = portableBands(shNew)
-    // r11: the bucket stats (size + min-id witness) are a pure function
-    // of the REFERENCE — a per-tick probe must not re-aggregate the
-    // corpus band table, so snapshot-fed callers (refPortableTables)
-    // pass the materialized stats and this derivation is the inline
-    // fallback only
-    val stats = statsRef.getOrElse(
-      bRef.groupBy(col("band_idx"), col("band_hash"))
-        .agg(count(lit(1)).as("bsz"), min(col("doc_id")).as("bmin"))
-        .localCheckpoint(true))
-    // batch-driven probe order (r12, VERDICT r11 #6: the 64× stress
-    // named the OLD shape — bRef ⋈ stats, two CORPUS-sized tables
-    // shuffled per tick — as the gate stage's superlinear owner).
-    // Joining the batch bands to stats FIRST and only then to bRef
-    // keeps the small batch side on the build side of both joins, so
-    // the reference tables are SCANNED, never shuffled: same pair set
-    // (direct = batch rows in small matched buckets × the ref rows of
-    // those buckets; star = one min-id witness for hot buckets).
-    val bNewStat = bNew.select(col("doc_id").as("a"), col("band_idx"), col("band_hash"))
-      .join(stats, Seq("band_idx", "band_hash"))
-    val direct = bNewStat.filter(col("bsz") <= maxBucket)
-      .select(col("a"), col("band_idx"), col("band_hash"))
-      .join(bRef.select(col("doc_id").as("b"), col("band_idx"), col("band_hash")),
-        Seq("band_idx", "band_hash"))
-      .select(col("a"), col("b"))
-    val starProbe = bNewStat.filter(col("bsz") > maxBucket)
-      .select(col("a"), col("bmin").as("b"))
-    val pairs = direct.union(starProbe).filter(col("a") =!= col("b")).distinct()
-    val verified = verifyJaccardTwo(pairs,
-        shNew.select(col("doc_id"), col("hbase").as("shingle")),
-        shRef.select(col("doc_id"), col("hbase").as("shingle")))
-      .filter(col("inter") * 2 >= col("na") + col("nb") - col("inter"))
-      .select(col("a").as("new_id"), col("b").as("ref_id"),
-        col("inter"), col("na"), col("nb"), col("jaccard"))
-      .localCheckpoint(true)
-    shNew.unpersist()
-    verified.orderBy(col("new_id"), col("ref_id"))
+    val shNew = portableShingleHashes(newDocs, k)
+    nearDupCross(shNew, portableBands(shNew), shRef, bRef, statsRef, portableKeep,
+      maxBucket)
   }
 
   /** Materialize-once reference shingle + band tables for a named
@@ -937,9 +908,7 @@ object Dedup {
     val (sh, bands) = refPortableTables(s, dir, name, refPred, k)
     val stats = graft.SnapshotStore(s, dir, "documents.parquet", s"${name}_bstats",
         refTableParams(refPred, k)) {
-      bands.groupBy(col("band_idx"), col("band_hash"))
-        .agg(count(lit(1)).as("bsz"), min(col("doc_id")).as("bmin"))
-        .repartition(col("band_hash"))
+      bucketStats(bands, BandKey).repartition(col("band_hash"))
     }
     (sh, bands, stats)
   }
@@ -976,8 +945,7 @@ object Dedup {
     }
     val stats = graft.SnapshotStore.bucketed(s, dir, "documents.parquet",
       s"${name}_bstats", buckets, Seq("band_idx", "band_hash"), p) {
-      bands.groupBy(col("band_idx"), col("band_hash"))
-        .agg(count(lit(1)).as("bsz"), min(col("doc_id")).as("bmin"))
+      bucketStats(bands, BandKey)
     }
     (sh, bands, stats)
   }
@@ -1311,38 +1279,19 @@ object Dedup {
     * the part name), then survive an edit-distance verification — the
     * classic two-phase ER shape that replaces the O(n²) all-pairs string
     * comparison with Σ(block²) work. Over-full blocks (a degenerate
-    * blocking key — the ER twin of the LSH hot bucket, see [[MaxBucket]])
-    * are REPRESENTATIVE-LINKED, not joined and not skipped: every member
-    * pairs with the block-minimum id only (B−1 star candidates instead
-    * of B², the `candidatePairs` treatment), and star candidates still
-    * pay the exact levenshtein verify — precision untouched, candidate
-    * recall traded inside the over-full block only. Levenshtein is a
-    * built-in codegen'd expression in BOTH engines (classic unit-cost
-    * edit distance) and the cap is replayed in the oracle SQL, so the
-    * verified pair set is oracle-checked exactly in BOTH regimes. */
+    * blocking key — the ER twin of the LSH hot bucket) are capped per
+    * [[MaxBucket]], and star candidates still pay the exact levenshtein
+    * verify — precision untouched, candidate recall traded inside the
+    * over-full block only. Each record is in one block, so no pair
+    * repeats. Levenshtein is a built-in codegen'd expression in BOTH
+    * engines (classic unit-cost edit distance) and the cap is replayed in
+    * the oracle SQL, so the verified pair set is oracle-checked exactly
+    * in BOTH regimes. */
   def entityMatch(records: DataFrame, maxDist: Int = 4,
       maxBlock: Int = 256): DataFrame = {
     val keyed = records.select(col("id"), col("name"),
       element_at(split(col("name"), " "), -1).as("block"))
-    // one count+min per block, three consumers — checkpoint so the
-    // aggregate runs once (same shape as candidatePairs' stats frame)
-    val stats = keyed.groupBy(col("block"))
-      .agg(count(lit(1)).as("bsz"), min(col("id")).as("bmin"))
-      .localCheckpoint(true)
-    val small = keyed.join(stats.filter(col("bsz") <= maxBlock)
-      .select(col("block")), "block")
-    val fullPairs = small
-      .select(col("block"), col("id").as("a"), col("name").as("name_a"))
-      .join(small.select(col("block"), col("id").as("b"), col("name").as("name_b")),
-        Seq("block"))
-      .filter(col("a") < col("b"))
-    val hot = keyed.join(stats.filter(col("bsz") > maxBlock), "block")
-    val reps = hot.filter(col("id") === col("bmin"))
-      .select(col("block"), col("id").as("a"), col("name").as("name_a"))
-    val starPairs = hot.filter(col("id") =!= col("bmin"))
-      .select(col("block"), col("id").as("b"), col("name").as("name_b"))
-      .join(reps, Seq("block")) // bmin < id by construction → a < b
-    fullPairs.unionByName(starPairs)
+    selfPairs(keyed, Seq("block"), id = "id", carry = Seq("name"), maxBucket = maxBlock)
       .withColumn("dist", levenshtein(col("name_a"), col("name_b")))
       .filter(col("dist") <= maxDist)
       .select(col("a"), col("b"), col("block"), col("name_a"), col("name_b"),

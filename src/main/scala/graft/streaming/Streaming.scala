@@ -1082,41 +1082,35 @@ object Streaming {
     * Structured Streaming. [[CrossNearDupSink]] probes a FIXED
     * reference; this class is the other half of the production
     * lifecycle — the reference itself GROWS as batches are admitted.
-    * Each micro-batch appends its O(batch) rows through the r9 extend
-    * seams ([[graft.dedup.Dedup.extendShingleIndex]] /
-    * `extendBandIndex`), which SnapshotParitySpec proved bit-identical
-    * to the O(corpus) rebuild — so N micro-batches == one batch extend
-    * == the fresh index, which StreamingSpec pins THROUGH this class.
+    * Each micro-batch appends its O(batch) portable shingle and band
+    * rows — pure appends, like the r9 extend seams
+    * ([[graft.dedup.Dedup.extendShingleIndex]] / `extendBandIndex`),
+    * which SnapshotParitySpec proved bit-identical to the O(corpus)
+    * rebuild — so N micro-batches == the fresh index, which
+    * StreamingSpec pins THROUGH this class.
     * At 100 TB each fold is an append to the bucketed index tables;
     * nothing rescans the accumulated corpus. */
-  final class BandIndexRefresh(k: Int = 3, stateDir: Option[String] = None,
-      portable: Boolean = false) {
+  final class BandIndexRefresh(k: Int = 3, stateDir: Option[String] = None) {
     // SEGMENT LISTS, not a re-checkpointed union: each trigger
-    // materializes ONLY its own O(batch) increment (the extend seams
-    // are pure appends — extendShingleIndex == existing ∪
-    // shingleHashes(batch)); the served index is the lazy union of the
-    // immutable segments, so no trigger ever rewrites or rescans the
-    // accumulated corpus — the exact shape of appending partitions to
-    // a bucketed index table at 100 TB. With a `stateDir` the segments
+    // materializes ONLY its own O(batch) increment (every index row
+    // derives from one document, so appending is exact); the served
+    // index is the lazy union of the immutable segments, so no trigger
+    // ever rewrites or rescans the accumulated corpus — the exact shape
+    // of appending partitions to a bucketed index table at 100 TB. With a `stateDir` the segments
     // ALSO persist as parquet keyed by batchId (r11, VERDICT r10 #2):
     // the per-trigger write stays O(batch), and a restarted instance
     // rebuilds the identical lazy union from the committed segments.
-    // `portable = true` derives the engine-portable md5-prefix tables
-    // instead of the xxhash production ones — the variant whose served
-    // index the b10_stream_band_index gate hash-compares against
+    // The segments are the engine-portable md5-prefix tables, so the
+    // b10_stream_band_index gate hash-compares the served index against
     // DuckDB's one-shot replay (pure appends, so N micro-batches == the
-    // fresh derivation bit for bit in EITHER hash family).
+    // fresh derivation bit for bit).
     private val ledger = new BatchLedger(stateDir)
     @volatile private var shSegs: List[DataFrame] = Nil
     @volatile private var bandSegs: List[DataFrame] = Nil
-    private def derive(b: DataFrame): (DataFrame, DataFrame) =
-      if (portable) {
-        val sh = graft.dedup.Dedup.portableShingleHashes(b, k).localCheckpoint(true)
-        (sh, graft.dedup.Dedup.portableBandsOf(sh).localCheckpoint(true))
-      } else
-        (graft.dedup.Dedup.shingleHashes(b, k).localCheckpoint(true),
-          graft.dedup.Dedup.lshBands(
-            graft.dedup.Dedup.minHashSignaturesRow(b, k)).localCheckpoint(true))
+    private def derive(b: DataFrame): (DataFrame, DataFrame) = {
+      val sh = graft.dedup.Dedup.portableShingleHashes(b, k).localCheckpoint(true)
+      (sh, graft.dedup.Dedup.portableBandsOf(sh).localCheckpoint(true))
+    }
     /** Restart recovery (r11): latest compaction payload (if any) + the
       * plain segments committed after it — the identical lazy union. */
     def recover(s: SparkSession): this.type = synchronized {
@@ -1591,8 +1585,8 @@ object Streaming {
     * itself as a hash-gated query — until now the refreshers were
     * spec-pinned while only their one-shot batch twins hash-gated. This
     * gate drives a REAL Structured Streaming query (MemoryStream →
-    * foreachBatch → the durable [[BandIndexRefresh]] in portable-hash
-    * mode) through the full production lifecycle inside one gated run:
+    * foreachBatch → the durable [[BandIndexRefresh]]) through the full
+    * production lifecycle inside one gated run:
     *
     *   1. three micro-batches of document KEYS arrive (doc_id % 3
     *      residues); each trigger stream-static-joins its keys to the
@@ -1619,7 +1613,7 @@ object Streaming {
       .localCheckpoint(true) // static join side, reused by all triggers
     val ledgerDir = java.nio.file.Files.createTempDirectory("graft_b10sbi_").toString
     try {
-      val refresh = new BandIndexRefresh(3, Some(ledgerDir), portable = true)
+      val refresh = new BandIndexRefresh(3, Some(ledgerDir))
       val ids = docs.select(col("doc_id")).collect().map(_.getLong(0)) // keys only, bounded
       val input = MemoryStream[Long](s)
       val lastId = new java.util.concurrent.atomic.AtomicLong(-1L)
@@ -1646,7 +1640,7 @@ object Streaming {
         }
       // driver restart: a fresh instance recovers the ledger and serves
       val served = graft.PhaseTimer.time("b10_stream_band_index", "recover") {
-        new BandIndexRefresh(3, Some(ledgerDir), portable = true)
+        new BandIndexRefresh(3, Some(ledgerDir))
           .recover(s).bandIndex.get.localCheckpoint(true)
       }
       served.orderBy(col("doc_id"), col("band_idx"))

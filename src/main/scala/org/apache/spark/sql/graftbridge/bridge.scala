@@ -28,6 +28,14 @@ object bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Block until every event posted to the context's listener bus so
+    * far has been delivered to every listener — `listenerBus` is
+    * spark-private. [[graft.Probe]] reads its job counter after this, so
+    * a job-start event still queued when the timed call returns is
+    * charged to that call, not to the next one. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Apply a SparkSessionExtensions' injected functions to an EXISTING
     * session's registry (session bootstrap only consults
     * `spark.sql.extensions` at session creation; tests share one session,

@@ -125,11 +125,15 @@ class DedupSpec extends SparkSpec {
     val n = 600 // ref flood of identical docs, far over MaxBucket=256
     val ref = (1 to n).map(i => (i.toLong + 1000L, base)).toDF("doc_id", "text")
     val incoming = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
-    val out = Dedup.minHashNearDupAcross(incoming, ref, k = 3, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    // doc 1 is answered by the single bucket-min witness, not 600 pairs;
-    // doc 2 matches nothing
-    assert(out.toSeq === Seq((1L, 1001L)))
+    // both hash families probe through the same capped cross probe
+    for ((family, out) <- Seq(
+        "xxhash" -> Dedup.minHashNearDupAcross(incoming, ref, k = 3, threshold = 0.5),
+        "portable" -> Dedup.minHashPortableAcross(incoming, ref, k = 3))) {
+      // doc 1 is answered by the single bucket-min witness, not 600 pairs;
+      // doc 2 matches nothing
+      assert(out.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+        Seq((1L, 1001L)), family)
+    }
   }
 
   test("decontaminate: flags train docs sharing an 8-gram with the bench set (B12)") {
@@ -170,7 +174,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("exact jaccard verification values are correct (B12)") {
-    val sh = Dedup.shingles(docs, 3)
+    val sh = Dedup.shingleHashes(docs, 3)
     val pairs = Seq((1L, 2L), (1L, 4L)).toDF("a", "b")
     val j = Dedup.verifyJaccard(pairs, sh).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(5))).toMap

@@ -46,10 +46,11 @@ class MinHashSigSpec extends SparkSpec {
     val base = (1 to 30).map(i => s"tok$i").mkString(" ")
     val nearDup = ((1 to 29).map(i => s"tok$i") :+ "changed").mkString(" ")
     val docs = Seq((1L, base), (2L, nearDup), (3L, base)).toDF("doc_id", "text")
-    def pairs(sigFn: Option[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame]) =
-      Dedup.minHashNearDup(docs, k = 3, threshold = 0.5, sigFn = sigFn)
-        .select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs(None) === pairs(Some(Dedup.minHashSignatures(_))))
+    def pairs(sigs: org.apache.spark.sql.DataFrame) =
+      Dedup.candidatePairs(Dedup.lshBands(sigs))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs(Dedup.minHashSignaturesRow(docs, 3)) ===
+      pairs(Dedup.minHashSignatures(Dedup.shingleHashes(docs, 3))))
   }
 
   test("row-signature plan has no shuffle before the LSH band stage") {

@@ -75,7 +75,7 @@ class StreamingDurabilitySpec extends SparkSpec {
     assert(sortedRows(retried.bandIndex.get) === sortedRows(clean.bandIndex.get))
     // and the lifecycle pin still holds THROUGH the retry: == fresh one-shot
     assert(sortedRows(retried.shingleIndex.get) ===
-      sortedRows(graft.dedup.Dedup.shingleHashes(docFix.toDF("doc_id", "text"), 3)))
+      sortedRows(graft.dedup.Dedup.portableShingleHashes(docFix.toDF("doc_id", "text"), 3)))
   }
 
   test("re-delivery: AnnIndexRefresh no-ops a retried batch instead of dying " +

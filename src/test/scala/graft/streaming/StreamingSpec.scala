@@ -518,11 +518,10 @@ class StreamingSpec extends SparkSpec {
     def sortedRows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
     val all = docs.toDF("doc_id", "text")
-    assert(sortedRows(refresh.shingleIndex.get) ===
-      sortedRows(graft.dedup.Dedup.shingleHashes(all, 3)))
+    val fresh = graft.dedup.Dedup.portableShingleHashes(all, 3)
+    assert(sortedRows(refresh.shingleIndex.get) === sortedRows(fresh))
     assert(sortedRows(refresh.bandIndex.get) ===
-      sortedRows(graft.dedup.Dedup.lshBands(
-        graft.dedup.Dedup.minHashSignaturesRow(all, 3))))
+      sortedRows(graft.dedup.Dedup.portableBandsOf(fresh)))
   }
 
   test("ANN index refresh lifecycle: O(batch) inserts defer the hierarchy, " +
