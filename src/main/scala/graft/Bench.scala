@@ -10,32 +10,12 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // noop sink forces full materialization of every output column
-    // (count() would let Catalyst prune the aggregates away).
+    // (count() would let Catalyst prune the aggregates away). Each run is
+    // one [[Cut.scope]], so a query's caches and cuts are freed when it
+    // ends and the next one starts from the same storage state.
     def runOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
                 dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-    // Several pipelines cache intermediates that feed self-joins (minhash
-    // shingles/bands, ANN corpora, closure pow chain). Each cache is
-    // justified within its query, but across an 83-query × n-pass bench
-    // they accumulate and churn the storage-memory region into eviction —
-    // measured as multi-second drift on unrelated queries in round 2. Drop
-    // them between queries so every measurement starts from the same
-    // storage state; the release is outside the query's own timed window.
-    // r10: clearCache() releases CATALOG-cached frames but NOT
-    // localCheckpoint blocks — those free only when the ContextCleaner
-    // processes the checkpoint RDDs' weak refs, which needs a driver GC,
-    // and with -Xmx89g a GC may not happen for hundreds of queries: dead
-    // checkpoint blocks pile up in the storage region and the LAST
-    // queries of each pass (the e* flagships, alphabetically) run
-    // against a polluted store (e02: 1.9 s isolated vs 4.2-4.3 s at
-    // position ~280 — reproduced at BOTH 512m and 1g code cache, which
-    // exonerated the r2 code-cache theory). One explicit GC between
-    // queries lets the cleaner drop them; it runs OUTSIDE every timed
-    // window.
-    def releaseCaches(): Unit = {
-      spark.catalog.clearCache()
-      System.gc()
-    }
+      Cut.scope(fn(spark, dir).write.format("noop").mode("overwrite").save())
     // optional comma-separated name filter for local iteration on a query
     // subset (driver runs with it unset → full bench); mirrors Verify's
     // SPARK_GRAFT_ONLY. Blank values count as unset.
@@ -50,7 +30,6 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     ordered.foreach { case (_, fn) =>
       try runOnce(fn, warmDir) catch { case _: Throwable => () }
-      releaseCaches()
     }
     // min over 2 full passes (each pass runs every query once): JVM
     // background-compilation hiccups add tens of seconds of
@@ -69,7 +48,6 @@ object Bench {
         val ok = try { runOnce(fn, sfDir); true } catch { case _: Throwable => false }
         val dt = (System.nanoTime() - t0) / 1e9
         val ph = PhaseTimer.drain(name)
-        releaseCaches()
         (name, if (ok) dt else -1.0, ph)
       }
       (rows.map(r => r._1 -> r._2).toMap,
@@ -214,7 +192,7 @@ object Bench {
         .mkString("[", ",", "]")
     }
     val env = s"""{"jvm_flags":$jvmFlags,"java":"${sys.props.getOrElse("java.version", "?")}",""" +
-      s""""clear_cache":"between-queries-untimed","warmup":"sf0.001","timed_passes":2,""" +
+      s""""release":"per-query-scope","warmup":"sf0.001","timed_passes":2,""" +
       s""""agg":"min-over-passes","master":"local[$cpus]","shuffle_partitions":$cpus,""" +
       // Locale.ROOT formatting: the f-interpolator uses the JVM default
       // locale, whose decimal COMMA would emit invalid JSON

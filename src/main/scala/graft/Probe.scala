@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev-only query timer: `runMain graft.Probe <query names...>` runs each
   * named query three times (two noop writes, one count) and prints one
-  * `TIME <name>/<run> <secs> s jobs=<n>` line per run, plus a line per
-  * Spark job of 10 ms or more. Plans print with `graft.Explain`. */
+  * `TIME <name>/<run> <secs> s jobs=<n> persistent=<n>` line per run,
+  * plus a line per Spark job of 10 ms or more. Plans print with
+  * `graft.Explain`. */
 object Probe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -36,11 +37,14 @@ object Probe {
         ()
       }
     })
+    // Each run is one Cut.scope; `persistent` counts the RDDs still
+    // persisted after it closes, so a run that leaks blocks names itself.
     def time(name: String)(f: => Unit): Unit = {
-      val j0 = jobCount.get(); val t0 = System.nanoTime(); f
+      val j0 = jobCount.get(); val t0 = System.nanoTime(); Cut.scope(f)
       val secs = (System.nanoTime() - t0) / 1e9
       org.apache.spark.sql.graftbridge.bridge.drainListenerBus(spark.sparkContext)
-      println(f"TIME $name $secs%.2f s jobs=${jobCount.get() - j0}")
+      val persistent = spark.sparkContext.getPersistentRDDs.size
+      println(f"TIME $name $secs%.2f s jobs=${jobCount.get() - j0} persistent=$persistent")
     }
     val names = if (args.nonEmpty) args.toSeq else Seq("b04_cube")
     for (n <- names; fn <- SparkEntry.queries.get(n)) {

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -157,7 +157,7 @@ object Dedup {
     // the stats frame is tiny (one row per occupied bucket) but feeds
     // three plan branches — checkpoint so the aggregate runs once
     val keyed = rows.join(
-      bucketStats(rows, key, id, carry).localCheckpoint(true), key)
+      Cut.eager(bucketStats(rows, key, id, carry)), key)
     val small = keyed.filter(col("bsz") <= maxBucket)
     def side(s: String): DataFrame = small.select(
       (col(id).as(s) +: carry.map(c => col(c).as(s"${c}_$s"))) ++ key.map(col): _*)
@@ -269,19 +269,13 @@ object Dedup {
   /** B12: the full MinHash-LSH near-dup pipeline
     * (row-expression signatures → band → bucket-join → exact verify).
     * Everything after the scan carries longs, not token strings. */
-  def minHashNearDup(docs: DataFrame, k: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val sh = shingleHashes(docs, k).cache()
+  def minHashNearDup(docs: DataFrame, k: Int = 3, threshold: Double = 0.5): DataFrame = Cut.scope {
+    val sh = shingleHashes(docs, k).transform(Cut.cached)
     // bands feed a self-join → materialize once
-    val bands = lshBands(minHashSignaturesRow(docs, k)).cache()
-    // the core checkpoints the (small, post-threshold) verified pair set,
-    // so RELEASE the two caches this function registered: a per-batch
-    // caller (dedupClustersAtScale, a foreachBatch sink) must not
-    // accumulate one cached frame per call — the same storage-churn
-    // failure mode the round-2 bench exposed
-    val verified = nearDupSelf(sh, bands, col("jaccard") >= threshold)
-    sh.unpersist()
-    bands.unpersist()
-    verified
+    val bands = lshBands(minHashSignaturesRow(docs, k)).transform(Cut.cached)
+    // the core cuts the (small, post-threshold) verified pair set, so
+    // both caches are freed on return ([[graft.Cut]])
+    nearDupSelf(sh, bands, col("jaccard") >= threshold)
   }
 
   /** The one MinHash near-dup self core of both hash families: capped
@@ -293,7 +287,7 @@ object Dedup {
   private def nearDupSelf(sh: DataFrame, bands: DataFrame, keep: Column): DataFrame =
     verifyJaccard(candidatePairs(bands), sh)
       .filter(keep)
-      .localCheckpoint(true)
+      .transform(Cut.eager)
       .orderBy(col("a"), col("b"))
 
   /** The cross-corpus twin of [[nearDupSelf]]: [[crossProbe]] of the
@@ -302,19 +296,17 @@ object Dedup {
     * against the incoming and reference shingles, the family's `keep`
     * predicate, and the checkpointed (new_id, ref_id, inter, na, nb,
     * jaccard) rows in (new_id, ref_id) order. `shNew` is the call's own
-    * table: cached here and released once the verified rows are
-    * checkpointed; the reference tables are caller-owned. */
+    * table, cached for this call; the reference tables are caller-owned. */
   private def nearDupCross(shNew: DataFrame, bNew: DataFrame, shRef: DataFrame,
       bRef: DataFrame, stats: Option[DataFrame], keep: Column,
-      maxBucket: Int = MaxBucket): DataFrame = {
-    val sh = shNew.cache()
-    val st = stats.getOrElse(bucketStats(bRef, BandKey).localCheckpoint(true))
+      maxBucket: Int = MaxBucket): DataFrame = Cut.scope {
+    val sh = shNew.transform(Cut.cached)
+    val st = stats.getOrElse(bucketStats(bRef, BandKey).transform(Cut.eager))
     val verified = verifyJaccardTwo(crossProbe(bNew, bRef, st, maxBucket), sh, shRef)
       .filter(keep)
       .select(col("a").as("new_id"), col("b").as("ref_id"),
         col("inter"), col("na"), col("nb"), col("jaccard"))
-      .localCheckpoint(true)
-    sh.unpersist()
+      .transform(Cut.eager)
     verified.orderBy(col("new_id"), col("ref_id"))
   }
 
@@ -361,14 +353,12 @@ object Dedup {
     * candidates are engine hashes; the Jaccard layer is the same exact
     * arithmetic as the hash-gated b12_ngram_jaccard). */
   def minHashNearDupAcross(newDocs: DataFrame, refDocs: DataFrame, k: Int = 3,
-      threshold: Double = 0.5, maxBucket: Int = MaxBucket): DataFrame = {
-    val shRef = shingleHashes(refDocs, k).cache()
-    val bRef = lshBands(minHashSignaturesRow(refDocs, k)).cache()
-    val out = nearDupCross(shingleHashes(newDocs, k),
+      threshold: Double = 0.5, maxBucket: Int = MaxBucket): DataFrame = Cut.scope {
+    val shRef = shingleHashes(refDocs, k).transform(Cut.cached)
+    val bRef = lshBands(minHashSignaturesRow(refDocs, k)).transform(Cut.cached)
+    nearDupCross(shingleHashes(newDocs, k),
       lshBands(minHashSignaturesRow(newDocs, k)), shRef, bRef, None,
       col("jaccard") >= threshold, maxBucket)
-    shRef.unpersist(); bRef.unpersist()
-    out
   }
 
   def crossNearDupQuery(s: SparkSession, dir: String): DataFrame = {
@@ -387,6 +377,12 @@ object Dedup {
 
   // ---------------------------------------------------------- simhash (B12)
 
+  /** 4×16-bit pigeonhole chunks of the sketch — ONE definition: the
+    * chunk width is the exactness contract of the Hamming ≤3 candidate
+    * join, shared by both sketch paths. */
+  private def chunkCols: Seq[Column] = (0 until 4).map(c =>
+    shiftrightunsigned(col("simhash"), c * 16).bitwiseAND(0xFFFFL).as(s"chunk$c"))
+
   /** B12: 64-bit SimHash sketches — per token-hash bit j, sum ±1 weighted
     * by token frequency; the sign vector packs into one long. Emitted with
     * 4×16-bit chunks: Hamming distance ≤3 implies at least one identical
@@ -395,12 +391,6 @@ object Dedup {
     * [[graft.functions.SimHashAgg]] (one int[64] buffer per doc, tight
     * loop) instead of 64 separate conditional-sum aggregate columns —
     * bit-identical output, smaller codegen. */
-  /** 4×16-bit pigeonhole chunks of the sketch — ONE definition: the
-    * chunk width is the exactness contract of the Hamming ≤3 candidate
-    * join, shared by both sketch paths. */
-  private def chunkCols: Seq[Column] = (0 until 4).map(c =>
-    shiftrightunsigned(col("simhash"), c * 16).bitwiseAND(0xFFFFL).as(s"chunk$c"))
-
   def simHashSketches(docs: DataFrame): DataFrame = {
     val sim = udaf(new graft.functions.SimHashAgg)
     val tok = docs.select(col("doc_id"),
@@ -559,7 +549,7 @@ object Dedup {
                CAST(bit_count(a.sim ^ b.sim) AS INT) AS hamming
         FROM graft_hamming_sketches a JOIN graft_hamming_sketches b
           ON a.doc_id < b.doc_id AND bit_count(a.sim ^ b.sim) <= 3""")
-        .localCheckpoint(true)
+        .transform(Cut.eager)
         .orderBy(col("a"), col("b"))
     } finally {
       s.experimental.extraOptimizations = prev
@@ -619,7 +609,7 @@ object Dedup {
       .groupBy($"doc_id")
       .agg(sort_array(collect_set($"hbase")).as("grams"))
       .select($"doc_id", $"grams", size($"grams").cast("long").as("n"))
-      .localCheckpoint(true) // feeds both pair sides
+      .transform(Cut.eager) // feeds both pair sides
     val out = arrs.select($"doc_id".as("a"), $"grams".as("ga"), $"n".as("na"))
       .join(arrs.select($"doc_id".as("b"), $"grams".as("gb"), $"n".as("nb")),
         col("b") === col("a") + 1)
@@ -627,7 +617,7 @@ object Dedup {
         size(graft.functions.SortedIntersect($"ga", $"gb")).cast("long"))
       .select($"a", $"b", $"inter", $"na", $"nb",
         ($"inter".cast("double") / ($"na" + $"nb" - $"inter")).as("jaccard"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     out.orderBy($"a")
   }
 
@@ -702,12 +692,10 @@ object Dedup {
   }
 
   /** Core of [[minHashPortableQuery]] over any `(doc_id, text)` frame. */
-  def minHashPortable(docs: DataFrame, k: Int = 3): DataFrame = {
-    val sh = portableShingleHashes(docs, k).cache()
-    val out = minHashPortableWith(sh,
-      portableBands(sh).localCheckpoint(true))
-    sh.unpersist()
-    out
+  def minHashPortable(docs: DataFrame, k: Int = 3): DataFrame = Cut.scope {
+    val sh = portableShingleHashes(docs, k).transform(Cut.cached)
+    minHashPortableWith(sh,
+      portableBands(sh).transform(Cut.eager))
   }
 
   /** The portable family's keep predicate: division-free exact integer
@@ -759,10 +747,10 @@ object Dedup {
     * md5-prefix family, threshold division-free (2·inter ≥ na+nb−inter),
     * so the whole pipeline hash-gates against a brute-force DuckDB
     * oracle. */
-  def ppJoin(docs: DataFrame, k: Int = 3): DataFrame = {
+  def ppJoin(docs: DataFrame, k: Int = 3): DataFrame = Cut.scope {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("df"), col("hbase"))
-    val sh = portableShingleHashes(docs, k).cache()
+    val sh = portableShingleHashes(docs, k).transform(Cut.cached)
     val dfreq = sh.groupBy(col("hbase")).agg(count(lit(1)).as("df"))
     // ONE aggregate serves the prefix-length gate and the verification:
     // per-doc sorted gram array + size. Verification then runs the
@@ -774,7 +762,7 @@ object Dedup {
     val arrs = sh.groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("hbase"))).as("grams"),
         count(lit(1)).as("n"))
-      .localCheckpoint(true) // prefix gate + both verify sides
+      .transform(Cut.eager) // prefix gate + both verify sides
     // prefix: rn ≤ n − ⌈n/2⌉ + 1 ⇔ 2·rn ≤ n + 2 (integer, division-free)
     // r17: rn rides along — the POSITIONAL filter below needs it
     val prefix = sh.join(dfreq, Seq("hbase"))
@@ -782,7 +770,7 @@ object Dedup {
       .join(arrs.select(col("doc_id"), col("n")), Seq("doc_id"))
       .filter(col("rn") * 2 <= col("n") + 2)
       .select(col("doc_id"), col("hbase"), col("n"), col("rn"))
-      .localCheckpoint(true) // feeds both candidate-join sides
+      .transform(Cut.eager) // feeds both candidate-join sides
     // r17 (VERDICT r16 #7, guide §3.2 join-input reduction): PPJoin's
     // POSITIONAL filter (Xiao/Wang/Lin/Yu WWW'08 §3.2) rides the
     // candidate join — a pair sharing gram g at ranks (rna, rnb) of the
@@ -817,8 +805,7 @@ object Dedup {
       .select(col("a"), col("b"), col("inter"), col("na"), col("nb"),
         (col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
           .as("jaccard"))
-      .localCheckpoint(true)
-    sh.unpersist()
+      .transform(Cut.eager)
     out.orderBy(col("a"), col("b"))
   }
 
@@ -833,12 +820,10 @@ object Dedup {
     * generated oracle SQL — no data-regime assumption at all, per the r4
     * ADVICE lesson), and the threshold is [[portableKeep]]. */
   def minHashPortableAcross(newDocs: DataFrame, refDocs: DataFrame, k: Int = 3,
-      maxBucket: Int = MaxBucket): DataFrame = {
-    val shRef = portableShingleHashes(refDocs, k).cache()
-    val out = minHashPortableAcrossWith(newDocs, shRef,
-      portableBands(shRef).localCheckpoint(true), k, maxBucket)
-    shRef.unpersist()
-    out
+      maxBucket: Int = MaxBucket): DataFrame = Cut.scope {
+    val shRef = portableShingleHashes(refDocs, k).transform(Cut.cached)
+    minHashPortableAcrossWith(newDocs, shRef,
+      portableBands(shRef).transform(Cut.eager), k, maxBucket)
   }
 
   /** [[minHashPortableAcross]] with PREBUILT reference-side tables —
@@ -980,31 +965,30 @@ object Dedup {
     * implementation deliberately trades for simplicity + determinism.
     * Labels converge to the component's minimum vertex id → deterministic
     * canonical representative. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = Cut.scope {
     // materialize the edge list ONCE before symmetrizing: the union's two
     // branches would otherwise each execute the (typically expensive)
     // upstream edge pipeline — ReuseExchange dedupes only the exchange
     // nodes, not the join/aggregate work above them. The edge list itself
     // is small (post-threshold pairs), so the checkpoint is cheap.
-    val e = edges.select(col("a"), col("b")).localCheckpoint(true)
+    val e = edges.select(col("a"), col("b")).transform(Cut.eager)
     val sym = e.select(col("a").as("u"), col("b").as("v"))
       .union(e.select(col("b").as("u"), col("a").as("v")))
-      .cache()
+      .transform(Cut.cached)
     // seed = one propagation round for free: min(u, direct neighbors) in
     // the same shuffle that enumerates the vertices. Near-dup groups are
     // clique-like, so the seed usually IS the fixpoint and the loop only
     // confirms it — one iteration, not two.
     //
-    // Every round CUTS LINEAGE (localCheckpoint, not cache): each
-    // iteration references the previous labels twice (neighbor-min join +
+    // Every round CUTS LINEAGE (a cut, not a cache): each iteration
+    // references the previous labels twice (neighbor-min join +
     // right-outer spine), and with cache-only materialization the RDD
     // lineage serialized into every task binary doubles per round — a
     // 20-round chain graph reached 30+ MB task binaries before this
-    // switch. The checkpointed rows are |V|-bounded; superseded round
-    // checkpoints hold no CacheManager reference, so the ContextCleaner
-    // reclaims them as the loop drops them.
+    // switch. The cut rows are |V|-bounded; superseded rounds are freed
+    // when this function returns ([[graft.Cut]]).
     var labels = sym.groupBy(col("u"))
-      .agg(least(col("u"), min(col("v"))).as("label")).localCheckpoint(true)
+      .agg(least(col("u"), min(col("v"))).as("label")).transform(Cut.eager)
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIter) {
@@ -1022,7 +1006,7 @@ object Dedup {
         .select(col("u"),
           least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
           col("label").as("prev"))
-        .localCheckpoint(false)
+        .transform(Cut.lazily)
       changed = stepped.filter(col("label") =!= col("prev")).count()
       labels = stepped.select(col("u"), col("label"))
       it += 1
@@ -1031,7 +1015,6 @@ object Dedup {
     // several) — fail loudly instead of returning silently corrupt
     // cluster assignments
     if (changed > 0) {
-      sym.unpersist()
       sys.error(s"connectedComponents: not converged after $maxIter rounds " +
         s"($changed labels still changing) — graph diameter exceeds maxIter; " +
         "switch to connectedComponentsStar (O(log n) rounds) or raise maxIter")
@@ -1039,9 +1022,7 @@ object Dedup {
     // hand back the final round's labels directly: the loop's lazy
     // checkpoint already materialized them (r17 — the old extra eager
     // checkpoint here copied the persisted rows in one more job for no
-    // added lineage cut), and release the one cache this function
-    // registered
-    sym.unpersist()
+    // added lineage cut)
     labels
   }
 
@@ -1080,7 +1061,7 @@ object Dedup {
       // r17 (VERDICT r16 #4, guide §1.2): lazy checkpoint + count — one
       // job materializes AND counts (the kCore fusion), here and per
       // round below.
-      .localCheckpoint(false)
+      .transform(Cut.lazily)
     var n = e.count()
     var converged = false
     var it = 0
@@ -1108,7 +1089,7 @@ object Dedup {
       relink.union(self).distinct()
     }
     while (!converged && it < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint(false)
+      val next = smallStar(largeStar(e)).transform(Cut.lazily)
       val nNext = next.count()
       // exact set equality: both sides are DISTINCT canonical edge sets,
       // so equal counts + empty difference ⇔ identical
@@ -1129,7 +1110,7 @@ object Dedup {
     val labels = e.select(col("v").as("u"), col("u").as("label"))
       .union(e.select(col("u"), col("u").as("label")).distinct())
       .distinct()
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     (labels, it)
   }
 
@@ -1145,9 +1126,9 @@ object Dedup {
     * keeps the query oracle-reproducible. At corpus scale the same
     * clustering runs unchanged on the LSH candidate edges from
     * [[minHashNearDup]] — only the edge list differs. */
-  def dedupClustersQuery(s: SparkSession, dir: String): DataFrame = {
+  def dedupClustersQuery(s: SparkSession, dir: String): DataFrame = Cut.scope {
     import s.implicits._
-    val sh = shingleHashes(Tables.documents(s, dir), 3).cache()
+    val sh = shingleHashes(Tables.documents(s, dir), 3).transform(Cut.cached)
     val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
     val shared = sh.toDF("a", "h").join(sh.toDF("b", "h"), Seq("h"))
       .filter($"a" < $"b")
@@ -1157,12 +1138,9 @@ object Dedup {
       .join(sizes.toDF("b", "nb"), Seq("b"))
       .filter($"shared" * 10 >= least($"na", $"nb") * 7)
       .select($"a", $"b")
-    // connectedComponents materializes (loop actions + checkpointed
-    // result), so the shingle cache is fully consumed here — release it
-    // rather than leaving it to the harness clearCache
-    val cc = connectedComponents(edges)
-    sh.unpersist()
-    cc.select($"u".as("doc_id"), $"label".as("cluster_rep"))
+    // connectedComponents materializes (loop actions + cut result), so
+    // the shingle cache is fully consumed here and freed on return
+    connectedComponents(edges).select($"u".as("doc_id"), $"label".as("cluster_rep"))
       .orderBy($"doc_id")
   }
 
@@ -1193,16 +1171,14 @@ object Dedup {
     * gram set — at production scale that set is tiny relative to the
     * corpus (benchmarks are MBs, corpora are TBs) and AQE broadcasts it,
     * making the whole check one scan of the training grams. */
-  def decontaminate(docs: DataFrame, benchPred: Column, k: Int = 8): DataFrame = {
+  def decontaminate(docs: DataFrame, benchPred: Column, k: Int = 8): DataFrame = Cut.scope {
     // grams feed BOTH join sides with different pushed-down filters (the
     // subtrees aren't identical, so exchange reuse can't kick in) — one
     // materialization instead of two explode+distinct shuffles
-    val grams = shingleHashes(docs, k).cache()
-    // checkpoint materializes only the contaminated-doc aggregate (one row
-    // per doc sharing ≥1 gram) — then the gram cache is released instead
-    // of leaking until some harness-level clearCache
-    val shared = sharedGramCounts(grams, benchPred).localCheckpoint(true)
-    grams.unpersist()
+    val grams = shingleHashes(docs, k).transform(Cut.cached)
+    // the cut materializes only the contaminated-doc aggregate (one row
+    // per doc sharing ≥1 gram); the gram cache is freed on return
+    val shared = sharedGramCounts(grams, benchPred).transform(Cut.eager)
     docs.filter(!benchPred).select(col("doc_id"))
       .join(shared, Seq("doc_id"), "left_outer")
       .na.fill(0L, Seq("n_shared_grams"))
@@ -1374,7 +1350,7 @@ object Dedup {
       // the df aggregate and the hits probe side — without the cut the
       // explode + md5 pass (the CPU cost center) runs once per branch
       // (the dup filter broadcasts, so no exchange exists to reuse).
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val dup = grams.groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") >= 2 && col("df") <= maxDf)
@@ -1432,7 +1408,7 @@ object Dedup {
         graft.functions.Md5Prefix(col("gram"), 12).as("h"))
       // r17 (guide §2.4, the e01 lesson): two consumers (rep aggregate +
       // hits join) — one explode+md5 pass, structurally.
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val rep = grams.groupBy(col("doc_id"), col("h"))
       .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
       .select(col("doc_id"), col("h"))
@@ -1480,7 +1456,7 @@ object Dedup {
   def clipSpansQuery(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     // checkpoint: the span detection must run once, not once per join branch
-    clipSpans(docs, dupSpans(docs).localCheckpoint(true))
+    clipSpans(docs, dupSpans(docs).transform(Cut.eager))
   }
 
   // ---------------------------------------------------------------- wiring
@@ -1511,27 +1487,8 @@ object Dedup {
     * the IDENTICAL signature arithmetic, banding, candidate join, and
     * division-free threshold (see [[minHashPortableQuery]] Scaladoc for
     * the bucket-cap data-regime note). */
-  private def minHashPortableOracle: String = {
-    val sigSelects = PortablePerms.zipWithIndex.map { case ((a, b), i) =>
-      s"MIN((h * $a + $b) % $PortableP) AS s$i"
-    }.mkString(",\n               ")
-    val bandCases = (0 until 4).map { bd =>
-      val key = (0 until 4).map(r => s"CAST(s${bd * 4 + r} AS VARCHAR)")
-        .mkString(" || ':' || ")
-      s"WHEN $bd THEN $key"
-    }.mkString(" ")
-    s"""
-      WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-                 WHERE len(string_split(text, ' ')) >= 3),
-      g AS (SELECT DISTINCT doc_id,
-              CAST(('0x' || substr(md5(array_to_string(toks[i : i + 2], ' ')), 1, 12)) AS BIGINT) AS h
-            FROM d, UNNEST(range(1, len(toks) - 1)) AS r(i)),
-      sig AS (SELECT doc_id,
-               $sigSelects
-              FROM g GROUP BY doc_id),
-      bnd AS (SELECT doc_id, b AS band_idx,
-               CASE b $bandCases END AS band_hash
-              FROM sig, UNNEST([0, 1, 2, 3]) AS u(b)),
+  private def minHashPortableOracle: String = s"""
+      WITH $portableBndCtes,
       cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
                FROM bnd x JOIN bnd y
                  ON x.band_idx = y.band_idx AND x.band_hash = y.band_hash
@@ -1549,23 +1506,11 @@ object Dedup {
       JOIN szs nb ON nb.doc_id = i.b
       WHERE i.inter * 2 >= na.n + nb.n - i.inter
       ORDER BY i.a, i.b"""
-  }
 
-  /** Generated from [[PortablePerms]]/[[PortableP]]/[[MaxBucket]] — the
-    * oracle replays signatures, banding, the REF-side bucket stats WITH
-    * the hot-bucket witness cap, the cross-only candidate join, and the
-    * exact-Jaccard verify. Unlike [[minHashPortableOracle]] there is no
-    * bucket-regime assumption: the cap itself is in the SQL. */
-  /** The portable cross-corpus LSH oracle CTE chain through `ins`
-    * (candidate pairs with intersection counts), parameterized by SQL
-    * predicates selecting the incoming and reference doc sets over the
-    * shared per-doc `bnd` band table — ONE definition consumed by the
-    * b12_cross_portable oracle and the e03 ingest-pipeline oracle (the
-    * Bm25RankedCtes no-drift device). Callers apply the verification
-    * threshold (`inter * 2 >= na + nb - inter`) themselves. */
   /** The shared per-doc portable shingle/signature/band CTE prefix
     * (`d`, `g`, `sig`, `bnd`) — one definition consumed by
-    * [[portableCrossCtes]] AND the b10_stream_band_index oracle (the
+    * [[minHashPortableOracle]], [[portableCrossCtes]] AND the
+    * b10_stream_band_index oracle (the
     * streaming refresher's served band table IS `bnd`, so the oracle's
     * one-shot replay and the cross-dedup replay can never drift). */
   private[graft] def portableBndCtes: String = {
@@ -1590,6 +1535,13 @@ object Dedup {
               FROM sig, UNNEST([0, 1, 2, 3]) AS u(b))"""
   }
 
+  /** The portable cross-corpus LSH oracle CTE chain through `ins`
+    * (candidate pairs with intersection counts), parameterized by SQL
+    * predicates selecting the incoming and reference doc sets over the
+    * shared per-doc `bnd` band table — ONE definition consumed by the
+    * b12_cross_portable oracle and the e03 ingest-pipeline oracle (the
+    * Bm25RankedCtes no-drift device). Callers apply the verification
+    * threshold (`inter * 2 >= na + nb - inter`) themselves. */
   private[graft] def portableCrossCtes(newFilter: String, refFilter: String): String = {
     s"""$portableBndCtes,
       bn AS (SELECT * FROM bnd WHERE $newFilter),
@@ -1614,9 +1566,14 @@ object Dedup {
               GROUP BY c.a, c.b)"""
   }
 
-  /** One oracle body for every cross-corpus probe variant — only the
-    * corpus-split predicates differ (path snapshots: even/odd; bucketed
-    * layout: e08's arrival split). */
+  /** Generated from [[PortablePerms]]/[[PortableP]]/[[MaxBucket]] — the
+    * oracle replays signatures, banding, the REF-side bucket stats WITH
+    * the hot-bucket witness cap, the cross-only candidate join, and the
+    * exact-Jaccard verify. Unlike [[minHashPortableOracle]] there is no
+    * bucket-regime assumption: the cap itself is in the SQL. One oracle
+    * body for every cross-corpus probe variant — only the corpus-split
+    * predicates differ (path snapshots: even/odd; bucketed layout: e08's
+    * arrival split). */
   private def crossOracle(newFilter: String, refFilter: String): String = s"""
       WITH ${portableCrossCtes(newFilter, refFilter)}
       SELECT i.a AS new_id, i.b AS ref_id, i.inter, na.n AS na, nb.n AS nb,

@@ -1,5 +1,6 @@
 package graft.harvest
 
+import graft.Cut
 import java.io.File
 import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
@@ -81,7 +82,7 @@ object HarvestJob {
     * new id is needed before the merge plan is built. */
   private[graft] def harvest(bindings: DataFrame, storeDir: String,
       asOf: java.sql.Timestamp, meltVars: Seq[String], sqliteArtifact: Option[String],
-      swap: (DataFrame, String) => Unit): Result = {
+      swap: (DataFrame, String) => Unit): Result = Cut.scope {
     val spark = bindings.sparkSession
     val at: Column = lit(asOf)
     val Seq(readObs, validObs, termsObs, fieldsObs) = Seq.fill(4)(Observation())
@@ -108,27 +109,18 @@ object HarvestJob {
       .withColumn("__first", firstOfConcept)
       .observe(validObs, count(lit(1)).as("n"), count(when(col("__first"), 1)).as("terms"))
       .drop("__first")
-      .localCheckpoint(true)
+      .transform(Cut.eager)
 
     val existingTerms = Store.readTableOr(spark, storeDir, "terms", Schemas.terms)
     val (existingCount, nextTermId) = sizeAndNextId(existingTerms)
 
-    // localCheckpoint, not cache: cache() keeps the lineage back to the
-    // CURRENT store's parquet, and the first swap DELETES those files
-    // before the second table is written — on a cluster, recomputing a
-    // lost cached partition of `allFields` (whose lineage runs through
-    // `terms` → the old terms parquet) would read deleted paths. The
-    // eager checkpoint cuts the lineage before any swap runs. Trade-off:
-    // localCheckpoint blocks are UNRECOVERABLE on executor loss — this
-    // converts the silent wrong-path recompute into a hard job failure
-    // (fail-fast; the job re-runs idempotently). Reliable checkpointing
-    // would add fault tolerance at the cost of a distributed-FS
-    // round-trip per table.
+    // A cut, not a cache: the first swap deletes the current store's
+    // files, which a cached frame's lineage still reads ([[Cut]]).
     val terms = Merge.upsertTerms(existingTerms, valid.select(col("concept").as("uri")), at,
         startId = Some(nextTermId))
       .observe(termsObs, count(lit(1)).as("n"),
         count(when(col("updated_at") === at && col("created_at") =!= at, 1)).as("updated"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
 
     val existingFields = Store.readTableOr(spark, storeDir, "term_fields", Schemas.termFields)
     val (existingFieldCount, nextFieldId) = sizeAndNextId(existingFields)
@@ -136,7 +128,7 @@ object HarvestJob {
     val allFields = Merge.insertIfAbsent(existingFields,
         Merge.resolveFk(Transform.meltAll(valid, meltVars), terms), at, startId = Some(nextFieldId))
       .observe(fieldsObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
 
     val termCount = observed(termsObs)
     val fieldCount = observed(fieldsObs)

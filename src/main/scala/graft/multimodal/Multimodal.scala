@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -341,7 +341,7 @@ object Multimodal {
     s.createDataFrame(out, StructType(Seq(
       StructField("asset_id", LongType, nullable = false),
       StructField("dhash", LongType, nullable = false))))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
   }
 
   /** B14 (r7): image NEAR-dup clustering by perceptual hash — the
@@ -378,7 +378,7 @@ object Multimodal {
     // hash-granularity reduction: one row per distinct sketch
     val hashes = df.groupBy($"dhash")
       .agg(count(lit(1)).as("n_assets"), min($"asset_id").as("min_asset"))
-      .localCheckpoint(true) // chunk explode + two label joins read it
+      .transform(Cut.eager) // chunk explode + two label joins read it
     val chunks = hashes.select($"dhash",
       explode(expr("transform(sequence(0, 6), c -> " +
         "struct(c AS ci, shiftright(dhash, 9 * c) % 512 AS cv))")).as("ch"))

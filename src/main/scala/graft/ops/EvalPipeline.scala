@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Cut, Tables}
 
 /** E2E EVALUATION-SET construction pipeline (e05) — the fifth flagship
   * composition: e01 curates the training corpus, e02 serves it, e03
@@ -47,7 +47,7 @@ object EvalPipeline {
   val CapPerLang = 10
 
   /** The pipeline over any `(doc_id, text, lang, source)` frame. */
-  def evalSuite(docs: DataFrame, capPerLang: Int = CapPerLang): DataFrame = {
+  def evalSuite(docs: DataFrame, capPerLang: Int = CapPerLang): DataFrame = Cut.scope {
     val spark = docs.sparkSession
     import spark.implicits._
     val nTok = size(split($"text", " "))
@@ -57,7 +57,7 @@ object EvalPipeline {
       .select($"doc_id", $"text", $"lang", $"source",
         pmod(conv(substring(md5($"source"), 1, 8), 16, 10).cast("long"),
           lit(100L)).as("gb"))
-      .cache() // the pool filter and the gram build both consume it
+      .transform(Cut.cached) // the pool filter and the gram build both consume it
     val evalPool = qual.filter($"gb" >= 90)
     val g8 = qual.select($"doc_id", $"gb", split($"text", " ").as("toks"))
       .filter(size($"toks") >= 8)
@@ -76,8 +76,7 @@ object EvalPipeline {
       .withColumn("slot", row_number().over(w))
       .filter($"slot" <= capPerLang)
       .select($"lang", $"slot", $"doc_id", $"source", $"n_tokens")
-      .localCheckpoint(true) // budget-sized; lets the qual cache release
-    qual.unpersist()
+      .transform(Cut.eager) // budget-sized
     out.orderBy($"lang", $"slot")
   }
 

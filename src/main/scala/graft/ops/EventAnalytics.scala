@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,8 +32,8 @@ object EventAnalytics {
     * for step k−1 (the earliest-qualifying-chain semantics: t₁ = min ts
     * of step 1, tₖ = min ts of step k with ts > tₖ₋₁). Per step: one
     * filter + one per-user min + one user_id equi-join against the
-    * previous survivor set. Each survivor frame is eagerly
-    * localCheckpoint'd — it feeds both the next step's join and its own
+    * previous survivor set. Each survivor frame is an eager
+    * [[graft.Cut]] — it feeds both the next step's join and its own
     * count branch, and without the cut step k would re-execute steps
     * 1..k−1 once per downstream branch. */
   def funnel(events: DataFrame,
@@ -49,7 +49,7 @@ object EventAnalytics {
           .join(survivors.select(col("user_id"), col("t").as("t_prev")), Seq("user_id"))
           .filter(col("ts") > col("t_prev"))
           .groupBy(col("user_id")).agg(min(col("ts")).as("t"))
-        ).localCheckpoint(true)
+        ).transform(Cut.eager)
       survivors.agg(count(lit(1)).as("n_users"))
         .select(lit(i + 1).as("step_idx"), lit(st).as("step"), col("n_users"))
     }
@@ -433,7 +433,7 @@ object EventAnalytics {
       .agg(max(col("us")).as("recency_us"),
         count(lit(1)).as("frequency"),
         sum(col("cents")).as("monetary_cents"))
-      .localCheckpoint(true) // feeds three rank passes + the total
+      .transform(Cut.eager) // feeds three rank passes + the total
     val tot = base.agg(count(lit(1)).as("n_users"))
     // exact ntile(5) from the distributed row rank: rank rn under
     // (metric, user_id) via the two-level device, then the closed form
@@ -548,7 +548,7 @@ object EventAnalytics {
   def madOutliers(events: DataFrame, k: Int = 8): DataFrame = {
     val e = events.select(col("event_id"), col("event_type"),
       (col("value").cast("decimal(12,2)") * 100).cast("long").as("cents"))
-      .localCheckpoint(true) // scanned by med, dev, and the output filter
+      .transform(Cut.eager) // scanned by med, dev, and the output filter
     val med = lowerMedian(e, "event_type", "cents")
       .withColumnRenamed("med", "med_c")
     val dev = e.join(broadcast(med), Seq("event_type"))
@@ -582,7 +582,7 @@ object EventAnalytics {
     activeUsersOfUserDays(
       events.select(col("user_id"), to_date(col("ts")).as("day"))
         .distinct()
-        .localCheckpoint(true)) // feeds dau + the 7-day explode
+        .transform(Cut.eager)) // feeds dau + the 7-day explode
 
   /** [[activeUsers]] core over an already-distinct `(user_id, day)`
     * frame — shared with the streaming refresh twin
@@ -629,7 +629,7 @@ object EventAnalytics {
       .select(to_date(col("signup_ts")).as("cohort_day"),
         expr("(unix_micros(cast(purchase_ts as timestamp)) - " +
           "unix_micros(cast(signup_ts as timestamp))) div 1000000").as("latency_s"))
-      .localCheckpoint(true) // feeds the count + the median device
+      .transform(Cut.eager) // feeds the count + the median device
     val n = conv.groupBy(col("cohort_day")).agg(count(lit(1)).as("n_converted"))
     val med = lowerMedian(conv, "cohort_day", "latency_s")
       .withColumnRenamed("med", "median_latency_s")
@@ -667,14 +667,14 @@ object EventAnalytics {
     val pu = events.groupBy(col("user_id"))
       .agg(to_date(min(col("ts"))).as("first_day"),
         to_date(max(col("ts"))).as("last_day"))
-      .localCheckpoint(true) // user-scale; horizon and u both consume it
+      .transform(Cut.eager) // user-scale; horizon and u both consume it
     val h = pu.agg(max(col("last_day")).as("horizon"))
     val u = pu.crossJoin(broadcast(h))
       .select(col("user_id"),
         expr("datediff(last_day, first_day) div 7").cast("int").as("week"),
         when(datediff(col("horizon"), col("last_day")) >= censorDays, 1L)
           .otherwise(0L).as("churned"))
-      .localCheckpoint(true) // user-scale; wk and the axis both consume it
+      .transform(Cut.eager) // user-scale; wk and the axis both consume it
     val wk = u.groupBy(col("week"))
       .agg(sum(col("churned")).as("n_churned"),
         sum(lit(1L) - col("churned")).as("n_censored"))
@@ -721,7 +721,7 @@ object EventAnalytics {
     val uw = events.select(col("user_id"),
         expr("((unix_micros(cast(ts as timestamp)) div 1000000) div 86400) div 7")
           .as("week"))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Cut.eager)
     val firstWeek = uw.groupBy(col("user_id")).agg(min(col("week")).as("fw"))
     val prev = uw.select(col("user_id"), (col("week") + 1).as("week"),
       lit(1).as("was_active"))
@@ -782,7 +782,7 @@ object EventAnalytics {
         (col("value").cast("decimal(12,2)") * 100).cast("long").as("cents"))
       .select(pmod(expr("(us - pmod(us, 3600000000)) div 3600000000") + 72,
         lit(168)).as("cell"), col("cents"))
-      .localCheckpoint(true) // the median device and the flag scan share it
+      .transform(Cut.eager) // the median device and the flag scan share it
     val med = lowerMedian(e, "cell", "cents")
     e.join(broadcast(med), Seq("cell"))
       .groupBy(col("cell"))
@@ -1034,7 +1034,7 @@ object EventAnalytics {
       .select(col("event_type"), col("day").cast("long").as("day"),
         coalesce(col("v"), lit(0L)).as("v_cents"))
       .withColumn("dow", pmod(col("day"), lit(7L)))
-      .localCheckpoint(true) // feeds the phase table AND the join
+      .transform(Cut.eager) // feeds the phase table AND the join
     val phase = grid.groupBy(col("event_type"), col("dow"))
       .agg(sum(col("v_cents")).as("phase_sum"), count(lit(1)).as("phase_n"))
     grid.join(phase, Seq("event_type", "dow"))

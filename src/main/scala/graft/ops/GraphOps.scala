@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -98,7 +98,7 @@ object GraphOps {
     // downstream job, so the first task to touch a partition persists
     // it and the probe side reads the stored blocks — one adjacency
     // build per listing, no extra materialization job.
-    val adj = orientedAdjacency(edgeSet).localCheckpoint(false)
+    val adj = orientedAdjacency(edgeSet).transform(Cut.lazily)
     // re-derive the oriented edges by EXPLODING the adjacency — each edge
     // arrives already carrying its source's array, so the closing probe
     // is ONE join (on dst) instead of two.
@@ -166,23 +166,19 @@ object GraphOps {
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
   }
 
-  /** Runs `f` over (cached edges, triangle listing) and eagerly
-    * checkpoints the (small, top-k-sized) result so both caches can be
-    * released before returning (r6-ADVICE: callers that never clearCache
-    * — a long-running query loop — must not accumulate cached
-    * partitions). The listing has one row per oriented edge (src, dst)
+  /** Runs `f` over (cached edges, triangle listing) and eagerly cuts the
+    * (small, top-k-sized) result, so the edge cache is freed on return
+    * ([[graft.Cut]]). The listing has one row per oriented edge (src, dst)
     * that closes at least one triangle, carrying `common` = the sorted
     * array of closing vertices — every triangle {src, dst, c} appears
     * exactly once, at its (deg, id)-smallest edge. */
   private def overTriangles(s: SparkSession, edgeSet: DataFrame)(
-      f: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+      f: (DataFrame, DataFrame) => DataFrame): DataFrame = Cut.scope {
     // edges feed degree + orientation (two consumers); the oriented
     // adjacency feeds its own explode + the probe join.
-    val edges = edgeSet.cache()
+    val edges = edgeSet.transform(Cut.cached)
     val tri = buildTriangleListing(edges)
-    val out = f(edges, tri).localCheckpoint(true)
-    edges.unpersist()
-    out
+    Cut.eager(f(edges, tri))
   }
 
   /** Dir-based twin of [[overTriangles]] for the declared queries: both
@@ -323,7 +319,7 @@ object GraphOps {
     // members, and the fixpoint trace are unchanged. Guide §2.4.
     val sym = edgeSet.select(col("u").as("x"), col("v").as("nbr"))
       .unionAll(edgeSet.select(col("v").as("x"), col("u").as("nbr")))
-      .localCheckpoint(true) // consumed every round (the lpaOf discipline)
+      .transform(Cut.eager) // consumed every round (the lpaOf discipline)
     def inducedEndpoints(alive: DataFrame): DataFrame = sym
       .join(alive.select(col("p").as("x")), Seq("x"), "left_semi")
       .join(alive.select(col("p").as("nbr")), Seq("nbr"), "left_semi")
@@ -335,7 +331,7 @@ object GraphOps {
     // Safe because the count fully materializes every partition BEFORE
     // the next round's references read the frame.
     var alive = sym.select(col("x").as("p"))
-      .distinct().localCheckpoint(false)
+      .distinct().transform(Cut.lazily)
     var aliveCount = alive.count()
     var r = 0
     var converged = false
@@ -343,7 +339,7 @@ object GraphOps {
       val next = inducedEndpoints(alive)
         .groupBy(col("p")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("p"))
-        .localCheckpoint(false)
+        .transform(Cut.lazily)
       val nextCount = next.count()
       // next ⊆ alive (membership requires surviving the induced-degree
       // test), so equal counts mean equal sets: fixpoint
@@ -356,7 +352,7 @@ object GraphOps {
       .groupBy(col("p")).agg(count(lit(1)).as("core_degree"))
       .select(col("p").as("part_key"), col("core_degree"))
       .orderBy(col("part_key"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     out
   }
 
@@ -393,17 +389,17 @@ object GraphOps {
   def lpaOf(edgeSet: DataFrame, rounds: Int): DataFrame = {
     val sym = edgeSet.select(col("u").as("x"), col("v").as("nbr"))
       .unionAll(edgeSet.select(col("v").as("x"), col("u").as("nbr")))
-      .localCheckpoint(true) // consumed every round
+      .transform(Cut.eager) // consumed every round
     var labels = sym.select(col("x")).distinct()
       .select(col("x"), col("x").as("label"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     for (_ <- 1 to rounds) {
       labels = sym.join(labels.select(col("x").as("nbr"), col("label")), Seq("nbr"))
         .groupBy(col("x"), col("label")).agg(count(lit(1)).as("cnt"))
         .groupBy(col("x"))
         .agg(min_by(col("label"), struct((-col("cnt")).as("nc"), col("label")))
           .as("label"))
-        .localCheckpoint(true)
+        .transform(Cut.eager)
     }
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("community_size"))
     labels.join(sizes, Seq("label"))
@@ -434,8 +430,8 @@ object GraphOps {
     * normalized edges (explode of actual triangles only), one combinable
     * (u, v) count, one semi-join drops light edges. The first round
     * reuses the materialized triangle-listing snapshot; later rounds run
-    * on the (sharply shrinking) survivor set. Per-round lineage cut via
-    * localCheckpoint, fixpoint early-exit (count equality on a
+    * on the (sharply shrinking) survivor set. Per-round lineage cut
+    * ([[graft.Cut]]), fixpoint early-exit (count equality on a
     * monotonically shrinking set). */
   def kTruss(s: SparkSession, edgeSet: DataFrame, k: Int, rounds: Int,
       firstTri: Option[DataFrame] = None): DataFrame = {
@@ -444,7 +440,7 @@ object GraphOps {
     // r17 (VERDICT r16 #4, guide §1.2): lazy checkpoint + count — the
     // count materializes the checkpoint in the same job (the kCore
     // fusion; one job per round instead of two).
-    var edges = edgeSet.select(col("u"), col("v")).localCheckpoint(false)
+    var edges = edgeSet.select(col("u"), col("v")).transform(Cut.lazily)
     var cnt = edges.count()
     var r = 0
     var converged = false
@@ -457,9 +453,9 @@ object GraphOps {
       // lineage), and the converged path's final readout then JOINS the
       // stored rows instead of re-executing the whole triangle listing
       // (supportOf(lastTri) used to replan the kernel once more).
-      val sup = supportOf(tri).localCheckpoint(false)
+      val sup = supportOf(tri).transform(Cut.lazily)
       val heavy = sup.filter(col("support") >= k - 2)
-      val next = edges.join(heavy, Seq("u", "v"), "left_semi").localCheckpoint(false)
+      val next = edges.join(heavy, Seq("u", "v"), "left_semi").transform(Cut.lazily)
       val n = next.count()
       // next ⊆ edges, so equal counts mean equal sets: fixpoint
       converged = n == cnt
@@ -582,20 +578,20 @@ object GraphOps {
     * set, lineage cut per round. */
   private def distancesFrom(sym: DataFrame, seed: DataFrame,
       rounds: Int): DataFrame = {
-    var dist = seed.select(col("x"), lit(0).as("dist")).localCheckpoint(true)
+    var dist = seed.select(col("x"), lit(0).as("dist")).transform(Cut.eager)
     for (i <- 1 to rounds) {
       val frontier = dist.filter(col("dist") === i - 1).select(col("x"))
       val next = sym.join(frontier, Seq("x"), "left_semi")
         .select(col("nbr").as("x")).distinct()
         .join(dist.select(col("x")), Seq("x"), "left_anti")
         .select(col("x"), lit(i).as("dist"))
-      dist = dist.unionAll(next).localCheckpoint(true)
+      dist = dist.unionAll(next).transform(Cut.eager)
     }
     dist
   }
 
   def bfsOf(edgeSet: DataFrame, rounds: Int): DataFrame = {
-    val sym = symOf(edgeSet).localCheckpoint(true)
+    val sym = symOf(edgeSet).transform(Cut.eager)
     val dist = distancesFrom(sym, hubSeed(sym), rounds)
     val hist = dist.groupBy(col("dist")).agg(count(lit(1)).as("n_vertices"))
     val unreached = sym.select(col("x")).distinct()
@@ -624,7 +620,7 @@ object GraphOps {
     * only grow with more rounds). Cost is exactly two runs of the
     * [[distancesFrom]] kernel; the summary is two 1-row aggregates. */
   def diameterBoundOf(edgeSet: DataFrame, rounds: Int): DataFrame = {
-    val sym = symOf(edgeSet).localCheckpoint(true)
+    val sym = symOf(edgeSet).transform(Cut.eager)
     val seed1 = hubSeed(sym)
     val d1 = distancesFrom(sym, seed1, rounds)
     val seed2 = d1.agg(
@@ -682,16 +678,16 @@ object GraphOps {
   def ssspOf(wEdges: DataFrame, rounds: Int): DataFrame = {
     val sym = wEdges.select(col("u").as("x"), col("v").as("nbr"), col("len"))
       .unionAll(wEdges.select(col("v").as("x"), col("u").as("nbr"), col("len")))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val seed = sym.groupBy(col("x")).agg(count(lit(1)).as("d"))
       .agg(min_by(col("x"), struct((-col("d")).as("nd"), col("x"))).as("x"))
-    var dist = seed.select(col("x"), lit(0L).as("dist")).localCheckpoint(true)
+    var dist = seed.select(col("x"), lit(0L).as("dist")).transform(Cut.eager)
     for (_ <- 1 to rounds) {
       val relaxed = sym.join(dist, Seq("x"))
         .select(col("nbr").as("x"), (col("dist") + col("len")).as("dist"))
       dist = dist.unionAll(relaxed)
         .groupBy(col("x")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
+        .transform(Cut.eager)
     }
     dist.select(col("x").as("part_key"), col("dist").as("dist_micro"))
       .orderBy(col("part_key"))
@@ -827,9 +823,9 @@ object GraphOps {
     // r17 (guide §2.4): the edge table feeds THREE joins and its builder
     // (orders ⋈ lineitem + distinct) is the query's expensive subplan —
     // materialize once; a1 likewise feeds the h1 round AND the readout.
-    val edges = edges0.localCheckpoint(true)
+    val edges = edges0.transform(Cut.eager)
     val a1 = edges.groupBy(col("p")).agg(count(lit(1)).as("a1"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val h1 = edges.join(a1, "p").groupBy(col("c")).agg(sum(col("a1")).as("h1"))
     val a2 = edges.join(h1, "c").groupBy(col("p")).agg(sum(col("h1")).as("a2"))
     a2.join(a1, "p")
@@ -864,10 +860,10 @@ object GraphOps {
     * combinable per-community aggregates — nothing beyond the LPA
     * round shape; the edge count is ONE driver scalar (metadata). */
   def modularityOf(edgeSet: DataFrame, rounds: Int): DataFrame = {
-    val edges = edgeSet.localCheckpoint(true) // m + intra + degrees consume it
+    val edges = edgeSet.transform(Cut.eager) // m + intra + degrees consume it
     val labels = lpaOf(edges, rounds)
       .select(col("part_key").as("p"), col("community"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val m = edges.count()
     val intra = edges
       .join(labels.select(col("p").as("u"), col("community").as("cu")), "u")
@@ -913,7 +909,7 @@ object GraphOps {
     import edgeSet.sparkSession.implicits._
     val labels = lpaOf(edgeSet, LpaRounds)
       .select($"part_key".as("l_partkey"), $"community")
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val sizes = labels.groupBy($"community").agg(count(lit(1)).as("n_members"))
     val li = lineitem.select($"l_partkey",
       ($"l_extendedprice".cast("decimal(12,2)") * 100).cast("long").as("cents"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Cut, Tables}
 import graft.harvest.{HarvestJob, Merge, Schemas, Sqlite, Transform, Validate}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -223,7 +223,7 @@ object HarvestQueries {
     import s.implicits._
     // eager cut, not cache: three subtrees of ONE plan read it — an
     // evicted cache block would silently re-run the distinct per subtree
-    val b = Transform.distinctRows(bindings(s, dir)).localCheckpoint(true)
+    val b = Transform.distinctRows(bindings(s, dir)).transform(Cut.eager)
     val v = Transform.filterValidBindings(b)
     val ex = existingTerms(s, dir)
     // the row-gate predicate itself, as one conditional count

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Cut, Tables}
 import graft.dedup.Dedup
 
 /** E3 (r7): end-to-end INCREMENTAL INGEST pipeline (e03) — the
@@ -59,11 +59,11 @@ object IngestPipeline {
     * absent they derive inline.
     * Content is identical either way. */
   def ingestReport(arrivalsIn: DataFrame, referenceIn: DataFrame,
-      refTables: Option[(DataFrame, DataFrame, DataFrame)] = None): DataFrame = {
+      refTables: Option[(DataFrame, DataFrame, DataFrame)] = None): DataFrame = Cut.scope {
     val spark = arrivalsIn.sparkSession
     import spark.implicits._
-    val arrivals = arrivalsIn.select($"doc_id", $"text", $"source").cache()
-    val reference = referenceIn.select($"doc_id", $"text").cache()
+    val arrivals = arrivalsIn.select($"doc_id", $"text", $"source").transform(Cut.cached)
+    val reference = referenceIn.select($"doc_id", $"text").transform(Cut.cached)
     // 1. quality gate — e01 stage-1 arithmetic (cross-engine-proven
     // double compare)
     val nTok = size(split($"text", " "))
@@ -71,7 +71,7 @@ object IngestPipeline {
     val qual = arrivals
       .filter(nTok >= 5 && avgLen >= 3.0 && avgLen <= 12.0)
       .select($"doc_id", $"text", sha2(Dedup.canonicalText($"text"), 256).as("sha"))
-      .cache()
+      .transform(Cut.cached)
     // 2. exact cross-dedup: drop arrivals whose canonical sha the
     // reference already holds, and batch-internal copies after the
     // first (min doc_id per sha) — insert-if-absent semantics
@@ -83,7 +83,7 @@ object IngestPipeline {
       .filter($"doc_id" === $"first_id")
       .join(refSha, Seq("sha"), "left_anti")
       .select($"doc_id", $"text")
-      .localCheckpoint(true) // lineage cut before the LSH stage
+      .transform(Cut.eager) // lineage cut before the LSH stage
     // 3. near-dedup vs the reference only
     val hits = (refTables match {
       case Some((shRef, bRef, statsRef)) =>
@@ -96,16 +96,14 @@ object IngestPipeline {
       .join(qual.select($"doc_id", lit(1L).as("q")), Seq("doc_id"), "left_outer")
       .join(exactNew.select($"doc_id", lit(1L).as("e")), Seq("doc_id"), "left_outer")
       .join(hits.select($"doc_id", lit(1L).as("h")), Seq("doc_id"), "left_outer")
-    val report = flags.groupBy($"source").agg(
+    flags.groupBy($"source").agg(
         count(lit(1)).as("n_arrived"),
         sum(when($"q".isNull, 1L).otherwise(0L)).as("n_quality_fail"),
         sum(when($"q".isNotNull && $"e".isNull, 1L).otherwise(0L)).as("n_exact_dup"),
         sum(when($"e".isNotNull && $"h".isNotNull, 1L).otherwise(0L)).as("n_near_dup"),
         sum(when($"e".isNotNull && $"h".isNull, 1L).otherwise(0L)).as("n_inserted"))
       .orderBy($"source")
-      .localCheckpoint(true)
-    arrivals.unpersist(); reference.unpersist(); qual.unpersist()
-    report
+      .transform(Cut.eager)
   }
 
   def ingestQuery(s: SparkSession, dir: String): DataFrame = {

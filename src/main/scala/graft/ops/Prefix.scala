@@ -32,8 +32,8 @@ import org.apache.spark.sql.functions._
   * requirement the one-window form has. `bin` must be coarser than
   * `order` (equal bins ⇒ equal order prefixes up to in-bin ties).
   *
-  * Callers that feed the same frame to both levels should
-  * `localCheckpoint(true)` it first (all four gated call sites do).
+  * Callers that feed the same frame to both levels should cut it first
+  * with [[graft.Cut.eager]] (all four gated call sites do).
   */
 object Prefix {
   def prefixSum2L(df: DataFrame, part: Seq[String], bin: String,

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Cut, Tables}
 import graft.dedup.Dedup
 
 /** E2E pretraining-data CURATION pipeline (e01) — the library's operators
@@ -59,7 +59,7 @@ object PretrainPipeline {
     // an evicted block silently re-runs the scan + sha aggregate per
     // consumer. The frame is survivor-id + text, tiny.
     val deduped = qual.join(keepers, Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     // 4. near-dup removal: portable MinHash-LSH verified pairs (Jaccard
     // ≥ 0.5, division-free) among survivors; drop every doc that appears
     // as the LARGER id of a pair — the deterministic keep-first rule
@@ -102,7 +102,7 @@ object PretrainPipeline {
         "transform(sequence(1, size(toks) - 7), i -> xxhash64(slice(toks, i, 8)))"))
         .as("gram"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val bench = g8.filter($"doc_id" % 50 === 0).select($"gram").distinct()
     val contaminated = g8.filter($"doc_id" % 50 =!= 0).join(bench, Seq("gram"))
       .select($"doc_id").distinct()
@@ -118,7 +118,7 @@ object PretrainPipeline {
           lit(numShards.toLong)).cast("int"))
       .withColumn("shard_pos", row_number().over(w))
       .select($"doc_id", $"n_tokens", $"shard", $"shard_pos")
-      .localCheckpoint(true) // small id/stat frame
+      .transform(Cut.eager) // small id/stat frame
     }
     out.orderBy($"shard", $"shard_pos")
   }

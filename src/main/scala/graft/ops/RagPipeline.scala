@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -43,11 +43,11 @@ object RagPipeline {
       .select($"query_id", $"rank", $"doc_id", $"score")
       // feeds candidate-pair gen (twice), the gram build's id filter, and
       // the survivor join — one materialization, retrieval-sized.
-      // localCheckpoint, not cache (r13, VERDICT r12 #5): under memory
+      // A cut, not a cache (r13, VERDICT r12 #5; [[graft.Cut]]): under memory
       // pressure a cache() eviction silently re-ran the BM25 corpus pass
       // per consumer — the suite's worst tail (1.9 s isolated vs 12.5 s
       // cold-cache). The eager checkpoint pins the retrieval-sized frame.
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val docs = corpus.select($"doc_id", $"text")
     val rdocs = docs.join(retrieved.select($"doc_id").distinct(), "doc_id")
     val grams = rdocs.select($"doc_id", split($"text", " ").as("toks"))
@@ -55,7 +55,7 @@ object RagPipeline {
       .select($"doc_id", explode(expr(
         "transform(sequence(1, size(toks) - 2), i -> array_join(slice(toks, i, 3), ' '))"))
         .as("gram"))
-      .distinct().localCheckpoint(true) // same eviction-recompute hazard
+      .distinct().transform(Cut.eager) // same eviction-recompute hazard
     val sizes = grams.groupBy($"doc_id").agg(count(lit(1)).as("ng"))
     val hi = retrieved.select($"query_id", $"rank".as("hi_rank"), $"doc_id".as("hi_doc"))
     val lo = retrieved.select($"query_id", $"rank".as("lo_rank"), $"doc_id".as("lo_doc"))

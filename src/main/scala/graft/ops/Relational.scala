@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -243,7 +243,7 @@ object Relational {
     val dv = Tables.lineitem(s, dir)
       .select($"l_quantity".cast("long").as("qty"))
       .groupBy($"qty").agg(count(lit(1)).as("w"))
-      .localCheckpoint(true) // total + the boundary scan
+      .transform(Cut.eager) // total + the boundary scan
     val n = dv.agg(sum($"w")).head.getLong(0)
     val w = org.apache.spark.sql.expressions.Window.orderBy($"qty")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -318,7 +318,7 @@ object Relational {
     // joins) — materialize its aggregate once instead of re-running the
     // upstream scan+groupBy per branch (exchange reuse dedupes only
     // identical exchanges, and the four subtrees here differ).
-    val names = names0.localCheckpoint(true)
+    val names = names0.transform(Cut.eager)
     val d = maxDist
     val k = d + 1
     // 0-based segment geometry for a string of length L (even partition,
@@ -374,7 +374,7 @@ object Relational {
       .join(probe.groupBy(col("key"))
         .agg(count(lit(1)).as("psz"), min(col("name_p")).as("pmin")),
         Seq("key"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val smallKeys = stats.filter(col("isz") <= maxBlock && col("psz") <= maxBlock)
     val hotKeys   = stats.filter(col("isz") > maxBlock || col("psz") > maxBlock)
     val fullPairs = idx.join(smallKeys.select(col("key")), Seq("key"))
@@ -557,7 +557,7 @@ object Relational {
         Seq(sum(col(nm)).as(s"s_$nm"), sum(col(nm) * col(nm)).as(s"ss_$nm")) } ++
       CorrMatrixPairs.map { case (a, b) => sum(col(a) * col(b)).as(s"sp_${a}_$b") }
     val m = base.groupBy($"l_returnflag").agg(aggs.head, aggs.tail: _*)
-      .localCheckpoint(true) // 3 rows; feeds one branch per pair
+      .transform(Cut.eager) // 3 rows; feeds one branch per pair
     CorrMatrixPairs.map { case (a, b) =>
       val nD = $"n".cast("double")
       val num = nD * col(s"sp_${a}_$b").cast("double") -
@@ -677,7 +677,7 @@ object Relational {
       .groupBy($"l_returnflag", $"price_c")
       .agg(sum($"qty").as("wsum"))
       .withColumn("bin", expr("price_c div 50000"))
-      .localCheckpoint(true) // feeds both prefix levels + the flag totals
+      .transform(Cut.eager) // feeds both prefix levels + the flag totals
     val tot = pv.groupBy($"l_returnflag").agg(sum($"wsum").as("total"))
     Prefix.prefixSum2L(pv, Seq("l_returnflag"), "bin", Seq($"price_c"), Seq("wsum"))
       .withColumnRenamed("run_wsum", "cum")
@@ -926,7 +926,7 @@ object Relational {
       .groupBy($"prio", $"cents")
       .agg(sum($"a").as("ca"), sum($"b").as("cb"))
       .withColumn("bin", expr("cents div 2500000"))
-      .localCheckpoint(true) // feeds totals, in-bin prefixes, bin totals
+      .transform(Cut.eager) // feeds totals, in-bin prefixes, bin totals
     val n = cc.groupBy($"prio").agg(sum($"ca").as("na"), sum($"cb").as("nb"))
     // r9: the shared two-level device (Prefix.prefixSum2L) replaces the
     // hand-rolled in-bin window + carry — identical values by the
@@ -1005,7 +1005,7 @@ object Relational {
       .groupBy($"prio", $"cents")
       .agg(sum($"a").as("ca"), sum($"b").as("cb"))
       .withColumn("bin", expr("cents div 2500000"))
-      .localCheckpoint(true) // feeds the two-level prefix twice
+      .transform(Cut.eager) // feeds the two-level prefix twice
     val terms = Prefix.prefixSum2L(cc, Seq("prio"), "bin", Seq($"cents"), Seq("ca", "cb"))
       .withColumn("c", $"ca" + $"cb")
       .withColumn("r2", lit(2) * (($"run_ca" + $"run_cb") - $"c") + $"c" + 1)
@@ -1054,7 +1054,7 @@ object Relational {
           sum(when($"prio" === k, 1L).otherwise(0L)).as(s"c_$n") }: _*)
       .withColumn("c", keys.map(k => col(s"c_${k._2}")).reduce(_ + _))
       .withColumn("bin", expr("cents div 2500000"))
-      .localCheckpoint(true) // feeds the two-level prefix twice
+      .transform(Cut.eager) // feeds the two-level prefix twice
     val ranked = Prefix.prefixSum2L(cc, Seq.empty, "bin", Seq($"cents"), Seq("c"))
       .withColumn("r2", lit(2) * ($"run_c" - $"c") + $"c" + 1)
     val aggs = keys.flatMap { case (_, n) =>
@@ -1149,7 +1149,7 @@ object Relational {
         when(yr === 1997, 1L).otherwise(0L).as("a"),
         when(yr === 1998, 1L).otherwise(0L).as("b"))
       .groupBy($"bucket").agg(sum($"a").as("c_1997"), sum($"b").as("c_1998"))
-      .localCheckpoint(true) // feeds the totals row and the share join
+      .transform(Cut.eager) // feeds the totals row and the share join
     val tot = buckets.agg(sum($"c_1997").as("na"), sum($"c_1998").as("nb"))
     buckets.crossJoin(broadcast(tot)) // 1-row totals side
       .select($"bucket", $"c_1997", $"c_1998",
@@ -1196,7 +1196,7 @@ object Relational {
         expr("l_suppkey div 63").as("w"),
         expr("shiftleft(CAST(1 AS BIGINT), CAST(l_suppkey % 63 AS INT))").as("b"))
       .groupBy($"flag", $"w").agg(expr("bit_or(b)").as("bits"))
-      .localCheckpoint(true) // sizes and the pair join both consume it
+      .transform(Cut.eager) // sizes and the pair join both consume it
     val sz = words.groupBy($"flag")
       .agg(sum(expr("bit_count(bits)").cast("long")).as("n"))
     val px = words.toDF("flag_a", "w", "ba")
@@ -1246,7 +1246,7 @@ object Relational {
         .as("digit"))
       .filter($"digit" > 0) // drop sign/zero rows the 1-9 axis can't carry
       .groupBy($"digit").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true) // ≤9 rows; the total must not re-scan orders
+      .transform(Cut.eager) // ≤9 rows; the total must not re-scan orders
     val exp = BenfordPpb.toDF("digit", "exp_ppb")
     val tot = obs.agg(sum($"n").as("total"))
     exp.join(obs, Seq("digit"), "left")
@@ -1273,7 +1273,7 @@ object Relational {
       .select(pmod(expr("sec div 86400") + 3, lit(7)).as("dow"),
         pmod(expr("sec div 3600"), lit(24)).as("hour"))
       .groupBy($"dow", $"hour").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true) // ≤168 rows; the total must not re-scan events
+      .transform(Cut.eager) // ≤168 rows; the total must not re-scan events
     val tot = cells.agg(sum($"n").as("total"))
     cells.crossJoin(broadcast(tot))
       .select($"dow", $"hour", $"n",
@@ -1396,7 +1396,7 @@ object Relational {
     // The checkpoint is cheap (|suppliers| rows) and feeds 2 consumers.
     val exact = Tables.lineitem(s, dir)
       .groupBy($"l_suppkey".as("key")).agg(count(lit(1)).as("exact_count"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val hash = cmHash(w) _
     val js = array((0 until d).map(lit): _*)
     val cms = exact.select(explode(js).as("j"),
@@ -1517,7 +1517,7 @@ object Relational {
     val cells = Tables.orders(s, dir)
       .groupBy($"o_orderpriority", $"o_orderstatus")
       .agg(count(lit(1)).as("obs"))
-      .localCheckpoint(true) // feeds row/col/total margins and the terms
+      .transform(Cut.eager) // feeds row/col/total margins and the terms
     val rowTot = cells.groupBy($"o_orderpriority").agg(sum($"obs").as("row_tot"))
     val colTot = cells.groupBy($"o_orderstatus").agg(sum($"obs").as("col_tot"))
     val total = cells.agg(sum($"obs").as("n"),
@@ -1576,7 +1576,7 @@ object Relational {
     // runtime exchange reuse dedupes it (the r16 e01 lesson).
     val cells = rows.groupBy($"l_returnflag", $"x", $"y")
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val cx = cells.groupBy($"l_returnflag", $"x").agg(sum($"c").as("cx"))
     val wx = Window.partitionBy($"l_returnflag").orderBy($"x")
       .rowsBetween(Window.unboundedPreceding, 0) // bounded discrete axis
@@ -1589,7 +1589,7 @@ object Relational {
         sum($"c" * $"r2x").as("gx"),
         sum($"c" * $"r2x" * $"r2x").as("gx2"))
       .withColumn("bin", expr("y div 100000"))
-      .localCheckpoint(true) // feeds the prefix and the carry
+      .transform(Cut.eager) // feeds the prefix and the carry
     // r9: the shared two-level device (Prefix.prefixSum2L) replaces the
     // hand-rolled in-bin window + carry; run_cy = c0 + r, so
     // r2y = 2·(run_cy − cy) + cy + 1 is the identical integer
@@ -1643,7 +1643,7 @@ object Relational {
     val cells = rows.groupBy($"l_returnflag", $"x", $"y")
       .agg(count(lit(1)).as("c"))
       .withColumn("ybin", expr("y div 100000"))
-      .localCheckpoint(true) // feeds 5 branches; the scan must run once
+      .transform(Cut.eager) // feeds 5 branches; the scan must run once
     // the bounded discrete x-domain (≤~50 quantities) — the same
     // boundedness the r8 probe-join formulation leaned on, collected
     // ONCE (domain-scale, never row-scale) to become window-expression
@@ -1671,7 +1671,7 @@ object Relational {
     // structurally, not per branch.
     val binTotals = cells.groupBy($"l_returnflag", $"ybin")
       .agg(tAggs.head, tAggs.tail: _*)
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val carry = binTotals.select(
       ($"l_returnflag" +: $"ybin" +:
         xs.map(j => coalesce(sum(col(s"t_$j")).over(wBins), lit(0L))
@@ -1757,7 +1757,7 @@ object Relational {
         round($"l_extendedprice" * 100).cast("long").as("cents"))
       .groupBy($"l_returnflag", $"cents").agg(count(lit(1)).as("c"))
       .withColumn("bin", expr("cents div 50000"))
-      .localCheckpoint(true) // feeds both prefix levels + the flag totals
+      .transform(Cut.eager) // feeds both prefix levels + the flag totals
     val n = cc.groupBy($"l_returnflag").agg(sum($"c").as("n"))
     val cum = Prefix.prefixSum2L(cc, Seq("l_returnflag"), "bin", Seq($"cents"), Seq("c"))
       .select($"l_returnflag", $"cents", $"run_c".as("hi"),
@@ -1804,7 +1804,7 @@ object Relational {
         round($"l_extendedprice" * 100).cast("long").as("cents"))
       .groupBy($"l_returnflag", $"cents").agg(count(lit(1)).as("c"))
       .withColumn("bin", expr("cents div 50000"))
-      .localCheckpoint(true) // feeds both prefix levels + the flag totals
+      .transform(Cut.eager) // feeds both prefix levels + the flag totals
     val n = cc.groupBy($"l_returnflag").agg(sum($"c").as("n"))
     val cum = Prefix.prefixSum2L(cc, Seq("l_returnflag"), "bin", Seq($"cents"), Seq("c"))
       .select($"l_returnflag", $"cents", $"run_c".as("hi"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -180,7 +180,7 @@ object Relational2 {
           .cast("long"), lit(k.toLong)).as("fold"), $"n_chars")
       .groupBy($"fold")
       .agg(count(lit(1)).as("n_val_docs"), sum($"n_chars").as("val_chars"))
-      .localCheckpoint(true) // k rows; the total must not re-scan the corpus
+      .transform(Cut.eager) // k rows; the total must not re-scan the corpus
     val tot = folds.agg(sum($"n_val_docs").as("total_docs"),
       sum($"val_chars").as("total_chars"))
     folds.crossJoin(broadcast(tot))
@@ -288,7 +288,7 @@ object Relational2 {
       .select($"doc_id", $"source", greatest($"n_chars", lit(1L)).as("w"),
         graft.functions.Md5Prefix($"doc_id".cast("string"), 14).as("h"))
       .withColumn("bin", expr("h div 281474976710656")) // 2^48: 256 md5 bins
-      .localCheckpoint(true) // feeds the prefix, the carry, and the total
+      .transform(Cut.eager) // feeds the prefix, the carry, and the total
     val tot = items.agg(sum($"w").as("tw"))
     // r9: the shared two-level device (Prefix.prefixSum2L); lo is the
     // EXCLUSIVE prefix = run_w − w (identical to the old c0 + r0 where

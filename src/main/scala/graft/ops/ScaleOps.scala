@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Cut
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -333,7 +334,7 @@ object ScaleOps {
     // materialize the manifest ONCE (r8 ADVICE: the counts action and
     // the semi-join side each re-scanned the key column across all
     // files); it is file-count-sized, so the eager cut is metadata-cheap
-    val mf = statsManifest(spark, path, key).localCheckpoint(true)
+    val mf = statsManifest(spark, path, key).transform(Cut.eager)
     val cnt = mf.agg(count(lit(1)).as("total"),
       sum(when(overlaps, 1L).otherwise(0L)).as("kept")).head()
     val keepMf = mf.where(overlaps).select(col("file").as("__keep_file"))

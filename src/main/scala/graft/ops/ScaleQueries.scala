@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -393,8 +393,8 @@ object ScaleQueries {
     * via [[graft.plans.PlanAudit.hasSkewJoin]] — the no-vacuous-gate
     * discipline. The hash-compared OUTPUT is identical to the plain
     * join (identity-under-rewrite, the salted-join contract). SINGLE
-    * execution (r9 final, stale doc fixed r10): the eager
-    * localCheckpoint runs THIS frame's queryExecution — AQE finalizes
+    * execution (r9 final, stale doc fixed r10): the eager cut
+    * ([[graft.Cut.eager]]) runs THIS frame's queryExecution — AQE finalizes
     * its stages there — the assert reads that same executed plan, and
     * the returned checkpoint serves the materialized rows, so the join
     * runs exactly once. */
@@ -444,11 +444,11 @@ object ScaleQueries {
       val out = fact.join(dim, Seq("skew_key"))
         .select($"l_orderkey", $"l_linenumber", $"skew_key", $"s_name")
         .orderBy($"l_orderkey", $"l_linenumber", $"skew_key")
-      // localCheckpoint executes THIS frame's query execution (AQE
+      // the eager cut executes THIS frame's query execution (AQE
       // materializes stages and re-plans from measured sizes) AND
       // pins the rows, so the caller's write reads the materialized
       // result instead of re-running the join a second time
-      val ck = out.localCheckpoint(true)
+      val ck = out.transform(Cut.eager)
       require(graft.plans.PlanAudit.hasSkewJoin(out),
         "b03_join_skew_aqe: AQE did not split the planted skew — the gate " +
           "would certify a plain shuffle join instead of the runtime rewrite")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -155,7 +155,7 @@ object TpchQueries {
     val pv = Tables.lineitem(s, dir)
       .groupBy($"l_partkey")
       .agg(sum2($"l_extendedprice").as("value"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val tot = pv.agg(castExact(sum($"value"), 2).as("total"), count(lit(1)).as("n_parts"))
     pv.crossJoin(broadcast(tot))
       .filter($"value" * $"n_parts" * 2 > $"total" * 3)
@@ -206,7 +206,7 @@ object TpchQueries {
       .filter($"l_shipdate" >= tsLit("1997-01-01") && $"l_shipdate" < tsLit("1997-07-01"))
       .groupBy($"l_suppkey")
       .agg(sumRev($"l_extendedprice", $"l_discount").as("total_rev"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val mx = sr.agg(max($"total_rev").as("mx"))
     sr.crossJoin(broadcast(mx)).filter($"total_rev" === $"mx")
       .join(broadcast(Tables.supplier(s, dir)), $"l_suppkey" === $"s_suppkey")
@@ -415,7 +415,7 @@ object TpchQueries {
       .join(broadcast(promo), $"l_partkey" === $"p_partkey")
       .groupBy($"l_suppkey")
       .agg(sum($"l_quantity".cast("long")).as("promo_qty"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val tot = sp.agg(sum($"promo_qty").as("tq"), count(lit(1)).as("ns"))
     sp.crossJoin(broadcast(tot))
       .filter($"promo_qty" * $"ns" * 10 > $"tq" * 11)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -196,22 +196,22 @@ object WorkflowQueries {
     def compose(a: DataFrame, b: DataFrame): DataFrame =
       a.toDF("node", "mid", "d1").join(b.toDF("mid", "ancestor", "d2"), "mid")
         .select($"node", $"ancestor", ($"d1" + $"d2").as("depth"))
-    // Cache policy: edges and the pow chain are cached (log-depth
-    // DataFrames of at most one row per node — trivial storage, and they
-    // drive the convergence counts), plus ONE cached final closure. The
-    // large per-round `longer` pieces are never cached: the loop never
-    // executes them (it only counts pow), and the closure's first
-    // materialization computes each of them exactly once from the cached
-    // pow chain. Nothing big is left pinned beyond the single result.
-    val edges = broaderEdges(s, dir).cache()
+    // Cache policy: edges and the pow chain are cached (log-depth, at most
+    // one row per node, and they drive the convergence counts), plus ONE
+    // cached final closure. The large per-round `longer` pieces are never
+    // cached: the loop only counts pow, and the closure's first
+    // materialization computes each of them once from the cached chain.
+    // The result reads these caches lazily, so they live until the
+    // caller's scope exits ([[graft.Cut]]).
+    val edges = broaderEdges(s, dir).transform(Cut.cached)
     var closure = edges
     var pow = edges
     while (pow.limit(1).count() > 0) {
       val longer = compose(closure, pow)
-      pow = compose(pow, pow).cache()
+      pow = compose(pow, pow).transform(Cut.cached)
       closure = closure.union(longer)
     }
-    closure.cache().orderBy($"node", $"depth")
+    closure.transform(Cut.cached).orderBy($"node", $"depth")
   }
 
   /** w07: PageRank over the `skos:broader` graph — which broad concepts
@@ -219,8 +219,8 @@ object WorkflowQueries {
     * vocabulary-importance ranking a SKOS consumer reports). Iterative
     * Lloyd-style fixpoint like k-means/CC, and like them built for the
     * cluster: per-iteration work is one equi-join + one map-side-
-    * combinable sum, ranks localCheckpoint per round (lineage cut), the
-    * edge list cached once and released.
+    * combinable sum, ranks cut per round, the edge list cached once
+    * ([[graft.Cut]]).
     *
     * Cross-engine EXACT: ranks live in integer nano-units (r₀ = 1e9);
     * each contribution is `(r * 85) div (100 * outdeg)` — integer
@@ -232,12 +232,12 @@ object WorkflowQueries {
     * (kMeans is bit-stable but not SQL-expressible; this one is both).
     * Nano-unit headroom: a node's rank is bounded by total mass
     * n×1e9 < 2^63 up to ~9e9 vertices; switch to micro-units beyond. */
-  def pageRank(s: SparkSession, dir: String, iters: Int = 3): DataFrame = {
+  def pageRank(s: SparkSession, dir: String, iters: Int = 3): DataFrame = Cut.scope {
     import s.implicits._
-    val edges = broaderEdges(s, dir).select($"node".as("u"), $"ancestor".as("v")).cache()
+    val edges = broaderEdges(s, dir).select($"node".as("u"), $"ancestor".as("v")).transform(Cut.cached)
     val deg = edges.groupBy($"u").agg(count(lit(1)).as("outdeg"))
     val nodes = edges.select($"u".as("node")).union(edges.select($"v".as("node")))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Cut.eager)
     var ranks = nodes.select($"node", lit(1000000000L).as("r"))
     for (_ <- 1 to iters) {
       val contrib = edges.join(deg, "u")
@@ -246,9 +246,8 @@ object WorkflowQueries {
         .groupBy($"node").agg(sum($"c").as("sc"))
       ranks = nodes.join(contrib, Seq("node"), "left_outer")
         .select($"node", (lit(150000000L) + coalesce($"sc", lit(0L))).as("r"))
-        .localCheckpoint(true) // per-iteration lineage cut, as in kMeans/CC
+        .transform(Cut.eager) // per-iteration lineage cut, as in kMeans/CC
     }
-    edges.unpersist()
     ranks.select($"node", $"r".as("pagerank_nano"),
         ($"r".cast("double") / 1e9).as("pagerank"))
       .orderBy($"node")
@@ -274,13 +273,13 @@ object WorkflowQueries {
   /** [[personalizedPageRank]] over any `(u, v)` edge frame — the
     * graph-input seam shared by the batch query and the streaming
     * refresh twin ([[graft.streaming.Streaming.PprRefresh]]). */
-  def personalizedPageRankEdges(edgeSet: DataFrame, iters: Int = 3): DataFrame = {
+  def personalizedPageRankEdges(edgeSet: DataFrame, iters: Int = 3): DataFrame = Cut.scope {
     val s = edgeSet.sparkSession
     import s.implicits._
-    val edges = edgeSet.cache()
+    val edges = edgeSet.transform(Cut.cached)
     val deg = edges.groupBy($"u").agg(count(lit(1)).as("outdeg"))
     val nodes = edges.select($"u".as("node")).union(edges.select($"v".as("node")))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Cut.eager)
     val teleport = when($"node" % 10 === 0, lit(150000000L)).otherwise(lit(0L))
     var ranks = nodes.select($"node",
       when($"node" % 10 === 0, lit(1000000000L)).otherwise(lit(0L)).as("r"))
@@ -291,9 +290,8 @@ object WorkflowQueries {
         .groupBy($"node").agg(sum($"c").as("sc"))
       ranks = nodes.join(contrib, Seq("node"), "left_outer")
         .select($"node", (teleport + coalesce($"sc", lit(0L))).as("r"))
-        .localCheckpoint(true)
+        .transform(Cut.eager)
     }
-    edges.unpersist()
     ranks.select($"node", $"r".as("ppr_nano"), ($"r".cast("double") / 1e9).as("ppr"))
       .orderBy($"node")
   }

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.Cut
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -269,7 +270,7 @@ object AsOfJoin {
       require(!phys.contains("NestedLoop"),
         "b03_range_join_sql: RangeBinJoinRewrite did not fire — the gate would " +
           "certify the naive nested-loop plan instead of the rewrite")
-      out.localCheckpoint(true).orderBy(col("s_id"), col("p_id"))
+      out.transform(Cut.eager).orderBy(col("s_id"), col("p_id"))
     } finally {
       s.experimental.extraOptimizations = prev
       prevWidth match {

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -108,11 +108,11 @@ object Similarity {
     * sims ride the shared brute kernel; at corpus scale the candidate
     * stage swaps for [[ivfTopK]] unchanged. */
   def mmrSelect(embeddings: DataFrame, queryPred: Column,
-      nCand: Int = MmrCand, k: Int = MmrK): DataFrame = {
+      nCand: Int = MmrCand, k: Int = MmrK): DataFrame = Cut.scope {
     val cand = bruteForceTopK(embeddings, queryPred, nCand)
       .select(col("query_id"), col("vec_id"), col("cosine").as("rel"))
-      .localCheckpoint(true)
-    val e = quantizedWithNorm(embeddings).cache()
+      .transform(Cut.eager)
+    val e = quantizedWithNorm(embeddings).transform(Cut.cached)
     val ca = cand.select(col("query_id"), col("vec_id").as("a"))
       .join(e.toDF("a", "qa", "na"), "a")
     val cb = cand.select(col("query_id"), col("vec_id").as("b"))
@@ -120,8 +120,7 @@ object Similarity {
     val pairs = ca.join(cb, "query_id").where(col("a") =!= col("b"))
       .select(col("query_id"), col("a"), col("b"),
         cosinePre(col("qa"), col("qb"), col("na"), col("nb")).as("sim"))
-      .localCheckpoint(true)
-    e.unpersist()
+      .transform(Cut.eager)
     val perQuery = Window.partitionBy(col("query_id"))
     // r17 (guide §2.4/§3): INCREMENTAL penalty — the greedy objective's
     // max-sim-over-selected is an iterated pairwise max (arithmetic-
@@ -134,7 +133,7 @@ object Similarity {
     val r1 = cand
       .withColumn("rn", row_number().over(
         perQuery.orderBy(col("rel").desc, col("vec_id"))))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     var sel = r1.filter(col("rn") === 1)
       .select(col("query_id"), col("vec_id"), lit(1).as("rank"),
         col("rel"), col("rel").as("mmr"))
@@ -154,7 +153,7 @@ object Similarity {
         .withColumn("mmr", col("rel") - col("pen"))
         .withColumn("rn", row_number().over(
           perQuery.orderBy(col("mmr").desc, col("vec_id"))))
-        .localCheckpoint(true)
+        .transform(Cut.eager)
       val picked = ranked.filter(col("rn") === 1)
         .select(col("query_id"), col("vec_id"), lit(r).as("rank"),
           col("rel"), col("mmr"))
@@ -185,9 +184,9 @@ object Similarity {
     * time, encode stays scan-side with zero extra shuffle); the oracle
     * re-derives identical mins/maxes relationally. Constant dimensions
     * (rng = 0) encode to 0 on both sides. */
-  def sqTopK(embeddings: DataFrame, queryPred: Column, k: Int = 10): DataFrame = {
+  def sqTopK(embeddings: DataFrame, queryPred: Column, k: Int = 10): DataFrame = Cut.scope {
     val e = embeddings.select(col("vec_id"), quantize(col("embedding")).as("q"))
-      .cache()
+      .transform(Cut.cached)
     val dims = e.select(posexplode(col("q")).as(Seq("d", "v")))
       .groupBy(col("d")).agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
       .orderBy(col("d")).collect()
@@ -200,7 +199,7 @@ object Similarity {
         s"transform(sequence(0, ${mnL.length - 1}), i -> " +
           "CASE WHEN rngL[i] = 0 THEN CAST(0 AS BIGINT) " +
           "ELSE ((q[i] - mnL[i]) * 255) div rngL[i] * rngL[i] END)").as("w8"))
-      .cache()
+      .transform(Cut.cached)
     val qs = enc.filter(queryPred).toDF("query_id", "wq")
     val nQ = qs.count()
     require(nQ <= MaxBroadcastQueries,
@@ -208,15 +207,13 @@ object Similarity {
     val diff = zip_with(col("wq"), col("wv"), (a, b) => a - b)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sq_dist"), col("vec_id"))
-    val out = enc.toDF("vec_id", "wv")
+    enc.toDF("vec_id", "wv")
       .join(broadcast(qs), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), dotQ(diff, diff).as("sq_dist"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
       .select(col("query_id"), col("vec_id"), col("sq_dist"), col("rn"))
       .orderBy(col("query_id"), col("rn"))
-      .localCheckpoint(true)
-    enc.unpersist(); e.unpersist()
-    out
+      .transform(Cut.eager)
   }
 
   def sqTopKQuery(s: SparkSession, dir: String): DataFrame =
@@ -262,11 +259,11 @@ object Similarity {
     * cosine kernel can never drift between the two cuts): quantize +
     * cache the corpus, size-guard and broadcast the probe set, emit the
     * (query_id, vec_id, cosine) frame, apply the caller's cut,
-    * checkpoint the (small) result, release the corpus cache — the
-    * per-call hygiene of minHashNearDup. */
+    * cut the (small) result; the corpus cache is freed on return
+    * ([[graft.Cut]]). */
   private def bruteSimsThen(embeddings: DataFrame, queryPred: Column,
-      caller: String)(cut: DataFrame => DataFrame): DataFrame = {
-    val e = quantizedWithNorm(embeddings).cache()
+      caller: String)(cut: DataFrame => DataFrame): DataFrame = Cut.scope {
+    val e = quantizedWithNorm(embeddings).transform(Cut.cached)
     val queries = e.filter(queryPred).toDF("query_id", "qq", "qnorm")
     val nQueries = queries.count()
     require(nQueries <= MaxBroadcastQueries,
@@ -276,9 +273,7 @@ object Similarity {
       .join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosinePre(col("qq"), col("qv"), col("qnorm"), col("vnorm")).as("cosine"))
-    val out = cut(sims).localCheckpoint(true)
-    e.unpersist()
-    out
+    cut(sims).transform(Cut.eager)
   }
 
   def annTopKQuery(s: SparkSession, dir: String): DataFrame =
@@ -295,11 +290,11 @@ object Similarity {
     * quantized-cosine kernel, broadcast-guarded probe set, total
     * (cosine DESC, vec_id) ranking. At corpus scale the same shape
     * rides IVF: cell candidates intersect the label partition first. */
-  def filteredTopK(embeddings: DataFrame, queryPred: Column, k: Int = 10): DataFrame = {
+  def filteredTopK(embeddings: DataFrame, queryPred: Column, k: Int = 10): DataFrame = Cut.scope {
     val e = embeddings
       .select(col("vec_id"), col("label"), quantize(col("embedding")).as("q"))
       .withColumn("norm", sqrt(dotQ(col("q"), col("q")).cast("double")))
-      .cache()
+      .transform(Cut.cached)
     val queries = e.filter(queryPred).toDF("query_id", "label", "qq", "qnorm")
     val nQueries = queries.count()
     require(nQueries <= MaxBroadcastQueries,
@@ -313,8 +308,7 @@ object Similarity {
       .select(col("query_id"), col("label"), col("vec_id"),
         cosinePre(col("qq"), col("qv"), col("qnorm"), col("vnorm")).as("cosine"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .localCheckpoint(true)
-    e.unpersist()
+      .transform(Cut.eager)
     out.orderBy(col("query_id"), col("rn"))
   }
 
@@ -360,23 +354,21 @@ object Similarity {
     * literal-constant planes, integer sign buckets, exact cosine verify —
     * is DuckDB-oracle hash-gated. */
   def lshNearNeighbors(embeddings: DataFrame, numPlanes: Int = 8,
-                       minCosine: Double = 0.3): DataFrame = {
+                       minCosine: Double = 0.3): DataFrame = Cut.scope {
     // bucket assignment is the expensive expression and feeds a self-join:
     // materialize it once instead of evaluating per join side
     val e = embeddings
       .select(col("vec_id"), quantize(col("embedding")).as("q"))
       .withColumn("bucket", lshBucket(col("q"), numPlanes))
       .withColumn("norm", sqrt(dotQ(col("q"), col("q")).cast("double")))
-      .cache()
+      .transform(Cut.cached)
     val a = e.toDF("a", "qa", "bucket", "na")
     val b = e.toDF("b", "qb", "bucket", "nb")
-    // post-threshold pair set is the (small) output — checkpoint it and
-    // release the bucketed-corpus cache (per-call hygiene)
+    // post-threshold pair set is the (small) output — cut it
     val pairs = a.join(b, Seq("bucket")).filter(col("a") < col("b"))
       .select(col("a"), col("b"), cosinePre(col("qa"), col("qb"), col("na"), col("nb")).as("cosine"))
       .filter(col("cosine") >= minCosine)
-      .localCheckpoint(true)
-    e.unpersist()
+      .transform(Cut.eager)
     pairs.orderBy(col("a"), col("b"))
   }
 
@@ -391,8 +383,8 @@ object Similarity {
     * fraction.
     */
   def ivfTopK(embeddings: DataFrame, queryPred: Column, numCells: Int = 16,
-              nprobe: Int = 4, k: Int = 10): DataFrame = {
-    val e = quantizedWithNorm(embeddings).cache()
+              nprobe: Int = 4, k: Int = 10): DataFrame = Cut.scope {
+    val e = quantizedWithNorm(embeddings).transform(Cut.cached)
     // deterministic centroids: the numCells vectors first under the
     // PORTABLE md5(vec_id) ordering (vec_id tie-break) — a reproducible
     // pseudo-random sample both engines can replay, which is what makes
@@ -429,10 +421,9 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         cosinePre(col("qq"), col("q"), col("qnorm"), col("norm")).as("cosine"))
     val tw = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-    // (|queries|×k)-row result: checkpoint, then release the corpus cache
+    // (|queries|×k)-row result: cut it, so the corpus cache can go
     val top = cand.withColumn("rn", row_number().over(tw)).filter(col("rn") <= k)
-      .localCheckpoint(true)
-    e.unpersist()
+      .transform(Cut.eager)
     top.orderBy(col("query_id"), col("rn"))
   }
 
@@ -626,7 +617,7 @@ object Similarity {
     * window, parent-descent assignment), per the scaladoc above. */
   private[graft] def hnswBuild(e: DataFrame,
       layersOverride: Option[Int] = None): DataFrame = {
-    val pre = e.select(col("vec_id"), col("q"), col("norm")).localCheckpoint(true)
+    val pre = e.select(col("vec_id"), col("q"), col("norm")).transform(Cut.eager)
     // r11 (VERDICT r10 #4): self-provision the layer budget from the
     // corpus census — the count is one metadata-cheap job on the frame
     // the build was about to checkpoint anyway. Gate corpora land on
@@ -703,7 +694,7 @@ object Similarity {
         parents = Some(scored.withColumn("rn", row_number().over(aw))
           .filter(col("rn") <= HnswOverlap)
           .select(col("vec_id"), col("cand_id").as("parent"))
-          .localCheckpoint(true)) // one eager cut per descent stage
+          .transform(Cut.eager)) // one eager cut per descent stage
       }
     }
     adj
@@ -719,18 +710,16 @@ object Similarity {
     * |queries|·beam ids; every expansion is an equi-join on the bounded
     * adjacency — per-query cost independent of corpus size. Fully
     * deterministic, replayed end to end by the DuckDB oracle. */
-  def hnswTopK(embeddings: DataFrame, queryPred: Column, k: Int = 10): DataFrame = {
-    val e = quantizedWithNorm(embeddings).cache()
+  def hnswTopK(embeddings: DataFrame, queryPred: Column, k: Int = 10): DataFrame = Cut.scope {
+    val e = quantizedWithNorm(embeddings).transform(Cut.cached)
     // count once: the layer budget provisions the build AND authorizes
     // the search's entry-level cap (r12 — "searched as built" no longer
     // relies on the row-tag census, which undercounts a singleton top
     // layer); hnswBuild skips its own census when the override is given
     val layers = provisionLayers(e.count())
-    val out = hnswTopKWith(e, queryPred,
-      hnswBuild(e, layersOverride = Some(layers)).localCheckpoint(true),
+    hnswTopKWith(e, queryPred,
+      hnswBuild(e, layersOverride = Some(layers)).transform(Cut.eager),
       k, Some(layers))
-    e.unpersist()
-    out
   }
 
   /** [[hnswTopK]] with the PREBUILT hierarchy — the seam the gated
@@ -749,8 +738,8 @@ object Similarity {
     * materialize-once keyed parquet (built on first touch, then served
     * from disk — the index lifecycle), search runs per call. */
   private[similarity] def hnswTopKSnapshotted(s: SparkSession, dir: String,
-      queryPred: Column, k: Int = 10): DataFrame = {
-    val e = quantizedWithNorm(Tables.embeddings(s, dir)).cache()
+      queryPred: Column, k: Int = 10): DataFrame = Cut.scope {
+    val e = quantizedWithNorm(Tables.embeddings(s, dir)).transform(Cut.cached)
     val n = memoizedCount(s, dir, "emb_full")(Tables.embeddings(s, dir).count())
     val hp = hnswParamsFor(n)
     val adj = graft.SnapshotStore(s, dir, "embeddings.parquet",
@@ -758,9 +747,7 @@ object Similarity {
       hnswBuild(quantizedWithNorm(Tables.embeddings(s, dir)))
         .repartition(col("layer"), col("src"))
     }
-    val out = hnswTopKWith(e, queryPred, adj, k, Some(provisionLayers(n)))
-    e.unpersist()
-    out
+    hnswTopKWith(e, queryPred, adj, k, Some(provisionLayers(n)))
   }
 
   /** B12 (r10): the INCREMENTAL INSERT, gated end-to-end — split the
@@ -867,8 +854,8 @@ object Similarity {
     // the old tick quantized the standing corpus inside hnswInsert and
     // then AGAIN for the serve leg's eAll
     val (eStand, eNewQ) = graft.PhaseTimer.time("e08_index_maintenance", "quantize") {
-      (quantizedWithNorm(standingVecs).localCheckpoint(true),
-        quantizedWithNorm(survivors).localCheckpoint(true))
+      (quantizedWithNorm(standingVecs).transform(Cut.eager),
+        quantizedWithNorm(survivors).transform(Cut.eager))
     }
     val ext = graft.PhaseTimer.time("e08_index_maintenance", "insert") {
       hnswInsertPre(eStand, eNewQ, adj, standingLayers)
@@ -930,11 +917,10 @@ object Similarity {
     * membership refreshes at the next compaction (searches reach base
     * vertices through the accumulating pool regardless). */
   def hnswInsert(oldVecs: DataFrame, adj: DataFrame, newVecs: DataFrame,
-      standingLayers: Option[Int] = None): DataFrame = {
-    val e = quantizedWithNorm(oldVecs).cache()
-    val eNew = quantizedWithNorm(newVecs).cache()
-    try hnswInsertPre(e, eNew, adj, standingLayers)
-    finally { e.unpersist(); eNew.unpersist() }
+      standingLayers: Option[Int] = None): DataFrame = Cut.scope {
+    val e = quantizedWithNorm(oldVecs).transform(Cut.cached)
+    val eNew = quantizedWithNorm(newVecs).transform(Cut.cached)
+    hnswInsertPre(e, eNew, adj, standingLayers)
   }
 
   /** [[hnswInsert]] over PRE-QUANTIZED (vec_id, q, norm) frames — the
@@ -946,7 +932,7 @@ object Similarity {
       adj: DataFrame, standingLayers: Option[Int] = None): DataFrame = {
     val (untouched, repruned, newOut) = hnswInsertParts(e, eNew, adj, standingLayers)
     untouched.unionByName(repruned).unionByName(newOut)
-      .localCheckpoint(true)
+      .transform(Cut.eager)
   }
 
   /** [[hnswInsertPre]] ALSO returning the O(batch) base-layer DELTA —
@@ -959,8 +945,8 @@ object Similarity {
   private[graft] def hnswInsertPreDelta(e: DataFrame, eNew: DataFrame,
       adj: DataFrame, standingLayers: Option[Int] = None): (DataFrame, DataFrame) = {
     val (untouched, repruned, newOut) = hnswInsertParts(e, eNew, adj, standingLayers)
-    val delta = repruned.unionByName(newOut).localCheckpoint(true)
-    (untouched.unionByName(delta).localCheckpoint(true), delta)
+    val delta = repruned.unionByName(newOut).transform(Cut.eager)
+    (untouched.unionByName(delta).transform(Cut.eager), delta)
   }
 
   /** The shared insert body: (untouched old rows, re-pruned anchor rows,
@@ -982,7 +968,7 @@ object Similarity {
         "id is an update, which goes through rebuild/compaction, not insert)")
     val anchors = hnswDescend(e, adj, eNew.toDF("query_id", "qq", "qnorm"), HnswR,
         standingLayers)
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val newOut = anchors
       .select(lit(0).as("layer"), col("query_id").as("src"), col("vec_id").as("dst"))
     val affected = anchors.select(col("vec_id").as("src")).distinct()
@@ -1026,11 +1012,10 @@ object Similarity {
     * durable refresher's entry point (one descent serves both the
     * in-JVM extended state and the ledger payload). */
   private[graft] def hnswInsertWithDelta(oldVecs: DataFrame, adj: DataFrame,
-      newVecs: DataFrame, standingLayers: Option[Int] = None): (DataFrame, DataFrame) = {
-    val e = quantizedWithNorm(oldVecs).cache()
-    val eNew = quantizedWithNorm(newVecs).cache()
-    try hnswInsertPreDelta(e, eNew, adj, standingLayers)
-    finally { e.unpersist(); eNew.unpersist() }
+      newVecs: DataFrame, standingLayers: Option[Int] = None): (DataFrame, DataFrame) = Cut.scope {
+    val e = quantizedWithNorm(oldVecs).transform(Cut.cached)
+    val eNew = quantizedWithNorm(newVecs).transform(Cut.cached)
+    hnswInsertPreDelta(e, eNew, adj, standingLayers)
   }
 
   /** r10 (VERDICT r9 #3): periodic RE-LEVEL COMPACTION — the fourth verb
@@ -1084,12 +1069,12 @@ object Similarity {
     * it once ([[graft.SnapshotStore]]) and each maintenance tick pays
     * only the base-layer descent over the extended graph. */
   private[graft] def hnswUpperBeam(e: DataFrame, adj: DataFrame,
-      qs0: DataFrame, provisioned: Option[Int] = None): DataFrame = {
+      qs0: DataFrame, provisioned: Option[Int] = None): DataFrame = Cut.scope {
     val (layerN, counts) = layerCensus(adj, provisioned)
     val lv = hnswLeveled(e, layerN)
     val entry = lv.orderBy(col("lvl").desc, col("__h"), col("vec_id"))
       .limit(HnswEntryN).select(col("vec_id"))
-    val qs = qs0.cache()
+    val qs = qs0.transform(Cut.cached)
     def scoreOf(pool: DataFrame): DataFrame =
       pool.join(e, Seq("vec_id")).join(qs, Seq("query_id"))
         .select(col("query_id"), col("vec_id"),
@@ -1129,15 +1114,14 @@ object Similarity {
     // skip is result-identical to the oracle's uniformly-unrolled chain
     require(HnswEntryN <= HnswBeamU, "empty-layer skip needs EntryN <= BeamU")
     var beam = scoreOf(qs.select(col("query_id")).crossJoin(broadcast(entry)))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     // one eager cut per round: fusing rounds into one lazy expression was
     // MEASURED SLOWER in r12 (AQE jobs track shuffle stages, not actions,
     // and the duplicated beam subplan is not exchange-deduped — insert
     // went 93 → 104 jobs), so the per-round cut stays
     for (m <- (layerN - 1) to 1 by -1; if counts.getOrElse(m, 0L) > 0L;
          _ <- 1 to HnswRoundsU)
-      beam = topbW(expandScored(beam, layers(m)), HnswBeamU).localCheckpoint(true)
-    qs.unpersist()
+      beam = topbW(expandScored(beam, layers(m)), HnswBeamU).transform(Cut.eager)
     // (query_id, vec_id) output — the route-snapshot schema (e08) and
     // the seed shape hnswBaseDescend scores once at entry
     beam.select(col("query_id"), col("vec_id"))
@@ -1150,8 +1134,8 @@ object Similarity {
     * extended vector set (standing ∪ inserted) scores the new base
     * vertices the extended layer-0 edges can reach. */
   private[graft] def hnswBaseDescend(e: DataFrame, adj: DataFrame,
-      qs0: DataFrame, beam0: DataFrame, k: Int): DataFrame = {
-    val qs = qs0.cache()
+      qs0: DataFrame, beam0: DataFrame, k: Int): DataFrame = Cut.scope {
+    val qs = qs0.transform(Cut.cached)
     def scoreOf(pool: DataFrame): DataFrame =
       pool.join(e, Seq("vec_id")).join(qs, Seq("query_id"))
         .select(col("query_id"), col("vec_id"),
@@ -1185,7 +1169,7 @@ object Similarity {
     var beam =
       (if (beam0.columns.contains("cosine"))
         beam0.select(col("query_id"), col("vec_id"), col("cosine"))
-      else scoreOf(beam0)).localCheckpoint(true)
+      else scoreOf(beam0)).transform(Cut.eager)
     var pool = beam
     // r17 (guide §1.2): LAZY checkpoint + count per round (the count
     // materializes the pool in the same job the eager checkpoint used),
@@ -1206,7 +1190,7 @@ object Similarity {
             .select(col("query_id"), col("dst").as("vec_id"))))
         .repartition(col("query_id"))
         .dropDuplicates("query_id", "vec_id")
-        .localCheckpoint(false)
+        .transform(Cut.lazily)
       val n = stepped.count()
       pool = stepped
       if (n == poolN) done = true
@@ -1217,13 +1201,11 @@ object Similarity {
       r0 += 1
     }
     val fw = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val out = pool
+    pool
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("rn", row_number().over(fw)).filter(col("rn") <= k)
       .select(col("query_id"), col("vec_id"), col("cosine"), col("rn").cast("int").as("rn"))
-      .localCheckpoint(true)
-    qs.unpersist()
-    out
+      .transform(Cut.eager)
   }
 
   def hnswQuery(s: SparkSession, dir: String): DataFrame =
@@ -1337,7 +1319,7 @@ object Similarity {
   def dbscan(embeddings: DataFrame, numPlanes: Int = 8,
              minCosine: Double = 0.95, minPts: Int = 2): DataFrame = {
     val edges = lshNearNeighbors(embeddings, numPlanes, minCosine)
-      .select(col("a"), col("b")).localCheckpoint(true)
+      .select(col("a"), col("b")).transform(Cut.eager)
     dbscanOnEdges(embeddings.select(col("vec_id")), edges, minPts)
   }
 
@@ -1353,7 +1335,7 @@ object Similarity {
     // branch.
     val core = sym.groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= minPts).select(col("v"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val coreEdges = edges
       .join(core.select(col("v").as("a")), Seq("a"), "left_semi")
       .join(core.select(col("v").as("b")), Seq("b"), "left_semi")
@@ -1418,8 +1400,8 @@ object Similarity {
     * the FULL 3-iteration pipeline is DuckDB-oracle hash-gated via
     * unrolled CTEs (the w07_pagerank device; r4 seeded with xxhash64 —
     * the one engine-specific step that kept this rows-only). */
-  def kMeans(embeddings: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
-    val e = quantizedWithNorm(embeddings).cache()
+  def kMeans(embeddings: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = Cut.scope {
+    val e = quantizedWithNorm(embeddings).transform(Cut.cached)
     // seeds: the k DISTINCT vectors lexicographically first under the
     // PORTABLE md5(content-csv) ordering (csv tie-break) — distinct
     // first, or duplicate-heavy corpora could seed identical centroids
@@ -1471,19 +1453,13 @@ object Similarity {
       // eager lineage cut: without it every iteration re-analyzes the
       // whole preceding chain and planning cost grows superlinearly in
       // iters; the checkpoint materializes only k centroid rows
-      centroids = recomputed.localCheckpoint(true)
+      centroids = recomputed.transform(Cut.eager)
     }
-    // release the corpus cache this function registered: the loop (the
-    // cache's heavy consumer — iters+1 assignment passes) has fully
-    // materialized via the per-iteration checkpoints; the final lazy
-    // assignment recomputes the scan-side quantize projection exactly
-    // once. A per-batch caller must not accumulate one cached corpus per
-    // kMeans call.
-    val out = assign(centroids)
+    // the corpus cache is freed on return ([[graft.Cut]]); the final lazy
+    // assignment recomputes the scan-side quantize projection once
+    assign(centroids)
       .select(col("vec_id"), col("cid").as("cluster_id"), col("sim"))
       .orderBy(col("vec_id"))
-    e.unpersist()
-    out
   }
 
   def kMeansQuery(s: SparkSession, dir: String): DataFrame =
@@ -1535,7 +1511,7 @@ object Similarity {
   def silhouetteOf(embeddings: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
     val asg = kMeans(embeddings, k, iters).select(col("vec_id"), col("cluster_id"))
     val e = embeddings.select(col("vec_id"), quantize(col("embedding")).as("q"))
-    val pts = e.join(asg, "vec_id").localCheckpoint(true)
+    val pts = e.join(asg, "vec_id").transform(Cut.eager)
     val vsum = udaf(new graft.functions.VecSumAgg)
     val cents = pts.groupBy(col("cluster_id"))
       .agg(vsum(col("q")).as("s"), count(lit(1)).as("n"))
@@ -1581,18 +1557,18 @@ object Similarity {
     * replayable kernel, so the WHOLE pipeline (training included) is
     * hash-gated. */
   def semDedup(embeddings: DataFrame, k: Int = 32, iters: Int = 2,
-      minCosine: Double = 0.35): DataFrame = {
+      minCosine: Double = 0.35): DataFrame = Cut.scope {
     val assign = kMeans(embeddings, k, iters).select(col("vec_id"), col("cluster_id"))
     // one join materializes (vec, cluster, q, norm); both pair sides read
-    // it, so cache for the self-join and release after the checkpoint
+    // it, so cache it for the self-join
     val m = quantizedWithNorm(embeddings).join(assign, "vec_id")
       .select(col("vec_id"), col("cluster_id"), col("q"), col("norm"))
-      .cache()
+      .transform(Cut.cached)
     val a = m.select(col("cluster_id"), col("vec_id").as("witness"),
       col("q").as("qa"), col("norm").as("na"))
     val b = m.select(col("cluster_id"), col("vec_id"),
       col("q").as("qb"), col("norm").as("nb"))
-    val out = a.join(b, Seq("cluster_id")).where(col("witness") < col("vec_id"))
+    a.join(b, Seq("cluster_id")).where(col("witness") < col("vec_id"))
       // zero-norm guard: sim -1 never passes a positive threshold, and
       // ANSI division by zero must not throw
       .withColumn("cosine", when(col("na") * col("nb") === 0.0d, lit(-1.0d))
@@ -1602,9 +1578,7 @@ object Similarity {
       .agg(min(col("witness")).as("witness_id"),
         min_by(col("cosine"), col("witness")).as("witness_cosine"))
       .orderBy(col("vec_id"))
-      .localCheckpoint(true)
-    m.unpersist()
-    out
+      .transform(Cut.eager)
   }
 
   def semDedupQuery(s: SparkSession, dir: String): DataFrame =
@@ -1657,7 +1631,7 @@ object Similarity {
       .withColumn("cid", row_number().over(seedW) - 1)
       .filter(col("cid") < ksub)
       .select(col("sub"), col("cid"), col("subq").as("cq"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val vsum = udaf(new graft.functions.VecSumAgg)
     for (_ <- 1 to iters) {
       // empty cells drop out (join+group semantics — identical in the
@@ -1667,7 +1641,7 @@ object Similarity {
         .agg(vsum(col("subq")).as("s"), count(lit(1)).as("n"))
         .select(col("sub"), col("cid"),
           transform(col("s"), v => round(v.cast("double") / col("n")).cast("long")).as("cq"))
-        .localCheckpoint(true)
+        .transform(Cut.eager)
     }
     codebook
   }
@@ -1705,9 +1679,9 @@ object Similarity {
       dsub: Int = 8, ksub: Int = 16, iters: Int = 2, k: Int = 10): DataFrame = {
     val e = embeddings
       .select(col("vec_id"), quantize(col("embedding")).as("q"), queryPred.as("is_q"))
-      .localCheckpoint(true) // feeds corpus subs + query subs across iters
+      .transform(Cut.eager) // feeds corpus subs + query subs across iters
     def subs(df: DataFrame): DataFrame = subSplit(df, m, dsub, Seq("vec_id"))
-    val corpusSubs = subs(e.filter(!col("is_q"))).localCheckpoint(true)
+    val corpusSubs = subs(e.filter(!col("is_q"))).transform(Cut.eager)
     val codebook = pqTrain(corpusSubs, ksub, iters)
     val codes = pqAssign(codebook, corpusSubs)
       .select(col("vec_id"), col("sub"), col("cid"))
@@ -1751,7 +1725,7 @@ object Similarity {
         .select(col("vec_id"), col("sub"), col("cid"))
         .repartition(col("sub"))
     }
-    pqAdcSearch(eOf.localCheckpoint(true), codebook, codes, 8, 8, k)
+    pqAdcSearch(eOf.transform(Cut.eager), codebook, codes, 8, 8, k)
   }
 
   def pqQuery(s: SparkSession, dir: String): DataFrame =
@@ -1787,7 +1761,7 @@ object Similarity {
       iters: Int = 2, k: Int = 10): DataFrame = {
     val e = embeddings
       .select(col("vec_id"), quantize(col("embedding")).as("q"), queryPred.as("is_q"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     // coarse quantizer: deterministic corpus vectors as cell centroids,
     // chosen first under the PORTABLE md5(vec_id) ordering (the ivfTopK
     // selection — vec_id tie-break), nearest by exact integer L2. The
@@ -1798,7 +1772,7 @@ object Similarity {
       .withColumn("__h", md5(col("vec_id").cast("string")))
       .orderBy(col("__h"), col("vec_id")).limit(numCells)
       .select(col("vec_id").as("cell_id"), col("q").as("cq"))
-      .localCheckpoint(true))
+      .transform(Cut.eager))
     // corpus → nearest cell (min-struct agg, no window shuffle); residual
     // = q − centroid, elementwise, stays in exact integer space
     val assigned = e.filter(!col("is_q")).crossJoin(cells)
@@ -1810,11 +1784,11 @@ object Similarity {
       .join(cells, Seq("cell_id"))
       .select(col("vec_id"), col("cell_id"),
         zip_with(col("q"), col("cq"), (x, y) => x - y).as("q"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     // shared residual codebooks (standard IVFADC: one codebook across
     // cells, trained on all residuals)
     val corpusSubs = subSplit(assigned, m, dsub, Seq("vec_id", "cell_id"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val codebook = pqTrain(corpusSubs.drop("cell_id"), ksub, iters)
     // cell_id rides the encode aggregate (functionally dependent on
     // vec_id) — no n·m-row re-join against the assignment at scale
@@ -1846,7 +1820,7 @@ object Similarity {
       .join(broadcast(codebook), Seq("sub"))
       .select(col("query_id"), col("cell_id"), col("sub"), col("cid"),
         l2q(col("subq"), col("cq")).as("d"))
-      .localCheckpoint(true))
+      .transform(Cut.eager))
     // ADC: codes ⋈ broadcast LUT on (cell_id, sub, cid) — a vector joins
     // only if its cell was probed; the sum over its m codes is one
     // map-side-combinable aggregate
@@ -1890,7 +1864,7 @@ object Similarity {
         .select(col("vec_id"), col("sub"), col("cid"), col("cell_id"))
         .repartition(col("cell_id"))
     }
-    ivfPqAdcSearch(eOf.localCheckpoint(true), cells, codebook, codes, 4, 8, 8, 10)
+    ivfPqAdcSearch(eOf.transform(Cut.eager), cells, codebook, codes, 4, 8, 8, 10)
   }
 
   /** B12/B13: hybrid retrieval — the RAG-stack composite: a LEXICAL

@@ -20,7 +20,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Durability (`dir = Some(...)`): the in-JVM mark alone cannot survive
   * the driver restart that CAUSES the re-delivery, and VERDICT r10 #2's
   * deeper defect is that the refreshers' served state itself lived in
-  * driver-JVM `localCheckpoint` blocks — a restart resumed the
+  * driver-JVM cut blocks ([[graft.Cut]]) — a restart resumed the
   * checkpointed source past the consumed offsets while the state they
   * had built was gone. With a ledger directory, each applied batch
   * persists its parquet payload under `dir/data/<name>-b<id>-e<epoch>/`

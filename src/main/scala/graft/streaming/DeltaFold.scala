@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Cut
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The at-least-once fold behind every sink whose state is a combinable
@@ -33,7 +34,7 @@ abstract class DeltaFold(stateDir: Option[String], payload: String) {
     ledger.recovered.filterNot(_.compact)
       .map(c => ledger.read(s, payload, c))
       .reduceOption(_ unionByName _).foreach { u =>
-        val a = combine(u).localCheckpoint(true)
+        val a = combine(u).transform(Cut.eager)
         st = Some(a -> view(a))
       }
     this
@@ -41,9 +42,9 @@ abstract class DeltaFold(stateDir: Option[String], payload: String) {
 
   def update(batch: DataFrame, batchId: Long): Unit = synchronized {
     if (ledger.alreadyApplied(batchId)) return
-    val d = delta(batch).localCheckpoint(true)
+    val d = delta(batch).transform(Cut.eager)
     val a = st match {
-      case Some(prev) => combine(prev._1.unionByName(d)).localCheckpoint(true)
+      case Some(prev) => combine(prev._1.unionByName(d)).transform(Cut.eager)
       case None => d
     }
     val next = a -> view(a)

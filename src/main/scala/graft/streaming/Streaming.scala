@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Cut, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -116,7 +116,7 @@ object Streaming {
     * sweep only its un-compacted suffix. */
   private[graft] def concurrencyOfDeltas(deltas: DataFrame, base: Long = 0L): DataFrame = {
     val net = deltas
-      .localCheckpoint(true) // feeds the in-day prefix AND the day totals
+      .transform(Cut.eager) // feeds the in-day prefix AND the day totals
     // r9: the shared two-level device (graft.ops.Prefix.prefixSum2L)
     // replaces the hand-rolled in-day window + day carry; the global
     // (empty-part) bin axis is day-bounded by construction
@@ -235,7 +235,7 @@ object Streaming {
         // spec)
         def tbl(n: String): Option[DataFrame] =
           if (c.meta.get(s"has_$n").contains("1"))
-            Some(ledger.read(s, n, c).localCheckpoint(true))
+            Some(ledger.read(s, n, c).transform(Cut.eager))
           else None
         val frontier = c.meta.get("frontier_ms").map { ms =>
           val t = new java.sql.Timestamp(ms.toLong)
@@ -261,7 +261,7 @@ object Streaming {
       // UTC session) (r11, surfaced by the b10_stream_concurrency gate)
       val b = sessionsBatch(batch.withColumn("ts", col("ts").cast("timestamp")))
         .select(col("user_id"), col("session_start"), col("session_end"))
-        .localCheckpoint(true) // consumed by the merge and the frontier max
+        .transform(Cut.eager) // consumed by the merge and the frontier max
       val merged = prev.open match {
         case Some(a) => mergeSessionIntervals(a.unionByName(b))
         case None => b
@@ -271,7 +271,7 @@ object Streaming {
         if (x.after(y)) x else y)
       val cutoff = frontier.map(f => new java.sql.Timestamp(
         f.getTime - intervalMs(allowedLateness) - 30L * 60 * 1000))
-      val all = merged.localCheckpoint(true)
+      val all = merged.transform(Cut.eager)
       val immutable = cutoff.map(c => all.where(col("session_end") < lit(c)))
         .getOrElse(all.limit(0))
       val newFrozen = prev.frozen match {
@@ -280,7 +280,7 @@ object Streaming {
         case None => sessionDeltas(immutable)
       }
       val newOpen = cutoff.map(c => all.where(!(col("session_end") < lit(c))))
-        .getOrElse(all).localCheckpoint(true)
+        .getOrElse(all).transform(Cut.eager)
       // ---- day compaction: finalize every day no future boundary can
       // reach. Day grain is computed with the SAME expression the delta
       // rows use (unix_date over the session-timezone date), via one-row
@@ -294,18 +294,18 @@ object Streaming {
       val finalizeBefore = (cutoff.map(dayOf).toSeq ++ openMinDay).reduceOption(_ min _)
       val (keep, doneRows, doneNet) = finalizeBefore match {
         case Some(d) =>
-          val fz = newFrozen.localCheckpoint(true)
+          val fz = newFrozen.transform(Cut.eager)
           val toCompact = fz.where(col("day") < lit(d))
           if (toCompact.isEmpty) (fz, None, 0L)
           else (
-            fz.where(col("day") >= lit(d)).localCheckpoint(true),
-            Some(concurrencyOfDeltas(toCompact, prev.carryNet).localCheckpoint(true)),
+            fz.where(col("day") >= lit(d)).transform(Cut.eager),
+            Some(concurrencyOfDeltas(toCompact, prev.carryNet).transform(Cut.eager)),
             toCompact.agg(sum(col("net"))).head().getLong(0))
-        case None => (newFrozen.localCheckpoint(true), None, 0L)
+        case None => (newFrozen.transform(Cut.eager), None, 0L)
       }
       val next = doneRows match {
         case Some(dr) => St(Some(newOpen), Some(keep),
-          Some(prev.compacted.map(_.unionByName(dr).localCheckpoint(true)).getOrElse(dr)),
+          Some(prev.compacted.map(_.unionByName(dr).transform(Cut.eager)).getOrElse(dr)),
           prev.carryNet + doneNet, frontier)
         case None => St(Some(newOpen), Some(keep), prev.compacted,
           prev.carryNet, frontier)
@@ -966,12 +966,12 @@ object Streaming {
     * HarvestJob.run bit-for-bit, both tables. */
   def renumberHarvestStore(spark: SparkSession, storeDir: String): Unit = {
     val terms = graft.harvest.Store.readTableOr(
-      spark, storeDir, "terms", graft.harvest.Schemas.terms).localCheckpoint(true)
+      spark, storeDir, "terms", graft.harvest.Schemas.terms).transform(Cut.eager)
     val fields = graft.harvest.Store.readTableOr(
       spark, storeDir, "term_fields", graft.harvest.Schemas.termFields)
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val newTerms = graft.harvest.Merge.assignIds(terms.drop("id"), Seq("uri"), 1L)
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val mapped = fields.drop("id")
       .join(terms.select(col("id").as("term_id"), col("uri")), Seq("term_id"))
       .drop("term_id")
@@ -981,7 +981,7 @@ object Streaming {
         mapped, Seq("term_id", "field_uri", "original_value"), 1L)
       .select(col("id"), col("term_id"), col("field_uri"), col("field_term"),
         col("original_value"), col("created_at"), col("updated_at"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     graft.harvest.Store.writeTable(newTerms, storeDir, "terms")
     graft.harvest.Store.writeTable(newFields, storeDir, "term_fields")
   }
@@ -1108,8 +1108,8 @@ object Streaming {
     @volatile private var shSegs: List[DataFrame] = Nil
     @volatile private var bandSegs: List[DataFrame] = Nil
     private def derive(b: DataFrame): (DataFrame, DataFrame) = {
-      val sh = graft.dedup.Dedup.portableShingleHashes(b, k).localCheckpoint(true)
-      (sh, graft.dedup.Dedup.portableBandsOf(sh).localCheckpoint(true))
+      val sh = graft.dedup.Dedup.portableShingleHashes(b, k).transform(Cut.eager)
+      (sh, graft.dedup.Dedup.portableBandsOf(sh).transform(Cut.eager))
     }
     /** Restart recovery (r11): latest compaction payload (if any) + the
       * plain segments committed after it — the identical lazy union. */
@@ -1132,7 +1132,7 @@ object Streaming {
       * every band bucket and broke the N-batches == one-extend parity. */
     def update(batch: DataFrame, batchId: Long): Unit = synchronized {
       if (ledger.alreadyApplied(batchId)) return
-      val b = batch.select(col("doc_id"), col("text")).localCheckpoint(true)
+      val b = batch.select(col("doc_id"), col("text")).transform(Cut.eager)
       val (sh, band) = derive(b)
       ledger.commit(batchId, Seq("sh" -> sh, "band" -> band))
       shSegs = sh :: shSegs
@@ -1154,8 +1154,8 @@ object Streaming {
     def compactSegments(): Unit = synchronized {
       (shingleIndex, bandIndex) match {
         case (Some(s0), Some(b0)) =>
-          val sc = s0.localCheckpoint(true)
-          val bc = b0.localCheckpoint(true)
+          val sc = s0.transform(Cut.eager)
+          val bc = b0.transform(Cut.eager)
           if (ledger.durable) {
             val c = ledger.highWater
             ledger.commit(c, Seq("sh" -> sc, "band" -> bc), compact = true)
@@ -1291,7 +1291,7 @@ object Streaming {
           val v =
             if (c.meta.get("kind").contains("bootstrap_ref")) refRead(s, c, "vecs")
             else ledger.read(s, "vecs", c)
-          (c, v.localCheckpoint(true))
+          (c, v.transform(Cut.eager))
         }
         // canonical points: build/compact (adjacency reproducible via
         // hnswCompact over the vectors so far), bootstrap (r12 — the
@@ -1308,7 +1308,7 @@ object Streaming {
           s"AnnIndexRefresh ledger at $stateDir has no build/compact/bootstrap commit")
         val canonical = segs(lastCanonical)._1
         var vecs = segs.take(lastCanonical + 1).map(_._2)
-          .reduce(_ unionByName _).localCheckpoint(true)
+          .reduce(_ unionByName _).transform(Cut.eager)
         // the canonical point's provisioned layer count rides its meta
         // (r12); legacy ledgers without it recompute from the canonical
         // corpus — the same census the build itself ran
@@ -1316,12 +1316,12 @@ object Streaming {
           .getOrElse(graft.similarity.Similarity.provisionLayers(vecs.count()))
         var adj =
           if (canonical.meta.get("kind").contains("bootstrap"))
-            ledger.read(s, "adj", canonical).localCheckpoint(true)
+            ledger.read(s, "adj", canonical).transform(Cut.eager)
           else if (canonical.meta.get("kind").contains("bootstrap_ref"))
-            refRead(s, canonical, "adj").localCheckpoint(true)
+            refRead(s, canonical, "adj").transform(Cut.eager)
           else
             graft.similarity.Similarity.hnswCompact(vecs, Some(layers))
-              .localCheckpoint(true)
+              .transform(Cut.eager)
         segs.drop(lastCanonical + 1).foreach { case (c, b) =>
           adj =
             if (c.meta.get("delta").contains("1"))
@@ -1330,10 +1330,10 @@ object Streaming {
               // O(segments read)), not a descent re-run. Bit-parity with
               // the kernel replay is pinned in StreamingDurabilitySpec.
               graft.similarity.Similarity.hnswApplyDelta(adj,
-                ledger.read(s, "adjdelta", c)).localCheckpoint(true)
+                ledger.read(s, "adjdelta", c)).transform(Cut.eager)
             else // legacy ledger without a delta payload: kernel replay
               graft.similarity.Similarity.hnswInsert(vecs, adj, b, Some(layers))
-          vecs = vecs.unionByName(b).localCheckpoint(true)
+          vecs = vecs.unionByName(b).transform(Cut.eager)
         }
         vecSegs = List(vecs)
         adjState = Some(adj)
@@ -1409,8 +1409,8 @@ object Streaming {
         sys.error(s"bootstrapByRef: no readable seed at $vecsPath"))
       val aSig = pathSig(s, adjPath).getOrElse(
         sys.error(s"bootstrapByRef: no readable seed at $adjPath"))
-      val vecs = graft.Versions.readParquet(s, vecsPath).localCheckpoint(true)
-      val adj = graft.Versions.readParquet(s, adjPath).localCheckpoint(true)
+      val vecs = graft.Versions.readParquet(s, vecsPath).transform(Cut.eager)
+      val adj = graft.Versions.readParquet(s, adjPath).transform(Cut.eager)
       val layers = provisionedLayers.getOrElse(
         graft.similarity.Similarity.provisionLayers(vecs.count()))
       ledger.commit(-1L, Seq.empty, Map(
@@ -1431,7 +1431,7 @@ object Streaming {
       * then killed the streaming query instead of recovering. */
     def update(batch: DataFrame, batchId: Long): Unit = synchronized {
       if (ledger.alreadyApplied(batchId)) return
-      val b = batch.select(col("vec_id"), col("embedding")).localCheckpoint(true)
+      val b = batch.select(col("vec_id"), col("embedding")).transform(Cut.eager)
       (allVecs, adjState) match {
         case (Some(v), Some(a)) =>
           // ADVICE r10: decide compaction FIRST — the old body ran the
@@ -1450,10 +1450,10 @@ object Streaming {
             // batchId fed duplicate vec_ids into hnswInsert's collision
             // guard — the commit-before-swap discipline of every other
             // branch, restored here)
-            val merged = (b :: vecSegs).reduce(_ unionByName _).localCheckpoint(true)
+            val merged = (b :: vecSegs).reduce(_ unionByName _).transform(Cut.eager)
             val layers = graft.similarity.Similarity.provisionLayers(merged.count())
             val adj = graft.similarity.Similarity.hnswCompact(merged, Some(layers))
-              .localCheckpoint(true)
+              .transform(Cut.eager)
             ledger.commit(batchId, Seq("vecs" -> b),
               Map("kind" -> "compact", "layers" -> layers.toString))
             vecSegs = List(merged)
@@ -1487,7 +1487,7 @@ object Streaming {
         case _ =>
           val layers = graft.similarity.Similarity.provisionLayers(b.count())
           val adj = graft.similarity.Similarity.hnswCompact(b, Some(layers))
-            .localCheckpoint(true)
+            .transform(Cut.eager)
           ledger.commit(batchId, Seq("vecs" -> b),
             Map("kind" -> "build", "layers" -> layers.toString))
           vecSegs = List(b)
@@ -1525,7 +1525,7 @@ object Streaming {
   final class CrossNearDupSink(refDocs: DataFrame, k: Int = 3,
       threshold: Double = 0.5, stateDir: Option[String] = None)
       extends DeltaFold(stateDir, "pairs") {
-    private val ref = refDocs.localCheckpoint(true)
+    private val ref = refDocs.transform(Cut.eager)
     protected def delta(batch: DataFrame): DataFrame =
       graft.dedup.Dedup.minHashNearDupAcross(batch, ref, k, threshold)
     protected def combine(u: DataFrame): DataFrame = u
@@ -1610,7 +1610,7 @@ object Streaming {
     import s.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      .localCheckpoint(true) // static join side, reused by all triggers
+      .transform(Cut.eager) // static join side, reused by all triggers
     val ledgerDir = java.nio.file.Files.createTempDirectory("graft_b10sbi_").toString
     try {
       val refresh = new BandIndexRefresh(3, Some(ledgerDir))
@@ -1641,7 +1641,7 @@ object Streaming {
       // driver restart: a fresh instance recovers the ledger and serves
       val served = graft.PhaseTimer.time("b10_stream_band_index", "recover") {
         new BandIndexRefresh(3, Some(ledgerDir))
-          .recover(s).bandIndex.get.localCheckpoint(true)
+          .recover(s).bandIndex.get.transform(Cut.eager)
       }
       served.orderBy(col("doc_id"), col("band_idx"))
     } finally {
@@ -1680,7 +1680,7 @@ object Streaming {
     import s.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      .localCheckpoint(true) // static join side for the trigger
+      .transform(Cut.eager) // static join side for the trigger
     val ledgerDir = java.nio.file.Files.createTempDirectory("graft_b12sai_").toString
     try {
       // r14 (VERDICT r13 #9): bootstrap-BY-REFERENCE is now the gate's
@@ -1724,7 +1724,7 @@ object Streaming {
       val served = graft.PhaseTimer.time("b12_stream_ann_index", "recover") {
         new AnnIndexRefresh(compactEvery = Int.MaxValue,
           stateDir = Some(ledgerDir)).recover(s)
-          .adjacency.get.localCheckpoint(true)
+          .adjacency.get.transform(Cut.eager)
       }
       // in-gate SIGNATURE-REFUSAL probe (r14, the by-ref default's other
       // half): recovery must REFUSE a tampered seed, never serve it. A
@@ -1794,7 +1794,7 @@ object Streaming {
     // row count, is the gate's cost driver (the oracle carries the
     // same predicate, one shared string)
     val events = Tables.events(s, dir).filter(col("user_id") % 3 === 0)
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val dayOf = unix_date(to_date(col("ts")))
     // deterministic chronological halves over the distinct-day axis
     val days = events.select(dayOf.as("d")).distinct().orderBy(col("d"))
@@ -1830,7 +1830,7 @@ object Streaming {
       // driver restart: recover the bounded snapshot, serve the curve
       val served = graft.PhaseTimer.time("b10_stream_concurrency", "recover") {
         new SessionConcurrencyRefresh("1 hour", Some(ledgerDir))
-          .recover(s).curve.get.localCheckpoint(true)
+          .recover(s).curve.get.transform(Cut.eager)
       }
       // back to the events table's native NTZ rendering (wall time
       // preserved under the pinned UTC session) — the type the
@@ -1864,7 +1864,7 @@ object Streaming {
     import s.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val bindings = graft.ops.HarvestQueries.bindings(s, dir)
-      .localCheckpoint(true) // static join side, reused by all triggers
+      .transform(Cut.eager) // static join side, reused by all triggers
     val storeDir = java.nio.file.Files.createTempDirectory("graft_b10shv_").toString
     try {
       val asOf = java.sql.Timestamp.valueOf("2026-02-01 00:00:00")
@@ -1910,7 +1910,7 @@ object Streaming {
           col("field_term"), col("original_value"))
       val served = graft.PhaseTimer.time("b10_stream_harvest", "serve") {
         terms.join(fields, Seq("term_id"), "left_outer")
-          .localCheckpoint(true) // cut from the store files before cleanup
+          .transform(Cut.eager) // cut from the store files before cleanup
       }
       served.orderBy(col("term_id"), col("field_id").asc_nulls_first)
     } finally {

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Cut, Tables}
 import graft.functions.RollingHash
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -85,7 +85,7 @@ object TextAnalysis {
       .filter(size(tokens($"text")) >= 1)
       .select($"doc_id", $"source",
         expr("(1000 * length(text)) div size(split(text, ' '))").as("score_mi"))
-      .localCheckpoint(true) // feeds the rank table + the output join
+      .transform(Cut.eager) // feeds the rank table + the output join
     val n = docs.groupBy($"source").agg(count(lit(1)).as("n"))
     val ranks = docs.groupBy($"source", $"score_mi").agg(count(lit(1)).as("cnt"))
       .withColumn("cw", sum($"cnt").over(w))
@@ -277,12 +277,12 @@ object TextAnalysis {
     // both sides — checkpointed so the CDC boundary scan runs once, not
     // once per reference (the q21 lesson); chunk-table sized
     val dc = cdcChunksOf(docs).select(col("doc_id"), col("chunk_md5")).distinct()
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val rare = dc.join(
       dc.groupBy(col("chunk_md5")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= maxChunkDf),
       Seq("chunk_md5"))
-      .localCheckpoint(true)
+      .transform(Cut.eager)
     val sizes = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("n_chunks_a"))
     rare.select(col("chunk_md5"), col("doc_id").as("doc_a"))
       .join(rare.select(col("chunk_md5"), col("doc_id").as("doc_b")), Seq("chunk_md5"))
@@ -628,9 +628,8 @@ object TextAnalysis {
         .as("b"))
       .select($"doc_id", $"b.w1", $"b.w2")
       // feeds both the model build and the scoring join — materialize the
-      // explode once (released by the bench/verify clearCache between
-      // queries, like the other self-joining pipelines)
-      .cache()
+      // explode once; it lives until the query's [[graft.Cut.scope]] exits
+      .transform(Cut.cached)
     val biCounts = bi.groupBy($"w1", $"w2").agg(count(lit(1)).as("c12"))
     val uniCounts = biCounts.groupBy($"w1").agg(sum($"c12").as("c1"))
     val model = biCounts.join(uniCounts, "w1")
@@ -882,16 +881,14 @@ object TextAnalysis {
     // frame inside its own job, so a merge round costs ONE job instead
     // of two (eager checkpoint + argmax), and the FINAL round's applied
     // frame — which nothing ever reads (the result is the driver-side
-    // merge list) — is never materialized at all. The explicit
-    // .cache()/.unpersist() choreography is gone: localCheckpoint
-    // already persists its partitions (MEMORY_AND_DISK), so the extra
-    // cache layer was a redundant second copy of every round's frame.
+    // merge list) — is never materialized at all. No cache on top: a
+    // cut already persists its partitions ([[graft.Cut]]).
     var words = docs
       .select(explode(tokens($"text")).as("word"))
       .filter($"word" =!= "")
       .groupBy($"word").agg(count(lit(1)).as("cnt"))
       .select(split($"word", "").as("syms"), $"cnt")
-      .localCheckpoint(false)
+      .transform(Cut.lazily)
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     var iter = 1
     var exhausted = false
@@ -916,7 +913,7 @@ object TextAnalysis {
                      WHEN element_at(acc, -1) = ${sqlStr(l)} AND x = ${sqlStr(r)}
                      THEN concat(slice(acc, 1, size(acc) - 1), array(${sqlStr(l + r)}))
                      ELSE concat(acc, array(x)) END)""").as("syms"), $"cnt")
-          .localCheckpoint(false)
+          .transform(Cut.lazily)
         words = applied
         iter += 1
       }
@@ -1182,7 +1179,7 @@ object TextAnalysis {
     val st = docs
       .select($"source", explode(tokens($"text")).as("tok")).distinct()
       // feeds sizes + both pair sides — one materialization, vocab-sized
-      .cache()
+      .transform(Cut.cached)
     val sizes = st.groupBy($"source").agg(count(lit(1)).as("nv"))
     val inter = st.select($"source".as("sa"), $"tok")
       .join(st.select($"source".as("sb"), $"tok"), Seq("tok"))

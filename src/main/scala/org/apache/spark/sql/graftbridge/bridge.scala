@@ -36,6 +36,13 @@ object bridge {
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
+  /** Drop a locally checkpointed RDD's blocks without waiting — what
+    * `rdd.unpersist(blocking = false)` does, minus its per-call warning
+    * that the lineage is gone: [[graft.Cut]] frees a cut only once
+    * nothing can read it again. */
+  def dropBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** Apply a SparkSessionExtensions' injected functions to an EXISTING
     * session's registry (session bootstrap only consults
     * `spark.sql.extensions` at session creation; tests share one session,

@@ -23,7 +23,7 @@ cells compare stringified. Round 1 lesson: reading both sides through
 DuckDB hid 8 decimal-vs-float formatting mismatches and one array-column
 crash that the driver then reported as failures.
 """
-import duckdb, json, os, sys, glob, math
+import duckdb, json, os, sys, glob, math, time
 import pyarrow.parquet as pq
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -64,6 +64,7 @@ def main():
     only = only_names()
     names = sorted(only) if only else sorted(oracle)
     n_ok = n_bad = 0
+    secs = {}  # seconds of each oracle fetchdf(), printed on its result line
     for name in names:
         if name not in oracle:
             print(f"FAIL {name}: not in oracle_sql.json")
@@ -75,26 +76,30 @@ def main():
             print(f"FAIL {name}: no spark output")
             n_bad += 1
             continue
+        t0 = time.perf_counter()
         try:
             exp = con.sql(sql).fetchdf()
         except Exception as e:
-            print(f"FAIL {name}: oracle SQL error: {e}")
+            secs[name] = time.perf_counter() - t0
+            print(f"FAIL {name}: oracle SQL error: {e} [{secs[name]:.2f} s]")
             n_bad += 1
             continue
+        secs[name] = time.perf_counter() - t0
+        took = f" [{secs[name]:.2f} s]"
         # driver-parity read: pyarrow, not duckdb
         got = pq.ParquetDataset(files).read().to_pandas()
         if sorted(got.columns) != sorted(exp.columns):
-            print(f"FAIL {name}: columns spark={sorted(got.columns)} oracle={sorted(exp.columns)}")
+            print(f"FAIL {name}: columns spark={sorted(got.columns)} oracle={sorted(exp.columns)}{took}")
             n_bad += 1
             continue
         if len(got) != len(exp):
-            print(f"FAIL {name}: rows spark={len(got)} oracle={len(exp)}")
+            print(f"FAIL {name}: rows spark={len(got)} oracle={len(exp)}{took}")
             n_bad += 1
             continue
         try:
             g, e = canon(got), canon(exp)
         except Exception as ex:
-            print(f"FAIL {name}: canonicalization error (driver would err too): {ex}")
+            print(f"FAIL {name}: canonicalization error (driver would err too): {ex}{took}")
             n_bad += 1
             continue
         bad = None
@@ -110,11 +115,16 @@ def main():
                 break
         if bad:
             col, i, ga, eb = bad
-            print(f"FAIL {name}: value mismatch col={col} row={i} spark={ga!r} oracle={eb!r}")
+            print(f"FAIL {name}: value mismatch col={col} row={i} spark={ga!r} oracle={eb!r}{took}")
             n_bad += 1
         else:
-            print(f"OK   {name} ({len(got)} rows)")
+            print(f"OK   {name} ({len(got)} rows){took}")
             n_ok += 1
+    slowest = sorted(secs.items(), key=lambda kv: -kv[1])[:10]
+    if slowest:
+        print("-- slowest oracle queries:")
+        for n, t in slowest:
+            print(f"   {t:8.2f} s  {n}")
     print(f"== {n_ok} ok, {n_bad} fail, {len(names)} total")
     sys.exit(1 if n_bad else 0)
 
