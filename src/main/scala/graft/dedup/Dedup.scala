@@ -978,52 +978,30 @@ object Dedup {
     // seed = one propagation round for free: min(u, direct neighbors) in
     // the same shuffle that enumerates the vertices. Near-dup groups are
     // clique-like, so the seed usually IS the fixpoint and the loop only
-    // confirms it — one iteration, not two.
-    //
-    // Every round CUTS LINEAGE (a cut, not a cache): each iteration
-    // references the previous labels twice (neighbor-min join +
-    // right-outer spine), and with cache-only materialization the RDD
-    // lineage serialized into every task binary doubles per round — a
-    // 20-round chain graph reached 30+ MB task binaries before this
-    // switch. The cut rows are |V|-bounded; superseded rounds are freed
-    // when this function returns ([[graft.Cut]]).
-    var labels = sym.groupBy(col("u"))
+    // confirms it — one iteration, not two. Each round carries the
+    // previous label in `prev`, so the change count is the round's
+    // measure ([[graft.Cut.iterate]]), with no second join against the
+    // old labels.
+    val seed = sym.groupBy(col("u"))
       .agg(least(col("u"), min(col("v"))).as("label")).transform(Cut.eager)
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIter) {
-      // previous label rides along in `prev`, so change detection is a
-      // cheap filter-count over this round's materialized result — no
-      // second join against the old labels
-      // r17 (VERDICT r16 #4, guide §1.2): LAZY checkpoint — the change
-      // count's full scan materializes it in the same job (one job per
-      // round instead of two); the next round's two references read the
-      // already-persisted partitions.
-      val stepped = sym
-        .join(labels.select(col("u").as("v"), col("label").as("vlabel")), Seq("v"))
+    val run = Cut.iterate(seed, maxIter, count(when(col("label") =!= col("prev"), 1))) { prev =>
+      val labels = prev.frame.select(col("u"), col("label"))
+      sym.join(labels.select(col("u").as("v"), col("label").as("vlabel")), Seq("v"))
         .groupBy(col("u")).agg(min(col("vlabel")).as("nlabel"))
         .join(labels, Seq("u"), "right_outer")
         .select(col("u"),
           least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
           col("label").as("prev"))
-        .transform(Cut.lazily)
-      changed = stepped.filter(col("label") =!= col("prev")).count()
-      labels = stepped.select(col("u"), col("label"))
-      it += 1
-    }
+    }((_, next) => next.n == 0)
     // truncated labels are WRONG labels (one component reported as
     // several) — fail loudly instead of returning silently corrupt
     // cluster assignments
-    if (changed > 0) {
+    if (!run.converged) {
       sys.error(s"connectedComponents: not converged after $maxIter rounds " +
-        s"($changed labels still changing) — graph diameter exceeds maxIter; " +
+        s"(${run.last.n} labels still changing) — graph diameter exceeds maxIter; " +
         "switch to connectedComponentsStar (O(log n) rounds) or raise maxIter")
     }
-    // hand back the final round's labels directly: the loop's lazy
-    // checkpoint already materialized them (r17 — the old extra eager
-    // checkpoint here copied the persisted rows in one more job for no
-    // added lineage cut)
-    labels
+    run.frame.select(col("u"), col("label"))
   }
 
   /** Connected components by ALTERNATING large-star/small-star rounds
@@ -1054,17 +1032,11 @@ object Dedup {
                                               maxIter: Int = 50): (DataFrame, Int) = {
     // canonical undirected form: (u < v), deduplicated, self-loops dropped;
     // materialized once (same reasoning as connectedComponents)
-    var e = edges
+    val canonical = edges
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-      // r17 (VERDICT r16 #4, guide §1.2): lazy checkpoint + count — one
-      // job materializes AND counts (the kCore fusion), here and per
-      // round below.
       .transform(Cut.lazily)
-    var n = e.count()
-    var converged = false
-    var it = 0
     def largeStar(cur: DataFrame): DataFrame = {
       val sym = cur.select(col("u").as("x"), col("v").as("nbr"))
         .union(cur.select(col("v").as("x"), col("u").as("nbr")))
@@ -1088,17 +1060,12 @@ object Dedup {
       val self = mins.select(col("m").as("u"), col("v"))
       relink.union(self).distinct()
     }
-    while (!converged && it < maxIter) {
-      val next = smallStar(largeStar(e)).transform(Cut.lazily)
-      val nNext = next.count()
-      // exact set equality: both sides are DISTINCT canonical edge sets,
-      // so equal counts + empty difference ⇔ identical
-      converged = nNext == n && next.except(e).isEmpty
-      e = next
-      n = nNext
-      it += 1
-    }
-    if (!converged)
+    // exact set equality: both sides are DISTINCT canonical edge sets,
+    // so equal counts + empty difference ⇔ identical ([[graft.Cut.iterate]])
+    val run = Cut.iterate(canonical, maxIter)(prev => smallStar(largeStar(prev.frame)))(
+      (prev, next) => next.n == prev.n && next.frame.except(prev.frame).isEmpty)
+    val e = run.frame
+    if (!run.converged)
       sys.error(s"connectedComponentsStar: not converged after $maxIter rounds — " +
         "raise maxIter (expected O(log n) rounds; this indicates a bug or an " +
         "adversarial graph far beyond the iteration budget)")
@@ -1111,7 +1078,7 @@ object Dedup {
       .union(e.select(col("u"), col("u").as("label")).distinct())
       .distinct()
       .transform(Cut.eager)
-    (labels, it)
+    (labels, run.rounds)
   }
 
   /** B12: near-dup cluster assignment — the step that turns pairwise

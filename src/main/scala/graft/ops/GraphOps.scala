@@ -324,30 +324,14 @@ object GraphOps {
       .join(alive.select(col("p").as("x")), Seq("x"), "left_semi")
       .join(alive.select(col("p").as("nbr")), Seq("nbr"), "left_semi")
       .select(col("x").as("p"))
-    // r17 (VERDICT r16 #4, guide §1.2): LAZY checkpoint + count — the
-    // count action itself materializes the checkpoint (one job per round
-    // instead of checkpoint-then-count's two; the iterative family is
-    // job-count bound at gate scale, 35–50 ms driver overhead per job).
-    // Safe because the count fully materializes every partition BEFORE
-    // the next round's references read the frame.
-    var alive = sym.select(col("x").as("p"))
-      .distinct().transform(Cut.lazily)
-    var aliveCount = alive.count()
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      val next = inducedEndpoints(alive)
+    // next ⊆ alive (membership requires surviving the induced-degree
+    // test), so equal counts mean equal sets: fixpoint ([[Cut.iterate]])
+    val alive = Cut.iterate(sym.select(col("x").as("p")).distinct().transform(Cut.lazily),
+        rounds) { prev =>
+      inducedEndpoints(prev.frame)
         .groupBy(col("p")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("p"))
-        .transform(Cut.lazily)
-      val nextCount = next.count()
-      // next ⊆ alive (membership requires surviving the induced-degree
-      // test), so equal counts mean equal sets: fixpoint
-      converged = nextCount == aliveCount
-      alive = next
-      aliveCount = nextCount
-      r += 1
-    }
+    }(_.n == _.n).frame
     val out = inducedEndpoints(alive)
       .groupBy(col("p")).agg(count(lit(1)).as("core_degree"))
       .select(col("p").as("part_key"), col("core_degree"))
@@ -437,40 +421,28 @@ object GraphOps {
       firstTri: Option[DataFrame] = None): DataFrame = {
     def supportOf(tri: DataFrame): DataFrame =
       triangleEdges(tri).groupBy(col("u"), col("v")).agg(count(lit(1)).as("support"))
-    // r17 (VERDICT r16 #4, guide §1.2): lazy checkpoint + count — the
-    // count materializes the checkpoint in the same job (the kCore
-    // fusion; one job per round instead of two).
-    var edges = edgeSet.select(col("u"), col("v")).transform(Cut.lazily)
-    var cnt = edges.count()
-    var r = 0
-    var converged = false
+    // next ⊆ edges, so equal counts mean equal sets: fixpoint ([[Cut.iterate]])
     var lastSup: Option[DataFrame] = None
-    while (r < rounds && !converged) {
-      val tri = if (r == 0) firstTri.getOrElse(buildTriangleListing(edges))
+    val run = Cut.iterate(edgeSet.select(col("u"), col("v")).transform(Cut.lazily),
+        rounds) { prev =>
+      val edges = prev.frame
+      val tri = if (prev.index == 0) firstTri.getOrElse(buildTriangleListing(edges))
                 else buildTriangleListing(edges)
       // r17 (guide §2.4): LAZY-checkpoint the support table — the
-      // round's count job materializes it for free (it sits on next's
+      // round's cut job materializes it for free (it sits on next's
       // lineage), and the converged path's final readout then JOINS the
       // stored rows instead of re-executing the whole triangle listing
       // (supportOf(lastTri) used to replan the kernel once more).
       val sup = supportOf(tri).transform(Cut.lazily)
-      val heavy = sup.filter(col("support") >= k - 2)
-      val next = edges.join(heavy, Seq("u", "v"), "left_semi").transform(Cut.lazily)
-      val n = next.count()
-      // next ⊆ edges, so equal counts mean equal sets: fixpoint
-      converged = n == cnt
-      edges = next
-      cnt = n
       lastSup = Some(sup)
-      r += 1
-    }
+      edges.join(sup.filter(col("support") >= k - 2), Seq("u", "v"), "left_semi")
+    }(_.n == _.n)
+    val edges = run.frame
     // on the converged path the final round's listing was built on the
     // IDENTICAL edge set — rebuilding it would repeat the most expensive
     // kernel for nothing (review fix); rebuild only when the round
     // budget ran out with the edge set still shrinking
-    val finalSup =
-      if (converged && lastSup.isDefined) lastSup.get
-      else supportOf(buildTriangleListing(edges))
+    val finalSup = if (run.converged) lastSup.get else supportOf(buildTriangleListing(edges))
     edges.join(finalSup, Seq("u", "v"))
       .select(col("u").as("part_u"), col("v").as("part_v"), col("support"))
       .orderBy(col("part_u"), col("part_v"))

@@ -407,7 +407,8 @@ object ScaleQueries {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes",
       "spark.sql.adaptive.coalescePartitions.enabled",
       "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+      "spark.sql.adaptive.autoBroadcastJoinThreshold",
+      "spark.sql.shuffle.partitions")
     val saved = touched.map(k => k -> s.conf.getOption(k))
     try {
       s.conf.set(touched(0), "true")
@@ -421,6 +422,10 @@ object ScaleQueries {
       s.conf.set(touched(4), "false")
       s.conf.set(touched(5), "-1")
       s.conf.set(touched(6), "-1")
+      // eight reducers whatever the core count: with two, the skew rule's
+      // median is the mean of the hot and the cold partition, which no
+      // partition can exceed twice over, so nothing would split
+      s.conf.set(touched(7), "8")
       // repartition(8): AQE splits a skewed reducer partition by MAPPER
       // ranges (PartialReducerPartitionSpec carries a map-index span),
       // so a single-mapper child — which is what one small parquet file

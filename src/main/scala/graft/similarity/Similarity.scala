@@ -1075,37 +1075,6 @@ object Similarity {
     val entry = lv.orderBy(col("lvl").desc, col("__h"), col("vec_id"))
       .limit(HnswEntryN).select(col("vec_id"))
     val qs = qs0.transform(Cut.cached)
-    def scoreOf(pool: DataFrame): DataFrame =
-      pool.join(e, Seq("vec_id")).join(qs, Seq("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          cosinePre(col("qq"), col("q"), col("qnorm"), col("norm")).as("cosine"))
-    // r16 (optimization round): the beam CARRIES its cosine between
-    // rounds — only the newly-expanded neighbor rows are scored (the
-    // equi-joins against e/qs now see beam×R rows instead of the whole
-    // re-ranked pool), and the re-rank window reads the carried column.
-    // cosinePre is a fixed deterministic expression over the same
-    // operands, so carried == recomputed bit-for-bit and the dedup over
-    // (query_id, vec_id) collapses identical rows. Guide §1.2 step 1 /
-    // §2.3 (don't recompute what a round already computed).
-    def topbW(pool: DataFrame, b: Int): DataFrame = {
-      val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-      pool.withColumn("rn", row_number().over(w)).filter(col("rn") <= b)
-        .select(col("query_id"), col("vec_id"), col("cosine"))
-    }
-    // ONE shuffle per round (r12, VERDICT r11 #2): the expansion
-    // co-partitions by query_id and dedups INSIDE that partitioning —
-    // HashPartitioning(query_id) satisfies the (query_id, vec_id)
-    // aggregation's clustering AND the re-rank window's, so the old
-    // distinct-by-both-columns shuffle + window re-shuffle collapse
-    // into the single repartition (set-identical output; the broadcast
-    // scoring joins preserve the streamed side's partitioning)
-    def expandScored(beam: DataFrame, nbrs: DataFrame): DataFrame =
-      beam.select(col("query_id"), col("vec_id"), col("cosine"))
-        .unionByName(scoreOf(
-          beam.join(nbrs, col("vec_id") === col("src"))
-            .select(col("query_id"), col("dst").as("vec_id"))))
-        .repartition(col("query_id"))
-        .dropDuplicates("query_id", "vec_id")
     val layers = (0 until layerN).map(m =>
       adj.filter(col("layer") === m).select(col("src"), col("dst")))
     // rounds through an EMPTY upper layer are skipped: with |beam| ≤
@@ -1113,7 +1082,7 @@ object Similarity {
     // empty-expansion re-rank is the identity on the beam SET, so the
     // skip is result-identical to the oracle's uniformly-unrolled chain
     require(HnswEntryN <= HnswBeamU, "empty-layer skip needs EntryN <= BeamU")
-    var beam = scoreOf(qs.select(col("query_id")).crossJoin(broadcast(entry)))
+    var beam = scoreOf(e, qs, qs.select(col("query_id")).crossJoin(broadcast(entry)))
       .transform(Cut.eager)
     // one eager cut per round: fusing rounds into one lazy expression was
     // MEASURED SLOWER in r12 (AQE jobs track shuffle stages, not actions,
@@ -1121,7 +1090,8 @@ object Similarity {
     // went 93 → 104 jobs), so the per-round cut stays
     for (m <- (layerN - 1) to 1 by -1; if counts.getOrElse(m, 0L) > 0L;
          _ <- 1 to HnswRoundsU)
-      beam = topbW(expandScored(beam, layers(m)), HnswBeamU).transform(Cut.eager)
+      beam = topbW(expandScored(e, qs, beam, beam, layers(m)), HnswBeamU)
+        .transform(Cut.eager)
     // (query_id, vec_id) output — the route-snapshot schema (e08) and
     // the seed shape hnswBaseDescend scores once at entry
     beam.select(col("query_id"), col("vec_id"))
@@ -1136,70 +1106,23 @@ object Similarity {
   private[graft] def hnswBaseDescend(e: DataFrame, adj: DataFrame,
       qs0: DataFrame, beam0: DataFrame, k: Int): DataFrame = Cut.scope {
     val qs = qs0.transform(Cut.cached)
-    def scoreOf(pool: DataFrame): DataFrame =
-      pool.join(e, Seq("vec_id")).join(qs, Seq("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          cosinePre(col("qq"), col("q"), col("qnorm"), col("norm")).as("cosine"))
-    // r16 (optimization round): the accumulating POOL carries its
-    // cosine — each round scores ONLY the newly-reached neighbor rows
-    // (beam×R equi-join rows) instead of re-joining the whole pool
-    // against e/qs for every re-rank, and the final top-k is a window
-    // over the carried column with no scoring joins at all. cosinePre
-    // is a fixed deterministic expression over the same operands, so
-    // carried == recomputed bit-for-bit; dedup over (query_id, vec_id)
-    // collapses identical rows. The old expandRaw's beam∪neighbors
-    // union dropped the redundant beam branch too — beam ⊆ pool by
-    // construction, so pool ∪ neighbors is the same set. Guide §1.2
-    // step 1 / §2.3.
-    def topbW(pool: DataFrame, b: Int): DataFrame = {
-      val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-      pool.withColumn("rn", row_number().over(w)).filter(col("rn") <= b)
-        .select(col("query_id"), col("vec_id"), col("cosine"))
-    }
     val layer0 = adj.filter(col("layer") === 0).select(col("src"), col("dst"))
-    // base layer: the visited POOL accumulates (the ef-search candidate
-    // set); one eager cut per round on the pool only — the sole frame
-    // referenced twice downstream; the beams are cheap windows over it.
-    // (r12 measured the every-other-round fusion SLOWER — the repeated
-    // pool subplan re-runs its shuffle under AQE instead of deduping.)
-    // ONE shuffle per round (r12): co-partition by query_id, dedup and
-    // window inside that partitioning — see hnswUpperBeam.
     // beam0 arrives as (query_id, vec_id) — hnswUpperBeam's output and
-    // the e08 route-snapshot schema — and is scored ONCE here.
-    var beam =
-      (if (beam0.columns.contains("cosine"))
+    // the e08 route-snapshot schema — and is scored ONCE here; it is
+    // round 1's beam and the pool's seed. Each later beam is a cheap
+    // window over the pool, the one frame cut per round.
+    val seed = (if (beam0.columns.contains("cosine"))
         beam0.select(col("query_id"), col("vec_id"), col("cosine"))
-      else scoreOf(beam0)).transform(Cut.eager)
-    var pool = beam
-    // r17 (guide §1.2): LAZY checkpoint + count per round (the count
-    // materializes the pool in the same job the eager checkpoint used),
-    // and FIXPOINT EARLY-EXIT — the pool only GROWS (it is unioned into
-    // its own successor and deduped), so equal counts ⇔ identical sets,
-    // and an unchanged pool makes every remaining round the identity
-    // (beam = topb(pool) is a pure function of the pool; the expansion
-    // a pure function of the beam). Result-identical to the uniformly
-    // unrolled HnswRounds0 chain the oracle replays; saves whole rounds
-    // whenever the descent saturates early (small insert batches, dense
-    // neighborhoods).
-    var poolN = -1L
-    var r0 = 0
-    var done = false
-    while (r0 < HnswRounds0 && !done) {
-      val stepped = pool.unionByName(scoreOf(
-          beam.join(layer0, col("vec_id") === col("src"))
-            .select(col("query_id"), col("dst").as("vec_id"))))
-        .repartition(col("query_id"))
-        .dropDuplicates("query_id", "vec_id")
-        .transform(Cut.lazily)
-      val n = stepped.count()
-      pool = stepped
-      if (n == poolN) done = true
-      else {
-        poolN = n
-        beam = topbW(pool, HnswBeam0)
-      }
-      r0 += 1
-    }
+      else scoreOf(e, qs, beam0)).transform(Cut.eager)
+    // FIXPOINT EARLY-EXIT ([[graft.Cut.iterate]]): the pool only grows,
+    // so equal counts ⇔ identical sets, and an unchanged pool makes every
+    // remaining round the identity — result-identical to the uniformly
+    // unrolled HnswRounds0 chain the oracle replays. The seed is not
+    // counted, so round 1 never stops.
+    val pool = Cut.iterate(seed, HnswRounds0) { prev =>
+      val beam = if (prev.index == 0) prev.frame else topbW(prev.frame, HnswBeam0)
+      expandScored(e, qs, prev.frame, beam, layer0)
+    }((prev, next) => prev.index > 0 && prev.n == next.n).frame
     val fw = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
     pool
       .filter(col("vec_id") =!= col("query_id"))
@@ -1207,6 +1130,47 @@ object Similarity {
       .select(col("query_id"), col("vec_id"), col("cosine"), col("rn").cast("int").as("rn"))
       .transform(Cut.eager)
   }
+
+  /** (query_id, vec_id, cosine) of each (query_id, vec_id) row, scored by
+    * equi-joins against the quantized vectors `e` and the queries `qs`. */
+  private def scoreOf(e: DataFrame, qs: DataFrame, pool: DataFrame): DataFrame =
+    pool.join(e, Seq("vec_id")).join(qs, Seq("query_id"))
+      .select(col("query_id"), col("vec_id"),
+        cosinePre(col("qq"), col("q"), col("qnorm"), col("norm")).as("cosine"))
+
+  /** Each query's top `b` rows of a scored pool, by (cosine desc, vec_id). */
+  private def topbW(pool: DataFrame, b: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
+    pool.withColumn("rn", row_number().over(w)).filter(col("rn") <= b)
+      .select(col("query_id"), col("vec_id"), col("cosine"))
+  }
+
+  /** One descent round's candidates: the scored `pool` ∪ the newly scored
+    * `nbrs` of `beam` (the upper rounds pass the beam as the pool, the
+    * base rounds the accumulating visited pool).
+    *
+    * r16 (optimization round): rows CARRY their cosine between rounds —
+    * only the newly-expanded neighbor rows are scored (the equi-joins
+    * against e/qs see beam×R rows instead of the whole re-ranked pool),
+    * and the re-rank window reads the carried column. cosinePre is a
+    * fixed deterministic expression over the same operands, so carried ==
+    * recomputed bit-for-bit and the dedup over (query_id, vec_id)
+    * collapses identical rows. Guide §1.2 step 1 / §2.3.
+    *
+    * ONE shuffle per round (r12, VERDICT r11 #2): the expansion
+    * co-partitions by query_id and dedups INSIDE that partitioning —
+    * HashPartitioning(query_id) satisfies the (query_id, vec_id)
+    * aggregation's clustering AND the re-rank window's, so a
+    * distinct-by-both-columns shuffle + window re-shuffle collapse into
+    * the single repartition (set-identical output; the broadcast scoring
+    * joins preserve the streamed side's partitioning). */
+  private def expandScored(e: DataFrame, qs: DataFrame, pool: DataFrame, beam: DataFrame,
+      nbrs: DataFrame): DataFrame =
+    pool.unionByName(scoreOf(e, qs,
+        beam.join(nbrs, col("vec_id") === col("src"))
+          .select(col("query_id"), col("dst").as("vec_id"))))
+      .repartition(col("query_id"))
+      .dropDuplicates("query_id", "vec_id")
 
   def hnswQuery(s: SparkSession, dir: String): DataFrame =
     hnswTopKSnapshotted(s, dir, col("vec_id") % 100 === 0)

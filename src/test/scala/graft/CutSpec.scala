@@ -91,4 +91,76 @@ class CutSpec extends SparkSpec {
     }
     assert((persistent -- before).isEmpty)
   }
+
+  // over nums(10), round r keeps the ids below max(floor, 10 - r): the
+  // set shrinks by one id a round until it reaches its fixpoint at `floor`
+  private def shrinkTo(floor: Long)(prev: Cut.Round): DataFrame =
+    prev.frame.filter(col("id") < math.max(floor, 9L - prev.index))
+
+  test("iterate stops at the first round whose stop test holds, measured on its own cut") {
+    Cut.scope {
+      val run = Cut.iterate(Cut.lazily(nums(10)), 20)(shrinkTo(6))(_.n == _.n)
+      assert(run.converged)
+      // rounds 1-4 drop ids 9..6; round 5 finds nothing to drop
+      assert(run.rounds == 5)
+      assert(run.last.n == 6L && run.last.n == run.frame.count())
+      assert(rows(run.frame) == (0L until 6L))
+    }
+  }
+
+  test("iterate stops at maxRounds unconverged") {
+    Cut.scope {
+      val run = Cut.iterate(nums(10), 3)(shrinkTo(0))((_, _) => false)
+      assert(!run.converged && run.rounds == 3)
+      assert(run.last.n == 7L && rows(run.frame) == (0L until 7L))
+    }
+    Cut.scope {
+      val none = Cut.iterate(nums(4), 0)(shrinkTo(0))((_, _) => true)
+      assert(!none.converged && none.rounds == 0 && rows(none.frame) == (0L until 4L))
+    }
+  }
+
+  test("iterate reads 0 for a round with no rows") {
+    Cut.scope {
+      val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val emptied = Cut.iterate(nums(8), 5)(_.frame.filter(col("id") < 0)) { (_, next) =>
+        seen += next.n; seen.size == 2
+      }
+      assert(emptied.converged && seen == Seq(0L, 0L) && emptied.frame.count() == 0L)
+      val pruned = Cut.iterate(nums(8), 1)(_.frame.filter(lit(false)))((_, next) => next.n == 0)
+      assert(pruned.converged && pruned.last.n == 0L)
+    }
+  }
+
+  test("iterate reads a caller's measure on every round") {
+    val s = spark
+    import s.implicits._
+    // min-label propagation along the path 0-1-2-3-4
+    val sym = (0L until 4L).flatMap(u => Seq((u, u + 1), (u + 1, u))).toDF("u", "v")
+    val changed = scala.collection.mutable.ArrayBuffer.empty[Long]
+    Cut.scope {
+      val run = Cut.iterate(nums(5).select(col("id").as("u"), col("id").as("label")), 10,
+          count(when(col("label") =!= col("prev"), 1))) { prev =>
+        val labels = prev.frame.select(col("u"), col("label"))
+        sym.join(labels.select(col("u").as("v"), col("label").as("nl")), "v")
+          .groupBy("u").agg(min("nl").as("nl"))
+          .join(labels, "u")
+          .select(col("u"), least(col("label"), col("nl")).as("label"), col("label").as("prev"))
+      } { (_, next) => changed += next.n; next.n == 0 }
+      assert(run.converged && run.rounds == 5)
+      assert(run.frame.select("label").distinct().collect().map(_.getLong(0)).toSeq == Seq(0L))
+    }
+    assert(changed == Seq(4L, 3L, 2L, 1L, 0L))
+  }
+
+  test("the enclosing scope frees every round's cut") {
+    val before = persistent
+    Cut.scope {
+      val run = Cut.iterate(Cut.lazily(nums(10)), 20)(shrinkTo(5))(_.n == _.n)
+      assert(run.rounds == 6)
+      // the initial lazy cut and one cut per round
+      assert((persistent -- before).size == 7)
+    }
+    assert((persistent -- before).isEmpty)
+  }
 }
